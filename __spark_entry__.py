@@ -44,7 +44,7 @@ _DRIVER_PRIORITY = [
     # operator code changed in round 9/10 (DSIR fold + size gate,
     # brute-sims kernel/expr-norm path, cell fixture numeric keys,
     # minhash/LSH SQL-text builders, collect-stream delete prefilter
-    # in the general/no_atomics fold) — re-oracle first
+    # in the general/merge-free fold) — re-oracle first
     "pipeline_dsir_importance", "ann_cosine_topk", "ann_int8_topk",
     "cell_multiversion_trim", "cell_counter_add_merge", "cell_tombstone_mask",
     "cell_append_merge", "cell_put_ifabsent", "cell_addint64_merge",

@@ -110,12 +110,12 @@ def main() -> None:
                 F.format_string("row%016d", F.col("id")).alias("row_key")
             )
         t0 = time.monotonic()
-        # put_only: the workload is plain Puts at maxversions=1 — the
+        # PUT-only: the workload is plain Puts at maxversions=1 — the
         # reference's own benchmark schema — so the fold is the
         # map-side-partial max_by fast path (what the catalog would
         # derive from this table's commit records)
         got = current_view(
-            oplog.join(F.broadcast(keys), "row_key", "left_semi"), None, put_only=True
+            oplog.join(F.broadcast(keys), "row_key", "left_semi"), None, op_kinds={CellOp.PUT}
         ).count()
         g_s = time.monotonic() - t0
         point_keys_s = got / g_s
@@ -155,7 +155,7 @@ def main() -> None:
         # checks md5 per value; here the expected payload is recomputed
         # from the key and compared whole).
         t0 = time.monotonic()
-        visible = scan(oplog, None, ScanDescriptor(), put_only=True)
+        visible = scan(oplog, None, ScanDescriptor(), op_kinds={CellOp.PUT})
         rid = F.substring("row_key", 4, 16).cast("long")
         expected = F.rpad(F.conv(rid.cast("string"), 10, 16), VALUE_BYTES, "x").cast(
             "binary"

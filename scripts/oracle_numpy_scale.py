@@ -1,7 +1,7 @@
 """DuckDB oracle run for the numpy brute-force kernel ABOVE its size
 gate (VERDICT r9 item 9). The driver's oracle only ever exercises
-`cosine_topk` at fixture scale, where `_BRUTE_NP_BYTES_FLOOR` keeps the
-Arrow/numpy kernel OFF — so the kernel's bit-parity claim rested on a
+`cosine_topk` at fixture scale, where the scale gate
+(`plans.SCALE_GATE_BYTES`) keeps the Arrow/numpy kernel OFF — so the kernel's bit-parity claim rested on a
 unit test. This script is the missing oracle row: a generated corpus
 large enough to engage the kernel (same clustered-embedding formula as
 scripts/gen_sf.py), the exact ann_cosine_topk query shape, and the
@@ -24,7 +24,7 @@ if _REPO not in sys.path:
 import duckdb
 from pyspark.sql import functions as F
 
-from tera_spark.operators import similarity as S
+from tera_spark import plans
 from tera_spark.operators.similarity import cosine_topk
 from tera_spark.session import get_spark
 
@@ -63,10 +63,9 @@ def main() -> None:
         ).coalesce(4).write.parquet(path)
 
         emb = spark.read.parquet(path)
-        bytes_est = S._plan_bytes(emb)
-        assert bytes_est >= S._BRUTE_NP_BYTES_FLOOR, (
-            f"corpus too small to engage the kernel: {bytes_est} B "
-            f"< {S._BRUTE_NP_BYTES_FLOOR} B — raise N_VECS"
+        assert plans.scale_gate(emb), (
+            f"corpus too small to engage the kernel: under "
+            f"{plans.SCALE_GATE_BYTES} B — raise N_VECS"
         )
         topk = cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
         plan = topk._jdf.queryExecution().executedPlan().toString()

@@ -105,7 +105,7 @@ def main() -> None:
 
     from tera_spark.session import get_spark
     from tera_spark.catalog import Catalog
-    from tera_spark.operators.view import current_view
+    from tera_spark.operators.view import current_view, fold_route
 
     spark = get_spark("fold_smoke")
     out: dict = {"metric": "fold_smoke", "n_cells": N}
@@ -139,7 +139,7 @@ def main() -> None:
         # ---- PUT-only: metadata-routed fast fold vs forced general
         cat.create_table("puts { d <maxversions=2> }")
         cat.append("puts", _put_cells(spark, N), commit_seq=N, op_kinds=[5])
-        assert cat.fold_hints("puts").get("put_only"), cat.fold_hints("puts")
+        assert fold_route(cat._op_kinds_union("puts")) == "put_only"
         t0 = time.monotonic()
         c_f = _checksum(cat.view("puts"))  # auto: put_only fast fold
         fast_s = time.monotonic() - t0
@@ -159,7 +159,7 @@ def main() -> None:
         # ---- counter-only: stacked-agg SUM fold vs forced general
         cat.create_table("ctr { c }")
         cat.append("ctr", _counter_cells(spark, N), commit_seq=N, op_kinds=[7])
-        assert cat.fold_hints("ctr").get("counter_only"), cat.fold_hints("ctr")
+        assert fold_route(cat._op_kinds_union("ctr")) == "counter"
         t0 = time.monotonic()
         c_cf = _checksum(cat.view("ctr"))
         cfast_s = time.monotonic() - t0

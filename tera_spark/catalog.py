@@ -294,7 +294,7 @@ class Catalog:
             rec["lo"] = int(lo)
         if op_kinds is not None:
             # distinct CellOp codes in the batch — lets reads prove the
-            # table PUT-only and take the fast fold (view.py put_only)
+            # op mix and route the fold (view.py fold_route)
             rec["op_kinds"] = sorted(int(k) for k in op_kinds)
         tmp.write_text(json.dumps(rec))
         tmp.replace(p)  # atomic rename = the commit point
@@ -343,38 +343,6 @@ class Catalog:
             out.update(int(k) for k in kinds)
         self._write_op_kinds(name, out)
         return out
-
-    def _put_only(self, name: str) -> bool:
-        """True iff every commit record proves its batch held only PUT
-        ops. Conservative: unknown history disqualifies; an empty
-        table with records qualifies (the fold is vacuous)."""
-        from tera_spark.model import CellOp
-
-        kinds = self._op_kinds_union(name)
-        return kinds is not None and kinds <= {CellOp.PUT}
-
-    def fold_hints(self, name: str) -> dict:
-        """Fast-fold kwargs for ``current_view``, derived from the
-        table's commit records (the single derivation every consumer —
-        view/snapshot/SDK/mview — routes through): PUT-only history →
-        ``put_only``; pure-counter history → ``counter_only``; unknown
-        or mixed → the general fold."""
-        from tera_spark.model import CellOp
-
-        kinds = self._op_kinds_union(name)
-        if kinds is not None and kinds <= {CellOp.PUT}:
-            return {"put_only": True}
-        if kinds in ({CellOp.ADD}, {CellOp.ADDINT64}):
-            return {"counter_only": next(iter(kinds))}
-        deletes = {
-            CellOp.DEL_ROW, CellOp.DEL_FAMILY,
-            CellOp.DEL_QUALIFIERS, CellOp.DEL_QUALIFIER,
-        }
-        if kinds is not None and kinds <= deletes | {CellOp.PUT}:
-            # puts + tombstones, no atomic merges: keep the mask
-            # machinery but skip merge-run detection (19% measured)
-            return {"no_atomics": True}
-        return {}
 
     def append(
         self,
@@ -651,11 +619,9 @@ class Catalog:
         schema = self.get_schema(name)
         if schema.kv_mode:
             return kv_current_view(self.read_oplog(name), **kw)
-        if "put_only" not in kw and "counter_only" not in kw:
-            # commit records prove the op mix; a PUT-only history takes
-            # the max_by/sliced-sort fast fold, a pure-counter history
-            # the stacked-agg SUM fold (view.py put_only/counter_only)
-            kw.update(self.fold_hints(name))
+        # commit records prove the op mix, which routes the fold
+        # (view.py fold_route)
+        kw.setdefault("op_kinds", self._op_kinds_union(name))
         return current_view(self.read_oplog(name), schema, **kw)
 
     # --- KV mode (RawKey=GeneralKv/TTLKv) ----------------------------
@@ -735,7 +701,7 @@ class Catalog:
         # shapes folds via the same fast paths reads use
         folded = compact(
             oplog, schema, now_us=now_us, snapshot_seq=snapshot_seq,
-            **self.fold_hints(name),
+            op_kinds=self._op_kinds_union(name),
         )
         write_cell_table(
             folded,
@@ -889,7 +855,7 @@ class Catalog:
             seq_start=seq_start,
             seq_end=seq_end,
             now_us=now_us,
-            **self.fold_hints(name),
+            op_kinds=self._op_kinds_union(name),
         )
 
     def compact_inplace(self, name: str, *, now_us: int | None = None) -> None:
@@ -1024,20 +990,21 @@ class Catalog:
             if not dirty:
                 continue
             paths = [str(i["path"]) for i in grp]
-            # footer-proved fold hint: the op min/max already read for
-            # dirtiness planning also proves the group's op mix, so a
-            # puts-only (or pure-counter) group folds via the fast path
-            fold_kw: dict = {}
-            ops = {(i["op_lo"], i["op_hi"]) for i in grp}
-            if ops == {(CellOp.PUT, CellOp.PUT)}:
-                fold_kw["put_only"] = True
-            elif ops in ({(CellOp.ADD, CellOp.ADD)}, {(CellOp.ADDINT64, CellOp.ADDINT64)}):
-                fold_kw["counter_only"] = next(iter(ops))[0]
+            # footer-proved op mix: the op min/max already read for
+            # dirtiness planning bound the group's op codes, so a sound
+            # superset routes the fold (view.py fold_route)
+            los = [i["op_lo"] for i in grp]
+            his = [i["op_hi"] for i in grp]
+            op_kinds = (
+                None
+                if None in los + his
+                else {k for k in CellOp.NAMES if min(los) <= k <= max(his)}
+            )
             folded = compact(
                 self.spark.read.parquet(*paths),
                 self.get_schema(name),
                 now_us=now_us,
-                **fold_kw,
+                op_kinds=op_kinds,
             )
             tmp = self.root / name / f"compact-tmp-{uuid.uuid4().hex}"
             write_cell_table(folded, str(tmp))
@@ -1054,7 +1021,7 @@ class Catalog:
             # cells (compact() output), so a pure-counter history no
             # longer holds — record PUT into the union (demoting such
             # tables to the general fold, the same re-seed
-            # compact_inplace performs). Without this, fold_hints would
+            # compact_inplace performs). Without this, the recorded kinds would
             # keep routing reads through _counter_only_fold over an
             # oplog that now contains PUT cells, and an add() at a ts
             # <= the compacted cell's ts would fold incorrectly.
@@ -1653,6 +1620,7 @@ class Catalog:
         and watermark from commit records, snapshots/indexes/rollbacks
         from the registry, plus the fold route reads will take."""
         from tera_spark.model import CellOp
+        from tera_spark.operators.view import fold_route
 
         self._authorize("read", name)
         infos = self.tablet_info(name)
@@ -1672,7 +1640,7 @@ class Catalog:
             "op_kinds": sorted(CellOp.NAMES.get(k, str(k)) for k in kinds)
             if kinds is not None
             else None,
-            "fold_route": self.fold_hints(name) or {"general": True},
+            "fold_route": fold_route(kinds),
             "snapshots": len(self.list_snapshots(name)),
             "indexes": sorted(idx),
             "pending_rollback_windows": len(self._rollbacks(name)),
@@ -2054,7 +2022,7 @@ def lookup_by_value(cat: "Catalog", name: str, cf: str, qualifier: str, value) -
         .select(F.col("qualifier").alias("row_key"))
     )
     got = batch_get(
-        cat.read_oplog(name), cat.get_schema(name), keys, **cat.fold_hints(name)
+        cat.read_oplog(name), cat.get_schema(name), keys, op_kinds=cat._op_kinds_union(name)
     )
     out = newest_match(got)  # read-repair: drop stale index hits
     if cat.get_schema(name).hash_distribution:

@@ -480,7 +480,7 @@ def main(argv: list[str] | None = None) -> int:
                     cat.read_oplog(args.table),
                     schema,
                     None,
-                    **cat.fold_hints(args.table),
+                    op_kinds=cat._op_kinds_union(args.table),
                 )
             )
             if args.start:
@@ -501,7 +501,7 @@ def main(argv: list[str] | None = None) -> int:
             cat.read_oplog(args.table),
             schema,
             desc,
-            **cat.fold_hints(args.table),
+            op_kinds=cat._op_kinds_union(args.table),
         ).collect():
             print(f"{r.row_key} {r.cf}:{r.qualifier} @{r.ts} {bytes(r.value or b'')!r}")
     elif args.cmd == "sql":

@@ -409,7 +409,7 @@ class Table:
             max_versions=max_versions,
             ts_range=ts_range,
             now_us=now_us,
-            **self._fold_hints(),
+            op_kinds=self._cat._op_kinds_union(self.name),
         ).collect()
         out: dict[str, dict[str, list[tuple[int, bytes]]]] = {}
         for r in rows:
@@ -426,12 +426,6 @@ class Table:
             self._seek_client = Seeker(self._cat, self.name)
         return self._seek_client
 
-    def _fold_hints(self) -> dict:
-        """Metadata-derived fast-fold hints for direct operator calls:
-        commit records prove the op mix, so SDK reads of PUT-only /
-        pure-counter tables take the cheap folds automatically."""
-        return self._cat.fold_hints(self.name)
-
     def batch_get(self, row_keys: list[str], *, now_us: int | None = None) -> DataFrame:
         return self._strip_df(
             batch_get(
@@ -439,7 +433,7 @@ class Table:
                 self._cat.get_schema(self.name),
                 [self._hk(k) for k in row_keys],
                 now_us=now_us,
-                **self._fold_hints(),
+                op_kinds=self._cat._op_kinds_union(self.name),
             )
         )
 
@@ -496,7 +490,7 @@ class Table:
             self._hash_desc(desc),
             now_us=now_us,
             snapshot_seq=snapshot_seq,
-            **self._fold_hints(),
+            op_kinds=self._cat._op_kinds_union(self.name),
         )
         out = self._user_range(self._strip_df(v), desc)
         return out.orderBy("row_key", "cf", "qualifier", F.desc("ts")).toLocalIterator()
@@ -517,7 +511,7 @@ class Table:
                     self._hash_desc(desc),
                     now_us=now_us,
                     snapshot_seq=snapshot_seq,
-                    **self._fold_hints(),
+                    op_kinds=self._cat._op_kinds_union(self.name),
                 )
             ),
             desc,

@@ -8,6 +8,14 @@ define integer/decimal codecs (`include/tera/filter_comparator.h:92-95`).
 Everything here is built-in-function only (hex/conv/unhex/substring),
 so decodes stay inside whole-stage codegen and can participate in
 Catalyst optimization; no Python UDFs in the hot path.
+
+Width rule for int64 decodes of values that are not 8 bytes long: the
+value's hex is left-padded with zeros, or cut to its first 16 hex
+digits, BEFORE any byte swap. In bytes: a short value gains leading
+zero bytes (``b"\\xff"`` reads 255 big-endian and -2**56, bit pattern
+``0xff00000000000000``, little-endian), a long value keeps its first
+8 bytes, and an empty value reads 0. The seek path's Python fold
+(``operators/seek.fold_row``) applies the same rule.
 """
 
 from __future__ import annotations

@@ -16,6 +16,8 @@ scan O(live cells) instead of O(all ops) — same role as tera's
 
 from __future__ import annotations
 
+from collections.abc import Collection
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -30,18 +32,13 @@ def compact(
     *,
     now_us: int | None = None,
     snapshot_seq: int | None = None,
-    put_only: bool = False,
-    counter_only: int | None = None,
-    no_atomics: bool = False,
+    op_kinds: Collection[int] | None = None,
 ) -> DataFrame:
-    """op-log → compacted op-log (all PUTs, seq=0). put_only /
-    counter_only forward the caller's op-mix promise to the fold
-    (see current_view) — compaction of the dominant shapes then runs
-    as the cheap aggregations too."""
-    v = current_view(
-        cells, schema, now_us=now_us, snapshot_seq=snapshot_seq,
-        put_only=put_only, counter_only=counter_only, no_atomics=no_atomics,
-    )
+    """op-log → compacted op-log (all PUTs, seq=0). ``op_kinds``
+    forwards the caller's op-mix promise to the fold (see
+    current_view) — compaction of the dominant shapes then runs as
+    the cheap aggregations too."""
+    v = current_view(cells, schema, now_us=now_us, snapshot_seq=snapshot_seq, op_kinds=op_kinds)
     out = v.select(
         "row_key",
         "cf",

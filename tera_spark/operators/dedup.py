@@ -112,27 +112,23 @@ def _first_collision_candidates(
 # 4) and bounds any one bucket's emission at ~8.4M pairs.
 _LSH_CAP_AUTO = 4096
 
-# The cap path costs two extra exchanges (the count window + the
-# per-doc key-sequence rebuild), which a small corpus never amortizes
-# — and can never need: below this plan-size estimate even a fully
-# degenerate corpus stays joinable. Same scale-adaptive stance (bytes,
-# not cores) as similarity._BRUTE_NP_BYTES_FLOOR and
-# textops._DSIR_FOLD_BYTES_FLOOR. Results are identical on either side
-# of the floor whenever every bucket is under the cap (the oracle
-# fixtures are, by the measured margin above).
-_LSH_CAP_BYTES_FLOOR = 32 << 20
-
 
 def _resolve_bucket_cap(docs: DataFrame, cap: int | None | str) -> int | None:
     """Resolve the ``max_bucket_size="auto"`` default: cap degenerate
-    buckets at `_LSH_CAP_AUTO` once the corpus estimate crosses
-    `_LSH_CAP_BYTES_FLOOR`, stay cap-free (and exchange-free) below it.
-    Explicit int / None callers are passed through untouched."""
+    buckets at `_LSH_CAP_AUTO` once the corpus estimate passes the
+    scale gate (`plans.scale_gate`), stay cap-free (and exchange-free)
+    below it. The cap path costs two extra exchanges (the count window
+    + the per-doc key-sequence rebuild), which a small corpus never
+    amortizes — and can never need: below the floor even a fully
+    degenerate corpus stays joinable. Results are identical on either
+    side whenever every bucket is under the cap (the oracle fixtures
+    are, by the measured margin above). Explicit int / None callers
+    are passed through untouched."""
     if cap != "auto":
         return cap  # type: ignore[return-value]
-    from tera_spark.operators.similarity import _plan_bytes
+    from tera_spark.plans import scale_gate
 
-    return _LSH_CAP_AUTO if _plan_bytes(docs) >= _LSH_CAP_BYTES_FLOOR else None
+    return _LSH_CAP_AUTO if scale_gate(docs) else None
 
 
 def _cap_buckets(sigs: DataFrame, max_bucket_size: int | None) -> DataFrame:
@@ -165,7 +161,7 @@ def minhash_lsh_pairs(
     first-collision filter, no pair-level shuffle (see
     `_first_collision_candidates`). ``max_bucket_size="auto"`` caps
     degenerate boilerplate buckets at corpus scale (`_LSH_CAP_AUTO`,
-    size-gated by `_LSH_CAP_BYTES_FLOOR`). ``storage`` materializes the
+    size-gated by `plans.scale_gate`). ``storage`` materializes the
     band-signature intermediate to Parquet instead of the executor
     heap — the corpus-scale shape (see verified_near_duplicates)."""
     keyed = with_minhash_signature(ensure_parallelism(docs), text_col).select(

@@ -23,6 +23,7 @@ Spark's scheduler and `toLocalIterator` own distribution+streaming.
 
 from __future__ import annotations
 
+from collections.abc import Collection
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Window
@@ -55,9 +56,7 @@ def scan(
     *,
     now_us: int | None = None,
     snapshot_seq: int | None = None,
-    put_only: bool = False,
-    counter_only: int | None = None,
-    no_atomics: bool = False,
+    op_kinds: Collection[int] | None = None,
 ) -> DataFrame:
     desc = desc or ScanDescriptor()
     df = cells
@@ -72,12 +71,9 @@ def scan(
         cf_set = set(desc.column_families or []) | set((desc.columns or {}).keys())
         df = df.filter(F.col("cf").isin(list(cf_set)) | (F.col("op") == CellOp.DEL_ROW))
 
-    # 2. fold to visible cells (put_only = caller's PUT-only promise,
-    # routes the fast fold — see current_view)
-    v = current_view(
-        df, schema, now_us=now_us, snapshot_seq=snapshot_seq,
-        put_only=put_only, counter_only=counter_only, no_atomics=no_atomics,
-    )
+    # 2. fold to visible cells (op_kinds = caller's op-mix promise,
+    # routes the fold — see current_view)
+    v = current_view(df, schema, now_us=now_us, snapshot_seq=snapshot_seq, op_kinds=op_kinds)
 
     # 3. scan-level version / qualifier caps
     if desc.max_versions is not None:
@@ -118,9 +114,7 @@ def get(
     max_versions: int | None = None,
     ts_range: tuple[int, int] | None = None,
     now_us: int | None = None,
-    put_only: bool = False,
-    counter_only: int | None = None,
-    no_atomics: bool = False,
+    op_kinds: Collection[int] | None = None,
 ) -> DataFrame:
     """Point read (RowReader, include/tera/reader.h:25-99). The
     row_key equality predicate reaches the Parquet scan, so a table
@@ -134,7 +128,7 @@ def get(
         ts_start=ts_range[0] if ts_range else None,
         ts_end=ts_range[1] if ts_range else None,
     )
-    return scan(cells, schema, desc, now_us=now_us, put_only=put_only, counter_only=counter_only, no_atomics=no_atomics)
+    return scan(cells, schema, desc, now_us=now_us, op_kinds=op_kinds)
 
 
 def batch_get(
@@ -143,9 +137,7 @@ def batch_get(
     keys: DataFrame | list[str],
     *,
     now_us: int | None = None,
-    put_only: bool = False,
-    counter_only: int | None = None,
-    no_atomics: bool = False,
+    op_kinds: Collection[int] | None = None,
 ) -> DataFrame:
     """Batched point reads (Table::Get(vector<RowReader*>)): a
     broadcast semi-join of the key set against the cell table — the
@@ -156,7 +148,7 @@ def batch_get(
         [(k,) for k in keys], "row_key string"
     )
     pruned = cells.join(F.broadcast(kdf), "row_key", "left_semi")
-    return current_view(pruned, schema, now_us=now_us, put_only=put_only, counter_only=counter_only, no_atomics=no_atomics)
+    return current_view(pruned, schema, now_us=now_us, op_kinds=op_kinds)
 
 
 def to_row_map(visible: DataFrame) -> DataFrame:

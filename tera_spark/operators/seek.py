@@ -65,6 +65,42 @@ def _le(v: int) -> bytes:
     return (v & ((1 << 64) - 1)).to_bytes(8, "little")
 
 
+def _i64(b: bytes, byteorder: str) -> int:
+    # the codecs' width rule (functions/codecs.py): left-pad with zero
+    # bytes or keep the first 8, then read in byte order
+    return int.from_bytes(b.rjust(8, b"\0")[:8], byteorder, signed=True)
+
+
+def _post_fold(
+    cells: list[tuple],
+    columns: dict[str, list[str]] | None,
+    max_versions: int | None,
+    ts_range: tuple[int, int] | None,
+) -> list[tuple]:
+    """Scan-level semantics on one row's folded cells, mirroring
+    scan.py steps 3-4: the version cap counts BEFORE the projection and
+    time-range post-filters. Returns cells in (cf, qualifier, ts desc)
+    order."""
+    cells = sorted(cells, key=lambda c: (c[1], c[2], -c[3]))
+    if max_versions is not None:
+        per_col: dict[tuple, int] = defaultdict(int)
+        kept = []
+        for c in cells:
+            per_col[(c[1], c[2])] += 1
+            if per_col[(c[1], c[2])] <= max_versions:
+                kept.append(c)
+        cells = kept
+    if columns:
+        cells = [
+            c
+            for c in cells
+            if c[1] in columns and (not columns[c[1]] or c[2] in columns[c[1]])
+        ]
+    if ts_range is not None:
+        cells = [c for c in cells if ts_range[0] <= c[3] <= ts_range[1]]
+    return cells
+
+
 def fold_row(
     rows: list[tuple],
     schema: TableSchema | None,
@@ -138,9 +174,9 @@ def fold_row(
             ]
             mergeable = [x for x in deduped if x[1] in (kind, CellOp.PUT)]
             if kind == CellOp.ADD:
-                val = _be(_wrap_i64(sum(int.from_bytes(x[2], "big", signed=True) for x in mergeable)))
+                val = _be(_wrap_i64(sum(_i64(x[2], "big") for x in mergeable)))
             elif kind == CellOp.ADDINT64:
-                val = _le(_wrap_i64(sum(int.from_bytes(x[2], "little", signed=True) for x in mergeable)))
+                val = _le(_wrap_i64(sum(_i64(x[2], "little") for x in mergeable)))
             elif kind == CellOp.APPEND:
                 val = b"".join(x[2] for x in reversed(mergeable))
             else:  # PUT_IFABSENT: oldest wins
@@ -244,18 +280,51 @@ class Seeker:
                     plan.setdefault(f, {}).setdefault(rg, []).extend(hit)
         return plan
 
-    def _read_cells(
-        self, keys: list[str], *, now_us: int | None = None
-    ) -> dict[str, list[tuple]]:
-        """Read all op-log cells for the given keys, pruned to the row
-        groups whose footer bounds admit them. Table-mode rows come
-        back as 7-tuples; per-cell TTL (expire_ts column, present only
-        in files written by TTL puts) is applied here."""
-        key_col = self._key_col()
-        columns = ["key", "value", "expire_ts", "seq"] if self._kv else _CELL_COLS
+    def _row_filter(self, now_us: int, snapshot_seq: int | None = None):
+        """Read-visibility mask over op-log rows — the rules read_oplog
+        applies, so the seek path agrees with Spark reads: rollback
+        windows, the commit watermark, commit-CAS gaps, an optional
+        snapshot, then per-cell TTL (expire_ts column, present only in
+        files written by TTL puts). Returns ``rows(t, columns)``, which
+        yields the visible rows of arrow table ``t`` as ``columns``
+        tuples (seq last)."""
         rollbacks = self._get_rollbacks()
         watermark = self._get_watermark()
         gaps = self._get_gaps()
+
+        def rows(t, columns: list[str]):
+            has_ttl = not self._kv and "expire_ts" in t.column_names
+            read_cols = columns + (["expire_ts"] if has_ttl else [])
+            n = len(columns)
+            for row in zip(*(t[c].to_pylist() for c in read_cols)):
+                seq = row[n - 1]
+                if any(r["after"] < seq <= r["upto"] for r in rollbacks):
+                    continue  # RollbackDrop (dbformat.h:156)
+                if watermark is not None and seq > watermark:
+                    continue  # torn batch above the commit watermark
+                if any(lo <= seq <= hi for lo, hi in gaps):
+                    continue  # in-flight/crashed concurrent window below
+                    # the watermark (commit-CAS gap mask, as read_oplog)
+                if snapshot_seq is not None and seq > snapshot_seq:
+                    continue
+                if has_ttl:
+                    exp = row[-1]
+                    if exp is not None and 0 < exp <= now_us:
+                        continue  # per-cell TTL (mutation.h:30-33)
+                    row = row[:n]
+                yield row
+
+        return rows
+
+    def _read_cells(
+        self, keys: list[str], *, now_us: int, snapshot_seq: int | None = None
+    ) -> dict[str, list[tuple]]:
+        """Read the visible op-log cells for the given keys (see
+        _row_filter), pruned to the row groups whose footer bounds
+        admit them. Table-mode rows come back as 7-tuples."""
+        key_col = self._key_col()
+        columns = ["key", "value", "expire_ts", "seq"] if self._kv else _CELL_COLS
+        visible = self._row_filter(now_us, snapshot_seq)
         by_key: dict[str, list[tuple]] = defaultdict(list)
 
         def _load(f: Path, rg: int):
@@ -288,25 +357,7 @@ class Seeker:
             tables = [_load(f, rg) for f, rg, _ in work]
         for (f, rg, rg_keys), t in zip(work, tables):
             t = t.filter(pc.is_in(t[key_col], value_set=pa.array(set(rg_keys))))
-            if t.num_rows == 0:
-                continue
-            has_ttl = not self._kv and "expire_ts" in t.column_names
-            read_cols = columns + (["expire_ts"] if has_ttl else [])
-            for row in zip(*(t[c].to_pylist() for c in read_cols)):
-                seq = row[len(columns) - 1]
-                if any(r["after"] < seq <= r["upto"] for r in rollbacks):
-                    continue  # RollbackDrop (dbformat.h:156)
-                if watermark is not None and seq > watermark:
-                    continue  # torn batch above the commit watermark
-                if any(lo <= seq <= hi for lo, hi in gaps):
-                    continue  # in-flight/crashed concurrent window below
-                    # the watermark (commit-CAS gap mask — same rule as
-                    # read_oplog, seek path must agree)
-                if has_ttl:
-                    exp = row[-1]
-                    if exp is not None and 0 < exp <= (now_us or 0):
-                        continue  # per-cell TTL (mutation.h:30-33)
-                    row = row[: len(columns)]
+            for row in visible(t, columns):
                 by_key[row[0]].append(row)
         return by_key
 
@@ -351,31 +402,14 @@ class Seeker:
             import time as _t
 
             now_us = int(_t.time() * 1_000_000)
-        by_key = self._read_cells(list(dict.fromkeys(keys)), now_us=now_us)
+        by_key = self._read_cells(
+            list(dict.fromkeys(keys)), now_us=now_us, snapshot_seq=snapshot_seq
+        )
         out: dict[str, list[tuple]] = {}
         for k, rows in by_key.items():
-            if snapshot_seq is not None:
-                rows = [r for r in rows if r[6] <= snapshot_seq]
-            cells = fold_row(rows, self.schema, now_us=now_us)
-            # scan-level semantics, mirroring scan.py steps 3-4:
-            # version cap counts BEFORE projection/time-range post-filters
-            if max_versions is not None:
-                per_col: dict[tuple, int] = defaultdict(int)
-                kept = []
-                for c in sorted(cells, key=lambda c: (c[1], c[2], -c[3])):
-                    per_col[(c[1], c[2])] += 1
-                    if per_col[(c[1], c[2])] <= max_versions:
-                        kept.append(c)
-                cells = kept
-            if columns:
-                cells = [
-                    c
-                    for c in cells
-                    if c[1] in columns and (not columns[c[1]] or c[2] in columns[c[1]])
-                ]
-            if ts_range is not None:
-                cells = [c for c in cells if ts_range[0] <= c[3] <= ts_range[1]]
-            cells.sort(key=lambda c: (c[1], c[2], -c[3]))
+            cells = _post_fold(
+                fold_row(rows, self.schema, now_us=now_us), columns, max_versions, ts_range
+            )
             if cells:
                 out[k] = cells
         return out
@@ -406,10 +440,7 @@ class Seeker:
             import time as _t
 
             now_us = int(_t.time() * 1_000_000)
-        columns_arg = ["key", "value", "expire_ts", "seq"] if self._kv else _CELL_COLS
-        rollbacks = self._get_rollbacks()
-        watermark = self._get_watermark()
-        gaps = self._get_gaps()
+        visible = self._row_filter(now_us, snapshot_seq)
         by_key: dict[str, list[tuple]] = defaultdict(list)
         for f in self._files():
             for rg, lo, hi, _ in self._file_meta(f):
@@ -419,9 +450,8 @@ class Seeker:
                     ):
                         continue
                 pf = pq.ParquetFile(str(f))
-                has_ttl = "expire_ts" in pf.schema_arrow.names
-                read_cols = columns_arg + (["expire_ts"] if has_ttl else [])
-                t = pf.read_row_group(rg, columns=read_cols)
+                ttl_col = ["expire_ts"] if "expire_ts" in pf.schema_arrow.names else []
+                t = pf.read_row_group(rg, columns=_CELL_COLS + ttl_col)
                 m = None
                 if start is not None:
                     m = pc.greater_equal(t["row_key"], start)
@@ -430,44 +460,17 @@ class Seeker:
                     m = lt if m is None else pc.and_(m, lt)
                 if m is not None:
                     t = t.filter(m)
-                for row in zip(*(t[c].to_pylist() for c in read_cols)):
-                    seq = row[len(columns_arg) - 1]
-                    if any(r["after"] < seq <= r["upto"] for r in rollbacks):
-                        continue
-                    if watermark is not None and seq > watermark:
-                        continue
-                    if any(lo <= seq <= hi for lo, hi in gaps):
-                        continue  # commit-CAS gap mask (same as read_oplog)
-                    if snapshot_seq is not None and seq > snapshot_seq:
-                        continue
-                    if has_ttl:
-                        exp = row[-1]
-                        if exp is not None and 0 < exp <= now_us:
-                            continue
-                        row = row[: len(columns_arg)]
+                for row in visible(t, _CELL_COLS):
                     by_key[row[0]].append(row)
 
         out: list[tuple] = []
         for k in sorted(by_key):
-            cells = fold_row(by_key[k], self.schema, now_us=now_us)
-            if max_versions is not None:
-                per_col: dict[tuple, int] = defaultdict(int)
-                kept = []
-                for c in sorted(cells, key=lambda c: (c[1], c[2], -c[3])):
-                    per_col[(c[1], c[2])] += 1
-                    if per_col[(c[1], c[2])] <= max_versions:
-                        kept.append(c)
-                cells = kept
-            if columns:
-                cells = [
-                    c
-                    for c in cells
-                    if c[1] in columns and (not columns[c[1]] or c[2] in columns[c[1]])
-                ]
-            if ts_range is not None:
-                cells = [c for c in cells if ts_range[0] <= c[3] <= ts_range[1]]
-            cells.sort(key=lambda c: (c[1], c[2], -c[3]))
-            out.extend(cells)
+            out.extend(
+                _post_fold(
+                    fold_row(by_key[k], self.schema, now_us=now_us),
+                    columns, max_versions, ts_range,
+                )
+            )
             if number_limit is not None and len(out) >= number_limit:
                 return out[:number_limit]
         return out
@@ -481,7 +484,7 @@ class Seeker:
             import time as _t
 
             now_us = int(_t.time() * 1_000_000)
-        rows = self._read_cells([key]).get(key, [])
+        rows = self._read_cells([key], now_us=now_us).get(key, [])
         if not rows:
             return None
         key_, value, expire, seq = max(rows, key=lambda r: r[3])

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tera_spark.plans import scale_gate
 from tera_spark.sources.tables import ensure_parallelism
 
 try:
@@ -88,25 +89,6 @@ def cosine_topk(
 # to the broadcast crossJoin expression form (same results).
 _BRUTE_Q_CAP = 1024
 
-# kernel="auto" crossover: below this estimated corpus size the fixed
-# JVM↔Python boundary cost (Arrow transpose + worker round-trip + the
-# query-side collect job) outweighs the vectorization win, so auto
-# stays with the in-JVM expression fold; above it the O(Q·N·d)
-# interpreted fold dominates and the numpy kernel takes over
-# (measured: expr 0.32 s vs numpy 0.46 s on the 0.8 MB sf0.1
-# embeddings; numpy 2.4× faster at 200k×64 vectors with Q=10, and the
-# gap widens with query count since the boundary cost is Q-independent
-# — see OPTIMIZATION_r09.md). Scale-adaptive, not core-count-dependent.
-_BRUTE_NP_BYTES_FLOOR = 32 << 20
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    try:
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # pragma: no cover - py4j hiccup: keep plans Python-free
-        return 0
-
-
 # Memoized bounded collect of the numpy kernel's query side, keyed on
 # (applicationId, semantic plan hash): the kernel needs the query rows
 # driver-side to close over (the same ≤_BRUTE_Q_CAP rows a broadcast
@@ -142,7 +124,12 @@ def _brute_sims(v: DataFrame, q: DataFrame, kernel: str) -> DataFrame:
     cosine, self-pairs included (callers filter/round). Kernel choice
     per module docstring: the numpy path vectorizes the O(Q·N·d) fold;
     the expr path is the zero-Python fallback. ``auto`` picks by the
-    corpus-side size estimate (`_BRUTE_NP_BYTES_FLOOR`).
+    corpus-side size estimate (`plans.scale_gate`): below the floor
+    the fixed JVM↔Python boundary cost (Arrow transpose + worker
+    round-trip + the query-side collect job) outweighs the
+    vectorization win (measured: expr 0.32 s vs numpy 0.46 s on the
+    0.8 MB sf0.1 embeddings; numpy 2.4× faster at 200k×64 vectors with
+    Q=10 — see OPTIMIZATION_r09.md).
 
     Constructing the kernel form runs one bounded Spark job (the
     memoized query-side collect above) — the one construction-time
@@ -151,7 +138,7 @@ def _brute_sims(v: DataFrame, q: DataFrame, kernel: str) -> DataFrame:
     if kernel == "numpy" and _np is None:
         raise RuntimeError('numpy is required for kernel="numpy" (pip install numpy)')
     use_np = kernel == "numpy" or (
-        kernel == "auto" and _np is not None and _plan_bytes(v) >= _BRUTE_NP_BYTES_FLOOR
+        kernel == "auto" and _np is not None and scale_gate(v)
     )
     if use_np:
         rows = _q_rows_bounded(q)

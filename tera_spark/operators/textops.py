@@ -523,19 +523,6 @@ def chunk_documents(
     )
 
 
-# Shared-fold crossover for dsir_importance: below this estimated
-# candidate-corpus size the per-(doc_id, bucket) count fold's exchange
-# (up to `buckets`× more rows than the per-doc aggregation the two-pass
-# shape shuffles) costs more than simply tokenizing the corpus twice,
-# so the small-corpus path keeps the pre-fold two-pass shape; above it
-# a second full tokenize scan dominates and the one-pass shared fold
-# wins. Same scale-adaptive stance (bytes, not cores) as the ann
-# kernel's _BRUTE_NP_BYTES_FLOOR; both shapes are value-identical
-# (integer per-token scores ⇒ sum(count·score) is exactly the
-# per-token sum), pinned by the oracle either way.
-_DSIR_FOLD_BYTES_FLOOR = 32 << 20
-
-
 def dsir_importance(
     candidates: DataFrame,
     target: DataFrame | None = None,
@@ -557,10 +544,11 @@ def dsir_importance(
     text_unigram_surprisal).
 
     Scale shape: both LMs are bucket-count tables of fixed size B —
-    trivially broadcast. Above ``_DSIR_FOLD_BYTES_FLOOR`` the candidate
-    corpus is tokenized ONCE: the token stream folds to per-(doc,
-    bucket) counts first (map-side partial aggregation collapses it
-    before the only candidate-side shuffle), and BOTH consumers — the
+    trivially broadcast. Above the scale gate (``plans.scale_gate``)
+    the candidate corpus is tokenized ONCE: the token stream folds to
+    per-(doc, bucket) counts first (map-side partial aggregation
+    collapses it before the only candidate-side shuffle), and BOTH
+    consumers — the
     raw LM's bucket totals and the final per-doc scoring — read that
     shared aggregation, so Spark plans a ReusedExchange instead of a
     second tokenize pass. Below the floor a small corpus keeps the
@@ -582,7 +570,7 @@ def dsir_importance(
     as non-target just as the filter would drop it.
     """
     from tera_spark.functions.text import h60
-    from tera_spark.operators.similarity import _plan_bytes
+    from tera_spark.plans import scale_gate
 
     if (target is None) == (target_pred is None):
         raise ValueError("pass exactly one of target / target_pred")
@@ -599,7 +587,7 @@ def dsir_importance(
 
     spark = candidates.sparkSession
     cand = ensure_parallelism(candidates)
-    shared_fold = _plan_bytes(cand) >= _DSIR_FOLD_BYTES_FLOOR
+    shared_fold = scale_gate(cand)
     tgt_flag = (
         None if target_pred is None else F.when(target_pred, F.lit(1)).otherwise(F.lit(0))
     )

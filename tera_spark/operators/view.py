@@ -50,14 +50,15 @@ are rare by construction, so AQE broadcasts them — zero extra
 exchanges, zero sorts; mass-delete pathologies degrade to a keyed
 join). Masking filters the collected arrays. All sequential
 per-qualifier logic runs JVM-side over those arrays via higher-order
-functions; no Python UDFs. PUT-only and pure-counter op mixes route
-to cheaper specialized folds (put_only / counter_only below). This
-is the property set that keeps the view viable at 100 TB.
+functions; no Python UDFs. Narrow op mixes route to cheaper
+specialized folds (``fold_route`` below). This is the property set
+that keeps the view viable at 100 TB.
 """
 
 from __future__ import annotations
 
 import time
+from collections.abc import Collection
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -87,6 +88,21 @@ def _cf_prop_map(schema: TableSchema | None, prop: str, default: int) -> Column:
     return F.create_map(*pairs)
 
 
+def fold_route(op_kinds: Collection[int] | None) -> str:
+    """The fold a promised op mix takes (see current_view):
+    ``put_only``, ``counter``, ``merge_free`` or ``general``."""
+    if op_kinds is None:
+        return "general"
+    kinds = set(op_kinds)
+    if kinds <= {CellOp.PUT}:
+        return "put_only"
+    if kinds in ({CellOp.ADD}, {CellOp.ADDINT64}):
+        return "counter"
+    if kinds <= {CellOp.PUT, *CellOp.DELETES}:
+        return "merge_free"
+    return "general"
+
+
 def current_view(
     cells: DataFrame,
     schema: TableSchema | None = None,
@@ -94,9 +110,7 @@ def current_view(
     now_us: int | None = None,
     default_max_versions: int = 1,
     snapshot_seq: int | None = None,
-    put_only: bool = False,
-    counter_only: int | None = None,
-    no_atomics: bool = False,
+    op_kinds: Collection[int] | None = None,
 ) -> DataFrame:
     """Fold an op-log cell DataFrame into the visible-cell view.
 
@@ -106,35 +120,19 @@ def current_view(
     ``snapshot_seq`` reads the table as of a write sequence (reference:
     snapshot reads, SnapshotIDToSeq src/io/tablet_io.cc:698-706).
 
-    ``put_only=True`` is a caller PROMISE that the op-log contains
-    only PUT ops (no tombstones, no atomic merges) — the dominant
-    case (tera defaults to maxversions=1 tables written by plain
-    Puts; the reference's compact strategy likewise short-circuits
-    when no merge/delete records exist). The fold then skips the
-    delete-mask/merge machinery: maxversions=1 collapses to one
-    map-side-partial ``max_by`` hash aggregation (no arrays, no
-    windows); K>1 keeps the collect but slices the sorted entries
-    directly. Catalog-managed tables set this automatically from the
-    op kinds recorded at commit time (Catalog.append); hand-built
-    op-logs may declare it. Results are identical to the general
-    path on any PUT-only log (property-tested).
-
-    ``counter_only=CellOp.ADD`` (or ``CellOp.ADDINT64``) promises the
-    log holds ONLY that atomic op — the pure-counter table, tera's
-    canonical Add workload. The merge then runs as two stacked hash
-    aggregations on the same key prefix (same-ts dedup by max seq,
-    then SUM of decoded deltas — one exchange total, both
-    map-side-partial) instead of collecting per-column arrays.
-    Identical to the general fold on any such log (property-tested);
-    the catalog derives it from commit records like put_only.
-
-    ``no_atomics=True`` promises the log holds only PUTs and delete
-    marks (no ADD/ADDINT64/APPEND/PUT_IFABSENT) — the common
-    tombstone-heavy shape. The fold keeps the full mask machinery but
-    skips merge-run detection and the four merge folds: every group is
-    one sequential pass (DEL_QUALIFIER arming + version cap). Same
-    results as the general path on any such log (run_len would be 0
-    in every group); the catalog derives it from commit records."""
+    ``op_kinds`` is a caller PROMISE: the set of ``CellOp`` codes the
+    op-log may contain (a superset is sound; ``None`` = unknown). The
+    reference's compact strategy likewise short-circuits when no
+    merge/delete records exist. ``fold_route`` maps it to the fold:
+    PUT-only → one map-side-partial ``max_by`` aggregation at
+    maxversions=1 (a sliced sort for K>1); pure ADD or pure ADDINT64
+    → two stacked hash aggregations (same-ts dedup, then SUM); no
+    atomics → the mask machinery without merge-run detection; any
+    other or unknown mix → the general fold. Every route is
+    cell-identical to the general fold on a log its promise covers
+    (property-tested). Catalog-managed tables pass the op kinds
+    recorded at commit time (Catalog._op_kinds_union); hand-built
+    op-logs declare the kinds they build."""
     if now_us is None:
         now_us = int(time.time() * 1_000_000)
     df = cells
@@ -167,10 +165,11 @@ def current_view(
 
     maxv_map = _cf_prop_map(schema, "max_versions", default_max_versions)
 
-    if put_only:
+    route = fold_route(op_kinds)
+    if route == "put_only":
         return _put_only_fold(df, schema, maxv_map, default_max_versions)
-    if counter_only is not None:
-        return _counter_only_fold(df, counter_only)
+    if route == "counter":
+        return _counter_only_fold(df, min(op_kinds))
 
     # --- phase B: one hash aggregation collects each qualifier's ops
     # AND its delete-mark maxima; row/cf-granularity masks then spread
@@ -244,17 +243,15 @@ def current_view(
     grouped = grouped.join(row_marks, "row_key", "left").join(
         cf_marks, ["row_key", "cf"], "left"
     )
+    # entries_raw holds no DEL_ROW/DEL_FAMILY/DEL_QUALIFIERS structs
+    # (prefiltered / skipped by the collect above): only the ts mask
     neg = -(1 << 62)
-    dels = f"{CellOp.DEL_ROW}, {CellOp.DEL_FAMILY}, {CellOp.DEL_QUALIFIERS}"
     mask = (
         f"greatest(coalesce(_del_row, {neg}L), coalesce(_del_cf, {neg}L), "
         f"coalesce(_del_qu, {neg}L))"
     )
     grouped = grouped.withColumn(
-        "entries",
-        F.expr(
-            f"filter(entries_raw, x -> (not (x.sop in ({dels}))) and (-x.nts > {mask}))"
-        ),
+        "entries", F.expr(f"filter(entries_raw, x -> -x.nts > {mask})")
     ).drop("entries_raw", "_del_qu", "_del_row", "_del_cf")
 
     e = F.col("entries")
@@ -281,7 +278,7 @@ def current_view(
             ").out"
         )
 
-    if no_atomics:
+    if route == "merge_free":
         # PUTs + deletes only: every merge run would be empty, so the
         # whole group is one sequential pass — no run detection, no
         # dedup/merge folds (the expression tree the hot loop skips)
@@ -499,9 +496,7 @@ def changes_between(
     seq_start: int,
     seq_end: int | None = None,
     now_us: int | None = None,
-    put_only: bool = False,
-    counter_only: int | None = None,
-    no_atomics: bool = False,
+    op_kinds: Collection[int] | None = None,
 ) -> DataFrame:
     """Changefeed between two write sequences: per (row_key, cf,
     qualifier), diff the newest visible value as-of ``seq_start``
@@ -526,14 +521,13 @@ def changes_between(
         dirty_pred = dirty_pred & (F.col("seq") <= F.lit(seq_end))
     dirty = cells.filter(dirty_pred).select("row_key").distinct()
     scoped = cells.join(dirty, "row_key", "left_semi")
-    hints = dict(put_only=put_only, counter_only=counter_only, no_atomics=no_atomics)
     v0 = latest_view(
-        scoped, schema, snapshot_seq=seq_start, now_us=now_us, **hints
+        scoped, schema, snapshot_seq=seq_start, now_us=now_us, op_kinds=op_kinds
     ).select(
         "row_key", "cf", "qualifier", F.col("value").alias("old_value")
     )
     v1 = latest_view(
-        scoped, schema, snapshot_seq=seq_end, now_us=now_us, **hints
+        scoped, schema, snapshot_seq=seq_end, now_us=now_us, op_kinds=op_kinds
     ).select(
         "row_key", "cf", "qualifier", F.col("value").alias("new_value")
     )

@@ -6,7 +6,8 @@ Spark-native equivalent of "show me how this will execute" is the
 physical plan. This module turns `df.explain` output into structured
 facts — shuffle counts, join strategies, Python-eval nodes, pushed
 filters — used by tests/test_plan_quality.py (plan-hygiene gate) and
-scripts/plan_report.py (PLANS.md evidence generator).
+scripts/plan_report.py (PLANS.md evidence generator). It also holds
+the one scale gate every size-adaptive operator consults.
 """
 
 from __future__ import annotations
@@ -16,6 +17,27 @@ import re
 from contextlib import redirect_stdout
 
 from pyspark.sql import DataFrame
+
+
+# Plan-size floor of the scale gate. Below it a shape's fixed costs
+# (an extra exchange, the JVM↔Python boundary, a second tokenize pass)
+# outweigh what it saves; above it the scale-safe shape wins. Bytes,
+# not cores: the crossover is a property of the data. Consumers: the
+# brute-force cosine numpy kernel (similarity), the DSIR shared fold
+# (textops) and the LSH bucket cap (dedup).
+SCALE_GATE_BYTES = 32 << 20
+
+
+def scale_gate(df: DataFrame) -> bool:
+    """True when ``df``'s optimized-plan size estimate reaches
+    ``SCALE_GATE_BYTES``, i.e. the caller should take its scale-safe
+    branch. An estimate that cannot be computed also answers True: a
+    gate that fails must fail toward the shape that survives scale."""
+    try:
+        est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return True
+    return est >= SCALE_GATE_BYTES
 
 
 def plan_str(df: DataFrame, mode: str = "simple") -> str:

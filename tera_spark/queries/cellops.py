@@ -74,7 +74,7 @@ def cell_scan_range(spark: SparkSession, sf: str) -> DataFrame:
     desc = ScanDescriptor(
         start="0000000100", end="0000000500", columns={"profile": ["name"]}
     )
-    v = scan(cells, _schema("profile"), desc, now_us=NOW, put_only=True)
+    v = scan(cells, _schema("profile"), desc, now_us=NOW, op_kinds={CellOp.PUT})
     return v.select("row_key", "qualifier", F.col("value").cast("string").alias("val"))
 
 
@@ -121,7 +121,7 @@ def cell_multiversion(spark: SparkSession, sf: str) -> DataFrame:
     )
     # the op-log is pure PUTs by construction → declare it and take
     # the fast fold (what the catalog derives from commit records)
-    v = current_view(cells, _schema("li", maxv=2), now_us=NOW, put_only=True)
+    v = current_view(cells, _schema("li", maxv=2), now_us=NOW, op_kinds={CellOp.PUT})
     return v.selectExpr(
         "lpad(cast(row_key as string), 10, '0') as row_key",
         "ts",
@@ -188,7 +188,8 @@ def cell_tombstone(spark: SparkSession, sf: str) -> DataFrame:
     # puts + tombstones only → declare it and take the merge-free fold
     # (what the catalog derives from commit records; 19% measured)
     v = current_view(
-        puts.unionByName(dels).unionByName(vip), schema, now_us=NOW, no_atomics=True
+        puts.unionByName(dels).unionByName(vip), schema, now_us=NOW,
+        op_kinds={CellOp.PUT, CellOp.DEL_ROW},
     )
     return v.selectExpr(
         "lpad(cast(row_key as string), 10, '0') as row_key",
@@ -228,7 +229,7 @@ def cell_counter(spark: SparkSession, sf: str) -> DataFrame:
     )
     # pure-ADD op-log → the stacked-agg counter fold (what the catalog
     # derives from commit records on an Add-only table)
-    v = current_view(cells, _schema("c"), now_us=NOW, counter_only=CellOp.ADD)
+    v = current_view(cells, _schema("c"), now_us=NOW, op_kinds={CellOp.ADD})
     return v.select(
         F.lpad(F.col("row_key").cast("string"), 10, "0").alias("row_key"),
         be_i64_decode(F.col("value")).alias("total_qty"),
@@ -333,7 +334,7 @@ def cell_batch_get(spark: SparkSession, sf: str) -> DataFrame:
     cells = _customer_cells(spark, sf)
     cust = load(spark, sf, "customer").filter(F.col("c_custkey") % 97 == 0)
     keys = cust.select(F.lpad(F.col("c_custkey").cast("string"), 10, "0").alias("row_key"))
-    v = batch_get(cells, _schema("profile"), keys, now_us=NOW, put_only=True)
+    v = batch_get(cells, _schema("profile"), keys, now_us=NOW, op_kinds={CellOp.PUT})
     return v.select("row_key", "qualifier", F.col("value").cast("string").alias("val"))
 
 
@@ -351,7 +352,7 @@ def cell_row_map(spark: SparkSession, sf: str) -> DataFrame:
     cells = _customer_cells(spark, sf)
     cust = load(spark, sf, "customer").filter(F.col("c_custkey") % 31 == 0)
     keys = cust.select(F.lpad(F.col("c_custkey").cast("string"), 10, "0").alias("row_key"))
-    v = batch_get(cells, _schema("profile"), keys, now_us=NOW, put_only=True)
+    v = batch_get(cells, _schema("profile"), keys, now_us=NOW, op_kinds={CellOp.PUT})
     m = to_row_map(v)
     return m.select(
         "row_key",
@@ -389,7 +390,7 @@ def sec_index(spark: SparkSession, sf: str) -> DataFrame:
         _schema("idx"),
         ScanDescriptor(start="BUILDING|00005", end="BUILDING|00005\x00"),
         now_us=NOW,
-        put_only=True,
+        op_kinds={CellOp.PUT},
     ).select(F.col("qualifier").cast("long").alias("c_custkey"))
     return (
         cust.join(F.broadcast(hits), "c_custkey", "left_semi")
@@ -518,7 +519,9 @@ def cell_max_qualifiers(spark: SparkSession, sf: str) -> DataFrame:
             F.col("l_partkey").alias("seq"),
         )
     )
-    v = scan(cells, _schema("q"), ScanDescriptor(max_qualifiers=5), now_us=NOW, put_only=True)
+    v = scan(
+        cells, _schema("q"), ScanDescriptor(max_qualifiers=5), now_us=NOW, op_kinds={CellOp.PUT}
+    )
     return v.select("row_key", "qualifier")
 
 
@@ -566,7 +569,7 @@ def cell_check_and_apply(spark: SparkSession, sf: str) -> DataFrame:
         now_us=NOW,
     )
     assert no is None
-    v = current_view(cells.unionByName(ok), schema, now_us=NOW, put_only=True)
+    v = current_view(cells.unionByName(ok), schema, now_us=NOW, op_kinds={CellOp.PUT})
     return v.filter(F.col("row_key") <= "0000000005").select(
         "row_key", F.col("value").cast("string").alias("val")
     )
@@ -658,7 +661,7 @@ def cell_snapshot_read(spark: SparkSession, sf: str) -> DataFrame:
     in_snap = upd(F.col("c_custkey") < 100, "UPDATED", F.lit(1_000_000))
     after_snap = upd(F.col("c_custkey") >= 100, "TOO_LATE", F.lit(9_000_000))
     cells = base.unionByName(in_snap).unionByName(after_snap)
-    v = scan(cells, _schema("acct"), now_us=NOW, snapshot_seq=2_000_000, put_only=True)
+    v = scan(cells, _schema("acct"), now_us=NOW, snapshot_seq=2_000_000, op_kinds={CellOp.PUT})
     return v.select("row_key", F.col("value").cast("string").alias("val"))
 
 
@@ -688,7 +691,7 @@ def cell_time_range(spark: SparkSession, sf: str) -> DataFrame:
         F.col("o_orderkey").alias("seq"),
     )
     desc = ScanDescriptor(ts_start=820_454_400_000_000, ts_end=852_076_799_000_000)
-    v = scan(cells, _schema("o"), desc, now_us=NOW, put_only=True)
+    v = scan(cells, _schema("o"), desc, now_us=NOW, op_kinds={CellOp.PUT})
     return v.select("row_key", "ts", F.col("value").cast("string").alias("val"))
 
 
@@ -985,7 +988,7 @@ def cell_media_current_decode(spark: SparkSession, sf: str) -> DataFrame:
         )
 
     log = to_cells(v1, 1).unionByName(to_cells(v2, 2))
-    v = current_view(log, _schema("m", maxv=1), now_us=NOW, put_only=True)
+    v = current_view(log, _schema("m", maxv=1), now_us=NOW, op_kinds={CellOp.PUT})
     survivors = v.select(
         F.col("row_key").cast("long").alias("asset_id"),
         F.lit("audio").alias("media_type"),

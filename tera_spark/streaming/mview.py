@@ -80,14 +80,14 @@ class MaterializedCurrentView:
         hist = self.catalog.read_oplog(self.name).join(
             F.broadcast(dirty_keys), "row_key", "left_semi"
         )
-        # re-derive the fold hint each refresh — the op mix can change
-        # batch to batch, and commit records are the proof (same
-        # routing Catalog.view uses)
+        # re-derive the op mix each refresh — it can change batch to
+        # batch, and commit records are the proof (same routing
+        # Catalog.view uses)
         folded = current_view(
             hist,
             self.catalog.get_schema(self.name),
             now_us=self.now_us,
-            **self.catalog.fold_hints(self.name),
+            op_kinds=self.catalog._op_kinds_union(self.name),
         ).withColumn("tablet", _tablet("row_key", self.n_tablets))
 
         vdir = Path(self.view_path)

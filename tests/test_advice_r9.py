@@ -23,6 +23,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import tera_spark.plans as plans
 from tera_spark.operators import similarity as S
 from tera_spark.operators import textops
 from tera_spark.sources import tables
@@ -37,7 +38,7 @@ def test_brute_collect_is_bounded_and_falls_back(spark, monkeypatch):
     # query side over the cap: the kernel path must NOT be taken, and
     # the collect that decides this must scan at most cap+1 rows
     monkeypatch.setattr(S, "_BRUTE_Q_CAP", 3)
-    monkeypatch.setattr(S, "_BRUTE_NP_BYTES_FLOOR", 0)  # force the gate on
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)  # force the gate on
     S._Q_ROWS_MEMO.clear()
     v = _vecs(spark, 6).selectExpr("vec_id as v_id", "embedding as v_vec")
     q = _vecs(spark, 5).selectExpr("vec_id as q_id", "embedding as q_vec")
@@ -48,7 +49,7 @@ def test_brute_collect_is_bounded_and_falls_back(spark, monkeypatch):
 
 
 def test_brute_query_collect_memoized_per_plan(spark, monkeypatch, tmp_path):
-    monkeypatch.setattr(S, "_BRUTE_NP_BYTES_FLOOR", 0)
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)
     S._Q_ROWS_MEMO.clear()
     # parquet-backed plans like the real callers: semanticHash
     # canonicalizes expression ids, so re-reading the same file yields
@@ -85,7 +86,7 @@ def test_explicit_numpy_kernel_without_numpy_raises(spark, monkeypatch):
 
 
 def test_numpy_kernel_degrades_per_row_on_bad_vectors(spark, monkeypatch):
-    monkeypatch.setattr(S, "_BRUTE_NP_BYTES_FLOOR", 0)
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)
     S._Q_ROWS_MEMO.clear()
     rows = [
         (0, [1.0, 2.0, 3.0, 4.0]),
@@ -143,9 +144,9 @@ def test_dsir_fold_gate_shapes_identical(spark, monkeypatch):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    monkeypatch.setattr(textops, "_DSIR_FOLD_BYTES_FLOOR", 1 << 60)  # two-pass
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 1 << 60)  # two-pass
     two_pass = rows(textops.dsir_importance(docs, tgt))
-    monkeypatch.setattr(textops, "_DSIR_FOLD_BYTES_FLOOR", 0)  # shared fold
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)  # shared fold
     shared = rows(textops.dsir_importance(docs, tgt))
     assert two_pass == shared
     assert len(shared) == 5
@@ -170,10 +171,10 @@ def test_dsir_target_pred_identical_both_gate_sides(spark, monkeypatch):
     def rows(df):
         return sorted(map(tuple, df.collect()))
 
-    monkeypatch.setattr(textops, "_DSIR_FOLD_BYTES_FLOOR", 1 << 60)  # two-pass
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 1 << 60)  # two-pass
     explicit = rows(textops.dsir_importance(docs, docs.filter(pred)))
     via_pred = rows(textops.dsir_importance(docs, target_pred=pred))
-    monkeypatch.setattr(textops, "_DSIR_FOLD_BYTES_FLOOR", 0)  # shared fold
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)  # shared fold
     explicit_f = rows(textops.dsir_importance(docs, docs.filter(pred)))
     via_pred_f = rows(textops.dsir_importance(docs, target_pred=pred))
     assert explicit == via_pred == explicit_f == via_pred_f

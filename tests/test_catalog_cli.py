@@ -9,7 +9,9 @@ import tempfile
 import pytest
 
 from tera_spark.catalog import Catalog
+from tera_spark.model import CellOp
 from tera_spark.operators.mutation import MutationBatch
+from tera_spark.operators.view import fold_route
 
 
 @pytest.fixture()
@@ -632,12 +634,12 @@ def test_compact_ranges_reseeds_op_kinds_proof(spark, tmp_path):
         b.add(f"r{i:02d}", "c", "hits", 5, ts=100)
         b.add(f"r{i:02d}", "c", "hits", 7, ts=200)
     cat.append("cnt", b.to_df(spark), commit_seq=20, op_kinds=b.op_kinds)
-    assert cat.fold_hints("cnt") == {"counter_only": CellOp.ADD}
+    assert fold_route(cat._op_kinds_union("cnt")) == "counter"
 
     res = cat.compact_ranges("cnt")
     assert res["groups_folded"] >= 1
     # proof refreshed: PUT recorded into the union -> general fold
-    assert cat.fold_hints("cnt") == {}
+    assert fold_route(cat._op_kinds_union("cnt")) == "general"
 
     # late add colliding with the compacted cell's ts: the general fold
     # drops an atomic at/below a PUT; the stale counter route would
@@ -674,19 +676,19 @@ def test_op_kinds_rolling_summary(spark, tmp_path):
         cat.append("t", b.to_df(spark), commit_seq=10 * n + 1, op_kinds=b.op_kinds)
     summary = tmp_path / "cat" / "t" / "opkinds.json"
     assert _json.loads(summary.read_text())["kinds"] == [CellOp.PUT]
-    assert cat.fold_hints("t") == {"put_only": True}
+    assert fold_route(cat._op_kinds_union("t")) == "put_only"
 
     # legacy layout: drop the summary; the union derives from records
     # once, re-persists, and routing is unchanged
     summary.unlink()
-    assert cat.fold_hints("t") == {"put_only": True}
+    assert fold_route(cat._op_kinds_union("t")) == "put_only"
     assert summary.exists()
 
     # a record missing op_kinds (unknown writer) pins the summary to
     # unknown -> general fold
     summary.unlink()
     (tmp_path / "cat" / "t" / "commits" / "99.json").write_text('{"seq": 99}')
-    assert cat.fold_hints("t") == {}
+    assert fold_route(cat._op_kinds_union("t")) == "general"
     assert _json.loads(summary.read_text())["kinds"] is None
 
 
@@ -808,9 +810,9 @@ def test_index_incremental_refresh_from_changefeed(spark, tmp_path):
     from tera_spark.catalog import _load_indexes
 
     before = _load_indexes(cat, "cust")["info:seg"]["table"]
-    assert cat.fold_hints(before) == {"no_atomics": True}
+    assert fold_route(cat._op_kinds_union(before)) == "merge_free"
     cat.compact_inplace(before)
-    assert cat.fold_hints(before) == {"put_only": True}
+    assert fold_route(cat._op_kinds_union(before)) == "put_only"
     assert hits("S1") == {"u05", "u07", "u09", "u10"}  # unchanged by compaction
 
     # refreshed index ≡ full rebuild (same value->pk mapping)
@@ -980,7 +982,7 @@ def test_maintenance_policy_routes_major_minor_none(spark, tmp_path, capsys):
     cat.append("m", b.to_df(spark), commit_seq=301, op_kinds=b.op_kinds)
     r = cat.maintenance("m")
     assert r["action"] == "major"
-    assert cat.fold_hints("m") == {"put_only": True}
+    assert fold_route(cat._op_kinds_union("m")) == "put_only"
     assert cat.view("m").count() == 20  # k000 gone, k999 added
 
     # rollback window pending → major clears it
@@ -1190,7 +1192,7 @@ def test_table_stats_rollup(spark, tmp_path, capsys):
     assert st["rows"] == 11 and st["files"] >= 1 and st["bytes"] > 0
     assert st["commit_watermark"] == 11
     assert st["op_kinds"] == ["DEL_ROW", "PUT"]
-    assert st["fold_route"] == {"no_atomics": True}
+    assert st["fold_route"] == fold_route({CellOp.PUT, CellOp.DEL_ROW}) == "merge_free"
     assert st["snapshots"] == 1 and st["indexes"] == ["d:q"]
     assert st["pending_rollback_windows"] == 0
 

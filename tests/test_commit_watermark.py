@@ -17,6 +17,7 @@ from tera_spark.catalog import Catalog
 from tera_spark.client import Client
 from tera_spark.model import CELL_SCHEMA, CellOp
 from tera_spark.operators.seek import Seeker
+from tera_spark.operators.view import fold_route
 
 
 @pytest.fixture()
@@ -902,7 +903,7 @@ def test_op_kinds_summary_no_lost_update_two_processes(tmp_path):
     assert proc.returncode == 0, out
     assert cat._op_kinds_union("t") == {5, 7}, cat._op_kinds_union("t")
     # and the routing consequence: a mixed table must NOT fast-fold
-    assert cat.fold_hints("t") == {}
+    assert fold_route(cat._op_kinds_union("t")) == "general"
 
 
 def test_slot_lock_same_holder_reentry_loses_without_renew():

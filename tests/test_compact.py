@@ -164,3 +164,47 @@ def test_compact_ranges_folds_only_dirty_groups(spark, tmp_path):
     # folded group is now all-PUT single range: a second pass is a no-op
     stats2 = cat.compact_ranges("t", now_us=NOW)
     assert stats2["files_folded"] == 0
+
+
+def test_compact_ranges_put_tombstone_group_equals_general_fold(spark, tmp_path, monkeypatch):
+    """A PUT+tombstone group's footer op range proves no atomics, so
+    compact_ranges folds it through the merge-free route; the result
+    must equal the general fold of the raw op-log (all four delete
+    granularities, multi-version columns, ts collisions)."""
+    import tera_spark.operators.compact as compact_mod
+    from tera_spark.catalog import Catalog
+    from tera_spark.operators.view import fold_route
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.create_table("t { cf0 <maxversions=2>, cf1 <maxversions=1> }")
+    rng = random.Random(17)
+    ops = [CellOp.PUT] * 6 + list(CellOp.DELETES)
+    for part in range(3):  # three appends over one key range: one group
+        rows = []
+        for i in range(150):
+            seq = part * 1000 + i
+            op = rng.choice(ops)
+            rk = f"r{rng.randrange(10):02d}"
+            cf = "" if op == CellOp.DEL_ROW else rng.choice(["cf0", "cf1"])
+            qu = "" if op in (CellOp.DEL_ROW, CellOp.DEL_FAMILY) else f"q{rng.randrange(3)}"
+            val = f"v{seq}".encode() if op == CellOp.PUT else None
+            rows.append((rk, cf, qu, rng.randrange(1, 8), op, val, seq))
+        cat.append("t", spark.createDataFrame(rows, CELL_SCHEMA))
+
+    def cells(df):
+        return {(r.row_key, r.cf, r.qualifier, r.ts, bytes(r.value)) for r in df.collect()}
+
+    general = cells(current_view(cat.read_oplog("t"), cat.get_schema("t"), now_us=NOW))
+    assert general
+
+    routes = []
+    real = compact_mod.compact
+
+    def spy(*a, op_kinds=None, **kw):
+        routes.append(fold_route(op_kinds))
+        return real(*a, op_kinds=op_kinds, **kw)
+
+    monkeypatch.setattr(compact_mod, "compact", spy)
+    stats = cat.compact_ranges("t", now_us=NOW)
+    assert stats["groups_folded"] == 1 and routes == ["merge_free"]
+    assert cells(cat.view("t", now_us=NOW)) == general

@@ -225,3 +225,25 @@ def test_phash_pairs_first_collision_no_distinct(spark):
     plan = plan_str(pairs)
     assert "HashAggregate" not in plan, "pair-level distinct is back"
     assert explain_features(pairs)["exchanges"] <= 2
+
+
+def test_scale_gate_fails_toward_scale_safe_branch(spark, tmp_path, monkeypatch):
+    """plans.scale_gate: small estimates take the small branch, the
+    floor is one constant, and an estimate that raises picks the
+    scale-safe branch (True) rather than the small one."""
+    import tera_spark.plans as plans
+
+    p = str(tmp_path / "small.parquet")
+    spark.range(10).write.parquet(p)
+    small = spark.read.parquet(p)
+    assert plans.scale_gate(small) is False
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)
+    assert plans.scale_gate(small) is True
+
+    class NoStats:
+        @property
+        def _jdf(self):
+            raise RuntimeError("py4j hiccup")
+
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 1 << 60)
+    assert plans.scale_gate(NoStats()) is True

@@ -12,6 +12,12 @@ from __future__ import annotations
 import pytest
 
 from tera_spark.catalog import Catalog
+from tera_spark.functions.codecs import (
+    py_decode_be_i64,
+    py_decode_le_i64,
+    py_encode_be_i64,
+    py_encode_le_i64,
+)
 from tera_spark.model import CELL_SCHEMA, CellOp
 from tera_spark.operators.scan import get as spark_get
 from tera_spark.operators.seek import Seeker, fold_row
@@ -58,6 +64,38 @@ def test_seek_matches_spark_fold(cat, spark, seed):
     assert "row_missing" not in got
     got_sets = {k: {(c[0], c[1], c[2], c[3], bytes(c[4])) for c in v} for k, v in got.items()}
     assert got_sets == want
+
+
+# PUT merge bases that are not 8 bytes long: empty, short (with the
+# sign bit set) and long — the codecs' width rule (functions/codecs.py)
+_ODD_BASES = [b"", b"\xff", b"\x01\x02\x03", b"\x80" + bytes(range(1, 9)), bytes(range(1, 13))]
+
+
+@pytest.mark.parametrize("kind", [CellOp.ADD, CellOp.ADDINT64])
+def test_seek_matches_spark_fold_on_odd_width_counter_bases(cat, spark, kind):
+    enc = py_encode_be_i64 if kind == CellOp.ADD else py_encode_le_i64
+    rows = []
+    for i, base in enumerate(_ODD_BASES):
+        rk = f"r{i}"
+        rows.append((rk, "cf0", "n", 1, CellOp.PUT, base, 10 * i))
+        rows.append((rk, "cf0", "n", 2, kind, enc(1), 10 * i + 1))
+        rows.append((rk, "cf0", "n", 3, kind, enc(-3), 10 * i + 2))
+    name = _mk_table(cat, spark, rows, name=f"seek_odd_{kind}")
+    want = {
+        r.row_key: bytes(r.value)
+        for r in current_view(cat.read_oplog(name), cat.get_schema(name), now_us=NOW).collect()
+    }
+    got = {
+        k: bytes(cells[0][4])
+        for k, cells in Seeker(cat, name).multi_get(sorted(want), now_us=NOW).items()
+    }
+    assert got == want and len(got) == len(_ODD_BASES)
+    dec = py_decode_be_i64 if kind == CellOp.ADD else py_decode_le_i64
+    if kind == CellOp.ADD:  # zero-extended: b"\xff" is 255, not -1
+        assert dec(got["r1"]) == 255 - 2
+    else:  # the left pad lands in the low bytes: b"\xff" is -2**56
+        assert dec(got["r1"]) == -(1 << 56) - 2
+    assert dec(got["r0"]) == -2  # empty base reads 0
 
 
 def test_seek_scan_level_options_match(cat, spark):

@@ -1,8 +1,8 @@
 """Round-10 degenerate-bucket cap default (VERDICT r9 item 7).
 
 `max_bucket_size` now defaults to "auto": cap boilerplate LSH buckets at
-`_LSH_CAP_AUTO` once the corpus plan estimate crosses
-`_LSH_CAP_BYTES_FLOOR`, stay cap-free below it (identical plans AND
+`_LSH_CAP_AUTO` once the corpus plan estimate passes the scale gate
+(`plans.SCALE_GATE_BYTES`), stay cap-free below it (identical plans AND
 results to the old None default at fixture scale — max observed bucket
 in the testdata is 4). Measured rationale: scripts/skew_cap_experiment.py
 (one 8k-member template bucket → 32.0M candidate pairs / 114 s uncapped
@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 import pytest
 
 import tera_spark.operators.dedup as D
+import tera_spark.plans as plans
 
 
 @pytest.fixture(scope="module")
@@ -55,7 +56,7 @@ def test_auto_matches_none_below_floor(spark, corpus):
 
 
 def test_auto_caps_degenerate_bucket_above_floor(spark, corpus, monkeypatch):
-    monkeypatch.setattr(D, "_LSH_CAP_BYTES_FLOOR", 0)
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)
     monkeypatch.setattr(D, "_LSH_CAP_AUTO", 4)
     df = corpus
     pairs = {(r.id_a, r.id_b) for r in D.minhash_lsh_pairs(df).collect()}

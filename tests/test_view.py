@@ -6,6 +6,8 @@ default_compact_strategy.cc / atomic_merge_strategy.cc.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -388,8 +390,10 @@ def test_collect_stream_excludes_row_family_delete_marks(spark):
     v = current_view(cells, schema1(maxv=2), now_us=NOW)
     plan = plan_str(v, "formatted").replace(" ", "")
     assert "NOTop" in plan and ("IN(1,2)" in plan or "INSET1,2" in plan), plan
-    # DEL_QUALIFIERS structs ride only the _del_qu max, not the array
-    assert "CASEWHENNOT(op" in plan or "casewhen" in plan.lower(), plan
+    # DEL_QUALIFIERS structs ride only the _del_qu max, not the array:
+    # the collected struct is guarded by op <> DEL_QUALIFIERS
+    guarded = rf"collect_list\(CASEWHENNOT\(op#\d+={CellOp.DEL_QUALIFIERS}\)THENnamed_struct\("
+    assert re.search(guarded, plan), plan
     assert got(v) == [
         ("r1", "cf0", "q", 10, b"keep"),
         ("r3", "cf0", "q", 12, b"kept2"),

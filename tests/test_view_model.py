@@ -29,7 +29,7 @@ from tera_spark.functions.codecs import (
     py_encode_le_i64,
 )
 from tera_spark.model import CELL_SCHEMA, CellOp
-from tera_spark.operators.view import current_view
+from tera_spark.operators.view import current_view, fold_route
 from tera_spark.registry import TableSchema
 
 NOW = 2_000_000_000_000_000
@@ -319,13 +319,24 @@ def test_kv_view_model_property_hypothesis(spark, rows):
     assert got == _kv_model(rows, NOW)
 
 
-@pytest.mark.parametrize("seed", [1, 2, 3])
+# a PUT-only log's op_kinds in each container form callers pass: a
+# set literal, a frozenset, and MutationBatch.op_kinds' list (ids keep
+# the seed alone)
+@pytest.mark.parametrize(
+    "seed, op_kinds",
+    [
+        pytest.param(1, {CellOp.PUT}, id="1"),
+        pytest.param(2, frozenset({CellOp.PUT}), id="2"),
+        pytest.param(3, [CellOp.PUT], id="3"),
+    ],
+)
 @pytest.mark.parametrize("maxv", [1, 2, 3])
-def test_put_only_fast_path_matches_general(spark, seed, maxv):
-    """view.py put_only promise: on any PUT-only op-log the fast fold
+def test_put_only_fast_path_matches_general(spark, seed, op_kinds, maxv):
+    """PUT-only op_kinds promise: on any PUT-only op-log the fast fold
     (max_by for K=1, sliced sort for K>1) is cell-identical to the
     general delete/merge-aware fold — including ts ties broken by seq,
     per-cell TTL expiry, and snapshot_seq bounds."""
+    assert fold_route(op_kinds) == "put_only"
     rng = random.Random(seed)
     rows = []
     for i in range(400):
@@ -348,13 +359,13 @@ def test_put_only_fast_path_matches_general(spark, seed, maxv):
     )
     for snap in (None, 200):
         kw = dict(now_us=NOW, snapshot_seq=snap)
-        fast = {tuple(r) for r in current_view(df, schema, put_only=True, **kw).collect()}
-        slow = {tuple(r) for r in current_view(df, schema, put_only=False, **kw).collect()}
+        fast = {tuple(r) for r in current_view(df, schema, op_kinds=op_kinds, **kw).collect()}
+        slow = {tuple(r) for r in current_view(df, schema, **kw).collect()}
         assert fast == slow
     # no-schema path (default_max_versions governs)
-    fast = {tuple(r) for r in current_view(df, None, put_only=True, now_us=NOW,
+    fast = {tuple(r) for r in current_view(df, None, op_kinds=op_kinds, now_us=NOW,
                                            default_max_versions=maxv).collect()}
-    slow = {tuple(r) for r in current_view(df, None, put_only=False, now_us=NOW,
+    slow = {tuple(r) for r in current_view(df, None, now_us=NOW,
                                            default_max_versions=maxv).collect()}
     assert fast == slow
 
@@ -372,14 +383,14 @@ def test_catalog_routes_put_only_tables_to_fast_fold(spark, tmp_path):
     b.put("r1", "A", "q", "v1", ts=5).put("r1", "A", "q", "v2", ts=9)
     assert b.op_kinds == [CellOp.PUT]
     cat.append("t", b.to_df(spark), commit_seq=2, op_kinds=b.op_kinds)
-    assert cat._put_only("t")
+    assert fold_route(cat._op_kinds_union("t")) == "put_only"
     got = {(r.row_key, r.ts, bytes(r.value)) for r in cat.view("t").collect()}
     assert got == {("r1", 9, b"v2")}
 
     d = MutationBatch(base_seq=3)
     d.delete_column("r1", "A", "q", ts=9)
     cat.append("t", d.to_df(spark), commit_seq=3, op_kinds=d.op_kinds)
-    assert not cat._put_only("t")
+    assert fold_route(cat._op_kinds_union("t")) == "merge_free"
     assert cat.view("t").count() == 0  # the delete is honored
 
 
@@ -399,22 +410,27 @@ def test_major_compaction_upgrades_to_fast_fold(spark, tmp_path):
     d = MutationBatch(base_seq=3)
     d.delete_row("r2", ts=9)
     cat.append("t", d.to_df(spark), commit_seq=3, op_kinds=d.op_kinds)
-    assert not cat._put_only("t")
+    assert fold_route(cat._op_kinds_union("t")) == "merge_free"
     before = {(r.row_key, r.ts, bytes(r.value)) for r in cat.view("t").collect()}
 
     cat.compact_inplace("t", now_us=NOW)
-    assert cat._put_only("t")
+    assert fold_route(cat._op_kinds_union("t")) == "put_only"
     after = {(r.row_key, r.ts, bytes(r.value)) for r in cat.view("t").collect()}
     assert after == before == {("r1", 5, b"v1")}
 
 
 @pytest.mark.parametrize("seed", [5, 6])
-@pytest.mark.parametrize("kind", [CellOp.ADD, CellOp.ADDINT64])
-def test_counter_only_fast_path_matches_general(spark, seed, kind):
-    """view.py counter_only promise: on a pure-ADD (or pure-ADDINT64)
+@pytest.mark.parametrize(
+    "op_kinds",
+    [pytest.param({CellOp.ADD}, id="7"), pytest.param({CellOp.ADDINT64}, id="10")],
+)
+def test_counter_only_fast_path_matches_general(spark, seed, op_kinds):
+    """Pure-counter op_kinds promise: on a pure-ADD (or pure-ADDINT64)
     op-log the stacked-agg SUM fold is cell-identical to the general
     fold — including same-ts dedup (colliding timestamps keep only the
     max-seq delta) and negative deltas."""
+    assert fold_route(op_kinds) == "counter"
+    (kind,) = op_kinds
     enc = py_encode_be_i64 if kind == CellOp.ADD else py_encode_le_i64
     rng = random.Random(seed)
     rows = []
@@ -426,7 +442,7 @@ def test_counter_only_fast_path_matches_general(spark, seed, kind):
     df = spark.createDataFrame(rows, CELL_SCHEMA)
     schema = TableSchema(name="t").add_column_family("A", max_versions=1)
     fast = {tuple(r) for r in current_view(df, schema, now_us=NOW,
-                                           counter_only=kind).collect()}
+                                           op_kinds=op_kinds).collect()}
     slow = {tuple(r) for r in current_view(df, schema, now_us=NOW).collect()}
     assert fast == slow and fast
 
@@ -445,6 +461,7 @@ def test_catalog_routes_counter_tables_to_sum_fold(spark, tmp_path):
     b.add("r1", "A", "hits", 5, ts=1).add("r1", "A", "hits", 7, ts=2)
     cat.append("t", b.to_df(spark), commit_seq=2, op_kinds=b.op_kinds)
     assert cat._op_kinds_union("t") == {CellOp.ADD}
+    assert fold_route(cat._op_kinds_union("t")) == "counter"
     got = cat.view("t").collect()
     assert [(r.row_key, py_decode_be_i64(bytes(r.value))) for r in got] == [("r1", 12)]
 
@@ -452,12 +469,13 @@ def test_catalog_routes_counter_tables_to_sum_fold(spark, tmp_path):
     p.put("r1", "A", "hits", py_encode_be_i64(100), ts=3)
     cat.append("t", p.to_df(spark), commit_seq=3, op_kinds=p.op_kinds)
     assert cat._op_kinds_union("t") == {CellOp.ADD, CellOp.PUT}
+    assert fold_route(cat._op_kinds_union("t")) == "general"
     got = cat.view("t").collect()  # general fold: PUT resets the base
     assert [(r.row_key, py_decode_be_i64(bytes(r.value))) for r in got] == [("r1", 100)]
 
 
 def test_snapshot_compaction_uses_fast_fold_and_preserves_semantics(spark, tmp_path):
-    """Catalog.snapshot derives the fold hint from commit records; a
+    """Catalog.snapshot derives the op kinds from commit records; a
     counter table's compacted base materializes the merged sum as a
     PUT and stays byte-identical to the pre-compaction view."""
     from tera_spark.catalog import Catalog
@@ -473,7 +491,8 @@ def test_snapshot_compaction_uses_fast_fold_and_preserves_semantics(spark, tmp_p
     cat.compact_inplace("t", now_us=NOW)
     after = {(r.row_key, py_decode_be_i64(bytes(r.value))) for r in cat.view("t").collect()}
     assert after == before == {("r1", 12), ("r2", -3)}
-    assert cat._put_only("t")  # counter table upgraded to PUT-only base
+    # counter table upgraded to PUT-only base
+    assert fold_route(cat._op_kinds_union("t")) == "put_only"
 
 
 @st.composite
@@ -501,7 +520,9 @@ def test_hypothesis_put_only_fast_path(spark, rows, maxv):
         .add_column_family("A", max_versions=maxv)
         .add_column_family("B", max_versions=1)
     )
-    fast = {tuple(r) for r in current_view(df, schema, now_us=NOW, put_only=True).collect()}
+    fast = {
+        tuple(r) for r in current_view(df, schema, now_us=NOW, op_kinds={CellOp.PUT}).collect()
+    }
     slow = {tuple(r) for r in current_view(df, schema, now_us=NOW).collect()}
     assert fast == slow
 
@@ -512,32 +533,48 @@ def test_hypothesis_put_only_fast_path(spark, rows, maxv):
         st.tuples(st.integers(0, 2), st.integers(1, 4), st.integers(-50, 100)),
         min_size=1,
         max_size=25,
-    )
+    ),
+    kind=st.sampled_from([CellOp.ADD, CellOp.ADDINT64]),
 )
-def test_hypothesis_counter_fast_path(spark, deltas):
-    """Same shrinking search for the counter fold (ADD), with dense
-    ts collisions so same-ts dedup is always in play."""
+def test_hypothesis_counter_fast_path(spark, deltas, kind):
+    """Same shrinking search for the counter fold (op_kinds {ADD} or
+    {ADDINT64}), with dense ts collisions so same-ts dedup is always
+    in play."""
+    enc = py_encode_be_i64 if kind == CellOp.ADD else py_encode_le_i64
     rows = [
-        (f"r{rk}", "A", "q", ts, CellOp.ADD, py_encode_be_i64(d), seq)
+        (f"r{rk}", "A", "q", ts, kind, enc(d), seq)
         for seq, (rk, ts, d) in enumerate(deltas)
     ]
     df = spark.createDataFrame(rows, CELL_SCHEMA)
     schema = TableSchema(name="t").add_column_family("A", max_versions=1)
     fast = {
         tuple(r)
-        for r in current_view(df, schema, now_us=NOW, counter_only=CellOp.ADD).collect()
+        for r in current_view(df, schema, now_us=NOW, op_kinds={kind}).collect()
     }
     slow = {tuple(r) for r in current_view(df, schema, now_us=NOW).collect()}
     assert fast == slow
 
 
-@pytest.mark.parametrize("seed", [11, 12, 13])
-def test_no_atomics_fast_path_matches_general(spark, seed):
-    """view.py no_atomics promise: on a PUT+tombstone op-log (all four
+# a PUT+tombstone log's op_kinds: the exact set, the sound superset
+# compact_ranges derives from footer op min/max, and a tuple (ids keep
+# the seed alone)
+@pytest.mark.parametrize(
+    "seed, op_kinds",
+    [
+        pytest.param(11, {CellOp.PUT, *CellOp.DELETES}, id="11"),
+        pytest.param(
+            12, {k for k in CellOp.NAMES if CellOp.DEL_ROW <= k <= CellOp.PUT}, id="12"
+        ),
+        pytest.param(13, (*CellOp.DELETES, CellOp.PUT), id="13"),
+    ],
+)
+def test_no_atomics_fast_path_matches_general(spark, seed, op_kinds):
+    """No-atomics op_kinds promise: on a PUT+tombstone op-log (all four
     delete granularities, multi-version columns, chained single-
     version deletes, same-ts collisions) the merge-free fold is
     cell-identical to the general fold — every merge run would be
     empty, so skipping run detection cannot change results."""
+    assert fold_route(op_kinds) == "merge_free"
     rng = random.Random(seed)
     ops = [CellOp.PUT] * 6 + [
         CellOp.DEL_ROW, CellOp.DEL_FAMILY, CellOp.DEL_QUALIFIERS, CellOp.DEL_QUALIFIER
@@ -561,7 +598,7 @@ def test_no_atomics_fast_path_matches_general(spark, seed):
         .add_column_family("A", max_versions=2)
         .add_column_family("B", max_versions=1)
     )
-    fast = {tuple(r) for r in current_view(df, schema, now_us=NOW, no_atomics=True).collect()}
+    fast = {tuple(r) for r in current_view(df, schema, now_us=NOW, op_kinds=op_kinds).collect()}
     slow = {tuple(r) for r in current_view(df, schema, now_us=NOW).collect()}
     assert fast == slow and fast
 
@@ -579,10 +616,10 @@ def test_catalog_routes_tombstone_tables_to_merge_free_fold(spark, tmp_path):
     b.put("r1", "A", "q", "v1", ts=1).put("r2", "A", "q", "v2", ts=1)
     b.delete_row("r2", ts=2)
     cat.append("t", b.to_df(spark), commit_seq=3, op_kinds=b.op_kinds)
-    assert cat.fold_hints("t") == {"no_atomics": True}
+    assert fold_route(cat._op_kinds_union("t")) == "merge_free"
     assert {r.row_key for r in cat.view("t").collect()} == {"r1"}
 
     b2 = MutationBatch(base_seq=4)
     b2.add("r1", "A", "n", 5, ts=3)
     cat.append("t", b2.to_df(spark), commit_seq=4, op_kinds=b2.op_kinds)
-    assert cat.fold_hints("t") == {}
+    assert fold_route(cat._op_kinds_union("t")) == "general"
