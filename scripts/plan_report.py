@@ -6,8 +6,9 @@ include full formatted plans for a few flagship operators.
 
 Run from the repo root: python scripts/plan_report.py
 (driver-only for the RETURNED plans — .explain compiles, it does not
-run jobs; storage-backed operators do run their materialization build
-jobs during construction, which is how the mat-Ex column is observed).
+run jobs; operators whose shared intermediate takes the storage branch
+of functions/cache.materialize do run its build jobs during
+construction, which is how the mat-Ex column is observed).
 Feature extraction lives in the package: tera_spark/plans/.
 """
 
@@ -91,17 +92,18 @@ def main() -> None:
         "but executes them once (e.g. pipeline_media_curation persists "
         "the 7-codec bag and reads it from cache in 6 branches).",
         "",
-        "**mat-Ex** (storage-backed operators only): a `storage=` operator "
-        "writes its shared intermediates to Parquet in MATERIALIZATION "
-        "build jobs that run before the returned plan exists, so the "
-        "returned plan's Ex honestly reads low (the consumers scan "
+        "**mat-Ex** (storage-branch operators only): an operator whose "
+        "shared intermediate's plan estimate reaches the scale gate "
+        "(functions/cache.py::materialize) writes it to Parquet in "
+        "MATERIALIZATION build jobs that run before the returned plan "
+        "exists, so the returned plan's Ex honestly reads low (the consumers scan "
         "Parquet) while the real shuffles live in the build jobs. mat-Ex "
         "reports them as `jobs/exchanges`: the number of materialized "
         "intermediates and the summed Exchange count of their plans, "
         "captured via functions/cache.py::set_materialize_observer at the "
-        "moment each intermediate is written. `-` = not a storage-backed "
-        "query. Cartesian products in build jobs are counted into the "
-        "cartesian column.",
+        "moment each intermediate is written. `-` = no storage-branch "
+        "intermediate in the query. Cartesian products in build jobs are "
+        "counted into the cartesian column.",
         "",
         "Ex counts the STATIC (pre-AQE) plan: a shared subtree referenced "
         "by several consumers prints its exchange once per reference, but "

@@ -24,11 +24,14 @@ from pyspark.sql import functions as F  # noqa: E402
 from tera_spark.session import get_spark  # noqa: E402
 
 N_DOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 500_000
-# "storage" (default) writes the fingerprint/band-sig intermediates to
-# Parquet — the deployment shape, heap-independent (5M docs passes at
-# the default 16 GB driver heap). "cache" is the persist() path (needs
-# ~64 GB driver heap at 5M docs; kept for A/B).
+# Fingerprint medium, forced through the scale-gate floor that
+# functions/cache.materialize consults. "storage" (default) drops the
+# floor to 0, so the fingerprint/band-sig intermediates go to Parquet —
+# the deployment shape, heap-independent (5M docs passes at a 16 GB
+# driver heap). "cache" raises it past any estimate, so they are
+# persisted (needs ~64 GB driver heap at 5M docs; kept for A/B).
 MODE = sys.argv[2] if len(sys.argv) > 2 else "storage"
+GATE_BYTES = {"storage": 0, "cache": 1 << 62}[MODE]
 WORDS = 80  # tokens per doc
 
 
@@ -65,7 +68,7 @@ def main() -> None:
     # materialize the corpus to PARQUET, not cache(): at 100 TB the
     # corpus always arrives from storage, and at 5M docs a cached
     # corpus competes with the whole pipeline for the 16 GB default
-    # heap — the exact dependence the storage fingerprint mode removes
+    # heap — the exact dependence the storage branch removes
     docs.repartition(32).write.parquet(f"{run_dir}/corpus")
     docs = spark.read.parquet(f"{run_dir}/corpus")
     n = docs.count()  # materialized outside the timed section
@@ -86,11 +89,11 @@ def main() -> None:
     over_cap = sum(a["n_over_cap"] for a in audit.values())
     n_buckets = sum(a["n_buckets"] for a in audit.values())
 
-    store = f"{run_dir}/fingerprints" if MODE == "storage" else None
+    from tera_spark import plans
+
+    plans.SCALE_GATE_BYTES = GATE_BYTES
     t0 = time.monotonic()
-    pairs = verified_near_duplicates(
-        docs, threshold=0.7, max_bucket_size=cap, storage=store
-    )
+    pairs = verified_near_duplicates(docs, threshold=0.7, max_bucket_size=cap)
     n_pairs = pairs.count()
     dt = time.monotonic() - t0
 

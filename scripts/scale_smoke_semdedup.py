@@ -86,20 +86,25 @@ def main() -> None:
     )
     t_recompute = time.time() - t0
 
-    t0 = time.time()
-    n_pairs = ivf_near_pairs(v, cents, threshold=EPS).count()
-    t_pairs = time.time() - t0
+    from tera_spark import plans
+
+    def timed_pairs(floor_bytes: int) -> tuple[int, float]:
+        # the shared assignment table's medium follows the scale-gate
+        # floor (functions/cache.materialize); pin it for one run
+        saved, plans.SCALE_GATE_BYTES = plans.SCALE_GATE_BYTES, floor_bytes
+        try:
+            t0 = time.time()
+            return ivf_near_pairs(v, cents, threshold=EPS).count(), time.time() - t0
+        finally:
+            plans.SCALE_GATE_BYTES = saved
+
+    n_pairs, t_pairs = timed_pairs(1 << 62)  # persisted
     assert n_pairs_recompute == n_pairs
 
-    # storage-backed materialization (round 8): the shared assignment
-    # table written to Parquet instead of the executor heap — the
-    # corpus-scale shape; pair count must be identical
-    import tempfile
-
-    store = tempfile.mkdtemp(prefix="semdedup_fp_")
-    t0 = time.time()
-    n_pairs_storage = ivf_near_pairs(v, cents, threshold=EPS, storage=store).count()
-    t_storage = time.time() - t0
+    # the storage branch (round 8): the shared assignment table written
+    # to Parquet instead of the executor heap — the corpus-scale shape;
+    # pair count must be identical
+    n_pairs_storage, t_storage = timed_pairs(0)
     assert n_pairs_storage == n_pairs
 
     # the sorted-neighborhood scale path: N·window cosines instead of

@@ -43,8 +43,8 @@ def exact_duplicates(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 
 
 def _first_collision_candidates(
-    keyed: DataFrame, max_bucket_size: int | None = None
-, scope=None, storage: str | None = None) -> DataFrame:
+    keyed: DataFrame, max_bucket_size: int | None = None, scope=None
+) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) from bucket-key collisions
     with NO pair-level shuffle.
 
@@ -85,7 +85,7 @@ def _first_collision_candidates(
     from tera_spark.functions.cache import materialize
 
     sigs = materialize(
-        ex.select("id", "bucket", prefix.alias("prefix")), storage, scope
+        ex.select("id", "bucket", prefix.alias("prefix")), scope
     )  # self-join: one fingerprint materialization, not two
     a, b = sigs.alias("a"), sigs.alias("b")
     return (
@@ -154,21 +154,20 @@ def minhash_lsh_pairs(
     id_col: str = "doc_id",
     *,
     max_bucket_size: int | None | str = "auto",
-    storage: str | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs: documents sharing ≥1 LSH band
     bucket. Returns (id_a, id_b) with id_a < id_b, distinct — dedup by
     first-collision filter, no pair-level shuffle (see
     `_first_collision_candidates`). ``max_bucket_size="auto"`` caps
     degenerate boilerplate buckets at corpus scale (`_LSH_CAP_AUTO`,
-    size-gated by `plans.scale_gate`). ``storage`` materializes the
-    band-signature intermediate to Parquet instead of the executor
-    heap — the corpus-scale shape (see verified_near_duplicates)."""
+    size-gated by `plans.scale_gate`). The band-signature
+    intermediate goes through `functions/cache.materialize`, which
+    writes it to Parquet at corpus scale."""
     keyed = with_minhash_signature(ensure_parallelism(docs), text_col).select(
         F.col(id_col).alias("id"), band_keys("sig").alias("keys")
     )
     return _first_collision_candidates(
-        keyed, _resolve_bucket_cap(docs, max_bucket_size), storage=storage
+        keyed, _resolve_bucket_cap(docs, max_bucket_size)
     )
 
 
@@ -190,9 +189,9 @@ def jaccard_pairs(
     """Exact 3-gram Jaccard over bucketed candidate pairs. The bucket
     expression bounds the quadratic blow-up (LSH buckets in production;
     any deterministic partition key works)."""
-    from tera_spark.functions.cache import persist_in_scope
+    from tera_spark.functions.cache import materialize
 
-    base = persist_in_scope(
+    base = materialize(
         ensure_parallelism(docs).select(
             F.col(id_col).alias("id"),
             (bucket_expr if bucket_expr is not None else F.col(id_col) % 100).alias("bkt"),
@@ -224,7 +223,6 @@ def verified_near_duplicates(
     threshold: float = 0.5,
     max_bucket_size: int | None | str = "auto",
     scope=None,
-    storage: str | None = None,
 ) -> DataFrame:
     """The production composition: LSH candidates → exact-Jaccard
     verification (candidates only, never all pairs).
@@ -238,16 +236,16 @@ def verified_near_duplicates(
     (16 minhash passes + shingling) runs four times from parquet —
     measured 4x slower at sf0.1.
 
-    ``storage=None`` shares via persist() (MEMORY_AND_DISK — fastest
-    for fixture volumes, but the cached fingerprint table lives in the
-    executor heap; the 5M-doc smoke needed a 64 GB driver heap this
-    way). ``storage=<dir>`` is the 100 TB deployment shape: the
-    fingerprint table and the band-signature table are WRITTEN to
-    Parquet under that directory and every consumer scans storage —
-    heap-independent (the same 5M smoke passes at the default 16 GB),
-    recall identical by construction (same rows, different medium).
-    Reference analog: tera never holds a table in client memory —
-    src/sdk/scan_impl.h streams."""
+    The medium of the fingerprint and band-signature tables is size-
+    chosen by `functions/cache.materialize`: persist() below the
+    `plans.scale_gate` floor (fastest at fixture volumes, but the
+    cached table lives in the executor heap; the 5M-doc smoke needed a
+    64 GB driver heap this way), Parquet at or above it — the 100 TB
+    deployment shape, where every consumer scans storage and the same
+    5M smoke passes at a 16 GB heap. Recall is identical by
+    construction (same rows, different medium). Reference analog: tera
+    never holds a table in client memory — src/sdk/scan_impl.h
+    streams."""
     from tera_spark.functions.cache import materialize
 
     base = materialize(
@@ -258,14 +256,12 @@ def verified_near_duplicates(
             F.col("sig"),
         )
         .repartition("id"),
-        f"{storage}/fingerprints" if storage else None,
         scope,
     )
     cand = _first_collision_candidates(
         base.select("id", band_keys("sig").alias("keys")),
         _resolve_bucket_cap(docs, max_bucket_size),
         scope=scope,
-        storage=f"{storage}/band_sigs" if storage else None,
     )
     sh = base.select("id", "sh")
     j = (
@@ -290,7 +286,6 @@ def containment_pairs(
     k: int = 5,
     max_bucket_size: int | None | str = "auto",
     scope=None,
-    storage: str | None = None,
 ) -> DataFrame:
     """Asymmetric near-duplicate detection by Jaccard CONTAINMENT:
     C(A→B) = |sh(A) ∩ sh(B)| / |sh(A)|. Catches a document largely
@@ -321,7 +316,6 @@ def containment_pairs(
             F.col(id_col).alias("id"),
             F.expr(f"array_distinct({sx_shingles(f'`{text_col}`')})").alias("sh"),
         ),
-        f"{storage}/shingles" if storage else None,
         scope,
     )  # sketch + both verification sides read one derivation
     bottom = F.slice(
@@ -333,7 +327,6 @@ def containment_pairs(
         base.select("id", bottom.alias("keys")),
         _resolve_bucket_cap(docs, max_bucket_size),
         scope=scope,
-        storage=f"{storage}/bottomk_sigs" if storage else None,
     )
     j = (
         cand.join(base.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")

@@ -112,7 +112,7 @@ def score_trigrams(
 
     Broadcast policy: the hint is GATED, not unconditional — each
     count relation is counted (one small job over the already-
-    aggregated relation; callers that persist_in_scope the relations
+    aggregated relation; callers that materialize the relations
     pay it once) and broadcast only under ``broadcast_row_cap`` rows.
     Trigram diversity grows with the corpus, so at 100 TB the count
     relations can exceed the 8 GB broadcast hard limit; over the cap

@@ -756,9 +756,9 @@ def phash_duplicates(
     ).select(
         "asset_id", "phash", F.col("b.band").alias("band"), F.col("b.key").alias("key")
     )
-    from tera_spark.functions.cache import persist_in_scope
+    from tera_spark.functions.cache import materialize
 
-    banded = persist_in_scope(banded, scope)  # self-join: decode+hash once, not twice
+    banded = materialize(banded, scope)  # self-join: decode+hash once, not twice
     a, b2 = banded.alias("a"), banded.alias("b")
     xor = F.col("a.phash").bitwiseXOR(F.col("b.phash"))
 

@@ -370,7 +370,6 @@ def ivf_near_pairs(
     vec_col: str = "embedding",
     cid_col: str = "centroid_id",
     scope=None,
-    storage: str | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs restricted to IVF
     clusters — the scale-path variant of all-pairs cosine dedup.
@@ -380,14 +379,12 @@ def ivf_near_pairs(
     assignment kernel run ONCE instead of once per side. (The verify
     itself dominates wall time — see SCALE.md "Semantic dedup"; the
     materialization's value is not re-reading the source at cluster
-    scale.) ``storage=<dir>`` writes the shared intermediate to
-    Parquet instead of the executor heap — the corpus-scale shape,
-    same contract as verified_near_duplicates."""
+    scale.) The shared intermediate's medium is size-chosen by
+    `functions/cache.materialize`, as in verified_near_duplicates."""
     from tera_spark.functions.cache import materialize
 
     assigned = materialize(
         ivf_assign(vectors, centroids, id_col=id_col, vec_col=vec_col, cid_col=cid_col),
-        f"{storage}/assigned" if storage else None,
         scope,
     )
     a, b = assigned.alias("a"), assigned.alias("b")
@@ -415,7 +412,6 @@ def windowed_semantic_pairs(
     vec_col: str = "embedding",
     cid_col: str = "centroid_id",
     scope=None,
-    storage: str | None = None,
 ) -> DataFrame:
     """Sorted-neighborhood semantic near-dup pairs — the linear-work
     scale path for the within-cluster verify that dominates
@@ -462,7 +458,10 @@ def windowed_semantic_pairs(
     )
     from tera_spark.functions.cache import materialize
 
-    ranked = materialize(ranked, f"{storage}/ranked" if storage else None, scope)
+    # without CBO the ranked relation's size estimate is the join-size
+    # product (~4.5e24 B even on fixtures), so it takes the Parquet
+    # branch at every scale — the gate's fail-safe side
+    ranked = materialize(ranked, scope)
     probe = ranked.select(
         "cluster",
         F.explode(
@@ -815,7 +814,6 @@ def hyperplane_lsh_pairs(
     vec_col: str = "embedding",
     dim: int = 64,
     scope=None,
-    storage: str | None = None,
 ) -> DataFrame:
     """Embedding near-duplicate pairs via random-hyperplane LSH:
     candidates collide on >=1 signature band, then exact cosine
@@ -824,7 +822,7 @@ def hyperplane_lsh_pairs(
     training pass, and for a collision probability of (1 - theta/pi)
     per bit the band structure bounds candidates to near-neighbours.
 
-    Scale shape mirrors verified_near_duplicates: one persisted
+    Scale shape mirrors verified_near_duplicates: one materialized
     (id, vec, sig) table feeds the band self-join and both
     verification lookups; the band join is the only wide stage."""
     from tera_spark.functions.cache import materialize
@@ -835,7 +833,6 @@ def hyperplane_lsh_pairs(
         .select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
         .withColumn("sig", hyperplane_signature(F.col("vec"), planes))
         .repartition("id"),
-        f"{storage}/signed" if storage else None,
         scope,
     )
     sigs = base.select("id", F.explode(hyperplane_band_keys(F.col("sig"))).alias("bucket"))

@@ -254,16 +254,16 @@ def theta_sketch(
 
 def _theta_select(base: DataFrame, k: int, scope=None) -> tuple[DataFrame, DataFrame]:
     """k smallest distinct hashes per group + each group's theta. The
-    ranked sketch is persisted — it feeds the theta derivation and
+    ranked sketch is materialized — it feeds the theta derivation and
     both sides of every pair question; unpersisted, each consumer
     would replay the distinct shuffle over the facts (pass ``scope``
     for deterministic release, functions/cache.py contract)."""
     from pyspark.sql import Window as W
 
-    from tera_spark.functions.cache import persist_in_scope
+    from tera_spark.functions.cache import materialize
 
     rk = F.row_number().over(W.partitionBy("g").orderBy("h"))
-    sk_ranked = persist_in_scope(
+    sk_ranked = materialize(
         base.distinct().withColumn("rk", rk).filter(F.col("rk") <= k), scope
     )
     th = sk_ranked.groupBy("g").agg(

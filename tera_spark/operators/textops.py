@@ -716,18 +716,18 @@ def stupid_backoff_nll(
     construction — an unconditional hint would OOM at 100 TB trigram
     diversity); the corpus itself is
     scanned once and re-shuffled only by doc_id for the final fold.
-    The count relations are persisted (they feed both the scoring
+    The count relations are materialized (they feed both the scoring
     joins and their derived context counts — unpersisted, each would
     re-scan the train corpus twice); pass ``scope`` for deterministic
     release (functions/cache.py contract).
     """
-    from tera_spark.functions.cache import persist_in_scope
+    from tera_spark.functions.cache import materialize
     from tera_spark.operators.lm import ngram_counts, score_trigrams, trigram_stream
 
     if train_pred is None:
         train_pred = F.col("doc_id") % 2 == 0
     c3, cb, c1 = ngram_counts(docs.filter(train_pred), text_col)
-    c3, cb, c1 = (persist_in_scope(x, scope) for x in (c3, cb, c1))
+    c3, cb, c1 = (materialize(x, scope) for x in (c3, cb, c1))
     return score_trigrams(
         trigram_stream(docs, text_col), c3, cb, c1, backoff=backoff
     )

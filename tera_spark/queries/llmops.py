@@ -991,28 +991,16 @@ def dedup_lsh_verified(spark: SparkSession, sf: str) -> DataFrame:
     """,
 )
 def dedup_lsh_storage(spark: SparkSession, sf: str) -> DataFrame:
-    """verified_near_duplicates in its STORAGE-BACKED fingerprint mode:
-    the MinHash fingerprint and band-signature intermediates are
-    written to Parquet and scanned by both pipeline phases instead of
-    being pinned in the executor heap — the shape that takes the 5M-doc
-    smoke from a 64 GB driver-heap requirement to the default 16 GB
-    (SCALE.md §11). Same oracle as dedup_lsh_verified: the mode changes
-    the medium of the shared intermediate, never the rows. The scratch
-    is app-keyed and atexit-reaped (functions/cache.py::app_scratch_dir)
-    so repeated driver/bench invocations overwrite one directory
-    instead of leaking a Parquet copy into /tmp per call."""
-    from pathlib import Path
-
-    from tera_spark.functions.cache import app_scratch_dir
-    from tera_spark.operators.dedup import verified_near_duplicates
-
-    docs = load(spark, sf, "documents")
-    store = app_scratch_dir(spark, "lsh_storage_" + Path(sf).name)
-    return verified_near_duplicates(docs, threshold=0.5, storage=store).select(
-        F.col("id_a").cast("long").alias("id_a"),
-        F.col("id_b").cast("long").alias("id_b"),
-        "jaccard",
-    )
+    """verified_near_duplicates with its fingerprint medium SIZE-CHOSEN:
+    `functions/cache.materialize` persists the MinHash fingerprint and
+    band-signature intermediates below the `plans.scale_gate` floor and
+    writes them to Parquet at or above it — the shape that takes the
+    5M-doc smoke from a 64 GB driver-heap requirement to 16 GB
+    (SCALE.md §11). No caller option picks the medium any more, so this
+    entry now builds the same plan as dedup_lsh_verified; it keeps its
+    key and the shared oracle: the medium never changes the rows
+    (tests/test_dedup_storage.py forces the Parquet branch)."""
+    return dedup_lsh_verified(spark, sf)
 
 
 @query(

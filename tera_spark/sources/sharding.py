@@ -74,19 +74,19 @@ def distributed_rank(
     materializes the total order as contiguous slices, each slice
     ranks locally, and an exclusive prefix sum of slice sizes
     (O(partitions) driver pass, never O(rows)) lifts local ranks to
-    global ones. The ranged relation is persisted so counts and ranks
-    see one layout (pass ``scope`` for deterministic release).
+    global ones. The ranged relation is materialized (functions/cache.py)
+    so counts and ranks see one layout (pass ``scope`` for deterministic release).
 
     ``order_cols`` must be a total order (break ties with a key) or
     ranks are nondeterministic."""
     from pyspark.sql import Window as W
 
-    from tera_spark.functions.cache import persist_in_scope
+    from tera_spark.functions.cache import materialize
 
     spark = df.sparkSession
     if n_parts is None:
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    ranged = persist_in_scope(
+    ranged = materialize(
         df.repartitionByRange(n_parts, *order_cols).withColumn(
             "_pid", F.spark_partition_id()
         ),

@@ -1,4 +1,4 @@
-"""Streaming atomic-counter fold via transformWithStateInPandas.
+"""Streaming atomic-counter fold via applyInPandasWithState.
 
 Tera's counters are merge-on-read: ADD/ADDINT64 deltas accumulate in
 the LSM and fold into a value at scan/compaction
@@ -10,24 +10,10 @@ running total lives in keyed state, so reads see an always-current
 value without rescanning the log — the streaming analog of a compacted
 counter cell.
 
-Two implementations of the same fold, one default entry:
-
-* ``counter_fold`` — USE THIS. Auto-selects the implementation:
-  the native Spark-4 ``transformWithStateInPandas`` path when its
-  protobuf state-server runtime is importable, else the
-  ``applyInPandasWithState`` compat path. Both replay (seq, is_base,
-  delta) per key identically; the equivalence is pinned by the twin
-  test pairs in tests/test_counter_state.py.
-* ``counter_stream`` — the native StatefulProcessor path: typed
-  per-key ValueState, explicit init/close lifecycle, RocksDB
-  state-store friendly (session.get_spark(rocksdb_state=True)) for
-  10^8-key counter spaces. **EXPERIMENTAL where protobuf is absent**:
-  the Python state-server protocol needs the ``protobuf`` package, so
-  this path raises a clear RuntimeError at plan construction in
-  environments without it (this container is one — the execution
-  tests therefore exercise it only on protobuf-equipped clusters).
-* ``counter_stream_compat`` — the Spark-3.4+ compat path; executes
-  everywhere, end-to-end tested in this container.
+``counter_fold`` is the one entry. It runs on the Spark 3.4+
+``applyInPandasWithState`` API, which needs no extra runtime; the
+RocksDB state store (session.get_spark(rocksdb_state=True)) carries
+10^8-key counter spaces across restarts.
 """
 
 from __future__ import annotations
@@ -38,7 +24,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
 from tera_spark.functions.codecs import be_i64_decode, le_i64_decode
 from tera_spark.model import CellOp
@@ -61,98 +46,22 @@ def counter_ops(cells: DataFrame, *, encoding: str = "le") -> DataFrame:
     )
 
 
-class CounterProcessor(StatefulProcessor):
-    """Per-(row_key, cf, qualifier) running total. Input rows carry
-    (seq, is_base, delta); replay in commit order so a PUT base resets
-    exactly like the batch fold."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._total = handle.getValueState("total", "total BIGINT")
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        prev = self._total.get() if self._total.exists() else None
-        total = int(prev[0]) if prev is not None else 0
-        pdf = pd.concat(list(rows)).sort_values("seq")
-        for is_base, delta in zip(pdf["is_base"], pdf["delta"]):
-            total = int(delta) if is_base else total + int(delta)
-        self._total.update((total,))
-        yield pd.DataFrame(
-            {
-                "row_key": [key[0]],
-                "cf": [key[1]],
-                "qualifier": [key[2]],
-                "total": [total],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def counter_fold(cells: DataFrame, *, encoding: str = "le", impl: str = "auto") -> DataFrame:
-    """Default entry for the streaming counter fold: ``impl='auto'``
-    picks the native transformWithState path iff its protobuf runtime
-    is importable, else the compat path — so callers always get an
-    executable plan with identical semantics. ``'native'``/``'compat'``
-    force a specific implementation."""
-    if impl == "auto":
-        impl = "native" if _has_protobuf() else "compat"
-    if impl == "native":
-        return counter_stream(cells, encoding=encoding)
-    if impl == "compat":
-        return counter_stream_compat(cells, encoding=encoding)
-    raise ValueError(f"impl must be auto|native|compat, got {impl!r}")
-
-
-def counter_stream(cells: DataFrame, *, encoding: str = "le") -> DataFrame:
+def counter_fold(cells: DataFrame, *, encoding: str = "le") -> DataFrame:
     """Fold a streaming op-log into running counter totals.
 
     ``cells``: streaming DataFrame with the canonical op-log columns
     (row_key, cf, qualifier, ts, op, value, seq). PUT sets the base,
-    ADD/ADDINT64 add deltas; everything else is ignored. ``encoding``
-    picks the int64 codec for values ("le" native / "be" big-endian —
-    a counter column uses one, mirroring the two reference codecs).
+    ADD/ADDINT64 add deltas in seq order; everything else is ignored.
+    State is the running total per (row_key, cf, qualifier).
+    ``encoding`` picks the int64 codec for values ("le" native / "be"
+    big-endian — a counter column uses one, mirroring the two
+    reference codecs).
 
     Decoding happens JVM-side before the stateful operator: Python
     only ever sees (seq, is_base, delta) longs, keeping the Arrow
     batches narrow. Keys hash-partition the state; each micro-batch
     touches only keys present in the batch.
     """
-    if not _has_protobuf():
-        raise RuntimeError(
-            "counter_stream (native transformWithState) needs the "
-            "'protobuf' package for Spark's Python state-server "
-            "protocol, which this environment lacks. Use counter_fold "
-            "(auto-selects) or counter_stream_compat (same semantics, "
-            "applyInPandasWithState)."
-        )
-    ops = counter_ops(cells, encoding=encoding)
-    return ops.groupBy("row_key", "cf", "qualifier").transformWithStateInPandas(
-        statefulProcessor=CounterProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def counter_stream_compat(cells: DataFrame, *, encoding: str = "le") -> DataFrame:
-    """Same streaming counter fold on the applyInPandasWithState API
-    (Spark 3.4+): identical semantics to counter_stream — PUT resets
-    the base, deltas accumulate in seq order, state is the running
-    total per (row_key, cf, qualifier). Use this form where the
-    transformWithState runtime (protobuf state server) is unavailable;
-    it executes in this container and its tests run end-to-end."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     ops = counter_ops(cells, encoding=encoding)

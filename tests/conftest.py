@@ -14,100 +14,16 @@ def spark():
 SF_DIR = "/root/testdata/sf0.001"
 
 
-# ---------------------------------------------------------------------------
 # Slow-test split (round 10, VERDICT r9 item 2): the full suite is 946
-# tests / ~46 min on this box, which overran the correctness driver's
-# pytest budget in round 9 (tail truncated at ~90% with zero failures).
-# The default run (`pytest tests/`) deselects the measured heavyweights
-# below — every test that took >= ~8 s in the round-10 full-suite
-# profile (/tmp/pytest_r10_base.log, 946 passed in 46m22s), EXCEPT the
-# oracle-parity suite, which replicates the driver's DuckDB gate and
-# always runs in full. The full suite stays one flag away:
+# tests / ~46 min on a 4-core box, which overran the correctness
+# driver's pytest budget. Every test that took >= ~8 s in the round-10
+# full-suite profile carries `@pytest.mark.slow` (or a `pytest.param`
+# mark for one parametrized id) and pytest.ini deselects it by
+# default — EXCEPT the oracle-parity suite, which replicates the
+# driver's DuckDB gate and always runs in full. The mark sits on the
+# test itself, so renaming a test keeps its status. The full suite
+# stays one flag away:
 #
 #     pytest tests/ -m "slow or not slow"
 #
-# and is still run (and recorded) before each round closes. Node IDs,
-# not name patterns, so the deselection is explicit and auditable.
-# ---------------------------------------------------------------------------
-_SLOW_NODE_IDS = frozenset(
-    {
-        "test_access.py::test_catalog_enforcement",
-        "test_advice_r8.py::test_ann_self_filter_consistent_across_brute_threshold",
-        "test_catalog_cli.py::test_cli_cas_counters_batchget_on_hash_table",
-        "test_catalog_cli.py::test_compact_ranges_reseeds_op_kinds_proof",
-        "test_catalog_cli.py::test_find_tablet_routes_hashed_key",
-        "test_catalog_cli.py::test_index_incremental_refresh_from_changefeed",
-        "test_catalog_cli.py::test_maintenance_policy_routes_major_minor_none",
-        "test_catalog_cli.py::test_snapshot_set_consistent_cut_and_restore",
-        "test_client.py::test_create_hash_table_with_hash_num_presplits",
-        "test_client.py::test_hash_distributed_table_transparent",
-        "test_client.py::test_sdk_workflow",
-        "test_commit_watermark.py::test_commit_cas_two_os_processes_contend",
-        "test_commit_watermark.py::test_disjoint_commits_two_os_processes",
-        "test_commit_watermark.py::test_legacy_tables_without_records_read_unfiltered",
-        "test_commit_watermark.py::test_recovery_discards_tail_permanently",
-        "test_compact.py::test_compact_view_equivalence_randomized",
-        "test_counter_state.py::test_counter_accumulates_and_put_resets",
-        "test_counter_state.py::test_counter_compat_accumulates_and_put_resets",
-        "test_counter_state.py::test_counter_compat_multikey_isolation",
-        "test_dedup_storage.py::test_minhash_pairs_storage_mode_matches",
-        "test_dedup_storage.py::test_semantic_pairs_storage_mode_matches",
-        "test_dedup_stream.py::test_admit_two_batches_and_set_growth",
-        "test_dedup_stream.py::test_epoch_replay_is_idempotent",
-        "test_dedup_stream.py::test_in_batch_near_rule_is_deterministic",
-        "test_dedup_stream.py::test_streaming_drain_with_checkpoint",
-        "test_ingest.py::test_csv_import_round_trip",
-        "test_llmops.py::test_connected_components_chain_and_clusters",
-        "test_llmops.py::test_hyperplane_signature_deterministic",
-        "test_llmops.py::test_kmeans_trains_usable_codebook",
-        "test_llmops.py::test_pagerank_hub_and_symmetry",
-        "test_media_analysis.py::test_audio_fingerprint_matches_python_replay",
-        "test_media_triage.py::test_folded_census_equals_batch",
-        "test_media_triage.py::test_replayed_epoch_is_idempotent",
-        "test_mview.py::test_mview_tracks_full_fold",
-        "test_pipeline_integration.py::test_streaming_corpus_ingestion_pipeline",
-        "test_plan_quality.py::test_no_cartesian_no_python_rows[ann_filtered_selective]",
-        "test_plan_quality.py::test_no_cartesian_no_python_rows[ann_hyperplane_pairs]",
-        "test_plan_quality.py::test_no_cartesian_no_python_rows[ann_kmeans_clusters]",
-        "test_plan_quality.py::test_no_cartesian_no_python_rows[dedup_semantic_windowed]",
-        "test_plan_quality.py::test_no_cartesian_no_python_rows[dedup_simhash]",
-        "test_plan_quality.py::test_no_cartesian_no_python_rows[graph_pagerank_neardup]",
-        "test_seek.py::test_client_and_cli_seek_paths",
-        "test_seek.py::test_footer_routing_prunes_files",
-        "test_seek.py::test_multi_get_auto_routing",
-        "test_seek.py::test_scan_range_matches_spark_scan",
-        "test_seek.py::test_seek_matches_spark_fold[42]",
-        "test_seek.py::test_seek_matches_spark_fold_with_random_ttl[21]",
-        "test_seek.py::test_seek_scan_level_options_match",
-        "test_stateful.py::test_sessionize_split_multiuser_and_restart",
-        "test_streaming.py::test_attribution_join_stream_matches_batch",
-        "test_streaming.py::test_observer_maintains_secondary_index",
-        "test_tpcc.py::test_tpcc_spark_matches_mock",
-        "test_train_order_invariance.py::test_semantic_pairs_layout_invariant",
-        "test_train_order_invariance.py::test_train_kmeans_layout_invariant",
-        "test_train_order_invariance.py::test_train_kmeans_sample_layout_invariant",
-        "test_train_order_invariance.py::test_train_pq_layout_invariant",
-        "test_vector_index.py::test_auto_m_default_picks_largest_divisor",
-        "test_vector_index.py::test_build_load_search_deterministic",
-        "test_vector_index.py::test_effective_nprobe_scales_inverse_selectivity",
-        "test_vector_index.py::test_filtered_above_brute_limit_widens_to_full_probe",
-        "test_vector_index.py::test_filtered_search_prefilters_at_codes_scan",
-        "test_vector_index.py::test_incremental_append_searchable",
-        "test_vector_index.py::test_recall_vs_brute_force",
-        "test_vector_index.py::test_selective_filter_takes_brute_fallback_full_recall",
-        "test_vector_index.py::test_streaming_append_maintains_index",
-        "test_view.py::test_changes_between_reconstructs_new_view[7]",
-        "test_view.py::test_illegal_cf_dropped",
-        "test_view_model.py::test_hypothesis_counter_fast_path",
-        "test_view_model.py::test_hypothesis_put_only_fast_path",
-        "test_view_model.py::test_view_model_property_hypothesis",
-    }
-)
-
-
-def pytest_collection_modifyitems(config, items):
-    for item in items:
-        # item.nodeid is like "tests/test_view.py::test_x[param]"
-        nodeid = item.nodeid.split("/")[-1]
-        if nodeid in _SLOW_NODE_IDS:
-            item.add_marker(pytest.mark.slow)
+# and is still run (and recorded) before each round closes.

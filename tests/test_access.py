@@ -73,6 +73,7 @@ def test_quota_window_refill_and_atomicity(tmp_path):
     ac.check_and_consume("t", [("write_reqs", 999)], now_s=11.3)
 
 
+@pytest.mark.slow
 def test_catalog_enforcement(spark, tmp_path):
     ac = AccessControl(tmp_path, policy="ugi")
     ac.create_user("alice", "a")

@@ -88,6 +88,7 @@ def test_mp3_mixed_stream_still_detected():
         parse_mp3(free + headered)
 
 
+@pytest.mark.slow
 def test_ann_self_filter_consistent_across_brute_threshold(spark, tmp_path):
     from tera_spark.operators.vector_index import VectorIndex
 

@@ -1,7 +1,9 @@
-"""CacheScope: operator-internal persists register with an explicit
-scope so callers can release them deterministically after consuming
-the results; without a scope, persists stay until session LRU eviction
-(the long-standing default).
+"""CacheScope: the intermediates `functions/cache.materialize` makes
+for an operator — persists below the scale gate, Parquet directories
+at or above it — register with an explicit scope so callers can
+release them deterministically after consuming the results; without a
+scope, persists stay until session LRU eviction and directories until
+process exit (the long-standing default).
 
 History: a GC-finalizer design (unpersist when the returned DataFrame
 is garbage-collected) was tried and REVERTED in round 5 — query
@@ -44,14 +46,36 @@ def test_scope_releases_on_exit(spark):
 
 
 def test_scope_release_idempotent(spark):
-    from tera_spark.functions.cache import CacheScope, persist_in_scope
+    from tera_spark.functions.cache import CacheScope, materialize
 
     scope = CacheScope(spark)
-    dep = persist_in_scope(spark.range(10), scope)
+    dep = materialize(spark.range(10), scope)  # below the gate: persist
     assert dep.storageLevel != StorageLevel.NONE
     scope.release()
     assert dep.storageLevel == StorageLevel.NONE
     scope.release()  # idempotent
+
+
+def test_released_scope_removes_its_storage_dirs(spark, monkeypatch):
+    """Storage-branch intermediates live in fresh directories under the
+    app scratch; releasing the scope that registered them deletes them
+    (the at-exit reaper is only the scope-less fallback)."""
+    import os
+
+    from tera_spark import plans
+    from tera_spark.functions.cache import CacheScope, app_scratch_dir, materialize
+
+    monkeypatch.setattr(plans, "SCALE_GATE_BYTES", 0)
+    root = app_scratch_dir(spark, "materialize")
+    before = set(os.listdir(root))
+    with CacheScope(spark) as scope:
+        a = materialize(spark.range(10), scope)
+        b = materialize(spark.range(5), scope)
+        new = set(os.listdir(root)) - before
+        assert len(new) == 2  # one directory per call, never a shared tag
+        assert (a.count(), b.count()) == (10, 5)
+        assert "InMemoryRelation" not in plans.plan_str(a)
+    assert not new & set(os.listdir(root))
 
 
 def test_no_scope_keeps_cache_through_execution(spark):

@@ -614,6 +614,7 @@ def test_secondary_index_create_lookup_and_read_repair(spark, tmp_path):
     } == {"u001"}
 
 
+@pytest.mark.slow
 def test_compact_ranges_reseeds_op_kinds_proof(spark, tmp_path):
     """ADVICE r1 (high): compact_ranges rewrites dirty groups into
     all-PUT cells, so a pure-counter table's op-kinds proof must be
@@ -762,6 +763,7 @@ def test_index_rebuild_swap_and_missing_table_fallback(spark, tmp_path):
     }
 
 
+@pytest.mark.slow
 def test_index_incremental_refresh_from_changefeed(spark, tmp_path):
     """refresh_index applies only the base table's change set to the
     index (CDC-bounded maintenance): updates retire the old-value
@@ -938,6 +940,7 @@ def test_lg_compression_codec_honored(spark, tmp_path):
     assert codecs("snap") == {"SNAPPY"}
 
 
+@pytest.mark.slow
 def test_maintenance_policy_routes_major_minor_none(spark, tmp_path, capsys):
     """catalog.maintenance: the metadata-only "when to compact" policy
     (the reference master's size-triggered scheduling re-expressed):
@@ -1011,6 +1014,7 @@ def test_maintenance_policy_routes_major_minor_none(spark, tmp_path, capsys):
     assert "'action': 'none'" in capsys.readouterr().out
 
 
+@pytest.mark.slow
 def test_snapshot_set_consistent_cut_and_restore(spark, tmp_path):
     """Cross-table consistent snapshot set: the cut (per-table commit
     watermark) is captured BEFORE any fold runs, so commits landing
@@ -1101,6 +1105,7 @@ def test_cli_reads_hash_distributed_table(spark, tmp_path, capsys):
     assert "u1 " in out and "u3 " in out and "u4 " not in out and "u0 " not in out
 
 
+@pytest.mark.slow
 def test_cli_cas_counters_batchget_on_hash_table(spark, tmp_path, capsys):
     """The remaining CLI read/CAS verbs translate keys on <hash=on>
     tables too: cas, putint64/getint64, batchget."""
@@ -1217,6 +1222,7 @@ def test_cli_seek_scan_on_hash_table_falls_back(spark, tmp_path, capsys):
     assert "u1 " in out and "u2 " in out and "u3 " not in out and "u0 " not in out
 
 
+@pytest.mark.slow
 def test_find_tablet_routes_hashed_key(spark, tmp_path):
     """findtablet on a <hash=on> table routes by the prefixed key
     (the reference hashes before its meta lookup) — the raw user key

@@ -23,6 +23,7 @@ def client(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_sdk_workflow(client):
     client.create_table("usertab {info <maxversions=2>, cnt}")
     assert client.is_table_exist("usertab") and client.list_tables() == ["usertab"]
@@ -156,6 +157,7 @@ def test_scan_snapshot_seq_reads_as_of(spark, tmp_path):
     assert t.scan_df(snapshot_seq=seq_after_first).count() == 1
 
 
+@pytest.mark.slow
 def test_hash_distributed_table_transparent(spark, tmp_path):
     """<hash=on> tables (TableDescriptor hash mode, murmur prefix
     src/sdk/table_impl.cc:98): the SDK translates keys both ways, so
@@ -239,6 +241,7 @@ def test_row_mutation_terasdk_shim(spark, tmp_path):
         t.NewRowMutation("r2").PutKV("v", 60)
 
 
+@pytest.mark.slow
 def test_create_hash_table_with_hash_num_presplits(client):
     """CreateTable(desc, hash_num) (src/sdk/client_impl.cc:160-168):
     a hash table pre-splits into hash_num equal slices of the 64-bit

@@ -46,6 +46,7 @@ def test_torn_batch_invisible_everywhere(spark, cat):
     assert {c[0] for c in seeker.scan_range()} == {"r1"}
 
 
+@pytest.mark.slow
 def test_recovery_discards_tail_permanently(spark, cat):
     """The next writer's append must not resurrect torn rows even
     though the watermark rises above their seqs."""
@@ -71,6 +72,7 @@ def test_recovery_discards_tail_permanently(spark, cat):
     assert set(got) == {"r1", "r3"}
 
 
+@pytest.mark.slow
 def test_legacy_tables_without_records_read_unfiltered(spark, cat):
     """Direct-written layouts (no commits dir) keep today's behavior."""
     cat.create_table("legacy {c}")
@@ -177,6 +179,7 @@ def test_commit_cas_two_writers_serialize(spark, tmp_path):
     assert {r.row_key for r in a.view("t").collect()} == {"ra", "rb"}
 
 
+@pytest.mark.slow
 def test_commit_cas_two_os_processes_contend(spark, tmp_path):
     """A REAL two-process race on the same table root: a child Python
     process (its own JVM, its own Catalog with a different writer_id)
@@ -451,6 +454,7 @@ def test_disjoint_row_sets_commit_without_slot(spark, tmp_path):
     assert hi_c > hi_b
 
 
+@pytest.mark.slow
 def test_disjoint_commits_two_os_processes(spark, tmp_path):
     """Two OS processes commit disjoint-row batches through the fast
     path with the slot claim held hostage the whole time: neither can

@@ -4,6 +4,8 @@ Drop vs ScanDrop shared-logic property), pinned on randomized op-logs.
 
 from __future__ import annotations
 
+import pytest
+
 import random
 
 from tera_spark.functions.codecs import py_encode_be_i64, py_encode_le_i64
@@ -64,6 +66,7 @@ def _canon(df):
     )
 
 
+@pytest.mark.slow
 def test_compact_view_equivalence_randomized(spark):
     for seed in (7, 42, 1337):
         cells = spark.createDataFrame(_random_oplog(seed), CELL_SCHEMA)

@@ -1,12 +1,7 @@
 """Streaming counter fold: running totals accumulate across
 micro-batches AND query restarts (RocksDB-checkpointed state), and a
-PUT base resets the fold exactly like the batch view.
-
-The lifecycle tests run through counter_fold (impl='auto'), so they
-execute END-TO-END in every environment — natively via
-transformWithState where protobuf exists, via the compat twin here.
-The native-only demotion contract (clear error, never a broken query)
-has its own test."""
+PUT base resets the fold exactly like the batch view. Every test runs
+counter_fold END-TO-END."""
 
 from __future__ import annotations
 
@@ -17,27 +12,7 @@ import tempfile
 import pytest
 
 from tera_spark.model import CellOp
-from tera_spark.streaming.counter_state import (
-    OUTPUT_SCHEMA,
-    CounterProcessor,
-    counter_fold,
-    counter_ops,
-    counter_stream,
-)
-
-
-def _has_protobuf() -> bool:
-    # transformWithState's Python state server speaks protobuf at query
-    # START (plan construction does not need it); the container has no
-    # protobuf wheel and installs are off-limits
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
+from tera_spark.streaming.counter_state import counter_fold, counter_ops
 
 
 SCHEMA = "row_key string, cf string, qualifier string, ts long, op int, value binary, seq long"
@@ -89,6 +64,7 @@ def _write(spark, path, rows):
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
+@pytest.mark.slow
 def test_counter_accumulates_and_put_resets(spark, tmpdir):
     src, ckpt = f"{tmpdir}/src", f"{tmpdir}/ckpt"
 
@@ -132,8 +108,8 @@ def test_counter_multikey_isolation(spark, tmpdir):
 def test_counter_ops_projection_and_plan_builds(spark, tmpdir):
     """The JVM-side decode projection is exact (LE/BE codecs, PUT
     flagged as base, non-counter ops dropped), the pandas fold applies
-    bases/deltas in seq order, and counter_fold's auto-selected plan
-    analyzes to the declared output schema in every environment."""
+    bases/deltas in seq order, and counter_fold's plan analyzes to the
+    declared output schema."""
     import pandas as pd
 
     rows = _cells([(1, CellOp.ADDINT64, 5), (2, CellOp.PUT, 100)]) + [
@@ -162,35 +138,14 @@ def test_counter_ops_projection_and_plan_builds(spark, tmpdir):
     ]
 
 
-def test_native_path_demotion_contract(spark, tmpdir):
-    """The native transformWithState path is EXPERIMENTAL where its
-    protobuf runtime is absent: calling it there must raise a clear
-    RuntimeError at plan construction — never ship a plan that dies
-    inside the state server at query start. Where protobuf exists, it
-    must build a streaming plan. counter_fold(impl=...) validates."""
-    src = f"{tmpdir}/src"
-    _write(spark, src, _cells([(1, CellOp.ADDINT64, 5)]))
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    if _has_protobuf():
-        assert counter_stream(stream, encoding="le").isStreaming
-    else:
-        with pytest.raises(RuntimeError, match="protobuf"):
-            counter_stream(stream, encoding="le")
-    with pytest.raises(ValueError, match="impl"):
-        counter_fold(stream, impl="bogus")
-    # compat is always executable-by-construction
-    assert counter_fold(stream, impl="compat").isStreaming
-
-
-def test_counter_stream_compat_executes(spark, tmp_path):
-    """The applyInPandasWithState form runs END-TO-END here: base +
-    deltas fold across micro-batches, a later PUT resets the base, and
-    checkpointed state survives the second drain."""
+def test_counter_fold_executes(spark, tmp_path):
+    """Base + deltas fold across micro-batches, a later PUT resets the
+    base within a batch (seq order), and checkpointed state survives
+    the second drain."""
     from pyspark.sql import functions as F
 
     from tera_spark.model import CELL_SCHEMA, CellOp
     from tera_spark.functions.codecs import py_encode_le_i64
-    from tera_spark.streaming.counter_state import counter_stream_compat
 
     src = tmp_path / "src"
     src.mkdir()
@@ -209,7 +164,7 @@ def test_counter_stream_compat_executes(spark, tmp_path):
     def drain():
         stream = spark.readStream.schema(CELL_SCHEMA).parquet(str(src))
         q = (
-            counter_stream_compat(stream)
+            counter_fold(stream)
             .writeStream.outputMode("update")
             .foreachBatch(lambda df, _e: out.update({r.row_key: r.total for r in df.collect()}))
             .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -226,60 +181,3 @@ def test_counter_stream_compat_executes(spark, tmp_path):
            cell("r1", CellOp.ADDINT64, 2, 5), cell("r2", CellOp.ADDINT64, 3, 2)])
     drain()
     assert out == {"r1": 52, "r2": 10}
-
-
-def _run_once_compat(spark, src, ckpt):
-    """_run_once twin on the applyInPandasWithState path — identical
-    drain shape, no protobuf state server needed."""
-    from tera_spark.streaming.counter_state import counter_stream_compat
-
-    stream = spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
-    rows: list = []
-    q = (
-        counter_stream_compat(stream, encoding="le")
-        .writeStream.outputMode("update")
-        .foreachBatch(lambda df, _eid: rows.extend(df.collect()))
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    return {(r.row_key, r.cf, r.qualifier): r.total for r in rows}
-
-
-def test_counter_compat_accumulates_and_put_resets(spark, tmpdir):
-    """Twin of the protobuf-gated transformWithState test, executed
-    END-TO-END on the compat path: state survives query RESTARTS
-    (three separate drains on one checkpoint) and a PUT base resets
-    the fold exactly like the batch view."""
-    src, ckpt = f"{tmpdir}/src", f"{tmpdir}/ckpt"
-
-    _write(spark, src, _cells([(1, CellOp.ADDINT64, 5), (2, CellOp.ADDINT64, 7)]))
-    got = _run_once_compat(spark, src, ckpt)
-    assert got[("r1", "c", "hits")] == 12
-
-    _write(spark, src, _cells([(3, CellOp.PUT, 100), (4, CellOp.ADDINT64, 3)]))
-    got = _run_once_compat(spark, src, ckpt)
-    assert got[("r1", "c", "hits")] == 103
-
-    _write(spark, src, _cells([(5, CellOp.ADDINT64, -3)]))
-    got = _run_once_compat(spark, src, ckpt)
-    assert got[("r1", "c", "hits")] == 100
-
-
-def test_counter_compat_multikey_isolation(spark, tmpdir):
-    """Twin of the protobuf-gated multikey test: per-(row, cf,
-    qualifier) state never bleeds across keys."""
-    src, ckpt = f"{tmpdir}/src", f"{tmpdir}/ckpt"
-    rows = [
-        ("a", "c", "q1", 1, CellOp.ADDINT64, _le(1), 1),
-        ("a", "c", "q2", 2, CellOp.ADDINT64, _le(10), 2),
-        ("b", "c", "q1", 3, CellOp.ADDINT64, _le(100), 3),
-    ]
-    _write(spark, src, rows)
-    got = _run_once_compat(spark, src, ckpt)
-    assert got == {
-        ("a", "c", "q1"): 1,
-        ("a", "c", "q2"): 10,
-        ("b", "c", "q1"): 100,
-    }

@@ -16,6 +16,7 @@ T3 = "nothing like anything stored before zebra quantum paradox moonlight"
 DDL = "doc_id long, text string"
 
 
+@pytest.mark.slow
 def test_admit_two_batches_and_set_growth(spark, tmp_path):
     adm = DedupAdmission(spark, str(tmp_path / "adm"))
 
@@ -48,6 +49,7 @@ def test_admit_two_batches_and_set_growth(spark, tmp_path):
     assert len(log) == 7
 
 
+@pytest.mark.slow
 def test_in_batch_near_rule_is_deterministic(spark, tmp_path):
     adm = DedupAdmission(spark, str(tmp_path / "adm2"))
     b = spark.createDataFrame([(5, T1), (6, T1_NEAR)], DDL)
@@ -56,6 +58,7 @@ def test_in_batch_near_rule_is_deterministic(spark, tmp_path):
     assert v == {5: "unique", 6: "near"}
 
 
+@pytest.mark.slow
 def test_streaming_drain_with_checkpoint(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
@@ -72,6 +75,7 @@ def test_streaming_drain_with_checkpoint(spark, tmp_path):
     assert log == {1: "unique", 2: "unique", 10: "exact", 11: "unique"}
 
 
+@pytest.mark.slow
 def test_epoch_replay_is_idempotent(spark, tmp_path):
     """A re-run epoch (failure between decision write and checkpoint
     commit) re-appends the same rows under the same batch id; the

@@ -23,6 +23,7 @@ def tmpdir():
     shutil.rmtree(d, ignore_errors=True)
 
 
+@pytest.mark.slow
 def test_csv_import_round_trip(spark, tmpdir):
     src = spark.createDataFrame(
         [(1, "alice", 10.5), (2, "bob", None), (3, "carol", 7.25)],

@@ -182,6 +182,7 @@ def test_multimodal_extract_features(spark):
     assert out[2].n_bytes == 1
 
 
+@pytest.mark.slow
 def test_connected_components_chain_and_clusters(spark):
     from tera_spark.operators.dedup import connected_components
 
@@ -361,6 +362,7 @@ def test_hyperplane_lsh_pairs_recall_and_precision(spark):
         assert found >= 0.6, (found, len(strong))
 
 
+@pytest.mark.slow
 def test_hyperplane_signature_deterministic(spark):
     """Same vectors -> same signatures across independent plans (the
     planes are content-derived constants, not seeded RNG state)."""
@@ -373,6 +375,7 @@ def test_hyperplane_signature_deterministic(spark):
     assert a == b and len(a) == 20
 
 
+@pytest.mark.slow
 def test_kmeans_trains_usable_codebook(spark):
     """Lloyd invariants: exactly k centroids survive, every vector is
     assigned, and the trained codebook beats the 1-round (init-only)
@@ -705,6 +708,7 @@ def test_brute_topk_numpy_kernel_bit_parity(spark):
         assert expr == np_k
 
 
+@pytest.mark.slow
 def test_pagerank_hub_and_symmetry(spark):
     from tera_spark.operators.graph import UNIT, pagerank
 

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 
+@pytest.mark.slow
 def test_audio_fingerprint_matches_python_replay(spark):
     from tera_spark.operators.multimodal import audio_fingerprints, synth_wav_media
 

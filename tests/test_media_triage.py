@@ -5,6 +5,8 @@ walk, and the real foreachBatch path must drive the fold."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tera_spark.streaming.media_triage import MediaTriage
@@ -67,6 +69,7 @@ def _census_dict(tri):
     }
 
 
+@pytest.mark.slow
 def test_folded_census_equals_batch(spark, tmp_path):
     bag = _bag(spark)
     tri = MediaTriage(spark, str(tmp_path / "tri"))
@@ -79,6 +82,7 @@ def test_folded_census_equals_batch(spark, tmp_path):
     assert got["mp3"][2] > 0  # the corrupted mp3s were quarantined
 
 
+@pytest.mark.slow
 def test_replayed_epoch_is_idempotent(spark, tmp_path):
     bag = _bag(spark)
     tri = MediaTriage(spark, str(tmp_path / "tri"))

@@ -30,6 +30,7 @@ def _rows(df):
     )
 
 
+@pytest.mark.slow
 def test_mview_tracks_full_fold(spark, root):
     cat = Catalog(spark, root)
     cat.create_table("mv {cf0 <maxversions=2>, cnt}")

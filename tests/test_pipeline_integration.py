@@ -13,6 +13,8 @@ here the body composes dedup + quality + indexed storage.
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tera_spark.catalog import Catalog
@@ -44,6 +46,7 @@ def _drain(spark, src, ck, process):
     q.awaitTermination(300)
 
 
+@pytest.mark.slow
 def test_streaming_corpus_ingestion_pipeline(spark, tmp_path):
     src = tmp_path / "incoming"
     src.mkdir()

@@ -48,7 +48,24 @@ def _scan_block(formatted: str, table: str) -> str:
     raise AssertionError(f"no parquet scan of {table} found")
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+# measured heavyweights (>= ~8 s each), deselected by default
+_SLOW_PLAN_CHECKS = {
+    "ann_filtered_selective",
+    "ann_hyperplane_pairs",
+    "ann_kmeans_clusters",
+    "dedup_semantic_windowed",
+    "dedup_simhash",
+    "graph_pagerank_neardup",
+}
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        pytest.param(n, marks=pytest.mark.slow) if n in _SLOW_PLAN_CHECKS else n
+        for n in sorted(QUERIES)
+    ],
+)
 def test_no_cartesian_no_python_rows(spark, name):
     plan = _plan(spark, name)
     assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"

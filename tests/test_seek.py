@@ -45,7 +45,7 @@ def _mk_table(cat, spark, rows, name="seek_t"):
     return name
 
 
-@pytest.mark.parametrize("seed", [1, 7, 42])
+@pytest.mark.parametrize("seed", [1, 7, pytest.param(42, marks=pytest.mark.slow)])
 def test_seek_matches_spark_fold(cat, spark, seed):
     rows = _gen_oplog(seed, n=400)
     name = _mk_table(cat, spark, rows, name=f"seek_{seed}")
@@ -98,6 +98,7 @@ def test_seek_matches_spark_fold_on_odd_width_counter_bases(cat, spark, kind):
     assert dec(got["r0"]) == -2  # empty base reads 0
 
 
+@pytest.mark.slow
 def test_seek_scan_level_options_match(cat, spark):
     rows = _gen_oplog(99, n=400)
     name = _mk_table(cat, spark, rows, name="seek_opts")
@@ -154,6 +155,7 @@ def test_seek_snapshot_and_rollback(cat, spark):
     assert got_full == want
 
 
+@pytest.mark.slow
 def test_footer_routing_prunes_files(cat, spark):
     cat.create_table("seek_route {cf0}")
     for prefix in ("a", "m", "z"):
@@ -193,6 +195,7 @@ def test_fold_row_empty_and_marks_only():
     assert fold_row(marks, _schema(), now_us=NOW) == []
 
 
+@pytest.mark.slow
 def test_client_and_cli_seek_paths(cat, spark, capsys):
     from tera_spark.client import Client
 
@@ -213,6 +216,7 @@ def test_client_and_cli_seek_paths(cat, spark, capsys):
     assert rc == 0 and "c:q @20 b'v2'" in seek_out
 
 
+@pytest.mark.slow
 def test_scan_range_matches_spark_scan(cat, spark):
     from tera_spark.operators.scan import ScanDescriptor, scan
 
@@ -263,6 +267,7 @@ def test_cli_scan_seek(cat, spark, capsys):
     assert [l.split()[0] for l in out] == ["r1", "r2", "r3"]
 
 
+@pytest.mark.slow
 def test_multi_get_auto_routing(cat, spark):
     from tera_spark.client import Client
 
@@ -324,7 +329,7 @@ def test_per_cell_ttl_view_compact_seek(cat, spark):
     assert visible(later) == {"r1"}
 
 
-@pytest.mark.parametrize("seed", [3, 21])
+@pytest.mark.parametrize("seed", [3, pytest.param(21, marks=pytest.mark.slow)])
 def test_seek_matches_spark_fold_with_random_ttl(cat, spark, seed):
     """Cross-path property check including per-cell TTL: random
     op-logs where puts carry expire_ts in {past, future, NULL} must

@@ -42,6 +42,7 @@ def _run_once(spark, src, ckpt, qname):
     return rows
 
 
+@pytest.mark.slow
 def test_sessionize_split_multiuser_and_restart(spark, tmpdir):
     import datetime as dt
 

@@ -107,6 +107,7 @@ def test_windowed_event_stream_matches_batch(spark, tmpdir):
     assert got == exp
 
 
+@pytest.mark.slow
 def test_attribution_join_stream_matches_batch(spark, tmpdir):
     from tera_spark.streaming.observer import attribution_join_stream
 
@@ -177,6 +178,7 @@ def test_deduped_event_stream_collapses_retries(spark, tmpdir):
     assert len({r.event_id for r in rows}) == 50
 
 
+@pytest.mark.slow
 def test_observer_maintains_secondary_index(spark, tmpdir):
     """The reference's canonical observer workload: incremental
     secondary-index maintenance (TPC-C keeps t_*_index tables this way,

@@ -6,6 +6,8 @@ transaction's outputs AND the complete final table state."""
 
 from __future__ import annotations
 
+import pytest
+
 from tera_spark.catalog import Catalog
 from tera_spark.tpcc import MockTpccDb, SparkTpccDb
 
@@ -31,6 +33,7 @@ def _script(db):
     return out
 
 
+@pytest.mark.slow
 def test_tpcc_spark_matches_mock(spark, tmp_path):
     mock = MockTpccDb()
     mock.load(**SCALE)

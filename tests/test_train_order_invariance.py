@@ -11,6 +11,8 @@ do not move."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 
@@ -33,6 +35,7 @@ def _layouts(df):
     yield df.orderBy(F.col("vec_id").desc()).coalesce(1)  # reversed, 1 part
 
 
+@pytest.mark.slow
 def test_train_kmeans_layout_invariant(spark):
     from tera_spark.operators.similarity import train_kmeans
 
@@ -49,6 +52,7 @@ def test_train_kmeans_layout_invariant(spark):
         assert got == ref
 
 
+@pytest.mark.slow
 def test_train_kmeans_sample_layout_invariant(spark):
     """The train_sample draw itself must be layout-invariant: training
     on a 100-row sample out of 300 picks the same 100 rows (smallest
@@ -75,6 +79,7 @@ def test_train_kmeans_sample_layout_invariant(spark):
     assert full != ref
 
 
+@pytest.mark.slow
 def test_train_pq_layout_invariant(spark):
     from tera_spark.operators.similarity import train_pq
 
@@ -88,6 +93,7 @@ def test_train_pq_layout_invariant(spark):
         assert train_pq(layout, m=4, k=4, iters=2, sample=100, round_to=3) == ref_s
 
 
+@pytest.mark.slow
 def test_semantic_pairs_layout_invariant(spark):
     """End-to-end: the dedup_semantic_trained composition (train →
     assign → within-cluster verify) emits the same pair set whatever

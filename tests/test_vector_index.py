@@ -3,6 +3,8 @@ partition-pruned probes and sane recall against brute force."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from tera_spark.operators.similarity import cosine_topk
@@ -13,6 +15,7 @@ def _emb(spark):
     return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
 
+@pytest.mark.slow
 def test_build_load_search_deterministic(spark, tmp_path):
     emb = _emb(spark)
     idx = VectorIndex.build(emb, str(tmp_path / "vi"), k_coarse=4, m=8, k_codes=8, iters=1)
@@ -41,6 +44,7 @@ def test_codes_layout_is_cluster_partitioned(spark, tmp_path):
     assert parts and all(p.startswith("cluster=") for p in parts)
 
 
+@pytest.mark.slow
 def test_recall_vs_brute_force(spark, tmp_path):
     emb = _emb(spark)
     idx = VectorIndex.build(emb, str(tmp_path / "vi3"), k_coarse=4, m=16, k_codes=64, iters=2)
@@ -61,6 +65,7 @@ def test_recall_vs_brute_force(spark, tmp_path):
     assert sum(recalls) / len(recalls) > 0.4, recalls
 
 
+@pytest.mark.slow
 def test_incremental_append_searchable(spark, tmp_path):
     emb = _emb(spark)
     first = emb.filter(F.col("vec_id") < 250)
@@ -76,6 +81,7 @@ def test_incremental_append_searchable(spark, tmp_path):
     assert total == emb.count()
 
 
+@pytest.mark.slow
 def test_streaming_append_maintains_index(spark, tmp_path):
     """Steady-state ingestion as a stream: new embedding batches arrive
     in a directory, foreachBatch encodes them against the frozen
@@ -115,6 +121,7 @@ def test_streaming_append_maintains_index(spark, tmp_path):
     assert spark.read.parquet(str(tmp_path / "vi5" / "codes")).count() == emb.count()
 
 
+@pytest.mark.slow
 def test_filtered_search_prefilters_at_codes_scan(spark, tmp_path):
     """topk(allowed=...) must (a) return only allowed ids, (b) match
     the exact filtered twin when every list is probed and the rerank
@@ -148,6 +155,7 @@ def test_filtered_search_prefilters_at_codes_scan(spark, tmp_path):
     assert any(v < 5 for v in per_q.values()) or len(per_q) < 10
 
 
+@pytest.mark.slow
 def test_selective_filter_takes_brute_fallback_full_recall(spark, tmp_path):
     """A 5% allow-list is the known pre-filtered-IVF failure mode
     (nearest allowed vectors may sit in unprobed cells). Below
@@ -173,6 +181,7 @@ def test_selective_filter_takes_brute_fallback_full_recall(spark, tmp_path):
     assert all(abs(r.adc_d2 - r.d2) < 1e-12 for r in rows)
 
 
+@pytest.mark.slow
 def test_effective_nprobe_scales_inverse_selectivity(spark, tmp_path):
     emb = _emb(spark)
     idx = VectorIndex.build(emb, str(tmp_path / "vin"), k_coarse=4, m=4, k_codes=4, iters=1)
@@ -183,6 +192,7 @@ def test_effective_nprobe_scales_inverse_selectivity(spark, tmp_path):
     assert idx._effective_nprobe(2, 0) == 4    # empty list: probe all
 
 
+@pytest.mark.slow
 def test_filtered_above_brute_limit_widens_to_full_probe(spark, tmp_path):
     """Past brute_limit the IVF path must widen nprobe inversely with
     selectivity — at this scale that means probing every cell, so the
@@ -208,6 +218,7 @@ def test_effective_rerank_scales_inverse_selectivity(spark, tmp_path):
     assert idx._effective_rerank(20000, 5) == 20000  # cap never shrinks C
 
 
+@pytest.mark.slow
 def test_auto_m_default_picks_largest_divisor(spark, tmp_path):
     """Round-9 codebook decision: omitting m picks the largest divisor
     of dim up to 32 with sub-vector width >= 2 — dim 64 -> m=32, the

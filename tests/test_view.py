@@ -234,6 +234,7 @@ def test_ttl_expiry(spark):
     assert out == [("r", "cf0", "q2", NOW - 10 * 1_000_000, b"fresh")]
 
 
+@pytest.mark.slow
 def test_illegal_cf_dropped(spark):
     cells = make_cells(spark, [("r", "nope", "q", 10, "PUT", b"x"), ("r", "cf0", "q", 10, "PUT", b"y")])
     assert got(current_view(cells, schema1(), now_us=NOW)) == [("r", "cf0", "q", 10, b"y")]
@@ -317,7 +318,7 @@ def test_changes_between_diff_semantics(spark):
     }
 
 
-@pytest.mark.parametrize("seed", [7, 23])
+@pytest.mark.parametrize("seed", [pytest.param(7, marks=pytest.mark.slow), 23])
 def test_changes_between_reconstructs_new_view(spark, seed):
     """Changefeed soundness on random op-logs: old view patched with
     the diff (apply INSERT/UPDATE, drop DELETE) must equal the new

@@ -244,6 +244,7 @@ def _oplogs(draw):
     return rows
 
 
+@pytest.mark.slow
 @settings(
     max_examples=12,
     deadline=None,
@@ -508,6 +509,7 @@ def _put_only_oplogs(draw):
     return rows
 
 
+@pytest.mark.slow
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(rows=_put_only_oplogs(), maxv=st.integers(1, 3))
 def test_hypothesis_put_only_fast_path(spark, rows, maxv):
@@ -528,6 +530,7 @@ def test_hypothesis_put_only_fast_path(spark, rows, maxv):
 
 
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@pytest.mark.slow
 @given(
     deltas=st.lists(
         st.tuples(st.integers(0, 2), st.integers(1, 4), st.integers(-50, 100)),
