@@ -22,6 +22,9 @@ import shutil
 import time
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from tera_spark.coordination import PosixLinkArbiter, SlotArbiter
@@ -32,6 +35,28 @@ from tera_spark.sources.tables import schema_codec, write_cell_table
 
 class WriterFenced(Exception):
     """Another process holds the table's writer lease."""
+
+
+def _time_id(existing: list[str]) -> str:
+    """A snapshot (or snapshot-set) id that sorts in time order: local
+    ``%Y%m%d%H%M%S`` plus the zero-padded microsecond of that second,
+    both from one clock read, and strictly above the newest of
+    ``existing`` — so ids taken within one second, or across a clock
+    step back, still sort in the order they were taken, which is the
+    order ``expire_snapshots`` retains by."""
+
+    def fmt(sec: int, us: int) -> str:
+        return time.strftime("%Y%m%d%H%M%S", time.localtime(sec)) + f"-{us:06d}"
+
+    sid = fmt(*divmod(time.time_ns() // 1000, 1_000_000))
+    newest = max(existing, default="")
+    if sid <= newest:
+        date, _, frac = newest.partition("-")
+        sec = int(time.mktime(time.strptime(date, "%Y%m%d%H%M%S")))
+        sid = fmt(*divmod(sec * 1_000_000 + int(frac or 0) + 1, 1_000_000))
+        if sid <= newest:  # an unpadded suffix of an older id format
+            sid = fmt(sec + 1, 0)
+    return sid
 
 
 class Catalog:
@@ -74,6 +99,7 @@ class Catalog:
         self._auto_writer_id = f"w{_os.getpid()}-{_uuid.uuid4().hex[:8]}"
         self._tail_checked: set[str] = set()  # per-process WAL-recovery memo
         self._gap_memo: dict[str, tuple] = {}  # commit-gap cache (see _commit_gaps)
+        self._schema_memo: dict[str, tuple] = {}  # see current_schema
 
     def _authorize(self, action: str, table: str) -> None:
         if self.access is not None:
@@ -147,6 +173,26 @@ class Catalog:
 
     def get_schema(self, name: str) -> TableSchema:
         return TableSchema.from_json((self.root / name / "schema.json").read_text())
+
+    def current_schema(self, name: str) -> TableSchema:
+        """get_schema behind a stat guard, for per-operation callers
+        (SDK writes, seek reads, CAS): they must see a later
+        update_schema, but must not pay a read + JSON parse each time.
+        schema.json is re-parsed only when its (inode, mtime, size)
+        changes; update_schema replaces the file, so the inode always
+        does. Callers must not mutate the returned schema."""
+        import os
+
+        p = self.root / name / "schema.json"
+        try:
+            st = os.stat(p)
+            key = (st.st_ino, st.st_mtime_ns, st.st_size)
+        except OSError:
+            key = None
+        memo = self._schema_memo.get(name)
+        if memo is None or memo[0] != key:
+            memo = self._schema_memo[name] = (key, self.get_schema(name))
+        return memo[1]
 
     def update_schema(self, schema: TableSchema) -> None:
         """Online schema change (client.h:49-50): properties apply to
@@ -264,6 +310,11 @@ class Catalog:
         # lock-free: the summary is replace-atomic, and a batch's rows
         # only become visible after its record lands, which is after
         # its locked summary update.
+        #
+        # An unchanged union leaves the file alone: a rename over an
+        # existing file flushes the new file's data first (ext4
+        # auto_da_alloc), which made the rewrite most of the cost of a
+        # driver-written commit.
         holder = self.writer_id or self._auto_writer_id
         lock = self.root / name / "opkinds.lock"
         while not self._try_excl_claim(lock, holder, 60.0):
@@ -275,7 +326,9 @@ class Catalog:
                 if (op_kinds is None or prev is None)
                 else prev | {int(k) for k in op_kinds}
             )
-            self._write_op_kinds(name, new)
+            s = self.root / name / "opkinds.json"
+            if not s.exists() or self._summary_kinds(s) != new:
+                self._write_op_kinds(name, new)
         finally:
             self._release_slot(lock, holder)
         import uuid
@@ -311,6 +364,11 @@ class Catalog:
         )
         tmp.replace(p)
 
+    @staticmethod
+    def _summary_kinds(s: Path) -> set[int] | None:
+        kinds = json.loads(s.read_text()).get("kinds")
+        return None if kinds is None else {int(k) for k in kinds}
+
     def _op_kinds_union(self, name: str) -> set[int] | None:
         """Union of op codes across all commit records, or None when
         unknown (no records, or any record lacks op_kinds — a legacy/
@@ -325,8 +383,7 @@ class Catalog:
             return None
         s = self.root / name / "opkinds.json"
         if s.exists():
-            kinds = json.loads(s.read_text()).get("kinds")
-            return None if kinds is None else {int(k) for k in kinds}
+            return self._summary_kinds(s)
         recs = sorted(d.glob("*.json"))
         if not recs:
             return None
@@ -347,7 +404,7 @@ class Catalog:
     def append(
         self,
         name: str,
-        cells: DataFrame,
+        cells: DataFrame | pa.Table,
         *,
         commit_seq: int | None = None,
         op_kinds: list[int] | None = None,
@@ -356,9 +413,13 @@ class Catalog:
         """Group commit: parquet append, then an atomic commit record.
         The record (commits/<max_seq>.json, written via rename) is the
         visibility point — the WAL-append-returns moment of the
-        reference's TabletWriter. ``commit_seq`` is the batch's max
-        seq when the caller knows it (MutationBatch does); otherwise
-        one small aggregation computes it.
+        reference's TabletWriter. ``cells`` is a DataFrame (bulk loads,
+        compaction, imports: Spark writes it) or a pyarrow table (the
+        driver-built commits of the SDK, KV verbs, CAS and
+        transactions: written from the driver, no Spark job).
+        ``commit_seq`` is the batch's max seq when the caller knows it
+        (MutationBatch does); otherwise it is computed from ``cells``
+        (a Spark aggregation for a DataFrame).
 
         Crash recovery is the WAL discard-uncommitted-tail step: if
         raw data exists above the watermark at the next append (a
@@ -380,14 +441,18 @@ class Catalog:
         w0 = self.commit_watermark(name)
         self._staged_append(name, cells)
         if commit_seq is None:
-            import pyspark.sql.functions as _F
+            if isinstance(cells, DataFrame):
+                import pyspark.sql.functions as _F
 
-            top, kinds = cells.agg(
-                _F.max("seq"), _F.sort_array(_F.collect_set("op"))
-            ).collect()[0]
+                top, kinds = cells.agg(
+                    _F.max("seq"), _F.sort_array(_F.collect_set("op"))
+                ).collect()[0]
+            else:
+                top = pc.max(cells["seq"]).as_py()
+                kinds = pc.unique(cells["op"]).to_pylist()
             commit_seq = int(top) if top is not None else None
             if op_kinds is None:
-                op_kinds = [int(k) for k in kinds]
+                op_kinds = sorted(int(k) for k in kinds)
         if commit_seq is not None:
             # keep the reservation counter above every committed window,
             # whoever allocated it (plain appends included)
@@ -425,25 +490,32 @@ class Catalog:
                         )
             self._record_commit(name, commit_seq, op_kinds, lo=commit_lo)
 
-    def _staged_append(self, name: str, cells: DataFrame) -> None:
+    def _staged_append(self, name: str, cells: DataFrame | pa.Table) -> None:
         """Append parquet files to the op-log via a PRIVATE staging dir
-        + rename, instead of `mode("append")` straight into the log.
+        + rename, instead of writing straight into the log. A DataFrame
+        is written by a Spark job; a pyarrow table (one driver-built
+        batch) by ``pq.write_table`` as one file, with no Spark job.
         Two concurrent committers (the CAS disjoint fast path runs
         appends in parallel from separate driver JVMs) would otherwise
         collide inside the shared FileOutputCommitter staging dir
         (`<oplog>/_temporary/0/` — one job's commit sweeps the other's
         in-flight task files; observed as task FileNotFound failures in
-        scripts/scale_smoke_cas.py). Staging is per-append-unique, and
-        the per-file renames are atomic; a crash mid-move leaves a
-        partial batch that the watermark/gap mask already treats as
-        torn, exactly like a crash mid-`mode("append")` did."""
+        scripts/scale_smoke_cas.py), and a seek read could meet a
+        half-written file. Staging is per-append-unique, and the
+        per-file renames are atomic; a crash mid-move leaves a partial
+        batch that the watermark/gap mask already treats as torn,
+        exactly like a crash mid-`mode("append")` did."""
         import uuid
 
         oplog = Path(self.oplog_path(name))
         oplog.mkdir(exist_ok=True)
         tag = uuid.uuid4().hex[:12]
         stage = self.root / name / f".stage-{tag}"
-        cells.write.parquet(str(stage))
+        if isinstance(cells, DataFrame):
+            cells.write.parquet(str(stage))
+        else:
+            stage.mkdir()
+            pq.write_table(cells, str(stage / "part-00000.parquet"))
         # keep the part- prefix: footer-routing, stats, replication and
         # compaction all discover op-log files via part-*.parquet (the
         # same convention compact_inplace's part-c<token> renames use)
@@ -645,13 +717,13 @@ class Catalog:
         self._kv_append(name, key, None, None)
 
     def _kv_append(self, name, key, value, expire) -> None:
-        from tera_spark.model import KV_OPLOG_SCHEMA
+        from tera_spark.model import KV_OPLOG_SCHEMA, arrow_table
 
         if not self.get_schema(name).kv_mode:
             raise ValueError(f"not a kv-mode table: {name}")
         seq = time.time_ns()
         row = [(key, value, expire, seq)]
-        self.append(name, self.spark.createDataFrame(row, KV_OPLOG_SCHEMA), commit_seq=seq)
+        self.append(name, arrow_table(row, KV_OPLOG_SCHEMA), commit_seq=seq)
 
     # --- snapshots / compaction --------------------------------------
     def snapshot(
@@ -664,7 +736,7 @@ class Catalog:
         self._authorize("admin", name)
         from tera_spark.operators.compact import compact
 
-        sid = time.strftime("%Y%m%d%H%M%S") + f"-{int(time.time_ns() % 1_000_000)}"
+        sid = _time_id(self.list_snapshots(name))
         out = self.root / name / "snapshots" / sid
         schema = self.get_schema(name)
         if schema.kv_mode:
@@ -746,7 +818,7 @@ class Catalog:
             manifest["tables"][n] = {"snapshot": sid, "seq": cuts[n]}
         d = self.root / "_snapsets"
         d.mkdir(exist_ok=True)
-        set_id = time.strftime("%Y%m%d%H%M%S") + f"-{int(time.time_ns() % 1_000_000)}"
+        set_id = _time_id([p.name.removesuffix(".json") for p in d.glob("*.json")])
         tmp = d / f"{set_id}.json.tmp"
         tmp.write_text(json.dumps(manifest))
         tmp.replace(d / f"{set_id}.json")
@@ -943,8 +1015,6 @@ class Catalog:
         if self.get_schema(name).kv_mode:
             raise ValueError("kv-mode tables compact via compact_inplace")
         import uuid
-
-        import pyarrow.parquet as pq
 
         from tera_spark.model import CellOp
         from tera_spark.operators.compact import compact
@@ -1366,7 +1436,7 @@ class Catalog:
         self._consume(name, "write")
         self._recover_tail(name)
         batch._base_seq = token["lo"]
-        self._staged_append(name, batch.to_df(self.spark, now_us=now_us))
+        self._staged_append(name, batch.to_arrow(now_us=now_us))
         token["op_kinds"] = [int(k) for k in batch.op_kinds]
         token["staged"] = True
 
@@ -1598,7 +1668,7 @@ class Catalog:
                         batch._base_seq = base
                         self.append(
                             name,
-                            batch.to_df(self.spark),
+                            batch.to_arrow(),
                             commit_seq=hi,
                             commit_lo=base,
                             op_kinds=batch.op_kinds,
@@ -1734,8 +1804,6 @@ class Catalog:
         one entry per op-log file with its row_key bounds from Parquet
         footer stats (files are range-sorted, so bounds are tablet
         start/end keys)."""
-        import pyarrow.parquet as pq
-
         key_col = "key" if self.get_schema(name).kv_mode else "row_key"
         out = []
         for f in sorted((self.root / name / "oplog").glob("part-*.parquet")):

@@ -14,7 +14,10 @@ semantics, only the SDK's shape:
   as plain Python dicts — point reads are row-sized by construction.
 - Writes auto-assign timestamps (server-assigned ts, tera_key.h:33)
   and carry a monotonically increasing sequence across commits
-  (LevelDB sequence analog) so later writes win ties.
+  (LevelDB sequence analog) so later writes win ties. Each write is
+  one driver-written op-log file plus its commit record — no Spark
+  job, as a tera write is a WAL append (TabletWriter::Write); a
+  CheckAndApply checks through the seek path first.
 - ``Table.scan`` streams ordered visible cells through
   ``toLocalIterator`` — the client-side iteration model of
   ResultStream (include/tera/scan.h:26-67) without the session/RPC
@@ -23,13 +26,16 @@ semantics, only the SDK's shape:
 
 from __future__ import annotations
 
+import time
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tera_spark.catalog import Catalog
-from tera_spark.operators.mutation import MutationBatch, check_and_apply
+# check_and_apply: the DataFrame-level CheckAndApply, re-exported beside
+# the SDK's seek-backed Table.check_and_apply
+from tera_spark.operators.mutation import MutationBatch, check_and_apply  # noqa: F401
 from tera_spark.operators.scan import ScanDescriptor, batch_get, get, scan
 from tera_spark.operators.txn import SingleRowTransaction
 from tera_spark.registry import TableSchema
@@ -185,24 +191,6 @@ class Table:
         if timeoracle is not None:
             self._refuse_oracle_ttl_mix(schema)
         self._oracle = timeoracle
-        self._schema_memo: tuple | None = None  # (stat key, TableSchema)
-
-    def _current_schema(self):
-        """get_schema behind an mtime/size guard: the per-write
-        oracle/ttl recheck must see a later update_schema, but must not
-        pay a read+JSON-parse per mutation — schema.json is re-parsed
-        only when its stat signature changes."""
-        import os
-
-        p = self._cat.root / self.name / "schema.json"
-        try:
-            st = os.stat(p)
-            key = (st.st_mtime_ns, st.st_size)
-        except OSError:
-            key = None
-        if self._schema_memo is None or self._schema_memo[0] != key:
-            self._schema_memo = (key, self._cat.get_schema(self.name))
-        return self._schema_memo[1]
 
     def _refuse_oracle_ttl_mix(self, schema) -> None:
         if any(cf.ttl > 0 for cf in schema.column_families.values()):
@@ -287,21 +275,26 @@ class Table:
     def apply_mutation(self, batch: MutationBatch | RowMutation) -> None:
         if isinstance(batch, RowMutation):
             batch = batch._batch
+        if self._hashed:
+            # translate into a COPY: retrying the same caller batch
+            # must not double-prefix its row keys
+            batch = batch.translated(self._hk)
+        self._commit(batch)
+
+    def _commit(self, batch: MutationBatch, *, now_us: int | None = None) -> None:
+        """Commit a storage-keyed batch from the driver: one pyarrow-
+        written op-log file and its commit record, no Spark job."""
         if self._oracle is not None:
             # the construction-time guard can be bypassed by a later
             # update_schema adding cf ttl>0 to an open oracle-stamped
             # handle; re-check against the CURRENT schema on every
             # write (stat-guarded memo: sees any schema.json change
             # without per-mutation read+parse)
-            self._refuse_oracle_ttl_mix(self._current_schema())
-        if self._hashed:
-            # translate into a COPY: retrying the same caller batch
-            # must not double-prefix its row keys
-            batch = batch.translated(self._hk)
+            self._refuse_oracle_ttl_mix(self._cat.current_schema(self.name))
         batch._base_seq = self._seq(len(batch))
         self._cat.append(
             self.name,
-            batch.to_df(self._cat.spark, ts_oracle=self._oracle),
+            batch.to_arrow(now_us=now_us, ts_oracle=self._oracle),
             commit_seq=batch._base_seq + len(batch) - 1,
             op_kinds=batch.op_kinds,
         )
@@ -349,25 +342,25 @@ class Table:
     def check_and_apply(
         self, row_key: str, cf: str, qualifier: str, expected, batch: MutationBatch
     ) -> bool:
-        """CheckAndApply (table.h:140-142). True iff the mutation landed."""
+        """CheckAndApply (table.h:140-142). True iff the mutation landed.
+
+        The check reads the cell's newest visible version through the
+        seek path (same rollback, watermark, gap and TTL masks as a
+        Spark read; tests/test_seek.py pins the equality), and a
+        matching batch commits like ``apply_mutation`` — no Spark job
+        either way."""
         if self._hashed:
             # copy, not in-place: a failed CAS is retried with the same
             # batch object, which must keep its user-space keys
             batch = batch.translated(self._hk)
             row_key = self._hk(row_key)
-        batch._base_seq = self._seq(len(batch))  # gap on failed CAS is harmless
-        out = check_and_apply(
-            self._cat.read_oplog(self.name),
-            self._cat.get_schema(self.name),
-            row_key,
-            cf,
-            qualifier,
-            expected,
-            batch,
-        )
-        if out is None:
+        if not isinstance(expected, bytes):
+            expected = str(expected).encode()
+        now = int(time.time() * 1_000_000)
+        cur = self._seeker().get(row_key, columns={cf: [qualifier]}, now_us=now)
+        if not cur or cur[0][4] != expected:
             return False
-        self._cat.append(self.name, out)
+        self._commit(batch, now_us=now)
         return True
 
     # -- reads (table.h:85-98, reader.h) ------------------------------

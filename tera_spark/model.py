@@ -108,3 +108,20 @@ KV_OPLOG_SCHEMA = T.StructType(
 # Timestamps are int64 microseconds; kLatestTs = INT64_MAX
 # (reference: src/types.h:37-38).
 LATEST_TS = (1 << 63) - 1
+
+
+def arrow_table(rows: list[tuple], schema: T.StructType):
+    """``rows`` (tuples in ``schema``'s column order) as one pyarrow
+    table sorted by its key column (the first: row_key or key) — the
+    driver-side twin of ``spark.createDataFrame(rows, schema)`` for
+    commits written with ``pq.write_table`` instead of a Spark job. The
+    arrow schema is derived from ``schema``, so this module stays the
+    only schema definition."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    aschema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(aschema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, aschema)], schema=aschema
+    ).sort_by(aschema.names[0])

@@ -4,8 +4,11 @@ Mirrors the reference SDK's RowMutation / BatchMutation accumulation
 (`include/tera/mutation.h:24-136`, `include/tera/batch_mutation.h`) as
 a driver-side builder that flattens to op-log rows, and the server's
 group-commit (`TabletWriter::Write`, src/io/tablet_writer.h:45-48) as
-a single atomic Parquet append — all cells of a batch land in one
-commit, preserving per-row atomicity (SURVEY.md §3.2).
+a single atomic op-log append — all cells of a batch land in one
+commit, preserving per-row atomicity (SURVEY.md §3.2). A batch the SDK
+commits (``to_arrow``) becomes one driver-written Parquet file and no
+Spark job, the way a tera write is a WAL append and never a batch job;
+``to_df`` gives the same rows as a DataFrame for Spark-side callers.
 
 Timestamps: caller-supplied or assigned at flush (server-assigned ts,
 tera_key.h:33). Sequence numbers are assigned monotonically per batch
@@ -17,13 +20,15 @@ from __future__ import annotations
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from tera_spark.functions.codecs import py_encode_be_i64, py_encode_le_i64
-from tera_spark.model import CELL_SCHEMA, CellOp
+from tera_spark.model import CELL_SCHEMA, CELL_TTL_SCHEMA, CellOp, arrow_table
 
 
 class MutationBatch:
-    """Accumulates row mutations; ``to_df``/``append_to`` commits them."""
+    """Accumulates row mutations; ``to_arrow``/``to_df`` flatten them to
+    op-log rows for ``Catalog.append``."""
 
     def __init__(self, base_seq: int = 0):
         self._rows: list[tuple] = []
@@ -118,16 +123,13 @@ class MutationBatch:
         out._rows = [(fn(r[0]),) + tuple(r[1:]) for r in self._rows]
         return out
 
-    def to_df(
-        self, spark: SparkSession, *, now_us: int | None = None, ts_oracle=None
-    ) -> DataFrame:
-        """``ts_oracle`` (functions.timeoracle.Timeoracle) assigns each
-        unset-ts cell its own unique, strictly monotonic timestamp
-        instead of one shared wall-clock microsecond — tera's
+    def _stamped(self, now_us: int | None, ts_oracle) -> tuple[list[tuple], T.StructType]:
+        """The batch's op-log rows with ts, seq and expiry assigned, and
+        their schema. ``ts_oracle`` (functions.timeoracle.Timeoracle)
+        assigns each unset-ts cell its own unique, strictly monotonic
+        timestamp instead of one shared wall-clock microsecond — tera's
         timeoracle-stamped write path. Oracle ticks are 10000/ms (not
         µs); use one ts source consistently per table."""
-        from tera_spark.model import CELL_TTL_SCHEMA
-
         now = now_us if now_us is not None else int(time.time() * 1_000_000)
 
         def auto_ts() -> int:
@@ -142,12 +144,20 @@ class MutationBatch:
         # plain batches keep the 7-column layout byte-identical; a batch
         # with any per-cell TTL writes the extended schema (mixed files
         # in one op-log read fine — see CELL_TTL_SCHEMA)
-        return spark.createDataFrame(data, CELL_TTL_SCHEMA if with_ttl else CELL_SCHEMA)
+        return data, CELL_TTL_SCHEMA if with_ttl else CELL_SCHEMA
 
-    def append_to(self, spark: SparkSession, path: str, **kw) -> None:
-        """Group commit: one atomic append job (micro-batch ≙ WAL+memtable
-        swap in tablet_writer.cc)."""
-        self.to_df(spark, **kw).write.mode("append").parquet(path)
+    def to_df(
+        self, spark: SparkSession, *, now_us: int | None = None, ts_oracle=None
+    ) -> DataFrame:
+        """The batch as a DataFrame (stamping: see ``_stamped``)."""
+        return spark.createDataFrame(*self._stamped(now_us, ts_oracle))
+
+    def to_arrow(self, *, now_us: int | None = None, ts_oracle=None):
+        """The batch as one pyarrow table sorted by row_key, stamped
+        exactly like ``to_df`` — the input ``Catalog.append`` writes
+        from the driver with ``pq.write_table``, no Spark job."""
+        data, schema = self._stamped(now_us, ts_oracle)
+        return arrow_table(data, schema)
 
     def __len__(self) -> int:
         return len(self._rows)

@@ -211,13 +211,15 @@ class Seeker:
         threads: int = 8,
     ):
         if catalog is not None:
-            self.schema = catalog.get_schema(table)
+            # re-read per use (stat-guarded): an online update_schema
+            # applies to the next read, as it does on the Spark path
+            self._get_schema = lambda: catalog.current_schema(table)
             self._root = Path(catalog.oplog_path(table))
             self._get_rollbacks = lambda: catalog._rollbacks(table)
             self._get_watermark = lambda: catalog.commit_watermark(table)
             self._get_gaps = lambda: catalog._masked_gaps(table)
         else:
-            self.schema = schema
+            self._get_schema = lambda: schema
             self._root = Path(path)
             self._get_rollbacks = lambda: []
             self._get_watermark = lambda: None
@@ -231,6 +233,10 @@ class Seeker:
         self._rg_cache: OrderedDict[tuple[str, int], object] = OrderedDict()
 
     # --- routing ------------------------------------------------------
+
+    @property
+    def schema(self) -> TableSchema | None:
+        return self._get_schema()
 
     @property
     def _kv(self) -> bool:
@@ -405,10 +411,11 @@ class Seeker:
         by_key = self._read_cells(
             list(dict.fromkeys(keys)), now_us=now_us, snapshot_seq=snapshot_seq
         )
+        schema = self.schema
         out: dict[str, list[tuple]] = {}
         for k, rows in by_key.items():
             cells = _post_fold(
-                fold_row(rows, self.schema, now_us=now_us), columns, max_versions, ts_range
+                fold_row(rows, schema, now_us=now_us), columns, max_versions, ts_range
             )
             if cells:
                 out[k] = cells
@@ -463,11 +470,12 @@ class Seeker:
                 for row in visible(t, _CELL_COLS):
                     by_key[row[0]].append(row)
 
+        schema = self.schema
         out: list[tuple] = []
         for k in sorted(by_key):
             out.extend(
                 _post_fold(
-                    fold_row(by_key[k], self.schema, now_us=now_us),
+                    fold_row(by_key[k], schema, now_us=now_us),
                     columns, max_versions, ts_range,
                 )
             )

@@ -111,7 +111,8 @@ class GlobalTransaction:
     (`!W`), lock cleanup and roll-forward (global_txn.cc:337-720)
     because thousands of independent clients race on shared tablets.
     In this engine the committer is a Spark driver and a commit is one
-    atomic append job per table, so optimistic validation suffices:
+    atomic driver-written op-log append per table, so optimistic
+    validation suffices:
 
     * snapshot   — per touched table, the max op ``seq`` at first
       touch; all txn reads are bounded by it (``snapshot_seq`` in the
@@ -256,10 +257,9 @@ class GlobalTransaction:
             holder = (self._cat.writer_id or self._cat._auto_writer_id) + "-plain"
             base, hi = self._cat._reserve_seq_window(table, len(batch), holder)
             batch._base_seq = base
-            df = batch.to_df(self._cat.spark, now_us=self._now_us)
             self._cat.append(
                 table,
-                df,
+                batch.to_arrow(now_us=self._now_us),
                 commit_seq=hi,
                 commit_lo=base,
                 op_kinds=batch.op_kinds,

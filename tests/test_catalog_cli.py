@@ -297,6 +297,49 @@ def test_snapshot_retention(cat, spark):
         cat.delete_snapshot("t_ret", "nope")
 
 
+def test_snapshot_ids_sort_within_one_second(cat, spark, monkeypatch):
+    """Snapshot ids taken inside one second still sort in the order
+    they were taken — including two reads of the same clock value — so
+    retention keeps the newest. The catalog's clock is frozen to one
+    second; its nanosecond reads advance as listed."""
+    import time as _time
+
+    import tera_spark.catalog as catalog_mod
+
+    sec = 1_790_000_000
+    reads = iter(sec * 10**9 + ns for ns in (5_000, 50_000, 50_000, 700_000_000, 999_999_999))
+
+    class OneSecondClock:
+        def time_ns(self):
+            return next(reads)
+
+        def strftime(self, fmt, t=None):
+            return _time.strftime(fmt, t if t is not None else _time.localtime(sec))
+
+        def __getattr__(self, name):
+            return getattr(_time, name)
+
+    cat.create_table("t_ids {d}")
+    monkeypatch.setattr(catalog_mod, "time", OneSecondClock())
+    sids = []
+    for i in range(5):
+        cat.append(
+            "t_ids",
+            MutationBatch(base_seq=i * 10).put("r", "d", "q", f"v{i}", ts=i + 1).to_df(spark),
+        )
+        sids.append(cat.snapshot("t_ids"))
+    monkeypatch.undo()
+    assert len(set(sids)) == 5 and sids == sorted(sids)
+    assert cat.list_snapshots("t_ids") == sids
+    assert cat.expire_snapshots("t_ids", keep_last=2) == sids[:3]
+    assert cat.list_snapshots("t_ids") == sids[3:]
+    assert {bytes(r.value) for r in cat.read_snapshot("t_ids", sids[-1]).collect()} == {b"v4"}
+    # an id of the older unpadded format sorts above same-second padded
+    # ids; a new id must still land strictly above it
+    old = sids[-1].split("-")[0] + "-5"
+    assert catalog_mod._time_id([old]) > old
+    assert catalog_mod._time_id([old, sids[-1]]) > old
+
 def test_cli_counter_families(spark, root, capsys):
     from tera_spark.cli import main
 

@@ -132,10 +132,13 @@ def test_reader_leaves_live_writer_alone(spark, tmp_path):
     assert {x.row_key for x in r.view("t").collect()} == {"r0", "mid"}
 
 
-def test_plain_append_fenced_when_healed_mid_run(spark, tmp_path, monkeypatch):
+@pytest.mark.parametrize("writer", ["spark", "driver"])
+def test_plain_append_fenced_when_healed_mid_run(spark, tmp_path, monkeypatch, writer):
     """A plain-append writer whose window gets rolled back DURING the
     append (a reader classified it as dead — its lease ttl lapsed) must
-    fail loudly instead of recording a commit over masked rows."""
+    fail loudly instead of recording a commit over masked rows — for
+    both inputs: a DataFrame (Spark writes it) and a pyarrow table (the
+    driver writes it)."""
     root = str(tmp_path / "cat")
     w = Catalog(spark, root, writer_id="writer-w")
     w.create_table("t { d }")
@@ -149,10 +152,11 @@ def test_plain_append_fenced_when_healed_mid_run(spark, tmp_path, monkeypatch):
         self._add_rollback(name, 1, 99)
 
     monkeypatch.setattr(Catalog, "_staged_append", slow_staged)
+    batch = MutationBatch(base_seq=5).put("r1", "d", "q", "v", ts=1)
     with pytest.raises(WriterFenced, match="mid-append"):
         w.append(
             "t",
-            MutationBatch(base_seq=5).put("r1", "d", "q", "v", ts=1).to_df(spark),
+            batch.to_df(spark) if writer == "spark" else batch.to_arrow(),
             commit_seq=5,
             op_kinds=[5],
         )

@@ -364,3 +364,21 @@ def test_seek_matches_spark_fold_with_random_ttl(cat, spark, seed):
         k: {(c[0], c[1], c[2], c[3], bytes(c[4])) for c in v} for k, v in got.items()
     }
     assert got_sets == want
+
+
+def test_seek_sees_online_schema_change(spark, tmp_path):
+    """A Table's seeker is built on first use; an update_schema after
+    that must still apply to its next read, as on the Spark path."""
+    from tera_spark.client import Client
+    from tera_spark.registry import parse_schema_string
+
+    c = Client(spark, str(tmp_path / "cat"))
+    c.create_table("t { d <maxversions=1> }")
+    t = c.open_table("t")
+    t.put("r", "d", "q", "v1", ts=1)
+    t.put("r", "d", "q", "v2", ts=2)
+    assert [v for _, v in t.get("r", seek=True)["d"]["q"]] == [b"v2"]
+    c.catalog.update_schema(parse_schema_string("t { d <maxversions=3> }"))
+    want = [(2, b"v2"), (1, b"v1")]
+    assert t.get("r")["d"]["q"] == want
+    assert t.get("r", seek=True)["d"]["q"] == want
