@@ -148,8 +148,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="delete only the newest version of cf:qu")
     sp.add_argument("--ts", type=int)
     sp = sub.add_parser("get"); sp.add_argument("table"); sp.add_argument("row")
-    sp.add_argument("--seek", action="store_true",
-                    help="client-side seek fast path (no Spark job)")
     sp = sub.add_parser("scan")
     sp.add_argument("table"); sp.add_argument("--start"); sp.add_argument("--end")
     sp.add_argument("--limit", type=int, default=100)
@@ -326,25 +324,14 @@ def main(argv: list[str] | None = None) -> int:
         _apply(cat, args.table, b)
         print("ok")
     elif args.cmd in ("getint64", "get_counter"):
+        from tera_spark.client import Table
         from tera_spark.functions.codecs import py_decode_be_i64, py_decode_le_i64
-        from tera_spark.operators.scan import get as tget
 
         cf, _, qu = args.column.partition(":")
         dec = py_decode_le_i64 if args.cmd == "getint64" else py_decode_be_i64
-        gschema = cat.get_schema(args.table)
-        grow = args.row
-        if gschema.hash_distribution:
-            from tera_spark.functions.keys import py_hash_prefix_key
-
-            grow = py_hash_prefix_key(args.row)
-        rows = tget(
-            cat.read_oplog(args.table),
-            gschema,
-            grow,
-            columns={cf: [qu]},
-        ).collect()
-        for r in rows:
-            print(f"{r.row_key} {r.cf}:{r.qualifier} @{r.ts} {dec(bytes(r.value))}")
+        got = Table(cat, args.table).get(args.row, columns={cf: [qu]})
+        for ts, value in got.get(cf, {}).get(qu, []):
+            print(f"{args.row} {cf}:{qu} @{ts} {dec(value)}")
     elif args.cmd == "findtablet":
         hits = cat.find_tablet(args.table, args.row)
         if not hits:
@@ -397,37 +384,18 @@ def main(argv: list[str] | None = None) -> int:
         cat.kv_put(args.table, args.key, args.value, ttl_s=args.ttl or None)
         print("ok")
     elif args.cmd == "get":
-        tschema = cat.get_schema(args.table)
-        row_key = args.row
-        if not tschema.kv_mode and tschema.hash_distribution:
-            # <hash=on> tables store prefixed keys (table_impl.cc:98):
-            # translate in, strip out — same transparency as the SDK
-            from tera_spark.functions.keys import py_hash_prefix_key
+        # the SDK read: seek path, <hash=on> keys translated in and out
+        from tera_spark.client import KvTable, Table
 
-            row_key = py_hash_prefix_key(args.row)
-        if getattr(args, "seek", False):
-            from tera_spark.operators.seek import Seeker
-
-            seeker = Seeker(cat, args.table)
-            if tschema.kv_mode:
-                v = seeker.get_kv(args.row)
-                if v is not None:
-                    print(f"{args.row} {bytes(v)!r}")
-                return 0
-            for rk, cf, qu, ts, value in seeker.get(row_key):
-                print(f"{args.row} {cf}:{qu} @{ts} {bytes(value or b'')!r}")
-            return 0
         if cat.get_schema(args.table).kv_mode:
-            from pyspark.sql import functions as F
-
-            for r in cat.view(args.table).filter(F.col("key") == args.row).collect():
-                print(f"{r.key} {bytes(r.value or b'')!r}")
+            v = KvTable(cat, args.table).get(args.row)
+            if v is not None:
+                print(f"{args.row} {v!r}")
             return 0
-        from tera_spark.operators.scan import get as tget
-
-        rows = tget(cat.read_oplog(args.table), tschema, row_key).collect()
-        for r in rows:
-            print(f"{args.row} {r.cf}:{r.qualifier} @{r.ts} {bytes(r.value or b'')!r}")
+        for cf, quals in Table(cat, args.table).get(args.row).items():
+            for qu, versions in quals.items():
+                for ts, value in versions:
+                    print(f"{args.row} {cf}:{qu} @{ts} {value!r}")
     elif args.cmd == "scan":
         sschema = cat.get_schema(args.table)
         if (
@@ -596,25 +564,17 @@ def main(argv: list[str] | None = None) -> int:
             _apply(cat, args.table, b)
         print(f"put {n} records")
     elif args.cmd == "batchget":
-        from pyspark.sql import functions as F
-
-        from tera_spark.operators.scan import batch_get
+        from tera_spark.client import Table
 
         keys = [ln.strip().split()[0] for ln in open(args.file) if ln.strip()]
-        bschema = cat.get_schema(args.table)
-        if bschema.hash_distribution:
-            from tera_spark.functions.keys import py_hash_prefix_key, py_strip_hash_prefix
-
-            lookup = [py_hash_prefix_key(k) for k in keys]
-            strip = py_strip_hash_prefix
-        else:
-            lookup, strip = keys, lambda k: k
-        kdf = spark.createDataFrame([(k,) for k in lookup], "row_key string")
-        rows = batch_get(
-            cat.read_oplog(args.table), bschema, kdf
-        ).orderBy("row_key", "cf", "qualifier").collect()
+        t = Table(cat, args.table)
+        # storage order: hash order on a <hash=on> table, user keys shown
+        rows = sorted(
+            t.batch_get(keys).collect(),
+            key=lambda r: (t._hk(r.row_key), r.cf, r.qualifier),
+        )
         for r in rows:
-            print(f"{strip(r.row_key)} {r.cf}:{r.qualifier} @{r.ts} {bytes(r.value).decode(errors='replace')}")
+            print(f"{r.row_key} {r.cf}:{r.qualifier} @{r.ts} {bytes(r.value).decode(errors='replace')}")
     elif args.cmd == "explain":
         import tera_spark.queries as Q
         from tera_spark.plans import explain_features

@@ -11,7 +11,13 @@ semantics, only the SDK's shape:
 
 - ``Table.get`` returns the RowReader::ToMap nesting
   (cf → qualifier → [(ts desc, value)]; include/tera/reader.h:52-55)
-  as plain Python dicts — point reads are row-sized by construction.
+  as plain Python dicts. Every row-sized read — ``Table.get``,
+  ``Table.multi_get``, ``KvTable.get`` — goes through the seek path
+  (operators/seek.py, the ``LowLevelSeek`` analog): footer-routed
+  pyarrow reads and a Python fold on the client, no Spark job. As in
+  tera's ``Table::Get``, the caller picks no access path. The Spark
+  operators (``operators.scan.get`` / ``batch_get``) remain the
+  DataFrame forms and the reference the seek path is tested against.
 - Writes auto-assign timestamps (server-assigned ts, tera_key.h:33)
   and carry a monotonically increasing sequence across commits
   (LevelDB sequence analog) so later writes win ties. Each write is
@@ -36,7 +42,8 @@ from tera_spark.catalog import Catalog
 # check_and_apply: the DataFrame-level CheckAndApply, re-exported beside
 # the SDK's seek-backed Table.check_and_apply
 from tera_spark.operators.mutation import MutationBatch, check_and_apply  # noqa: F401
-from tera_spark.operators.scan import ScanDescriptor, batch_get, get, scan
+from tera_spark.operators.scan import ScanDescriptor, batch_get, scan
+from tera_spark.operators.seek import Seeker
 from tera_spark.operators.txn import SingleRowTransaction
 from tera_spark.registry import TableSchema
 
@@ -178,6 +185,7 @@ class Table:
         self._cat = catalog
         self.name = name
         self._next_seq: int | None = None
+        self._seeker = Seeker(catalog, name)
         schema = catalog.get_schema(name)
         self._hashed = schema.hash_distribution
         # opt-in unique-monotonic auto timestamps (timeoracle.h analog).
@@ -357,7 +365,7 @@ class Table:
         if not isinstance(expected, bytes):
             expected = str(expected).encode()
         now = int(time.time() * 1_000_000)
-        cur = self._seeker().get(row_key, columns={cf: [qualifier]}, now_us=now)
+        cur = self._seeker.get(row_key, columns={cf: [qualifier]}, now_us=now)
         if not cur or cur[0][4] != expected:
             return False
         self._commit(batch, now_us=now)
@@ -372,52 +380,26 @@ class Table:
         max_versions: int | None = None,
         ts_range: tuple[int, int] | None = None,
         now_us: int | None = None,
-        seek: bool = False,
+        seek: bool = True,
     ) -> dict[str, dict[str, list[tuple[int, bytes]]]]:
         """Point read, nested RowReader::ToMap-style:
         {cf: {qualifier: [(ts, value) newest-first]}}.
 
-        ``seek=True`` takes the LowLevelSeek-analog fast path
-        (operators/seek.py): footer-routed pyarrow row-group reads +
-        Python fold on the client — no Spark job, ~ms latency. Same
-        result by property test (tests/test_seek.py)."""
-        row_key = self._hk(row_key)
-        if seek:
-            cells = self._seeker().get(
-                row_key,
-                columns=columns,
-                max_versions=max_versions,
-                ts_range=ts_range,
-                now_us=now_us,
-            )
-            out: dict[str, dict[str, list[tuple[int, bytes]]]] = {}
-            for _, cf, qu, ts, value in cells:
-                out.setdefault(cf, {}).setdefault(qu, []).append((ts, bytes(value)))
-            return out
-        rows = get(
-            self._cat.read_oplog(self.name),
-            self._cat.get_schema(self.name),
-            row_key,
+        Served by the seek path: no Spark job, ~ms latency.
+        tests/test_seek.py pins it equal to ``operators.scan.get``,
+        the DataFrame form of this read. ``seek`` is accepted for older
+        call sites and ignored: there is one read path."""
+        cells = self._seeker.get(
+            self._hk(row_key),
             columns=columns,
             max_versions=max_versions,
             ts_range=ts_range,
             now_us=now_us,
-            op_kinds=self._cat._op_kinds_union(self.name),
-        ).collect()
+        )
         out: dict[str, dict[str, list[tuple[int, bytes]]]] = {}
-        for r in rows:
-            out.setdefault(r.cf, {}).setdefault(r.qualifier, []).append((r.ts, bytes(r.value)))
-        for cfd in out.values():
-            for versions in cfd.values():
-                versions.sort(key=lambda tv: -tv[0])
+        for _, cf, qu, ts, value in cells:
+            out.setdefault(cf, {}).setdefault(qu, []).append((ts, bytes(value)))
         return out
-
-    def _seeker(self):
-        if getattr(self, "_seek_client", None) is None:
-            from tera_spark.operators.seek import Seeker
-
-            self._seek_client = Seeker(self._cat, self.name)
-        return self._seek_client
 
     def batch_get(self, row_keys: list[str], *, now_us: int | None = None) -> DataFrame:
         return self._strip_df(
@@ -431,40 +413,17 @@ class Table:
         )
 
     def multi_get(
-        self, row_keys: list[str], *, now_us: int | None = None, mode: str = "auto"
+        self, row_keys: list[str], *, now_us: int | None = None
     ) -> dict[str, list[tuple]]:
-        """Batched point reads with path routing (the access-path
-        choice the reference makes per-read, tablet_io.cc:1439-1451):
-
-        - ``seek``: client-side footer-routed reads (operators/seek) —
-          wins while the key count is small relative to the table's
-          row-group count (each get touches ~1 row group).
-        - ``join``: the Spark broadcast-semi-join scan path — wins
-          once the batch would touch most row groups anyway (the batch
-          degenerates to a full read, so do it as one distributed
-          scan; see SCALE.md "OLTP verbs").
-        - ``auto``: seek iff len(keys) < total row groups / 2.
-
-        Returns row_key → [(row_key, cf, qualifier, ts, value)]."""
-        if mode == "auto":
-            groups = sum(len(self._seeker()._file_meta(f)) for f in self._seeker()._files())
-            mode = "seek" if len(row_keys) < max(groups, 1) / 2 else "join"
-        if mode == "seek":
-            got = self._seeker().multi_get([self._hk(k) for k in row_keys], now_us=now_us)
-            return {
-                self._strip(k): [(self._strip(c[0]),) + tuple(c[1:]) for c in cells]
-                for k, cells in got.items()
-            }
-        if mode != "join":
-            raise ValueError(f"unknown mode: {mode!r}")
-        out: dict[str, list[tuple]] = {}
-        for r in self.batch_get(row_keys, now_us=now_us).collect():
-            out.setdefault(r.row_key, []).append(
-                (r.row_key, r.cf, r.qualifier, r.ts, bytes(r.value))
-            )
-        for cells in out.values():
-            cells.sort(key=lambda c: (c[1], c[2], -c[3]))
-        return out
+        """Batched point reads through the seek path, on the client
+        (``batch_get`` is the distributed DataFrame form). Returns
+        row_key → [(row_key, cf, qualifier, ts, value)], newest-first
+        per column; keys with no visible cell are absent."""
+        got = self._seeker.multi_get([self._hk(k) for k in row_keys], now_us=now_us)
+        return {
+            self._strip(k): [(self._strip(c[0]),) + tuple(c[1:]) for c in cells]
+            for k, cells in got.items()
+        }
 
     def scan(
         self,
@@ -535,8 +494,11 @@ class Table:
         )
 
     def commit_row_transaction(self, txn: SingleRowTransaction) -> None:
-        cells = txn.commit(self._cat.read_oplog(self.name))
-        self._cat.append(self.name, cells)
+        """Conflict-check the row, then commit the txn's batch like
+        ``apply_mutation``: a fresh table seq (above any rolled-back
+        window, so the write cannot vanish) and a driver-written file."""
+        txn.check(self._cat.read_oplog(self.name))
+        self._commit(txn.batch)
 
     # -- admin sugar (table.h:131-133) --------------------------------
     def tablet_info(self) -> list[dict]:
@@ -559,28 +521,16 @@ class KvTable:
     def __init__(self, catalog: Catalog, name: str):
         self._cat = catalog
         self.name = name
+        self._seeker = Seeker(catalog, name)
 
     def put(self, key: str, value, *, ttl_s: int | None = None) -> None:
         self._cat.kv_put(self.name, key, value, ttl_s=ttl_s)
 
-    def get(self, key: str, *, now_us: int | None = None, seek: bool = False) -> bytes | None:
-        if seek:
-            from tera_spark.operators.seek import Seeker
-
-            if getattr(self, "_seek_client", None) is None:
-                self._seek_client = Seeker(self._cat, self.name)
-            v = self._seek_client.get_kv(key, now_us=now_us)
-            return bytes(v) if v is not None else None
-        from tera_spark.operators.view import kv_current_view
-
-        rows = (
-            kv_current_view(
-                self._cat.read_oplog(self.name).filter(F.col("key") == key),
-                now_us=now_us,
-            )
-            .collect()
-        )
-        return bytes(rows[0].value) if rows else None
+    def get(self, key: str, *, now_us: int | None = None) -> bytes | None:
+        """Point read through the seek path (``Seeker.get_kv``); the
+        Spark twin is ``operators.view.kv_current_view``."""
+        v = self._seeker.get_kv(key, now_us=now_us)
+        return bytes(v) if v is not None else None
 
     def delete(self, key: str) -> None:
         self._cat.kv_delete(self.name, key)

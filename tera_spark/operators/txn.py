@@ -76,17 +76,22 @@ class SingleRowTransaction:
         self.batch.delete_column(self._row_key, cf, qualifier, ts=ts)
         return self
 
-    def commit(self, current_cells: DataFrame | None = None) -> DataFrame:
-        """Conflict-check against the table's current state and return
-        the mutation DataFrame to append. Raises RowTxnConflict if the
-        row gained ops since the snapshot."""
-        latest = self._row_max_seq(
-            current_cells if current_cells is not None else self._cells
-        )
+    def check(self, current_cells: DataFrame) -> None:
+        """The conflict check: raise RowTxnConflict if the row gained
+        ops in ``current_cells`` since the snapshot."""
+        latest = self._row_max_seq(current_cells)
         if latest != self._snapshot_seq:
             raise RowTxnConflict(
                 f"row {self._row_key!r}: seq {self._snapshot_seq} -> {latest}"
             )
+
+    def commit(self, current_cells: DataFrame | None = None) -> DataFrame:
+        """Conflict-check against the table's current state (the txn's
+        own cells by default) and return the mutation DataFrame to
+        append, its seqs starting at the row's snapshot seq + 1. A
+        catalog table commits through ``Table.commit_row_transaction``
+        instead, which takes fresh table seqs."""
+        self.check(current_cells if current_cells is not None else self._cells)
         return self.batch.to_df(self._cells.sparkSession, now_us=self._now_us)
 
 

@@ -87,7 +87,7 @@ def _reader_result(table, reader: dict) -> dict:
     cf = reader.get("columnfamily", "")
     qu = reader.get("qualifier", "")
     out = {"rowkey": rowkey, "columnfamily": cf, "qualifier": qu}
-    cells = table.get(rowkey, columns={cf: [qu]}, max_versions=1, seek=True)
+    cells = table.get(rowkey, columns={cf: [qu]}, max_versions=1)
     versions = cells.get(cf, {}).get(qu, [])
     if not versions:
         out.update(status=False, reason="not found")

@@ -1140,9 +1140,19 @@ def test_cli_reads_hash_distributed_table(spark, tmp_path, capsys):
         assert main(["--root", root, "put", "h", f"u{i}", "d:q", f"v{i}", "--ts", "1"]) == 0
     capsys.readouterr()
     assert main(["--root", root, "get", "h", "u3"]) == 0
-    assert "u3 d:q @1 b'v3'" in capsys.readouterr().out
-    assert main(["--root", root, "get", "h", "u3", "--seek"]) == 0
-    assert "u3 d:q @1 b'v3'" in capsys.readouterr().out
+    out = capsys.readouterr().out.splitlines()
+    assert out == ["u3 d:q @1 b'v3'"]
+    # the Spark operator reads the same cells under the stored key
+    from tera_spark.catalog import Catalog
+    from tera_spark.functions.keys import py_hash_prefix_key
+
+    from tests.test_seek import spark_get_map
+
+    ref = spark_get_map(Catalog(spark, root), "h", py_hash_prefix_key("u3"))
+    assert out == [
+        f"u3 {cf}:{qu} @{ts} {v!r}"
+        for cf, quals in ref.items() for qu, versions in quals.items() for ts, v in versions
+    ]
     assert main(["--root", root, "scan", "h", "--start", "u1", "--end", "u4"]) == 0
     out = capsys.readouterr().out
     assert "u1 " in out and "u3 " in out and "u4 " not in out and "u0 " not in out

@@ -15,6 +15,8 @@ from tera_spark.operators.mutation import MutationBatch
 from tera_spark.operators.scan import ScanDescriptor
 from tera_spark.operators.txn import RowTxnConflict
 
+from tests.test_seek import spark_get_map
+
 
 @pytest.fixture()
 def client(spark):
@@ -93,6 +95,32 @@ def test_row_transaction_conflict(client):
     txn2.put("cf0", "bal", "40", ts=3)
     t.commit_row_transaction(txn2)
     assert t.get("acct", max_versions=1)["cf0"]["bal"][0][1] == b"40"
+
+
+def test_row_transaction_commit_survives_rolled_back_tail(client, spark):
+    """A row-txn commit takes a fresh table seq, like every SDK write:
+    the row's snapshot seq + 1 can sit inside a rolled-back torn tail,
+    where the committed write would be masked from every read."""
+    client.create_table("txntail {cf0}")
+    t = client.open_table("txntail")
+    for i in range(6):
+        t.put("acct", "cf0", "bal", str(i), ts=i + 1)  # seqs 0..5
+    # a writer died after its file landed, before its commit record
+    torn = MutationBatch(base_seq=6)
+    for i in range(5):
+        torn.put(f"torn{i}", "cf0", "bal", "x", ts=1)  # seqs 6..10
+    torn.to_df(spark).write.mode("append").parquet(client.catalog.oplog_path("txntail"))
+    # a new writer's first commit recovers the tail as a rollback window
+    t2 = Client(spark, str(client.catalog.root)).open_table("txntail")
+    t2.put("other", "cf0", "bal", "o", ts=1)
+    assert {"after": 5, "upto": 10} in client.catalog._rollbacks("txntail")
+
+    txn = t2.start_row_transaction("acct")
+    assert txn.read("cf0", "bal") == b"5"
+    txn.put("cf0", "bal", "txn-wrote", ts=7)
+    t2.commit_row_transaction(txn)
+    assert t2.get("acct") == {"cf0": {"bal": [(7, b"txn-wrote")]}}
+    assert spark_get_map(client.catalog, "txntail", "acct") == t2.get("acct")
 
 
 def test_later_write_wins_across_commits_same_ts(client):
@@ -183,11 +211,11 @@ def test_hash_distributed_table_transparent(spark, tmp_path):
     # point read: user key in, plain ToMap out
     m = t.get("user0003")
     assert m["d"]["q"] == [(1, b"v3")]
-    # seek path translates too
-    assert t.get("user0003", seek=True) == m
+    # the Spark operator reads the same row under the stored key
+    assert m == spark_get_map(c.catalog, "ht", py_hash_prefix_key("user0003"))
 
-    # multi_get (join path) returns user-keyed results
-    got = t.multi_get(["user0001", "user0006"], mode="join")
+    # multi_get returns user-keyed results
+    got = t.multi_get(["user0001", "user0006"])
     assert set(got) == {"user0001", "user0006"}
     assert got["user0001"][0][0] == "user0001"
 

@@ -20,6 +20,8 @@ from tera_spark.operators.mutation import MutationBatch
 from tera_spark.operators.seek import Seeker
 from tera_spark.operators.view import fold_route
 
+from tests.test_seek import spark_get_map
+
 NOW = 1_700_000_000_000_000
 ROWS = ["r1", "r2", "r3"]
 
@@ -169,8 +171,8 @@ def test_sdk_writes_and_cas_start_no_spark_job(spark, tmp_path):
         assert _jobs_in(sc, group) > 0
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert t.get("r") == t.get("r", seek=True)
-    assert t.get("r", seek=True)["d"]["q"][0][1] == b"v2"
+    assert t.get("r") == spark_get_map(c.catalog, "t", "r")
+    assert t.get("r")["d"]["q"][0][1] == b"v2"
 
 
 # --- CheckAndApply through the seek path ------------------------------
@@ -183,7 +185,7 @@ def test_cas_compares_newest_version(spark, tmp_path):
     for i in (1, 2, 3):
         t.put("r", "d", "q", f"v{i}", ts=i)
     assert not t.check_and_apply("r", "d", "q", "v1", MutationBatch().put("r", "d", "q", "x", ts=4))
-    assert [v for _, v in t.get("r", seek=True)["d"]["q"]] == [b"v3", b"v2", b"v1"]
+    assert [v for _, v in t.get("r")["d"]["q"]] == [b"v3", b"v2", b"v1"]
     assert t.check_and_apply("r", "d", "q", "v3", MutationBatch().put("r", "d", "q", "x", ts=4))
     assert [v for _, v in t.get("r")["d"]["q"]] == [b"x", b"v3", b"v2"]
 
@@ -194,9 +196,9 @@ def test_cas_on_ttl_expired_cell_does_not_land(spark, tmp_path):
     t = c.open_table("t")
     old = int(time.time() * 1_000_000) - 60_000_000  # 60 s ago, ttl 1 s
     t.put("r", "d", "q", "stale", ts=old)
-    assert t.get("r") == {} and t.get("r", seek=True) == {}
+    assert t.get("r") == {} == spark_get_map(c.catalog, "t", "r")
     assert not t.check_and_apply("r", "d", "q", "stale", MutationBatch().put("r", "d", "q", "x"))
-    assert t.get("r", seek=True) == {}
+    assert t.get("r") == {}
 
 
 def test_cas_on_hash_table_and_retry_keeps_user_keys(spark, tmp_path):
@@ -209,8 +211,8 @@ def test_cas_on_hash_table_and_retry_keeps_user_keys(spark, tmp_path):
     assert batch.row_keys == ["u1"]  # the failed attempt left the batch as it was
     assert h.check_and_apply("u1", "d", "q", "a", batch)
     assert batch.row_keys == ["u1"]
-    assert h.get("u1", seek=True)["d"]["q"][0][1] == b"b"
     assert h.get("u1")["d"]["q"][0][1] == b"b"
+    assert h.get("u1") == spark_get_map(c.catalog, "h", py_hash_prefix_key("u1"))
     stored = {r.row_key for r in c.catalog.view("h").collect()}
     assert stored == {py_hash_prefix_key("u1")}
 

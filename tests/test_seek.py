@@ -9,6 +9,8 @@ random op-logs, plus the footer-bounds routing itself.
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from tera_spark.catalog import Catalog
@@ -31,6 +33,19 @@ pytestmark = pytest.mark.usefixtures("spark")
 @pytest.fixture()
 def cat(spark, tmp_path):
     return Catalog(spark, str(tmp_path / "cat"))
+
+
+def spark_get_map(cat, table, key, **kw):
+    """The Spark operator's point read (``scan.get``) of stored key
+    ``key``, nested into the ToMap shape ``Table.get`` returns — the
+    reference the SDK's seek-path reads are pinned to."""
+    out = {}
+    for r in spark_get(cat.read_oplog(table), cat.get_schema(table), key, **kw).collect():
+        out.setdefault(r.cf, {}).setdefault(r.qualifier, []).append((r.ts, bytes(r.value)))
+    for quals in out.values():
+        for versions in quals.values():
+            versions.sort(key=lambda tv: -tv[0])
+    return out
 
 
 def _mk_table(cat, spark, rows, name="seek_t"):
@@ -188,6 +203,23 @@ def test_get_kv_fast_path(cat, spark):
     with pytest.raises(ValueError):
         seeker.multi_get(["k1"])
 
+    # KvTable.get ≡ the Spark fold (kv_current_view), key by key, at a
+    # horizon where the 1-hour TTL key lives and at one where it is gone
+    from tera_spark.client import KvTable
+    from tera_spark.operators.view import kv_current_view
+
+    cat.kv_put("seek_kv", "k4", b"hour", ttl_s=3600)
+    kv = KvTable(cat, "seek_kv")
+    assert kv.get("k4") == b"hour" and kv.get("k4", now_us=far_future) is None
+    for now in (int(time.time() * 1_000_000), far_future):
+        want = {
+            r.key: bytes(r.value)
+            for r in kv_current_view(cat.read_oplog("seek_kv"), now_us=now).collect()
+        }
+        for key in ("k1", "k2", "k3", "k4", "missing"):
+            assert kv.get(key, now_us=now) == want.get(key), (key, now)
+    assert want == {"k1": b"new"}  # far future: both TTL keys gone
+
 
 def test_fold_row_empty_and_marks_only():
     assert fold_row([], _schema(), now_us=NOW) == []
@@ -205,15 +237,15 @@ def test_client_and_cli_seek_paths(cat, spark, capsys):
     t.put("r1", "c", "q", b"v1", ts=10)
     t.put("r1", "c", "q", b"v2", ts=20)
     t.put("r2", "c", "q", b"other", ts=5)
-    assert t.get("r1", seek=True) == t.get("r1", seek=False)
-    assert t.get("r1", seek=True) == {"c": {"q": [(20, b"v2"), (10, b"v1")]}}
+    assert t.get("r1") == spark_get_map(cat, "sdk_seek", "r1")
+    assert t.get("r1") == {"c": {"q": [(20, b"v2"), (10, b"v1")]}}
 
-    # CLI --seek prints the same cells as the Spark path
+    # CLI get prints the same cells, newest first
     from tera_spark.cli import main as cli_main
 
-    rc = cli_main(["--root", str(cat.root), "get", "sdk_seek", "r1", "--seek"])
-    seek_out = capsys.readouterr().out
-    assert rc == 0 and "c:q @20 b'v2'" in seek_out
+    rc = cli_main(["--root", str(cat.root), "get", "sdk_seek", "r1"])
+    out = capsys.readouterr().out.splitlines()
+    assert rc == 0 and out == ["r1 c:q @20 b'v2'", "r1 c:q @10 b'v1'"]
 
 
 @pytest.mark.slow
@@ -268,26 +300,32 @@ def test_cli_scan_seek(cat, spark, capsys):
 
 
 @pytest.mark.slow
-def test_multi_get_auto_routing(cat, spark):
+def test_multi_get_matches_batch_get(cat, spark):
     from tera_spark.client import Client
 
     client = Client(spark, str(cat.root))
-    client.create_table("route_t {c}")
+    client.create_table("route_t {c <maxversions=2>}")
     t = client.open_table("route_t")
     for i in range(8):
         t.put(f"r{i}", "c", "q", f"v{i}".encode(), ts=1)
+    t.put("r2", "c", "q", b"v2b", ts=2)
 
-    few = t.multi_get(["r1", "r3"])                     # auto → seek
+    few = t.multi_get(["r1", "r3"])
     assert {k: [c[4] for c in v] for k, v in few.items()} == {
         "r1": [b"v1"], "r3": [b"v3"],
     }
-    # both explicit paths agree
+    # the client-side batch equals the distributed DataFrame form
     many = [f"r{i}" for i in range(8)] + ["missing"]
-    via_seek = t.multi_get(many, mode="seek")
-    via_join = t.multi_get(many, mode="join")
-    assert via_seek == via_join and "missing" not in via_seek
-    with pytest.raises(ValueError):
-        t.multi_get(["r1"], mode="bogus")
+    want = {}
+    for r in t.batch_get(many).collect():
+        want.setdefault(r.row_key, []).append(
+            (r.row_key, r.cf, r.qualifier, r.ts, bytes(r.value))
+        )
+    for cells in want.values():
+        cells.sort(key=lambda c: (c[1], c[2], -c[3]))
+    got = t.multi_get(many)
+    assert got == want and "missing" not in got
+    assert [c[4] for c in got["r2"]] == [b"v2b", b"v2"]
 
 
 def test_per_cell_ttl_view_compact_seek(cat, spark):
@@ -367,7 +405,7 @@ def test_seek_matches_spark_fold_with_random_ttl(cat, spark, seed):
 
 
 def test_seek_sees_online_schema_change(spark, tmp_path):
-    """A Table's seeker is built on first use; an update_schema after
+    """A Table's seeker is built with the Table; an update_schema after
     that must still apply to its next read, as on the Spark path."""
     from tera_spark.client import Client
     from tera_spark.registry import parse_schema_string
@@ -377,8 +415,8 @@ def test_seek_sees_online_schema_change(spark, tmp_path):
     t = c.open_table("t")
     t.put("r", "d", "q", "v1", ts=1)
     t.put("r", "d", "q", "v2", ts=2)
-    assert [v for _, v in t.get("r", seek=True)["d"]["q"]] == [b"v2"]
+    assert [v for _, v in t.get("r")["d"]["q"]] == [b"v2"]
     c.catalog.update_schema(parse_schema_string("t { d <maxversions=3> }"))
     want = [(2, b"v2"), (1, b"v1")]
     assert t.get("r")["d"]["q"] == want
-    assert t.get("r", seek=True)["d"]["q"] == want
+    assert t.get("r") == spark_get_map(c.catalog, "t", "r")
