@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import shutil
 import time
+import uuid
 from pathlib import Path
 
 import pyarrow as pa
@@ -29,12 +30,35 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tera_spark.coordination import PosixLinkArbiter, SlotArbiter
 from tera_spark.model import CELL_SCHEMA
+from tera_spark.oplog_index import OplogIndex
 from tera_spark.registry import TableSchema, parse_schema_string
 from tera_spark.sources.tables import schema_codec, write_cell_table
 
 
 class WriterFenced(Exception):
     """Another process holds the table's writer lease."""
+
+
+def _replace_text(p: Path, text: str) -> None:
+    """Atomically replace ``p``: readers see the old file or the new
+    one, never a torn write. The tmp name is unique per writer — a
+    shared one made concurrent writers of the same file race the rename
+    (the loser crashed on FileNotFoundError)."""
+    tmp = p.with_name(f".{p.name}.tmp-{uuid.uuid4().hex[:12]}")
+    tmp.write_text(text)
+    tmp.replace(p)
+
+
+def _json_files(d: Path, pattern: str) -> list[tuple[Path, dict]]:
+    """(path, record) of every readable ``pattern`` file in ``d``. They
+    publish by tmp+rename, so a file that fails to parse is dirt."""
+    out = []
+    for p in d.glob(pattern):
+        try:
+            out.append((p, json.loads(p.read_text())))
+        except (OSError, json.JSONDecodeError):
+            continue
+    return out
 
 
 def _time_id(existing: list[str]) -> str:
@@ -94,11 +118,10 @@ class Catalog:
         # yield the same heap address, colliding reservation-manifest
         # paths and silently bypassing the row-disjointness check)
         import os as _os
-        import uuid as _uuid
 
-        self._auto_writer_id = f"w{_os.getpid()}-{_uuid.uuid4().hex[:8]}"
+        self._auto_writer_id = f"w{_os.getpid()}-{uuid.uuid4().hex[:8]}"
         self._tail_checked: set[str] = set()  # per-process WAL-recovery memo
-        self._gap_memo: dict[str, tuple] = {}  # commit-gap cache (see _commit_gaps)
+        self._indexes: dict[str, OplogIndex] = {}  # see oplog_index
         self._schema_memo: dict[str, tuple] = {}  # see current_schema
 
     def _authorize(self, action: str, table: str) -> None:
@@ -207,15 +230,18 @@ class Catalog:
 
     @staticmethod
     def _write_schema(tdir, schema) -> None:
-        import uuid
-
-        tmp = tdir / f".schema.json.tmp-{uuid.uuid4().hex[:12]}"
-        tmp.write_text(schema.to_json())
-        tmp.replace(tdir / "schema.json")
+        _replace_text(tdir / "schema.json", schema.to_json())
 
     # --- data paths ---------------------------------------------------
     def oplog_path(self, name: str) -> str:
         return str(self.root / name / "oplog")
+
+    def oplog_index(self, name: str) -> OplogIndex:
+        """The table's op-log index, shared with every Seeker on it."""
+        if name not in self._indexes:
+            tdir = self.root / name
+            self._indexes.setdefault(name, OplogIndex(tdir / "oplog", tdir / "commits"))
+        return self._indexes[name]
 
     def read_oplog(self, name: str) -> DataFrame:
         from pyspark.sql import functions as F
@@ -226,11 +252,11 @@ class Catalog:
         # without expire_ts null-fill, so both layouts coexist
         schema = KV_OPLOG_SCHEMA if self.get_schema(name).kv_mode else CELL_TTL_SCHEMA
         df = self.spark.read.schema(schema).parquet(self.oplog_path(name))
-        for r in self._rollbacks(name):
+        rollbacks, w, gaps = self._read_masks(name)
+        for r in rollbacks:
             # RollbackDrop semantics (reference leveldb dbformat.h:156):
             # entries written inside a rolled-back seq window vanish
             df = df.filter(~((F.col("seq") > r["after"]) & (F.col("seq") <= r["upto"])))
-        w = self.commit_watermark(name)
         if w is not None:
             # group-commit visibility: rows above the committed
             # watermark are a torn batch (crash between file write and
@@ -240,11 +266,24 @@ class Catalog:
             # the watermark is a concurrently-reserved window whose
             # record hasn't landed (in-flight or crashed) — masked
             # until its record appears (see _commit_gaps)
-            for g_lo, g_hi in self._masked_gaps(name):
+            for g_lo, g_hi in gaps:
                 df = df.filter(
                     ~((F.col("seq") >= g_lo) & (F.col("seq") <= g_hi))
                 )
         return df
+
+    def _read_masks(self, name: str) -> tuple[list[dict], int | None, list[tuple[int, int]]]:
+        """The read-visibility masks read_oplog and the Seeker apply:
+        rollback windows, the commit watermark and the masked gaps (see
+        _masked_gaps), from one listing of the commit records."""
+        rb = self._rollbacks(name)
+        _, alloc, _ = self._alloc_paths(name)
+        w, gaps = self.oplog_index(name).census(gaps=alloc.exists())
+        masked = [
+            (lo, hi) for lo, hi in gaps
+            if not any(r["after"] < lo and hi <= r["upto"] for r in rb)
+        ]
+        return rb, w, masked
 
     def _rollbacks(self, name: str) -> list[dict]:
         p = self.root / name / "rollbacks.json"
@@ -256,18 +295,13 @@ class Catalog:
         recovery) must not last-write-wins each other — a LOST rollback
         range would let a torn batch resurface once a later commit
         raises the watermark past it."""
-        import uuid
-
         holder = (self.writer_id or self._auto_writer_id) + "-rb"
         lock = self.root / name / "rollbacks.lock"
         while not self._try_excl_claim(lock, holder, 60.0):
             time.sleep(0.002)
         try:
             ranges = self._rollbacks(name) + [{"after": after, "upto": upto}]
-            p = self.root / name / "rollbacks.json"
-            tmp = p.with_suffix(f".json.tmp-{uuid.uuid4().hex[:12]}")
-            tmp.write_text(json.dumps(ranges))
-            tmp.replace(p)
+            _replace_text(self.root / name / "rollbacks.json", json.dumps(ranges))
         finally:
             self._release_slot(lock, holder)
 
@@ -278,11 +312,7 @@ class Catalog:
         so a crash mid-append never exposes a torn batch. None = table
         has no commit records (legacy/direct-written layout): reads are
         unfiltered."""
-        d = self.root / name / "commits"
-        if not d.exists():
-            return None
-        marks = [int(p.stem) for p in d.glob("*.json")]
-        return max(marks) if marks else None
+        return self.oplog_index(name).census(gaps=False)[0]
 
     def _record_commit(
         self,
@@ -320,7 +350,9 @@ class Catalog:
         while not self._try_excl_claim(lock, holder, 60.0):
             time.sleep(0.002)
         try:
-            prev = self._op_kinds_union(name) if any(d.glob("*.json")) else set()
+            prev = (
+                self._op_kinds_union(name) if self.commit_watermark(name) is not None else set()
+            )
             new = (
                 None
                 if (op_kinds is None or prev is None)
@@ -331,14 +363,6 @@ class Catalog:
                 self._write_op_kinds(name, new)
         finally:
             self._release_slot(lock, holder)
-        import uuid
-
-        p = d / f"{hi}.json"
-        # unique tmp: two concurrent roll-forwards of the same marked
-        # window write the SAME record — identical content, so the
-        # double replace is harmless, but a shared tmp name made the
-        # loser crash on FileNotFoundError mid-rename
-        tmp = d / f"{hi}.json.tmp-{uuid.uuid4().hex[:12]}"
         rec: dict = {"seq": int(hi)}
         if lo is not None:
             # the window's low end — lets readers distinguish a GAP
@@ -349,20 +373,16 @@ class Catalog:
             # distinct CellOp codes in the batch — lets reads prove the
             # op mix and route the fold (view.py fold_route)
             rec["op_kinds"] = sorted(int(k) for k in op_kinds)
-        tmp.write_text(json.dumps(rec))
-        tmp.replace(p)  # atomic rename = the commit point
+        # the atomic rename is the commit point. Two concurrent
+        # roll-forwards of the same marked window write the SAME record:
+        # identical content, so the double replace is harmless
+        _replace_text(d / f"{hi}.json", json.dumps(rec))
 
     def _write_op_kinds(self, name: str, kinds: set[int] | list[int] | None) -> None:
-        import uuid
-
-        p = self.root / name / "opkinds.json"
-        # unique tmp per writer: a shared tmp name made two concurrent
-        # committers race the rename (one crashed on FileNotFoundError)
-        tmp = p.with_suffix(f".json.tmp-{uuid.uuid4().hex[:12]}")
-        tmp.write_text(
-            json.dumps({"kinds": sorted(int(k) for k in kinds) if kinds is not None else None})
+        _replace_text(
+            self.root / name / "opkinds.json",
+            json.dumps({"kinds": sorted(int(k) for k in kinds) if kinds is not None else None}),
         )
-        tmp.replace(p)
 
     @staticmethod
     def _summary_kinds(s: Path) -> set[int] | None:
@@ -463,31 +483,24 @@ class Catalog:
                 # append ran; recording the commit would then claim
                 # success for permanently-masked rows. Fail loudly —
                 # the caller retries with a fresh window.
-                for r in self._rollbacks(name):
-                    # ANY overlap fences — a rollback that swallowed only
-                    # part of the window still means silently-lost rows
-                    if r["after"] < commit_seq and commit_lo <= r["upto"]:
-                        raise WriterFenced(
-                            f"table {name!r}: reserved window "
-                            f"[{commit_lo},{commit_seq}] was rolled back "
-                            "mid-commit (reservation ttl elapsed?)"
-                        )
-            else:
-                # plain (reservation-less) append: same loud-fail if a
-                # NEW rollback landed during the run (reader heal of an
-                # expired lease classifies this writer as dead). The
-                # batch occupies (w0, commit_seq] by the torn-tail
-                # convention; pre-existing rollbacks are not ours.
-                lo0 = (w0 if w0 is not None else -1) + 1
-                for r in self._rollbacks(name):
-                    if (r["after"], r["upto"]) in rb0:
-                        continue
-                    if r["after"] < commit_seq and lo0 <= r["upto"]:
-                        raise WriterFenced(
-                            f"table {name!r}: batch window "
-                            f"({w0},{commit_seq}] was rolled back "
-                            "mid-append (writer lease expired?)"
-                        )
+                if self._window_rolled_back(name, commit_lo, commit_seq):
+                    raise WriterFenced(
+                        f"table {name!r}: reserved window "
+                        f"[{commit_lo},{commit_seq}] was rolled back "
+                        "mid-commit (reservation ttl elapsed?)"
+                    )
+            # plain (reservation-less) append: same loud-fail if a NEW
+            # rollback landed during the run (reader heal of an expired
+            # lease classifies this writer as dead). The batch occupies
+            # (w0, commit_seq] by the torn-tail convention; pre-existing
+            # rollbacks are not ours.
+            elif self._window_rolled_back(
+                name, (w0 if w0 is not None else -1) + 1, commit_seq, skip=rb0
+            ):
+                raise WriterFenced(
+                    f"table {name!r}: batch window ({w0},{commit_seq}] "
+                    "was rolled back mid-append (writer lease expired?)"
+                )
             self._record_commit(name, commit_seq, op_kinds, lo=commit_lo)
 
     def _staged_append(self, name: str, cells: DataFrame | pa.Table) -> None:
@@ -505,8 +518,6 @@ class Catalog:
         per-file renames are atomic; a crash mid-move leaves a partial
         batch that the watermark/gap mask already treats as torn,
         exactly like a crash mid-`mode("append")` did."""
-        import uuid
-
         oplog = Path(self.oplog_path(name))
         oplog.mkdir(exist_ok=True)
         tag = uuid.uuid4().hex[:12]
@@ -542,17 +553,19 @@ class Catalog:
         self._sweep_expired_reservations(name)
         self._sweep_stale_stage_dirs(name)
         self._retire_dead_gaps(name)  # aborted/dead windows below the mark
-        w = self.commit_watermark(name)
-        if w is None:
-            return
+        # raw, then live, then the watermark: a committer reserves
+        # before staging and records before unreserving, so a window
+        # staged at the first read is live at the second or recorded by
+        # the third (read first, the watermark missed such a window)
         raw = self.raw_max_seq(name)
-        if raw is None or raw <= w:
-            return
         live = sorted(
             (int(r["lo"]), int(r["hi"]))
             for r in self._live_reservations(name)
             if "lo" in r and "hi" in r
         )
+        w = self.commit_watermark(name)
+        if w is None or raw is None or raw <= w:
+            return
         start = w + 1
         for lo, hi in live:
             if lo > raw or hi < start:
@@ -590,15 +603,8 @@ class Catalog:
         live (or absent) coordination state returns False and readers
         touch nothing."""
         now = time.time()
-        d = self.root / name / "casmeta"
-        if d.exists():
-            for p in d.glob("resv-*.json"):
-                try:
-                    rec = json.loads(p.read_text())
-                except (OSError, json.JSONDecodeError):
-                    continue  # manifests publish via tmp+replace: parse-fail is dirt
-                if rec.get("expires", 0) <= now:
-                    return True
+        if any(rec.get("expires", 0) <= now for _, rec in self._reservations(name)):
+            return True
         for p in self._claim_slot_bases(name):
             st = self._slot_state(p)
             if st is None:
@@ -739,12 +745,13 @@ class Catalog:
         sid = _time_id(self.list_snapshots(name))
         out = self.root / name / "snapshots" / sid
         schema = self.get_schema(name)
+        oplog = self.read_oplog(name)
         if schema.kv_mode:
             from pyspark.sql import functions as F
 
             from tera_spark.operators.view import kv_current_view
 
-            kv_log = self.read_oplog(name)
+            kv_log = oplog
             if snapshot_seq is not None:
                 kv_log = kv_log.filter(F.col("seq") <= F.lit(snapshot_seq))
             folded = kv_current_view(kv_log, now_us=now_us).select(
@@ -756,31 +763,22 @@ class Catalog:
                 .write.mode("overwrite")
                 .parquet(str(out))
             )
-            # seq-pin meta like the cell branch: rollback / snapshot-set
-            # restore need it (kv reads honor rollback windows the same
-            # way — read_oplog filters by seq before the kv fold)
-            if snapshot_seq is not None:
-                top = snapshot_seq
-            else:
-                mx = self.read_oplog(name).agg({"seq": "max"}).collect()[0][0]
-                top = int(mx) if mx is not None else -1
-            (self.root / name / "snapshots" / f"{sid}.json").write_text(
-                json.dumps({"seq": top})
+        else:
+            # commit records prove the op mix — compaction of the
+            # dominant shapes folds via the same fast paths reads use
+            folded = compact(
+                oplog, schema, now_us=now_us, snapshot_seq=snapshot_seq,
+                op_kinds=self._op_kinds_union(name),
             )
-            return sid
-        oplog = self.read_oplog(name)
-        # commit records prove the op mix — compaction of the dominant
-        # shapes folds via the same fast paths reads use
-        folded = compact(
-            oplog, schema, now_us=now_us, snapshot_seq=snapshot_seq,
-            op_kinds=self._op_kinds_union(name),
-        )
-        write_cell_table(
-            folded,
-            str(out),
-            delimiters=schema.delimiters or None,
-            compression=schema_codec(schema),
-        )
+            write_cell_table(
+                folded,
+                str(out),
+                delimiters=schema.delimiters or None,
+                compression=schema_codec(schema),
+            )
+        # seq-pin meta (both modes): rollback / snapshot-set restore
+        # need it (kv reads honor rollback windows the same way —
+        # read_oplog filters by seq before the kv fold)
         if snapshot_seq is not None:
             top = snapshot_seq
         else:
@@ -819,9 +817,7 @@ class Catalog:
         d = self.root / "_snapsets"
         d.mkdir(exist_ok=True)
         set_id = _time_id([p.name.removesuffix(".json") for p in d.glob("*.json")])
-        tmp = d / f"{set_id}.json.tmp"
-        tmp.write_text(json.dumps(manifest))
-        tmp.replace(d / f"{set_id}.json")
+        _replace_text(d / f"{set_id}.json", json.dumps(manifest))
         return set_id
 
     def read_snapshot_set(self, set_id: str) -> dict[str, DataFrame]:
@@ -847,11 +843,9 @@ class Catalog:
     def raw_max_seq(self, name: str) -> int | None:
         """Max write seq in the op-log INCLUDING rolled-back windows —
         seq allocation must stay above them, or new writes would land
-        inside an invalidated range and vanish."""
-        top = (
-            self.spark.read.parquet(self.oplog_path(name)).agg({"seq": "max"}).collect()[0][0]
-        )
-        return int(top) if top is not None else None
+        inside an invalidated range and vanish. From the footers'
+        seq statistics (oplog_index): no Spark job."""
+        return self.oplog_index(name).raw_max_seq()
 
     def delete_snapshot(self, name: str, snapshot_id: str) -> None:
         """Drop one snapshot (reference: snapshot set management,
@@ -978,9 +972,7 @@ class Catalog:
         if not meta.exists():
             raise ValueError(f"no seq-pinned snapshot: {name}/{snapshot_id}")
         snap_seq = json.loads(meta.read_text())["seq"]
-        top = (
-            self.spark.read.parquet(self.oplog_path(name)).agg({"seq": "max"}).collect()[0][0]
-        )
+        top = self.raw_max_seq(name)
         if top is None or top <= snap_seq:
             return
         # through the locked read-modify-write: a concurrent recovery's
@@ -1000,7 +992,7 @@ class Catalog:
         the difference between a bounded maintenance job and a
         full-table write — this is the bounded one.
 
-        Planning is metadata-only (Parquet footers, no data read):
+        Planning is metadata-only (the op-log index, no data read):
         files whose row_key [min,max] envelopes overlap form a group —
         the closure guarantees every op of every row in the group lives
         inside it, so folding a group in isolation is exactly the full
@@ -1010,11 +1002,15 @@ class Catalog:
         min/max since PUT sits between the delete and atomic codes).
         Dirty groups are folded through the same `compact()` the
         equivalence tests pin and swapped in file-atomically.
+
+        The fold reads raw files into visible seq-0 PUTs, so a group
+        with a file whose seq range reaches a read mask (above the
+        watermark, a commit gap, a rollback window) is left as it is,
+        and so is every group while seq 0 itself is masked.
         """
         self._authorize("admin", name)
         if self.get_schema(name).kv_mode:
             raise ValueError("kv-mode tables compact via compact_inplace")
-        import uuid
 
         from tera_spark.model import CellOp
         from tera_spark.operators.compact import compact
@@ -1022,49 +1018,39 @@ class Catalog:
         self._check_enabled(name)
         oplog = self.root / name / "oplog"
         infos = []
-        for f in sorted(oplog.glob("part-*.parquet")):
-            md = pq.ParquetFile(str(f)).metadata
-            if md.num_rows == 0:  # empty appends: collect as we plan
-                f.unlink()
-                continue
-            lo = hi = op_lo = op_hi = None
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    if col.statistics is None:
-                        continue
-                    st = col.statistics
-                    if col.path_in_schema == "row_key":
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-                    elif col.path_in_schema == "op":
-                        op_lo = st.min if op_lo is None else min(op_lo, st.min)
-                        op_hi = st.max if op_hi is None else max(op_hi, st.max)
-            if lo is not None:
-                infos.append({"path": f, "lo": lo, "hi": hi, "op_lo": op_lo, "op_hi": op_hi})
+        for m in self.oplog_index(name).files():
+            if not m.rows:  # empty appends: collect as we plan
+                m.path.unlink(missing_ok=True)
+            elif m.key_lo is not None:
+                infos.append(m)
 
-        infos.sort(key=lambda i: (i["lo"], i["hi"]))
-        groups: list[list[dict]] = []
-        for info in infos:
-            if groups and info["lo"] <= max(i["hi"] for i in groups[-1]):
-                groups[-1].append(info)
+        infos.sort(key=lambda m: (m.key_lo, m.key_hi))
+        groups: list[list] = []
+        for m in infos:
+            if groups and m.key_lo <= max(i.key_hi for i in groups[-1]):
+                groups[-1].append(m)
             else:
-                groups.append([info])
+                groups.append([m])
+
+        rollbacks, w, masks = self._read_masks(name)
+        masks += [(r["after"] + 1, r["upto"]) for r in rollbacks]
+
+        def masked(lo: int, hi: int) -> bool:
+            return (w is not None and hi > w) or any(a <= hi and lo <= b for a, b in masks)
 
         folded_groups = files_folded = 0
         for grp in groups:
             dirty = len(grp) > 1 or any(
-                i["op_lo"] != CellOp.PUT or i["op_hi"] != CellOp.PUT for i in grp
+                i.op_lo != CellOp.PUT or i.op_hi != CellOp.PUT for i in grp
             )
-            if not dirty:
+            if not dirty or masked(0, 0) or any(masked(i.seq_lo, i.seq_hi) for i in grp):
                 continue
-            paths = [str(i["path"]) for i in grp]
+            paths = [str(i.path) for i in grp]
             # footer-proved op mix: the op min/max already read for
             # dirtiness planning bound the group's op codes, so a sound
             # superset routes the fold (view.py fold_route)
-            los = [i["op_lo"] for i in grp]
-            his = [i["op_hi"] for i in grp]
+            los = [i.op_lo for i in grp]
+            his = [i.op_hi for i in grp]
             op_kinds = (
                 None
                 if None in los + his
@@ -1079,7 +1065,7 @@ class Catalog:
             tmp = self.root / name / f"compact-tmp-{uuid.uuid4().hex}"
             write_cell_table(folded, str(tmp))
             for i in grp:
-                i["path"].unlink()
+                i.path.unlink()
             token = uuid.uuid4().hex[:8]
             for n, pf in enumerate(sorted(Path(tmp).glob("part-*.parquet"))):
                 pf.rename(oplog / f"part-c{token}-{n:05d}.parquet")
@@ -1096,10 +1082,13 @@ class Catalog:
             # oplog that now contains PUT cells, and an add() at a ts
             # <= the compacted cell's ts would fold incorrectly.
             # PUT-only tables already carry PUT; unknown stays unknown.
+            # The re-record keeps the record's window low end: dropping
+            # it would erase the commit gap below the watermark.
             kinds = self._op_kinds_union(name)
             w = self.commit_watermark(name)
             if w is not None and kinds is not None and CellOp.PUT not in kinds:
-                self._record_commit(name, w, sorted(kinds | {CellOp.PUT}))
+                lo = self.oplog_index(name).record(w).get("lo")
+                self._record_commit(name, w, sorted(kinds | {CellOp.PUT}), lo=lo)
         return {
             "groups": len(groups),
             "groups_folded": folded_groups,
@@ -1252,46 +1241,39 @@ class Catalog:
         raw_max_seq+1 on first use (bootstrap above any legacy torn
         tail); after that every committed window bumps it, so windows
         never overlap each other or history."""
-        d, alloc, lock = self._alloc_paths(name)
+        d, alloc, _ = self._alloc_paths(name)
         d.mkdir(exist_ok=True)
         w = self.commit_watermark(name)
         floor = (w if w is not None else -1) + 1  # w == 0 is a real mark
-        if not alloc.exists():  # bootstrap: one Spark job, outside the lock
+        if not alloc.exists():  # bootstrap, outside the lock
             raw = self.raw_max_seq(name)
             floor = max(floor, (raw if raw is not None else -1) + 1)
-        while not self._try_excl_claim(lock, holder, ttl_s):
-            time.sleep(0.002)  # µs-scale critical section: spin briefly
-        try:
-            try:
-                nxt = int(json.loads(alloc.read_text())["next"])
-            except (OSError, ValueError, KeyError, json.JSONDecodeError):
-                nxt = 0
-            lo = max(nxt, floor)
-            tmp = alloc.with_suffix(".json.tmp")
-            tmp.write_text(json.dumps({"next": lo + n}))
-            tmp.replace(alloc)
-        finally:
-            self._release_slot(lock, holder)
+        nxt = self._update_alloc(name, holder, ttl_s, lambda nxt: max(nxt, floor) + n)
+        lo = max(nxt, floor)
         return lo, lo + n - 1
 
     def _bump_alloc(self, name: str, hi: int, holder: str) -> None:
         """Keep the counter above a commit made OUTSIDE the reservation
         path (plain append on a table that has used CAS), so later
         reservations stay fresh. No-op until alloc.json exists."""
-        d, alloc, lock = self._alloc_paths(name)
-        if not alloc.exists():
-            return
-        while not self._try_excl_claim(lock, holder, 60.0):
+        if self._alloc_paths(name)[1].exists():
+            self._update_alloc(name, holder, 60.0, lambda nxt: max(nxt, hi + 1))
+
+    def _update_alloc(self, name: str, holder: str, ttl_s: float, step) -> int:
+        """Set the counter to ``step(next)`` under its lock (a µs-scale
+        critical section: spin briefly); returns the ``next`` it read."""
+        _, alloc, lock = self._alloc_paths(name)
+        while not self._try_excl_claim(lock, holder, ttl_s):
             time.sleep(0.002)
         try:
             try:
                 nxt = int(json.loads(alloc.read_text())["next"])
             except (OSError, ValueError, KeyError, json.JSONDecodeError):
                 nxt = 0
-            if hi + 1 > nxt:
-                tmp = alloc.with_suffix(".json.tmp")
-                tmp.write_text(json.dumps({"next": hi + 1}))
-                tmp.replace(alloc)
+            new = step(nxt)
+            if new != nxt:
+                _replace_text(alloc, json.dumps({"next": new}))
+            return nxt
         finally:
             self._release_slot(lock, holder)
 
@@ -1306,19 +1288,9 @@ class Catalog:
         d, _, _ = self._alloc_paths(name)
         d.mkdir(exist_ok=True)
         resv = d / f"resv-{holder}.json"
-        tmp = d / f"resv-{holder}.json.tmp"
-        tmp.write_text(
-            json.dumps(
-                {
-                    "holder": holder,
-                    "lo": lo,
-                    "hi": hi,
-                    "rows": sorted(rows),
-                    "expires": time.time() + ttl_s,
-                }
-            )
-        )
-        tmp.replace(resv)
+        rec = {"holder": holder, "lo": lo, "hi": hi, "rows": sorted(rows),
+               "expires": time.time() + ttl_s}
+        _replace_text(resv, json.dumps(rec))
         return resv
 
     def _sweep_expired_reservations(self, name: str) -> None:
@@ -1328,32 +1300,20 @@ class Catalog:
         after expiry). The roll-forward-by-peers analog of the
         reference's lock cleanup (global_txn.cc:337-501), minus the
         reader-driven part (documented non-goal)."""
-        d = self.root / name / "casmeta"
-        if not d.exists():
-            return
         now = time.time()
-        for p in d.glob("resv-*.json"):
-            try:
-                rec = json.loads(p.read_text())
-            except (OSError, json.JSONDecodeError):
-                continue
+        for p, rec in self._reservations(name):
             if rec.get("expires", 0) <= now:
                 p.unlink(missing_ok=True)
 
     def _live_reservations(self, name: str, *, skip: str | None = None) -> list[dict]:
-        d = self.root / name / "casmeta"
-        out = []
         now = time.time()
-        for p in d.glob("resv-*.json"):
-            if skip is not None and p.name == f"resv-{skip}.json":
-                continue
-            try:
-                rec = json.loads(p.read_text())
-            except (OSError, json.JSONDecodeError):
-                continue
-            if rec.get("expires", 0) > now:
-                out.append(rec)
-        return out
+        return [
+            rec for p, rec in self._reservations(name)
+            if (skip is None or p.name != f"resv-{skip}.json") and rec.get("expires", 0) > now
+        ]
+
+    def _reservations(self, name: str) -> list[tuple[Path, dict]]:
+        return _json_files(self.root / name / "casmeta", "resv-*.json")
 
     def _masked_gaps(self, name: str) -> list[tuple[int, int]]:
         """Commit gaps that still need their own read-side mask: gaps
@@ -1361,12 +1321,7 @@ class Catalog:
         filter handles them), so the read-path predicate stays bounded
         by IN-FLIGHT windows instead of growing one term per
         historical abort until major compaction."""
-        rb = self._rollbacks(name)
-        return [
-            (lo, hi)
-            for lo, hi in self._commit_gaps(name)
-            if not any(r["after"] < lo and hi <= r["upto"] for r in rb)
-        ]
+        return self._read_masks(name)[2]
 
     def _commit_gaps(self, name: str) -> list[tuple[int, int]]:
         """Uncommitted seq windows BELOW the watermark: reserved ranges
@@ -1374,30 +1329,12 @@ class Catalog:
         concurrent committer). Readers must mask them — they are the
         window-granular form of the torn-batch rule. Empty unless the
         table has ever used seq-window reservation (alloc.json), so
-        legacy/serialized tables pay one existence check. Memoized on
-        the commit-record census (records only ever accumulate)."""
+        legacy/serialized tables pay one existence check. The census
+        is the op-log index's (memoized on the commit-record listing)."""
         _, alloc, _ = self._alloc_paths(name)
         if not alloc.exists():
             return []
-        d = self.root / name / "commits"
-        marks = sorted(int(p.stem) for p in d.glob("*.json") if p.stem.lstrip("-").isdigit())
-        sig = (len(marks), marks[-1] if marks else None)
-        memo = self._gap_memo.get(name)
-        if memo is not None and memo[0] == sig:
-            return memo[1]
-        gaps: list[tuple[int, int]] = []
-        expected = 0
-        for hi in marks:
-            try:
-                rec = json.loads((d / f"{hi}.json").read_text())
-            except (OSError, json.JSONDecodeError):
-                rec = {}
-            lo = rec.get("lo", expected)
-            if lo > expected:
-                gaps.append((expected, lo - 1))
-            expected = hi + 1
-        self._gap_memo[name] = (sig, gaps)
-        return gaps
+        return list(self.oplog_index(name).census()[1])
 
     def begin_disjoint_commit(
         self, name: str, n: int, rows: list[str], holder: str, ttl_s: float = 300.0
@@ -1447,12 +1384,11 @@ class Catalog:
         name, lo, hi = token["name"], token["lo"], token["hi"]
         try:
             self._bump_alloc(name, hi, self.writer_id or self._auto_writer_id)
-            for r in self._rollbacks(name):
-                if r["after"] < hi and lo <= r["upto"]:
-                    raise WriterFenced(
-                        f"table {name!r}: reserved window [{lo},{hi}] was "
-                        "rolled back mid-commit (reservation ttl elapsed?)"
-                    )
+            if self._window_rolled_back(name, lo, hi):
+                raise WriterFenced(
+                    f"table {name!r}: reserved window [{lo},{hi}] was "
+                    "rolled back mid-commit (reservation ttl elapsed?)"
+                )
             self._record_commit(name, hi, token.get("op_kinds"), lo=lo)
             return hi
         finally:
@@ -1507,21 +1443,12 @@ class Catalog:
             ],
         }
         p = d / f"txn-{txn_id}.json"
-        tmp = d / f".txn-{txn_id}.tmp"
-        tmp.write_text(json.dumps(rec))
-        tmp.replace(p)  # atomic: the whole transaction commits HERE
+        _replace_text(p, json.dumps(rec))  # atomic: the whole transaction commits HERE
         return p
 
     def _txn_markers_for(self, name: str) -> list[dict]:
-        d = self._txnlog_dir()
         out = []
-        if not d.is_dir():
-            return out
-        for p in d.glob("txn-*.json"):
-            try:
-                rec = json.loads(p.read_text())
-            except (OSError, json.JSONDecodeError):
-                continue
+        for p, rec in _json_files(self._txnlog_dir(), "txn-*.json"):
             if any(e["name"] == name for e in rec.get("tables", ())):
                 rec["_path"] = p
                 out.append(rec)
@@ -1530,8 +1457,14 @@ class Catalog:
     def _window_recorded(self, name: str, hi: int) -> bool:
         return (self.root / name / "commits" / f"{int(hi)}.json").exists()
 
-    def _window_rolled_back(self, name: str, lo: int, hi: int) -> bool:
-        return any(r["after"] < hi and lo <= r["upto"] for r in self._rollbacks(name))
+    def _window_rolled_back(self, name: str, lo: int, hi: int, *, skip=frozenset()) -> bool:
+        """Whether a rollback window not in ``skip`` overlaps [lo, hi].
+        ANY overlap counts: a rollback that swallowed part of a window
+        still means silently-lost rows."""
+        return any(
+            r["after"] < hi and lo <= r["upto"]
+            for r in self._rollbacks(name) if (r["after"], r["upto"]) not in skip
+        )
 
     def _window_live(self, name: str, lo: int, hi: int) -> bool:
         return any(
@@ -1686,26 +1619,24 @@ class Catalog:
 
     def table_stats(self, name: str) -> dict:
         """One-call observability roll-up per table (teracli `stat`
-        spirit): metadata-only — files/rows/bytes from footers, op mix
-        and watermark from commit records, snapshots/indexes/rollbacks
-        from the registry, plus the fold route reads will take."""
+        spirit): metadata-only — files/rows/bytes and the watermark
+        from the op-log index, op mix from the commit records,
+        snapshots/indexes/rollbacks from the registry, plus the fold
+        route reads will take."""
         from tera_spark.model import CellOp
         from tera_spark.operators.view import fold_route
 
         self._authorize("read", name)
-        infos = self.tablet_info(name)
-        oplog = self.root / name / "oplog"
+        files = [m for m in self.oplog_index(name).files() if m.rows]
         kinds = self._op_kinds_union(name)
         idx = _load_indexes(self, name)
         return {
             "table": name,
             "kv_mode": self.get_schema(name).kv_mode,
             "enabled": self.is_table_enabled(name),
-            "files": len([i for i in infos if i["rows"]]),
-            "rows": sum(i["rows"] for i in infos),
-            "bytes": sum(
-                (oplog / i["file"]).stat().st_size for i in infos if i["rows"]
-            ),
+            "files": len(files),
+            "rows": sum(m.rows for m in files),
+            "bytes": sum(m.bytes for m in files),
             "commit_watermark": self.commit_watermark(name),
             "op_kinds": sorted(CellOp.NAMES.get(k, str(k)) for k in kinds)
             if kinds is not None
@@ -1746,26 +1677,20 @@ class Catalog:
 
         self._check_enabled(name)
         self._authorize("admin", name)
+        files = self.oplog_index(name).files()
         if self.get_schema(name).kv_mode:
-            n_files = len(list((self.root / name / "oplog").glob("part-*.parquet")))
+            n_files = len(files)
             action = "major" if n_files > 1 else "none"
             reason = "kv op-log has multiple files" if n_files > 1 else "single-file kv op-log"
         elif self._rollbacks(name):
             action, reason = "major", "rolled-back seq windows pending physical drop"
         else:
             kinds = self._op_kinds_union(name)
-            infos = self.tablet_info(name)
-            nonempty = sorted(
-                (i for i in infos if i["rows"]),
-                key=lambda i: (i["start_key"], i["end_key"]),
-            )
+            nonempty = sorted((m for m in files if m.rows), key=lambda m: (m.key_lo, m.key_hi))
             n_files = len(nonempty)
-            rows = sum(i["rows"] for i in nonempty)
             # inclusive bound check, same closure rule compact_ranges
             # plans with: two files sharing even one key overlap
-            overlapping = any(
-                b["start_key"] <= a["end_key"] for a, b in zip(nonempty, nonempty[1:])
-            )
+            overlapping = any(b.key_lo <= a.key_hi for a, b in zip(nonempty, nonempty[1:]))
             non_put = kinds is not None and bool(kinds - {CellOp.PUT})
             if non_put and n_files > 1:
                 action, reason = "major", "delete/atomic ops in the history across multiple files"
@@ -1781,8 +1706,7 @@ class Catalog:
                 # scale-independent and converges: the target bucket
                 # count strictly shrinks the file count or the rule
                 # stops firing.
-                oplog = self.root / name / "oplog"
-                total_b = sum((oplog / i["file"]).stat().st_size for i in nonempty)
+                total_b = sum(m.bytes for m in nonempty)
                 target = max(total_b // (128 << 20), 1)
                 if n_files > 16 and total_b / n_files < (16 << 20) and target < n_files:
                     action, reason = "optimize", "small-file layout (avg file far below 128 MB target)"
@@ -1801,25 +1725,13 @@ class Catalog:
     def tablet_info(self, name: str) -> list[dict]:
         """Partition introspection — the GetTabletLocation /
         GetStartEndKeys debug surface (include/tera/table.h:131-133):
-        one entry per op-log file with its row_key bounds from Parquet
-        footer stats (files are range-sorted, so bounds are tablet
-        start/end keys)."""
-        key_col = "key" if self.get_schema(name).kv_mode else "row_key"
-        out = []
-        for f in sorted((self.root / name / "oplog").glob("part-*.parquet")):
-            md = pq.ParquetFile(str(f)).metadata
-            lo, hi, rows = None, None, 0
-            for rg in range(md.num_row_groups):
-                g = md.row_group(rg)
-                rows += g.num_rows
-                for ci in range(g.num_columns):
-                    col = g.column(ci)
-                    if col.path_in_schema == key_col and col.statistics:
-                        st = col.statistics
-                        lo = st.min if lo is None else min(lo, st.min)
-                        hi = st.max if hi is None else max(hi, st.max)
-            out.append({"file": f.name, "start_key": lo, "end_key": hi, "rows": rows})
-        return out
+        one entry per op-log file with its key bounds from the op-log
+        index (files are range-sorted, so bounds are tablet start/end
+        keys)."""
+        return [
+            {"file": m.name, "start_key": m.key_lo, "end_key": m.key_hi, "rows": m.rows}
+            for m in self.oplog_index(name).files()
+        ]
 
     def find_tablet(self, name: str, row_key: str) -> list[dict]:
         """Route a key to its tablet(s) — teracli `findtablet`
@@ -1834,18 +1746,10 @@ class Catalog:
             from tera_spark.functions.keys import py_hash_prefix_key
 
             row_key = py_hash_prefix_key(row_key)
-
-        def as_str(v):
-            return v.decode() if isinstance(v, (bytes, bytearray)) else v
-
-        hits = []
-        for info in self.tablet_info(name):
-            lo, hi = as_str(info["start_key"]), as_str(info["end_key"])
-            if lo is None or hi is None:
-                continue
-            if lo <= row_key <= hi:
-                hits.append(info)
-        return hits
+        return [
+            i for i in self.tablet_info(name)
+            if i["start_key"] is not None and i["start_key"] <= row_key <= i["end_key"]
+        ]
 
     def optimize(self, name: str, *, buckets: int | None = None) -> int:
         """Re-shard the op-log into ``buckets`` range partitions sorted
@@ -1878,7 +1782,7 @@ class Catalog:
             )
         shutil.rmtree(oplog)
         tmp.rename(oplog)
-        return len(list(oplog.glob("part-*")))
+        return len(self.oplog_index(name).files())
 
 
 # --- secondary indexes (the TPC-C t_*_index pattern, first-class) ------
@@ -1910,10 +1814,7 @@ def _load_indexes(cat: "Catalog", name: str) -> dict:
 def _store_index(cat: "Catalog", name: str, key: str, entry: dict) -> None:
     idx = _load_indexes(cat, name)
     idx[key] = entry
-    p = _indexes_path(cat, name)
-    tmp = p.with_suffix(".json.tmp")
-    tmp.write_text(json.dumps(idx))
-    tmp.replace(p)  # atomic registration swap
+    _replace_text(_indexes_path(cat, name), json.dumps(idx))  # atomic registration swap
 
 
 def create_index(cat: "Catalog", name: str, cf: str, qualifier: str) -> str:
@@ -1937,8 +1838,6 @@ def create_index(cat: "Catalog", name: str, cf: str, qualifier: str) -> str:
     Scale shape: one pass over the folded view of the indexed column,
     one range-sorted write keyed by VALUE — the index is a cell table,
     so value lookups enjoy the same footer pruning as primary keys."""
-    import uuid
-
     import pyspark.sql.functions as F
 
     from tera_spark.model import CellOp

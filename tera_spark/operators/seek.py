@@ -11,11 +11,12 @@ dominates single-row reads — exactly the workload behind tera's
 
 This module is the seek path:
 
-  1. route the key to op-log files by Parquet footer bounds
-     (= the SDK's meta-table tablet lookup,
-     `GetTabletAddrOrScheduleUpdateMeta` src/sdk/table_impl.cc:1452);
-  2. prune to the row groups whose row_key min/max cover the key
-     (= the LevelDB block-index seek);
+  1. route the key to op-log files and
+  2. prune to the row groups whose row_key min/max cover the key,
+     both from the table's op-log index (tera_spark/oplog_index.py:
+     the SDK's meta-table tablet lookup,
+     `GetTabletAddrOrScheduleUpdateMeta` src/sdk/table_impl.cc:1452,
+     and the LevelDB block-index seek);
   3. read only those row groups with pyarrow — no Spark job;
   4. fold the row's cells with a pure-Python twin of
      `operators/view.current_view` (same semantics as the Spark fold,
@@ -24,8 +25,9 @@ This module is the seek path:
 
 At 100 TB the "driver" is any client process with DFS access — the
 same topology as tera's SDK hitting tabletservers directly: a point
-read touches one footer + one row group, never a cluster job. Footer
-metadata is cached per (path, mtime), mirroring the SDK meta cache.
+read touches one row group, never a cluster job. The index reads a
+footer once per file identity (name, size, mtime, inode), mirroring
+the SDK meta cache; a catalog Seeker shares its table's index.
 
 Equivalence with the Spark fold is pinned by property tests
 (tests/test_seek.py): random op-logs → `Seeker.get` ≡ `scan.get`.
@@ -33,6 +35,8 @@ Equivalence with the Spark fold is pinned by property tests
 
 from __future__ import annotations
 
+import time
+from bisect import bisect_left
 from collections import OrderedDict, defaultdict
 from concurrent.futures import ThreadPoolExecutor
 from pathlib import Path
@@ -42,6 +46,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from tera_spark.model import CellOp
+from tera_spark.oplog_index import FileMeta, OplogIndex
 from tera_spark.registry import TableSchema
 
 _ATOMIC = frozenset(
@@ -50,6 +55,12 @@ _ATOMIC = frozenset(
 _MARKS = frozenset((CellOp.DEL_ROW, CellOp.DEL_FAMILY, CellOp.DEL_QUALIFIERS))
 _NEG_INF = -(1 << 62)
 _CELL_COLS = ["row_key", "cf", "qualifier", "ts", "op", "value", "seq"]
+_KV_COLS = ["key", "value", "expire_ts", "seq"]
+_THREADS = 8  # parallel row-group reads per multi_get
+
+
+def _now_us() -> int:
+    return int(time.time() * 1_000_000)
 
 
 def _wrap_i64(v: int) -> int:
@@ -197,8 +208,10 @@ def fold_row(
 
 
 class Seeker:
-    """Point-read client over a catalog table. Caches footer metadata
-    per (file, mtime) — the SDK meta-cache analog."""
+    """Point-read client over a catalog table, routed by the table's
+    op-log index (shared with the catalog) — the SDK meta-cache analog.
+    ``Seeker(path=...)`` indexes that directory itself, with no commit
+    census: no watermark, gap or rollback mask applies."""
 
     def __init__(
         self,
@@ -208,29 +221,24 @@ class Seeker:
         path: str | None = None,
         schema: TableSchema | None = None,
         cache_groups: int = 0,
-        threads: int = 8,
     ):
         if catalog is not None:
+            self._index = catalog.oplog_index(table)
             # re-read per use (stat-guarded): an online update_schema
             # applies to the next read, as it does on the Spark path
             self._get_schema = lambda: catalog.current_schema(table)
-            self._root = Path(catalog.oplog_path(table))
-            self._get_rollbacks = lambda: catalog._rollbacks(table)
-            self._get_watermark = lambda: catalog.commit_watermark(table)
-            self._get_gaps = lambda: catalog._masked_gaps(table)
+            self._get_masks = lambda: catalog._read_masks(table)
         else:
+            self._index = OplogIndex(Path(path))
             self._get_schema = lambda: schema
-            self._root = Path(path)
-            self._get_rollbacks = lambda: []
-            self._get_watermark = lambda: None
-            self._get_gaps = lambda: []
-        self._meta: dict[str, tuple[float, list[tuple[int, str, str, int]]]] = {}
+            self._get_masks = lambda: ([], None, [])
         # decoded-row-group LRU — the block-cache analog (reference:
         # per-LG block cache + persistent_cache; a hot point-read
-        # working set stays decoded in client memory)
+        # working set stays decoded in client memory). Keyed by the
+        # index's file identity: a file rewritten under its old name
+        # (optimize, major compaction) is a different file.
         self._cache_groups = cache_groups
-        self._threads = threads
-        self._rg_cache: OrderedDict[tuple[str, int], object] = OrderedDict()
+        self._rg_cache: OrderedDict[tuple[tuple, int], pa.Table] = OrderedDict()
 
     # --- routing ------------------------------------------------------
 
@@ -242,151 +250,84 @@ class Seeker:
     def _kv(self) -> bool:
         return bool(self.schema is not None and self.schema.kv_mode)
 
-    def _key_col(self) -> str:
-        return "key" if self._kv else "row_key"
+    def _group(self, m: FileMeta, rg: int, columns: list[str]) -> pa.Table:
+        """Row group ``rg`` of ``m`` (``columns`` plus expire_ts when the
+        file has it), through the LRU when it is on."""
+        ck = (m.ident, rg)
+        t = self._rg_cache.get(ck)
+        if t is not None:
+            self._rg_cache.move_to_end(ck)
+            return t
+        pf = pq.ParquetFile(str(m.path))
+        if "expire_ts" not in columns and "expire_ts" in pf.schema_arrow.names:
+            columns = columns + ["expire_ts"]
+        t = pf.read_row_group(rg, columns=columns)
+        if self._cache_groups > 0:
+            self._rg_cache[ck] = t
+            while len(self._rg_cache) > self._cache_groups:
+                self._rg_cache.popitem(last=False)
+        return t
 
-    def _file_meta(self, f: Path) -> list[tuple[int, str, str, int]]:
-        """[(row_group_idx, min_key, max_key, num_rows)] from the footer."""
-        mtime = f.stat().st_mtime
-        hit = self._meta.get(str(f))
-        if hit is not None and hit[0] == mtime:
-            return hit[1]
-        md = pq.ParquetFile(str(f)).metadata
-        key_col = self._key_col()
-        groups = []
-        for rg in range(md.num_row_groups):
-            g = md.row_group(rg)
-            lo = hi = None
-            for ci in range(g.num_columns):
-                col = g.column(ci)
-                if col.path_in_schema == key_col and col.statistics is not None:
-                    st = col.statistics
-                    lo, hi = st.min, st.max
-            if isinstance(lo, (bytes, bytearray)):
-                lo = lo.decode()
-            if isinstance(hi, (bytes, bytearray)):
-                hi = hi.decode()
-            groups.append((rg, lo, hi, g.num_rows))
-        self._meta[str(f)] = (mtime, groups)
-        return groups
-
-    def _files(self) -> list[Path]:
-        return sorted(self._root.glob("part-*.parquet"))
-
-    def _route(self, keys: list[str]) -> dict[Path, dict[int, list[str]]]:
-        """file → row_group → keys that may live there."""
-        plan: dict[Path, dict[int, list[str]]] = {}
-        for f in self._files():
-            for rg, lo, hi, _ in self._file_meta(f):
-                if lo is None or hi is None:
-                    hit = list(keys)  # no stats: cannot prune
-                else:
-                    hit = [k for k in keys if lo <= k <= hi]
-                if hit:
-                    plan.setdefault(f, {}).setdefault(rg, []).extend(hit)
-        return plan
-
-    def _row_filter(self, now_us: int, snapshot_seq: int | None = None):
-        """Read-visibility mask over op-log rows — the rules read_oplog
-        applies, so the seek path agrees with Spark reads: rollback
-        windows, the commit watermark, commit-CAS gaps, an optional
-        snapshot, then per-cell TTL (expire_ts column, present only in
-        files written by TTL puts). Returns ``rows(t, columns)``, which
-        yields the visible rows of arrow table ``t`` as ``columns``
-        tuples (seq last)."""
-        rollbacks = self._get_rollbacks()
-        watermark = self._get_watermark()
-        gaps = self._get_gaps()
-
-        def rows(t, columns: list[str]):
-            has_ttl = not self._kv and "expire_ts" in t.column_names
-            read_cols = columns + (["expire_ts"] if has_ttl else [])
-            n = len(columns)
-            for row in zip(*(t[c].to_pylist() for c in read_cols)):
+    def _read(self, work, row_mask, now_us: int, snapshot_seq: int | None = None):
+        """Visible op-log rows by key, of the row groups ``work``
+        [(file, row group)] where ``row_mask(table)`` holds (None: every
+        row); table-mode rows are 7-tuples. Visibility applies the rules
+        read_oplog applies, so the seek path agrees with Spark reads:
+        rollback windows, the commit watermark, commit-CAS gaps, an
+        optional snapshot, then per-cell TTL (the expire_ts column,
+        present only in files written by TTL puts)."""
+        columns = _KV_COLS if self._kv else _CELL_COLS
+        n = len(columns)
+        rollbacks, watermark, gaps = self._get_masks()
+        # masked seq windows: RollbackDrop (dbformat.h:156) and the
+        # in-flight/crashed concurrent windows below the watermark
+        masked = [(r["after"] + 1, r["upto"]) for r in rollbacks] + gaps
+        # above the top: a torn batch over the watermark, or the snapshot
+        top = min((x for x in (watermark, snapshot_seq) if x is not None), default=None)
+        # pyarrow releases the GIL during IO/decode — parallel group reads
+        if len(work) > 1:
+            with ThreadPoolExecutor(max_workers=_THREADS) as ex:
+                tables = list(ex.map(lambda w: self._group(*w, columns), work))
+        else:
+            tables = [self._group(m, rg, columns) for m, rg in work]
+        by_key: dict[str, list[tuple]] = defaultdict(list)
+        for t in tables:
+            mask = row_mask(t) if row_mask is not None else None
+            t = t if mask is None else t.filter(mask)
+            has_ttl = "expire_ts" not in columns and "expire_ts" in t.column_names
+            cols = columns + ["expire_ts"] if has_ttl else columns
+            for row in zip(*(t[c].to_pylist() for c in cols)):
                 seq = row[n - 1]
-                if any(r["after"] < seq <= r["upto"] for r in rollbacks):
-                    continue  # RollbackDrop (dbformat.h:156)
-                if watermark is not None and seq > watermark:
-                    continue  # torn batch above the commit watermark
-                if any(lo <= seq <= hi for lo, hi in gaps):
-                    continue  # in-flight/crashed concurrent window below
-                    # the watermark (commit-CAS gap mask, as read_oplog)
-                if snapshot_seq is not None and seq > snapshot_seq:
+                if (top is not None and seq > top) or any(lo <= seq <= hi for lo, hi in masked):
                     continue
                 if has_ttl:
-                    exp = row[-1]
-                    if exp is not None and 0 < exp <= now_us:
+                    if row[-1] is not None and 0 < row[-1] <= now_us:
                         continue  # per-cell TTL (mutation.h:30-33)
                     row = row[:n]
-                yield row
-
-        return rows
-
-    def _read_cells(
-        self, keys: list[str], *, now_us: int, snapshot_seq: int | None = None
-    ) -> dict[str, list[tuple]]:
-        """Read the visible op-log cells for the given keys (see
-        _row_filter), pruned to the row groups whose footer bounds
-        admit them. Table-mode rows come back as 7-tuples."""
-        key_col = self._key_col()
-        columns = ["key", "value", "expire_ts", "seq"] if self._kv else _CELL_COLS
-        visible = self._row_filter(now_us, snapshot_seq)
-        by_key: dict[str, list[tuple]] = defaultdict(list)
-
-        def _load(f: Path, rg: int):
-            ck = (str(f), rg)
-            t = self._rg_cache.get(ck)
-            if t is not None:
-                self._rg_cache.move_to_end(ck)
-                return t
-            pf = pq.ParquetFile(str(f))
-            cols = columns
-            if not self._kv and "expire_ts" in pf.schema_arrow.names:
-                cols = columns + ["expire_ts"]
-            t = pf.read_row_group(rg, columns=cols)
-            if self._cache_groups > 0:
-                self._rg_cache[ck] = t
-                while len(self._rg_cache) > self._cache_groups:
-                    self._rg_cache.popitem(last=False)
-            return t
-
-        work = [
-            (f, rg, rg_keys)
-            for f, rgs in self._route(keys).items()
-            for rg, rg_keys in rgs.items()
-        ]
-        # pyarrow releases the GIL during IO/decode — parallel group reads
-        if len(work) > 1 and self._threads > 1:
-            with ThreadPoolExecutor(max_workers=self._threads) as ex:
-                tables = list(ex.map(lambda w: _load(w[0], w[1]), work))
-        else:
-            tables = [_load(f, rg) for f, rg, _ in work]
-        for (f, rg, rg_keys), t in zip(work, tables):
-            t = t.filter(pc.is_in(t[key_col], value_set=pa.array(set(rg_keys))))
-            for row in visible(t, columns):
                 by_key[row[0]].append(row)
         return by_key
 
+    def _route(self, keys: list[str]) -> list[tuple[FileMeta, int]]:
+        """(file, row group) of every row group whose key bounds admit
+        one of ``keys`` (all of them without bounds)."""
+        ks = sorted(keys)
+        return [
+            (m, rg) for lo, hi, m, rg in self._index.groups()
+            if lo is None or hi is None or ((i := bisect_left(ks, lo)) < len(ks) and ks[i] <= hi)
+        ]
+
+    def _read_keys(self, keys: list[str], now_us: int, snapshot_seq: int | None = None):
+        key_col, wanted = ("key" if self._kv else "row_key"), pa.array(keys)
+        return self._read(
+            self._route(keys), lambda t: pc.is_in(t[key_col], value_set=wanted),
+            now_us, snapshot_seq,
+        )
+
     # --- public API ---------------------------------------------------
 
-    def get(
-        self,
-        row_key: str,
-        *,
-        columns: dict[str, list[str]] | None = None,
-        max_versions: int | None = None,
-        ts_range: tuple[int, int] | None = None,
-        now_us: int | None = None,
-        snapshot_seq: int | None = None,
-    ) -> list[tuple]:
-        return self.multi_get(
-            [row_key],
-            columns=columns,
-            max_versions=max_versions,
-            ts_range=ts_range,
-            now_us=now_us,
-            snapshot_seq=snapshot_seq,
-        ).get(row_key, [])
+    def get(self, row_key: str, **kw) -> list[tuple]:
+        """``multi_get`` of one key: its visible cells, or []."""
+        return self.multi_get([row_key], **kw).get(row_key, [])
 
     def multi_get(
         self,
@@ -404,13 +345,8 @@ class Seeker:
         (include/tera/reader.h:52-55)."""
         if self._kv:
             raise ValueError("use get_kv for KV-mode tables")
-        if now_us is None:
-            import time as _t
-
-            now_us = int(_t.time() * 1_000_000)
-        by_key = self._read_cells(
-            list(dict.fromkeys(keys)), now_us=now_us, snapshot_seq=snapshot_seq
-        )
+        now_us = _now_us() if now_us is None else now_us
+        by_key = self._read_keys(list(dict.fromkeys(keys)), now_us, snapshot_seq)
         schema = self.schema
         out: dict[str, list[tuple]] = {}
         for k, rows in by_key.items():
@@ -443,33 +379,23 @@ class Seeker:
         dominates."""
         if self._kv:
             raise ValueError("scan_range serves table-mode; use kv view for KV scans")
-        if now_us is None:
-            import time as _t
+        now_us = _now_us() if now_us is None else now_us
+        work = [
+            (m, rg) for lo, hi, m, rg in self._index.groups()
+            if lo is None or hi is None
+            or not ((end is not None and lo >= end) or (start is not None and hi < start))
+        ]
 
-            now_us = int(_t.time() * 1_000_000)
-        visible = self._row_filter(now_us, snapshot_seq)
-        by_key: dict[str, list[tuple]] = defaultdict(list)
-        for f in self._files():
-            for rg, lo, hi, _ in self._file_meta(f):
-                if lo is not None and hi is not None:
-                    if (end is not None and lo >= end) or (
-                        start is not None and hi < start
-                    ):
-                        continue
-                pf = pq.ParquetFile(str(f))
-                ttl_col = ["expire_ts"] if "expire_ts" in pf.schema_arrow.names else []
-                t = pf.read_row_group(rg, columns=_CELL_COLS + ttl_col)
-                m = None
-                if start is not None:
-                    m = pc.greater_equal(t["row_key"], start)
-                if end is not None:
-                    lt = pc.less(t["row_key"], end)
-                    m = lt if m is None else pc.and_(m, lt)
-                if m is not None:
-                    t = t.filter(m)
-                for row in visible(t, _CELL_COLS):
-                    by_key[row[0]].append(row)
+        def in_range(t):
+            m = None
+            if start is not None:
+                m = pc.greater_equal(t["row_key"], start)
+            if end is not None:
+                lt = pc.less(t["row_key"], end)
+                m = lt if m is None else pc.and_(m, lt)
+            return m
 
+        by_key = self._read(work, in_range, now_us, snapshot_seq)
         schema = self.schema
         out: list[tuple] = []
         for k in sorted(by_key):
@@ -488,11 +414,8 @@ class Seeker:
         a tombstone, expired TTL keys invisible (kv_current_view twin)."""
         if not self._kv:
             raise ValueError("use get for table-mode tables")
-        if now_us is None:
-            import time as _t
-
-            now_us = int(_t.time() * 1_000_000)
-        rows = self._read_cells([key], now_us=now_us).get(key, [])
+        now_us = _now_us() if now_us is None else now_us
+        rows = self._read_keys([key], now_us).get(key, [])
         if not rows:
             return None
         key_, value, expire, seq = max(rows, key=lambda r: r[3])

@@ -1,0 +1,173 @@
+"""Per-table op-log index — the tablet version / SDK meta-cache analog
+(`GetTabletAddrOrScheduleUpdateMeta`, src/sdk/table_impl.cc:1452): the
+only code that opens an op-log footer or lists ``commits/``. Per file
+it holds row-group (lo, hi, rows) on the key column, seq and op bounds
+and bytes; the commit census holds the watermark and the gaps below it.
+
+Both are memoized on a listing: files by name, size, mtime and inode
+(``optimize`` rewrites files under their old names), commit records by
+name (immutable once renamed in). A new file costs one footer read
+(~15 µs). Each refresh swaps in an immutable snapshot by assignment, so
+the HTTP proxy's threads share an index without a lock.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import re
+from dataclasses import dataclass
+from pathlib import Path
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+
+_RECORD = re.compile(r"^(-?\d+)\.json$", re.M)
+
+
+@dataclass(frozen=True, eq=False)
+class FileMeta:
+    path: Path
+    ident: tuple  # (name, size, mtime_ns, inode)
+    groups: tuple  # (key lo, key hi, rows) per row group; None bounds without stats
+    seq_lo: int | None  # seq/op bounds: None without rows (op: in KV files)
+    seq_hi: int | None
+    op_lo: int | None
+    op_hi: int | None
+
+    name = property(lambda self: self.ident[0])
+    bytes = property(lambda self: self.ident[1])
+    rows = property(lambda self: sum(g[2] for g in self.groups))
+    key_lo = property(lambda self: min((g[0] for g in self.groups if g[0] is not None),
+                                       default=None))
+    key_hi = property(lambda self: max((g[1] for g in self.groups if g[1] is not None),
+                                       default=None))
+
+
+def _stats(md, rg: int, ci: int | None) -> tuple:
+    st = md.row_group(rg).column(ci).statistics if ci is not None else None
+    if st is None or not st.has_min_max:
+        return None, None
+    return tuple(v.decode() if isinstance(v, bytes) else v for v in (st.min, st.max))
+
+
+def _span(path: Path, md, cols: dict, name: str) -> tuple:
+    """(min, max) of an integer column: from the footer, or from the
+    column itself when a non-empty row group lacks statistics — a
+    missing bound is read, never guessed."""
+    if name not in cols or md.num_rows == 0:
+        return None, None
+    bounds = [_stats(md, rg, cols[name]) for rg in range(md.num_row_groups)
+              if md.row_group(rg).num_rows]
+    if any(lo is None for lo, _ in bounds):
+        mm = pc.min_max(pq.read_table(str(path), columns=[name])[name]).as_py()
+        return mm["min"], mm["max"]
+    return min(b[0] for b in bounds), max(b[1] for b in bounds)
+
+
+def _read_meta(path: Path, ident: tuple) -> FileMeta:
+    md = pq.read_metadata(str(path))
+    cols = {md.schema.column(i).path: i for i in range(md.num_columns)}
+    key = cols.get("row_key", cols.get("key"))  # cell table / KV table
+    groups = tuple(
+        (*_stats(md, rg, key), md.row_group(rg).num_rows) for rg in range(md.num_row_groups)
+    )
+    seq, op = _span(path, md, cols, "seq"), _span(path, md, cols, "op")
+    return FileMeta(path, ident, groups, *seq, *op)
+
+
+def _list_files(d: Path) -> tuple:
+    out = []
+    try:
+        with os.scandir(d) as it:
+            for e in it:
+                if e.name.startswith("part-") and e.name.endswith(".parquet"):
+                    try:
+                        st = e.stat()
+                    except FileNotFoundError:  # unlinked mid-listing
+                        continue
+                    out.append((e.name, st.st_size, st.st_mtime_ns, e.inode()))
+    except FileNotFoundError:
+        pass
+    return tuple(sorted(out))
+
+
+class OplogIndex:
+    """The index over ``oplog`` and, for a catalog table, its
+    ``commits`` directory (without one the census is empty)."""
+
+    def __init__(self, oplog: Path, commits: Path | None = None):
+        self.oplog, self.commits = Path(oplog), commits
+        # (listing, files, (key lo, key hi, file, row group) per group)
+        self._files: tuple = (None, (), ())
+        # (commits/ names, record seqs, gaps or None until asked, lo by seq)
+        self._census: tuple = ([], (), (), {})
+
+    def _refresh(self) -> tuple:
+        listing = _list_files(self.oplog)
+        snap = self._files
+        if snap[0] == listing:
+            return snap
+        known = {m.ident: m for m in snap[1]}
+        metas = []
+        for ident in listing:
+            try:
+                metas.append(known.get(ident) or _read_meta(self.oplog / ident[0], ident))
+            except FileNotFoundError:  # unlinked since the listing
+                continue
+        flat = tuple((lo, hi, m, rg) for m in metas for rg, (lo, hi, _) in enumerate(m.groups))
+        self._files = snap = (listing, tuple(metas), flat)
+        return snap
+
+    def files(self) -> tuple[FileMeta, ...]:
+        """Every op-log file, in name order."""
+        return self._refresh()[1]
+
+    def groups(self) -> tuple[tuple, ...]:
+        """(key lo, key hi, file, row group index) of every row group,
+        in file name order: the routing table of point reads."""
+        return self._refresh()[2]
+
+    def raw_max_seq(self) -> int | None:
+        """Max seq over every file, rolled-back windows included."""
+        return max((m.seq_hi for m in self.files() if m.seq_hi is not None), default=None)
+
+    def record(self, seq: int) -> dict:
+        """Commit record ``<seq>.json``; {} when unreadable."""
+        try:
+            return json.loads((self.commits / f"{seq}.json").read_text())
+        except (OSError, json.JSONDecodeError):
+            return {}
+
+    def census(self, *, gaps: bool = True) -> tuple[int | None, tuple[tuple[int, int], ...]]:
+        """(watermark, gaps) from one listing of ``commits/``: the
+        highest record's seq (None without records), and the seq
+        windows below it no record covers — a record's ``lo`` above the
+        seq after the previous record opens one (a record without
+        ``lo`` is contiguous). Gaps read each record once, so only on
+        request (else ``()``). Major compaction deletes the records and
+        restarts seq at 0: a listing that lost a record forgets every
+        ``lo``."""
+        try:
+            names = os.listdir(self.commits) if self.commits is not None else []
+        except FileNotFoundError:
+            names = []
+        snap = self._census
+        if snap[0] != names:
+            marks = tuple(sorted(map(int, _RECORD.findall("\n".join(names)))))
+            known = snap[3] if set(snap[1]) <= set(marks) else {}
+            snap = self._census = (names, marks, None, known)
+        marks = snap[1]
+        if gaps and snap[2] is None:
+            los, out, expected = {}, [], 0
+            for seq in marks:
+                if seq in snap[3]:
+                    los[seq] = snap[3][seq]
+                elif rec := self.record(seq):  # an unreadable one is retried next time
+                    los[seq] = rec.get("lo")
+                lo = los.get(seq)
+                if lo is not None and lo > expected:
+                    out.append((expected, lo - 1))
+                expected = seq + 1
+            snap = self._census = (names, marks, tuple(out), los)
+        return (marks[-1] if marks else None), (snap[2] if gaps else ())

@@ -971,3 +971,33 @@ def test_reserve_seq_window_threaded_disjoint():
         assert all(hi < lo2 for (_, hi), (lo2, _) in zip(spans, spans[1:])), (
             "overlapping reserved windows"
         )
+
+
+def test_recovery_spares_window_committed_mid_scan(spark, tmp_path):
+    """A recovering writer meets a peer's staged window, and the peer
+    lands its record between the recoverer's reads. The window is
+    live or recorded at every step, so recovery must not roll it back
+    (it did when the watermark was read before the raw max and the
+    live reservations)."""
+    from tera_spark.operators.mutation import MutationBatch
+
+    root = str(tmp_path / "cat")
+    peer = Catalog(spark, root, writer_id="peer")
+    peer.create_table("t { d }")
+    peer.append_cas("t", MutationBatch().put("seed", "d", "q", "s", ts=1))
+    batch = MutationBatch().put("mid", "d", "q", "v", ts=1)
+    tok = peer.begin_disjoint_commit("t", len(batch), batch.row_keys, "peer", ttl_s=300)
+    peer.stage_disjoint_data(tok, batch)
+
+    rec = Catalog(spark, root, writer_id="rec")
+    raw_max_seq = rec.raw_max_seq
+
+    def raw_then_peer_commits(name):
+        top = raw_max_seq(name)
+        peer.record_disjoint_commit(tok)
+        return top
+
+    rec.raw_max_seq = raw_then_peer_commits
+    rec._recover_tail("t")
+    assert rec._rollbacks("t") == []
+    assert sorted(r.row_key for r in Catalog(spark, root).view("t").collect()) == ["mid", "seed"]

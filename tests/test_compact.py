@@ -211,3 +211,55 @@ def test_compact_ranges_put_tombstone_group_equals_general_fold(spark, tmp_path,
     stats = cat.compact_ranges("t", now_us=NOW)
     assert stats["groups_folded"] == 1 and routes == ["merge_free"]
     assert cells(cat.view("t", now_us=NOW)) == general
+
+
+def test_compact_ranges_keeps_torn_rows_masked(spark, tmp_path):
+    """A file above the commit watermark (its writer died before the
+    commit record) is masked on every read. Minor compaction must not
+    fold it into visible seq-0 PUTs."""
+    import pyarrow.parquet as pq
+
+    from tera_spark.catalog import Catalog
+    from tera_spark.client import Table
+    from tera_spark.operators.seek import Seeker
+
+    cat = Catalog(spark, str(tmp_path / "cat"))
+    cat.create_table("t { cf0 }")
+    t = Table(cat, "t")
+    t.put("r1", "cf0", "q", "v1", ts=1)
+    t.put("r2", "cf0", "q", "v2", ts=1)
+    torn = MutationBatch(base_seq=50).put("r2", "cf0", "q", "torn", ts=2)
+    pq.write_table(torn.to_arrow(), f"{cat.oplog_path('t')}/part-torn-00000.parquet")
+
+    assert cat.maintenance("t", apply=False)["action"] == "minor"
+    cat.maintenance("t")
+    want = {"r1": b"v1", "r2": b"v2"}
+    assert {r.row_key: bytes(r.value) for r in cat.view("t").collect()} == want
+    assert [c[4] for c in Seeker(cat, "t").get("r2")] == [b"v2"]
+
+
+def test_compact_ranges_rerecord_keeps_commit_gap(spark, tmp_path):
+    """Folding a counter-only table re-records the watermark with PUT
+    in its op kinds. The record keeps its window's low end, so the
+    commit gap below it (a peer's reserved window, record pending)
+    still masks the peer's staged rows."""
+    import pyarrow.parquet as pq
+
+    from tera_spark.catalog import Catalog
+
+    root = str(tmp_path / "cat")
+    cat = Catalog(spark, root)
+    cat.create_table("t { c }")
+    cat.append_cas("t", MutationBatch().add("r", "c", "n", 1, ts=1))
+    lo, hi = cat._reserve_seq_window("t", 1, "peer")
+    cat._publish_reservation("t", "peer", lo, hi, [], 300)
+    cat.append_cas("t", MutationBatch().add("r", "c", "n", 2, ts=2))
+    assert cat._commit_gaps("t") == [(lo, hi)]
+
+    assert cat.compact_ranges("t", now_us=NOW)["groups_folded"] == 1
+    peer = MutationBatch(base_seq=lo).put("r", "c", "n", "peer", ts=3)
+    pq.write_table(peer.to_arrow(), f"{cat.oplog_path('t')}/part-peer-00000.parquet")
+    fresh = Catalog(spark, root)
+    assert fresh._commit_gaps("t") == [(lo, hi)]
+    got = [bytes(r.value) for r in fresh.view("t", now_us=NOW).collect()]
+    assert got == [py_encode_be_i64(3)]

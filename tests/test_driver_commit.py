@@ -157,11 +157,11 @@ def test_sdk_writes_and_cas_start_no_spark_job(spark, tmp_path):
     c = Client(spark, str(tmp_path / "cat"))
     c.create_table("t { d, c }")
     t = c.open_table("t")
-    t.put("r", "d", "q", "v0")  # first write bootstraps the seq counter
     sc = spark.sparkContext
     group = f"driver-commit-{os.getpid()}-{time.time_ns()}"
     sc.setJobGroup(group, "driver-commit probe")
     try:
+        t.put("r", "d", "q", "v0")  # a fresh handle's first write too
         t.put("r", "d", "q", "v1")
         t.increment_column_value("r", "c", "n", 3)
         assert t.check_and_apply("r", "d", "q", "v1", MutationBatch().put("r", "d", "q", "v2"))
@@ -173,6 +173,27 @@ def test_sdk_writes_and_cas_start_no_spark_job(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert t.get("r") == spark_get_map(c.catalog, "t", "r")
     assert t.get("r")["d"]["q"][0][1] == b"v2"
+
+
+def test_raw_max_seq_and_rollback_start_no_spark_job(spark, tmp_path):
+    """The raw max seq comes from the op-log index's footer statistics,
+    so neither it nor a rollback to a snapshot runs a Spark job."""
+    c = Client(spark, str(tmp_path / "cat"))
+    c.create_table("t { d }")
+    t = c.open_table("t")
+    t.put("r", "d", "q", "v0")
+    sid = c.catalog.snapshot("t")
+    t.put("r", "d", "q", "v1")
+    sc = spark.sparkContext
+    group = f"driver-rollback-{os.getpid()}-{time.time_ns()}"
+    sc.setJobGroup(group, "raw-max-seq probe")
+    try:
+        assert c.catalog.raw_max_seq("t") == 1
+        c.catalog.rollback("t", sid)
+        assert _jobs_in(sc, group) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert t.get("r")["d"]["q"][0][1] == b"v0"
 
 
 # --- CheckAndApply through the seek path ------------------------------

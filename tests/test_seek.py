@@ -184,8 +184,9 @@ def test_footer_routing_prunes_files(cat, spark):
     # footer bounds route the key to exactly the one file holding z-keys
     assert len(plan) == 1
     assert seeker.get("z010")[0][4] == b"v10"
-    # meta cache populated once per file
-    assert len(seeker._meta) == len(seeker._files()) >= 3
+    # the seeker routes by its catalog's op-log index, one entry per file
+    assert seeker._index is cat.oplog_index("seek_route")
+    assert len(seeker._index.files()) >= 3
 
 
 def test_get_kv_fast_path(cat, spark):
@@ -420,3 +421,25 @@ def test_seek_sees_online_schema_change(spark, tmp_path):
     want = [(2, b"v2"), (1, b"v1")]
     assert t.get("r")["d"]["q"] == want
     assert t.get("r") == spark_get_map(c.catalog, "t", "r")
+
+
+def test_seek_reads_through_same_name_rewrite(spark, tmp_path):
+    """optimize() on a pre-split table rewrites its files under the
+    same names; a long-lived Table and a cached path Seeker must read
+    the rewritten rows, not the row groups they read before."""
+    from tera_spark.client import Client
+
+    c = Client(spark, str(tmp_path / "cat"))
+    c.catalog.create_table("t { d }", delimiters=["m"])
+    t = c.open_table("t")
+    seeker = Seeker(
+        path=c.catalog.oplog_path("t"), schema=c.catalog.get_schema("t"), cache_groups=8
+    )
+    names = []
+    for ts, v in enumerate((b"v1", b"v2"), start=1):
+        t.put("a", "d", "q", v, ts=ts)
+        c.catalog.optimize("t")
+        names.append(sorted(i["file"] for i in c.catalog.tablet_info("t")))
+        assert t.get("a")["d"]["q"] == [(ts, v)]
+        assert [cell[4] for cell in seeker.get("a")] == [v]
+    assert names[0] == names[1]  # the second optimize reused the names
