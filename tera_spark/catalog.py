@@ -250,26 +250,28 @@ class Catalog:
 
         # table mode reads the TTL-extended layout: files written
         # without expire_ts null-fill, so both layouts coexist
-        schema = KV_OPLOG_SCHEMA if self.get_schema(name).kv_mode else CELL_TTL_SCHEMA
+        schema = KV_OPLOG_SCHEMA if self.current_schema(name).kv_mode else CELL_TTL_SCHEMA
         df = self.spark.read.schema(schema).parquet(self.oplog_path(name))
         rollbacks, w, gaps = self._read_masks(name)
-        for r in rollbacks:
+        # one SQL-text filter (the seqs are engine constants): a Column
+        # tree costs a py4j round trip per node, on every read
+        visible = [
             # RollbackDrop semantics (reference leveldb dbformat.h:156):
             # entries written inside a rolled-back seq window vanish
-            df = df.filter(~((F.col("seq") > r["after"]) & (F.col("seq") <= r["upto"])))
+            f"NOT (seq > {int(r['after'])} AND seq <= {int(r['upto'])})" for r in rollbacks
+        ]
         if w is not None:
             # group-commit visibility: rows above the committed
             # watermark are a torn batch (crash between file write and
             # commit record) — never visible
-            df = df.filter(F.col("seq") <= F.lit(w))
+            visible.append(f"seq <= {int(w)}")
             # window-granular form of the same rule: a seq GAP below
             # the watermark is a concurrently-reserved window whose
             # record hasn't landed (in-flight or crashed) — masked
             # until its record appears (see _commit_gaps)
-            for g_lo, g_hi in gaps:
-                df = df.filter(
-                    ~((F.col("seq") >= g_lo) & (F.col("seq") <= g_hi))
-                )
+            visible += [f"NOT (seq >= {int(lo)} AND seq <= {int(hi)})" for lo, hi in gaps]
+        if visible:
+            df = df.filter(F.expr(" AND ".join(visible)))
         return df
 
     def _read_masks(self, name: str) -> tuple[list[dict], int | None, list[tuple[int, int]]]:
@@ -694,7 +696,7 @@ class Catalog:
         self._authorize("read", name)
         self._consume(name, "scan")
         self._reader_heal(name)  # reference global_txn.cc:337-501 analog
-        schema = self.get_schema(name)
+        schema = self.current_schema(name)
         if schema.kv_mode:
             return kv_current_view(self.read_oplog(name), **kw)
         # commit records prove the op mix, which routes the fold

@@ -405,7 +405,7 @@ class Table:
         return self._strip_df(
             batch_get(
                 self._cat.read_oplog(self.name),
-                self._cat.get_schema(self.name),
+                self._cat.current_schema(self.name),
                 [self._hk(k) for k in row_keys],
                 now_us=now_us,
                 op_kinds=self._cat._op_kinds_union(self.name),
@@ -438,7 +438,7 @@ class Table:
         write sequence (ScanDescriptor::SetSnapshot, scan.h:121)."""
         v = scan(
             self._cat.read_oplog(self.name),
-            self._cat.get_schema(self.name),
+            self._cat.current_schema(self.name),
             self._hash_desc(desc),
             now_us=now_us,
             snapshot_seq=snapshot_seq,
@@ -459,7 +459,7 @@ class Table:
             self._strip_df(
                 scan(
                     self._cat.read_oplog(self.name),
-                    self._cat.get_schema(self.name),
+                    self._cat.current_schema(self.name),
                     self._hash_desc(desc),
                     now_us=now_us,
                     snapshot_seq=snapshot_seq,
@@ -489,7 +489,7 @@ class Table:
     def start_row_transaction(self, row_key: str) -> SingleRowTransaction:
         return SingleRowTransaction(
             self._cat.read_oplog(self.name),
-            self._cat.get_schema(self.name),
+            self._cat.current_schema(self.name),
             self._hk(row_key),
         )
 

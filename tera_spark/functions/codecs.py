@@ -1,4 +1,4 @@
-"""Binary value codecs as JVM-side Column expressions.
+"""Binary value codecs as JVM-side Column expressions and SQL text.
 
 The reference stores typed values as raw bytes: counters are int64
 big-endian (`TKT_ADD`) or native little-endian (`TKT_ADDINT64`) —
@@ -8,6 +8,12 @@ define integer/decimal codecs (`include/tera/filter_comparator.h:92-95`).
 Everything here is built-in-function only (hex/conv/unhex/substring),
 so decodes stay inside whole-stage codegen and can participate in
 Catalyst optimization; no Python UDFs in the hot path.
+
+Each int64 codec is written once, over a renderer (``_SQL`` or
+``_COLUMNS``): ``*_sql(x)`` gives SQL text over the SQL text ``x``,
+for folds built with ``F.expr`` (one py4j round trip per
+expression), and the Column form gives the same expression tree
+built node by node. Both analyze to the same Catalyst expressions.
 
 Width rule for int64 decodes of values that are not 8 bytes long: the
 value's hex is left-padded with zeros, or cut to its first 16 hex
@@ -20,6 +26,7 @@ zero bytes (``b"\\xff"`` reads 255 big-endian and -2**56, bit pattern
 
 from __future__ import annotations
 
+import operator
 import struct
 
 from pyspark.sql import Column
@@ -29,56 +36,111 @@ _TWO63 = "9223372036854775808"          # 2^63
 _TWO64 = "18446744073709551616"         # 2^64
 
 
-def _hex16(col: Column) -> Column:
-    """Hex of an 8-byte binary value (16 chars, zero-padded)."""
-    return F.lpad(F.hex(col), 16, "0")
+class _SQL:
+    """Renders a codec as SQL text."""
+
+    call = staticmethod(lambda name, *args: f"{name}({', '.join(args)})")
+    lit = staticmethod(lambda v: f"'{v}'" if isinstance(v, str) else str(v))
+    cast = staticmethod(lambda x, to: f"cast({x} as {to})")
+    when = staticmethod(lambda cond, then, other: f"CASE WHEN {cond} THEN {then} ELSE {other} END")
+    ge = staticmethod(lambda a, b: f"({a} >= {b})")
+    sub = staticmethod(lambda a, b: f"({a} - {b})")
 
 
-def _swap_pairs16(hexcol: Column) -> Column:
-    """Reverse byte order of a 16-char hex string (endianness swap)."""
-    return F.concat(*[F.substring(hexcol, pos, 2) for pos in range(15, 0, -2)])
+class _COLUMNS:
+    """Renders a codec as a Column, node by node."""
+
+    call = staticmethod(F.call_function)
+    lit = staticmethod(F.lit)
+    cast = staticmethod(lambda x, to: x.cast(to))
+    when = staticmethod(lambda cond, then, other: F.when(cond, then).otherwise(other))
+    ge = staticmethod(operator.ge)
+    sub = staticmethod(operator.sub)
 
 
-def _unsigned_hex_to_i64(hexcol: Column) -> Column:
-    """Interpret a 16-char hex string as a signed two's-complement int64.
+def _hex16(r, x):
+    """The width rule: ``lpad`` left-pads a short value's hex with
+    zeros and cuts a long one to its first 16 digits."""
+    return r.call("lpad", r.call("hex", x), r.lit(16), r.lit("0"))
 
-    `conv(hex,16,10)` yields the *unsigned* decimal as a string; values
-    >= 2^63 wrap to negative via decimal arithmetic (bigint would
-    overflow).
-    """
-    unsigned = F.conv(hexcol, 16, 10).cast("decimal(20,0)")
-    signed = F.when(
-        unsigned >= F.lit(_TWO63).cast("decimal(20,0)"),
-        unsigned - F.lit(_TWO64).cast("decimal(21,0)"),
-    ).otherwise(unsigned)
-    return signed.cast("long")
+
+def _swap16(r, h):
+    """Reverse the byte order of a 16-digit hex string."""
+    return r.call("concat", *[r.call("substring", h, r.lit(p), r.lit(2)) for p in range(15, 0, -2)])
+
+
+def _signed(r, h):
+    """A 16-digit hex string as a signed two's-complement int64.
+
+    ``conv(hex, 16, 10)`` yields the *unsigned* decimal as a string;
+    values >= 2^63 wrap to negative via decimal arithmetic (bigint
+    would overflow)."""
+    unsigned = r.cast(r.call("conv", h, r.lit(16), r.lit(10)), "decimal(20,0)")
+    signed = r.when(
+        r.ge(unsigned, r.cast(r.lit(_TWO63), "decimal(20,0)")),
+        r.sub(unsigned, r.cast(r.lit(_TWO64), "decimal(21,0)")),
+        unsigned,
+    )
+    return r.cast(signed, "bigint")
+
+
+def _be_decode(r, x):
+    # reference: DecodeBigEndain, atomic_merge_strategy.cc:40
+    return _signed(r, _hex16(r, x))
+
+
+def _le_decode(r, x):
+    # reference: `*(int64_t*)value.data()`, atomic_merge_strategy.cc:43
+    return _signed(r, _swap16(r, _hex16(r, x)))
+
+
+def _be_encode(r, x):
+    # hex(bigint) renders two's complement: negatives are already 16 digits
+    return r.call("unhex", _hex16(r, r.cast(x, "bigint")))
+
+
+def _le_encode(r, x):
+    return r.call("unhex", _swap16(r, _hex16(r, r.cast(x, "bigint"))))
+
+
+def be_i64_decode_sql(x: str) -> str:
+    """SQL text: binary big-endian → bigint."""
+    return _be_decode(_SQL, x)
+
+
+def le_i64_decode_sql(x: str) -> str:
+    """SQL text: binary little-endian (x86-native) → bigint."""
+    return _le_decode(_SQL, x)
+
+
+def be_i64_encode_sql(x: str) -> str:
+    """SQL text: bigint → binary(8) big-endian."""
+    return _be_encode(_SQL, x)
+
+
+def le_i64_encode_sql(x: str) -> str:
+    """SQL text: bigint → binary(8) little-endian."""
+    return _le_encode(_SQL, x)
 
 
 def be_i64_decode(col: Column) -> Column:
-    """binary(8) big-endian → long (reference: DecodeBigEndain,
-    src/io/coding.h usage in atomic_merge_strategy.cc:40)."""
-    return _unsigned_hex_to_i64(_hex16(col))
+    """binary big-endian → long."""
+    return _be_decode(_COLUMNS, col)
 
 
 def le_i64_decode(col: Column) -> Column:
-    """binary(8) little-endian (x86-native) → long
-    (reference: `*(int64_t*)value.data()`, atomic_merge_strategy.cc:43)."""
-    return _unsigned_hex_to_i64(_swap_pairs16(_hex16(col)))
-
-
-def _i64_to_hex16(col: Column) -> Column:
-    # hex(long) renders two's complement: negatives are already 16 chars.
-    return F.lpad(F.hex(col.cast("long")), 16, "0")
+    """binary little-endian (x86-native) → long."""
+    return _le_decode(_COLUMNS, col)
 
 
 def be_i64_encode(col: Column) -> Column:
     """long → binary(8) big-endian."""
-    return F.unhex(_i64_to_hex16(col))
+    return _be_encode(_COLUMNS, col)
 
 
 def le_i64_encode(col: Column) -> Column:
     """long → binary(8) little-endian."""
-    return F.unhex(_swap_pairs16(_i64_to_hex16(col)))
+    return _le_encode(_COLUMNS, col)
 
 
 def be_double_decode(col: Column) -> Column:

@@ -23,10 +23,12 @@ Spark's scheduler and `toLocalIterator` own distribution+streaming.
 
 from __future__ import annotations
 
+import operator
 from collections.abc import Collection
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from tera_spark.model import CellOp
@@ -61,15 +63,19 @@ def scan(
     desc = desc or ScanDescriptor()
     df = cells
 
-    # 1. early pushdown: row range + cf set (marks exempt where needed)
+    # 1. early pushdown: row range + cf set (marks exempt where needed).
+    # User values (bounds, cf names) stay F.lit parameters; only the op
+    # code is SQL text.
+    pushed = []
     if desc.start is not None:
-        df = df.filter(F.col("row_key") >= desc.start)
+        pushed.append(F.col("row_key") >= F.lit(desc.start))
     if desc.end is not None:
-        df = df.filter(F.col("row_key") < desc.end)
-    cf_set = None
+        pushed.append(F.col("row_key") < F.lit(desc.end))
     if desc.column_families or desc.columns:
-        cf_set = set(desc.column_families or []) | set((desc.columns or {}).keys())
-        df = df.filter(F.col("cf").isin(list(cf_set)) | (F.col("op") == CellOp.DEL_ROW))
+        cf_set = sorted(set(desc.column_families or []) | set((desc.columns or {}).keys()))
+        pushed.append(F.col("cf").isin(cf_set) | F.expr(f"op = {CellOp.DEL_ROW}"))
+    if pushed:
+        df = df.filter(reduce(operator.and_, pushed))
 
     # 2. fold to visible cells (op_kinds = caller's op-mix promise,
     # routes the fold — see current_view)
@@ -77,15 +83,13 @@ def scan(
 
     # 3. scan-level version / qualifier caps
     if desc.max_versions is not None:
-        wv = Window.partitionBy("row_key", "cf", "qualifier").orderBy(F.desc("ts"))
-        v = v.withColumn("_vn", F.row_number().over(wv)).filter(
-            F.col("_vn") <= desc.max_versions
-        ).drop("_vn")
+        v = v.withColumn(
+            "_vn", F.expr("row_number() OVER (PARTITION BY row_key, cf, qualifier ORDER BY ts DESC)")
+        ).filter(F.col("_vn") <= desc.max_versions).drop("_vn")
     if desc.max_qualifiers is not None:
-        wq = Window.partitionBy("row_key", "cf").orderBy("qualifier")
-        v = v.withColumn("_qn", F.dense_rank().over(wq)).filter(
-            F.col("_qn") <= desc.max_qualifiers
-        ).drop("_qn")
+        v = v.withColumn(
+            "_qn", F.expr("dense_rank() OVER (PARTITION BY row_key, cf ORDER BY qualifier)")
+        ).filter(F.col("_qn") <= desc.max_qualifiers).drop("_qn")
 
     # 4. post-filters: qualifier projection, then time range
     if desc.columns:

@@ -51,8 +51,20 @@ exchanges, zero sorts; mass-delete pathologies degrade to a keyed
 join). Masking filters the collected arrays. All sequential
 per-qualifier logic runs JVM-side over those arrays via higher-order
 functions; no Python UDFs. Narrow op mixes route to cheaper
-specialized folds (``fold_route`` below). This is the property set
-that keeps the view viable at 100 TB.
+specialized folds (``fold_route`` below), and when the op kinds rule
+out row and family deletes the mark aggregates and their joins are not
+built at all. This is the property set that keeps the view viable at
+100 TB.
+
+Construction cost: every route is built from SQL text (``F.expr`` /
+``selectExpr``), never composed Column node by node, because each node
+is one py4j round trip and the fold is rebuilt per scan, view and
+compaction. One construction costs ~50-150 round trips (composed node
+by node, the general fold cost ~2,900); tests/test_view_model.py
+bounds it at 300 for the general route and 200 for every other. Only
+engine constants (op codes, seqs, ``now_us``, schema cf names through
+``sql_string``) are spliced into that text; user values stay ``F.lit``
+parameters.
 """
 
 from __future__ import annotations
@@ -60,32 +72,37 @@ from __future__ import annotations
 import time
 from collections.abc import Collection
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from tera_spark.functions.codecs import (
-    be_i64_decode,
-    be_i64_encode,
-    le_i64_decode,
-    le_i64_encode,
+    be_i64_decode_sql,
+    be_i64_encode_sql,
+    le_i64_decode_sql,
+    le_i64_encode_sql,
 )
 from tera_spark.model import CellOp
 from tera_spark.registry import TableSchema
 
 _ENTRY_T = "array<struct<ts:bigint,value:binary>>"
+# sorted-entry struct type (nts/sop/nseq sort key) for empty-array casts
+_SORTED_T = "array<struct<nts:bigint,sop:int,nseq:bigint,value:binary>>"
+_KEY = ("row_key", "cf", "qualifier")
 
 
-def _is_atomic(op: Column) -> Column:
-    return op.isin(*CellOp.ATOMIC)
+def sql_string(s: str) -> str:
+    """``s`` as a SQL string literal. Only engine-side names (schema
+    cf names) are spliced into fold SQL through this; user values (row
+    keys, qualifiers, scan bounds) stay ``F.lit`` parameters."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def _cf_prop_map(schema: TableSchema | None, prop: str, default: int) -> Column:
+def _cf_map_sql(schema: TableSchema | None, prop: str) -> str:
+    """SQL text of a cf name → ``prop`` map (NULL map without a schema)."""
     if schema is None or not schema.column_families:
-        return F.lit(None).cast("map<string,int>")
-    pairs = []
-    for cf in schema.column_families.values():
-        pairs += [F.lit(cf.name), F.lit(int(getattr(cf, prop)))]
-    return F.create_map(*pairs)
+        return "cast(NULL as map<string,int>)"
+    pairs = [f"{sql_string(cf.name)}, {int(getattr(cf, prop))}" for cf in schema.column_families.values()]
+    return f"map({', '.join(pairs)})"
 
 
 def fold_route(op_kinds: Collection[int] | None) -> str:
@@ -128,72 +145,66 @@ def current_view(
     maxversions=1 (a sliced sort for K>1); pure ADD or pure ADDINT64
     → two stacked hash aggregations (same-ts dedup, then SUM); no
     atomics → the mask machinery without merge-run detection; any
-    other or unknown mix → the general fold. Every route is
-    cell-identical to the general fold on a log its promise covers
-    (property-tested). Catalog-managed tables pass the op kinds
-    recorded at commit time (Catalog._op_kinds_union); hand-built
-    op-logs declare the kinds they build."""
-    if now_us is None:
-        now_us = int(time.time() * 1_000_000)
+    other or unknown mix → the general fold. The mark joins of the
+    last two are built only when the promise admits a DEL_ROW or
+    DEL_FAMILY. Every route is cell-identical to the general fold on
+    a log its promise covers (property-tested). Catalog-managed tables
+    pass the op kinds recorded at commit time
+    (Catalog._op_kinds_union); hand-built op-logs declare the kinds
+    they build."""
+    now_us = int(time.time() * 1_000_000 if now_us is None else now_us)
     df = cells
-    if "seq" not in df.columns:
-        df = df.withColumn("seq", F.lit(0).cast("long"))
-    if snapshot_seq is not None:
-        df = df.filter(F.col("seq") <= F.lit(snapshot_seq))
-    if "expire_ts" in df.columns:
-        # per-cell TTL (RowMutation::Put(value, ttl), mutation.h:30-33):
-        # only puts carry it; NULL/0 = eternal
-        df = df.filter(
-            F.col("expire_ts").isNull()
-            | (F.col("expire_ts") <= 0)
-            | (F.col("expire_ts") > F.lit(now_us))
-        ).drop("expire_ts")
+    columns = df.columns
+    if "seq" not in columns:
+        df = df.withColumn("seq", F.expr("cast(0 as bigint)"))
 
-    op, ts = F.col("op"), F.col("ts")
-
-    # --- phase A: cheap row-local pre-filters (TTL, illegal cf) --------
+    # --- phase A: cheap row-local pre-filters, one SQL-text filter ----
     # Delete *marks* must survive to the aggregation: row-delete marks
     # carry cf="" (exempt from cf legality), family/qualifiers marks for
     # legal cfs pass the filter, and TTL only applies to data ops.
+    conds = []
+    if snapshot_seq is not None:
+        conds.append(f"seq <= {int(snapshot_seq)}")
+    if "expire_ts" in columns:
+        # per-cell TTL (RowMutation::Put(value, ttl), mutation.h:30-33):
+        # only puts carry it; NULL/0 = eternal
+        conds.append(f"(expire_ts IS NULL OR expire_ts <= 0 OR expire_ts > {now_us})")
     if schema is not None and schema.column_families:
-        legal = [cf.name for cf in schema.column_families.values()]
-        df = df.filter(F.col("cf").isin(legal) | (op == CellOp.DEL_ROW))
-        ttl_map = _cf_prop_map(schema, "ttl", 0)
-        ttl_s = F.coalesce(ttl_map[F.col("cf")], F.lit(0))
-        expired = (op >= CellOp.PUT) & (ttl_s > 0) & (ts < F.lit(now_us) - ttl_s.cast("long") * 1_000_000)
-        df = df.filter(~expired)
+        legal = ", ".join(sql_string(cf.name) for cf in schema.column_families.values())
+        conds.append(f"(cf IN ({legal}) OR op = {CellOp.DEL_ROW})")
+        ttl_s = f"coalesce({_cf_map_sql(schema, 'ttl')}[cf], 0)"
+        conds.append(
+            f"NOT (op >= {CellOp.PUT} AND {ttl_s} > 0 "
+            f"AND ts < {now_us} - cast({ttl_s} as bigint) * 1000000)"
+        )
+    if conds:
+        df = df.filter(F.expr(" AND ".join(conds)))
 
-    maxv_map = _cf_prop_map(schema, "max_versions", default_max_versions)
+    maxv = f"coalesce({_cf_map_sql(schema, 'max_versions')}[cf], {int(default_max_versions)})"
 
     route = fold_route(op_kinds)
     if route == "put_only":
-        return _put_only_fold(df, schema, maxv_map, default_max_versions)
+        return _put_only_fold(df, schema, maxv, default_max_versions)
     if route == "counter":
         return _counter_only_fold(df, min(op_kinds))
 
     # --- phase B: one hash aggregation collects each qualifier's ops
-    # AND its delete-mark maxima; row/cf-granularity masks then spread
-    # via windows over the *aggregated* rows (one per qualifier — orders
-    # of magnitude smaller than the cell count, and clustered by the
-    # same hash partitioning, so no extra exchange and no cell-level
-    # sort). Masking happens on the collected arrays.
-    # hot builders below are SQL-text expressions (F.expr): a Column
-    # composed node-by-node costs one py4j round-trip per node, and this
-    # fold is rebuilt per query invocation — measured ~0.5 s of driver
-    # construction latency at steady state, more than the fold's sf0.1
-    # execution. Same analyzed operators either way (oracle-pinned).
-    # Row/cf-granularity delete marks never appear in `entries` (the
-    # mask filter below drops them wholesale — their ts maxima reach
-    # the mask via the mark joins), so keep them out of the collect
-    # stream entirely: the big aggregation and its full-size exchange
-    # then carry only ops that can survive. On a union-built op-log a
-    # constant-op delete branch constant-folds to nothing (one fewer
-    # scan); on a parquet op-log the `op` predicate pushes to the
-    # reader. DEL_QUALIFIERS stays in-stream (it feeds _del_qu), as
-    # does DEL_QUALIFIER (it arms the sequential pass).
-    data = df.filter(~op.isin(CellOp.DEL_ROW, CellOp.DEL_FAMILY))
+    # AND its qualifier-level delete maxima; masking happens on the
+    # collected arrays, all of it SQL text (module docstring:
+    # construction cost). Row/cf-granularity delete marks never appear
+    # in `entries` (the mask filter below drops them wholesale — their
+    # ts maxima reach the mask via the mark joins), so keep them out of
+    # the collect stream entirely: the big aggregation and its
+    # full-size exchange then carry only ops that can survive. On a
+    # union-built op-log a constant-op delete branch constant-folds to
+    # nothing (one fewer scan); on a parquet op-log the `op` predicate
+    # pushes to the reader. DEL_QUALIFIERS stays in-stream (it feeds
+    # _del_qu), as does DEL_QUALIFIER (it arms the sequential pass).
+    marks = op_kinds is None or bool({CellOp.DEL_ROW, CellOp.DEL_FAMILY} & set(op_kinds))
+    marked = f"op IN ({CellOp.DEL_ROW}, {CellOp.DEL_FAMILY})"
+    data = df.filter(F.expr(f"NOT ({marked})")) if marks else df
     grouped = (
-        data.groupBy("row_key", "cf", "qualifier")
+        data.groupBy(*_KEY)
         .agg(
             # slim 4-field entry: ts/op ride inside the negated
             # sort keys (ts = -nts, op = sop) — 25% less agg
@@ -207,173 +218,136 @@ def current_view(
             F.expr(
                 f"sort_array(collect_list(case when op <> {CellOp.DEL_QUALIFIERS} "
                 "then named_struct("
-                "'nts', -ts, 'sop', op, 'nseq', -seq, 'value', value) end))"
-            ).alias("entries_raw"),
-            F.expr(
-                f"max(case when op = {CellOp.DEL_QUALIFIERS} then ts end)"
-            ).alias("_del_qu"),
+                "'nts', -ts, 'sop', op, 'nseq', -seq, 'value', value) end)) as entries_raw"
+            ),
+            F.expr(f"max(case when op = {CellOp.DEL_QUALIFIERS} then ts end) as _del_qu"),
         )
-        .withColumn("maxv", F.coalesce(maxv_map[F.col("cf")], F.lit(default_max_versions)))
+        .withColumn("maxv", F.expr(maxv))
     )
-    # row/cf-granularity masks arrive by LEFT JOIN of two tiny mark
-    # aggregates, not by windows over the grouped rows: delete marks
-    # are rare by construction (they exist to be compacted away), so
-    # AQE broadcasts the mark sides and the plan keeps ONE full-size
-    # exchange — the window form forced a second exchange on row_key
-    # plus two sorts of every aggregated row. Mass-delete pathologies
-    # degrade gracefully to a keyed join on the same row_key prefix.
-    # Both mark granularities extract from ONE shared scan (column-
-    # pruned to row_key/cf/ts/op with `op IN (...)` pushed to the
-    # parquet reader — row-group op min/max stats skip delete-free
-    # files entirely); the per-granularity re-aggregates run over the
-    # tiny grouped mark set and reuse its exchange.
-    mk = (
-        df.filter(op.isin(CellOp.DEL_ROW, CellOp.DEL_FAMILY))
-        .groupBy("row_key", "cf", "op")
-        .agg(F.max("ts").alias("_mts"))
-    )
-    row_marks = (
-        mk.filter(F.col("op") == CellOp.DEL_ROW)
-        .groupBy("row_key")
-        .agg(F.max("_mts").alias("_del_row"))
-    )
-    cf_marks = mk.filter(F.col("op") == CellOp.DEL_FAMILY).select(
-        "row_key", "cf", F.col("_mts").alias("_del_cf")
-    )
-    grouped = grouped.join(row_marks, "row_key", "left").join(
-        cf_marks, ["row_key", "cf"], "left"
-    )
+    neg = f"{-(1 << 62)}L"
+    mask = f"coalesce(_del_qu, {neg})"
+    if marks:
+        # row/cf-granularity masks arrive by LEFT JOIN of two tiny mark
+        # aggregates, not by windows over the grouped rows: delete marks
+        # are rare by construction (they exist to be compacted away), so
+        # AQE broadcasts the mark sides and the plan keeps ONE full-size
+        # exchange — the window form forced a second exchange on row_key
+        # plus two sorts of every aggregated row. Mass-delete pathologies
+        # degrade gracefully to a keyed join on the same row_key prefix.
+        # Both mark granularities extract from ONE shared scan (column-
+        # pruned to row_key/cf/ts/op with `op IN (...)` pushed to the
+        # parquet reader — row-group op min/max stats skip delete-free
+        # files entirely); the per-granularity re-aggregates run over the
+        # tiny grouped mark set and reuse its exchange. When the op
+        # kinds rule out both mark kinds, the marks are empty by the
+        # same promise fold_route relies on, and neither join is built.
+        mk = df.filter(F.expr(marked)).groupBy("row_key", "cf", "op").agg(F.expr("max(ts) as _mts"))
+        row_marks = (
+            mk.filter(F.expr(f"op = {CellOp.DEL_ROW}"))
+            .groupBy("row_key")
+            .agg(F.expr("max(_mts) as _del_row"))
+        )
+        cf_marks = mk.filter(F.expr(f"op = {CellOp.DEL_FAMILY}")).selectExpr(
+            "row_key", "cf", "_mts as _del_cf"
+        )
+        grouped = grouped.join(row_marks, "row_key", "left").join(
+            cf_marks, ["row_key", "cf"], "left"
+        )
+        mask = f"greatest(coalesce(_del_row, {neg}), coalesce(_del_cf, {neg}), {mask})"
     # entries_raw holds no DEL_ROW/DEL_FAMILY/DEL_QUALIFIERS structs
     # (prefiltered / skipped by the collect above): only the ts mask
-    neg = -(1 << 62)
-    mask = (
-        f"greatest(coalesce(_del_row, {neg}L), coalesce(_del_cf, {neg}L), "
-        f"coalesce(_del_qu, {neg}L))"
-    )
-    grouped = grouped.withColumn(
-        "entries", F.expr(f"filter(entries_raw, x -> -x.nts > {mask})")
-    ).drop("entries_raw", "_del_qu", "_del_row", "_del_cf")
-
-    e = F.col("entries")
-    maxv_c = F.col("maxv")
-
-    def _seq_pass(arr_sql: str, init_vnum_sql: str) -> Column:
-        # sequential per-group pass: DEL_QUALIFIER arming + version cap.
-        # arr_sql / init_vnum_sql are SQL fragments over the grouped
-        # columns (entries/rest/run_len/maxv).
-        put, dq = CellOp.PUT, CellOp.DEL_QUALIFIER
-        vnum2 = f"(acc.vnum + (case when x.sop = {put} then 1 else 0 end))"
-        emit = f"((x.sop = {put}) and (not (acc.prev = {dq})) and ({vnum2} <= maxv))"
-        return F.expr(
-            "aggregate("
-            f"{arr_sql}, "
-            f"named_struct('out', cast(array() as {_ENTRY_T}), "
-            f"'vnum', {init_vnum_sql}, 'prev', 0), "
-            "(acc, x) -> named_struct("
-            f"'out', case when {emit} then "
-            "concat(acc.out, array(named_struct('ts', -x.nts, 'value', x.value))) "
-            "else acc.out end, "
-            f"'vnum', {vnum2}, "
-            "'prev', x.sop)"
-            ").out"
-        )
+    entries = f"filter(entries_raw, x -> -x.nts > {mask}) as entries"
 
     if route == "merge_free":
         # PUTs + deletes only: every merge run would be empty, so the
         # whole group is one sequential pass — no run detection, no
         # dedup/merge folds (the expression tree the hot loop skips)
-        versions = _seq_pass("entries", "0")
-        return (
-            grouped.select("row_key", "cf", "qualifier", F.explode(versions).alias("v"))
-            .select(
-                "row_key", "cf", "qualifier",
-                F.col("v.ts").alias("ts"), F.col("v.value").alias("value"),
-            )
-        )
+        staged = grouped.selectExpr(*_KEY, "maxv", entries)
+        return _explode(staged, _seq_pass("entries", "0"))
 
-    # head run of atomic ops (merge candidates)
-    run = F.aggregate(
-        e,
-        F.struct(F.lit(0).alias("n"), F.lit(False).alias("stop")),
-        lambda acc, x: F.struct(
-            F.when(~acc["stop"] & _is_atomic(x["sop"]), acc["n"] + 1)
-            .otherwise(acc["n"])
-            .alias("n"),
-            (acc["stop"] | ~_is_atomic(x["sop"])).alias("stop"),
-        ),
-    )["n"]
-    grouped = grouped.withColumn("run_len", run)
-    run_len = F.col("run_len")
-    base_is_put = (run_len > 0) & (F.size(e) > run_len) & (F.get(e, run_len)["sop"] == CellOp.PUT)
-    group_len = run_len + F.when(base_is_put, 1).otherwise(0)
-    grouped = grouped.withColumn("group_len", group_len)
-    group_len = F.col("group_len")
-
-    grp = F.slice(e, 1, group_len)
-    rest = F.when(F.size(e) > group_len, F.slice(e, group_len + 1, F.size(e) - group_len)).otherwise(
-        F.expr(f"cast(array() as {_spark_entry_type()})")
+    put = CellOp.PUT
+    atomic = f"IN ({', '.join(str(k) for k in sorted(CellOp.ATOMIC))})"
+    # one projection, staged by lateral column aliases: each staged
+    # column is computed once per group, not once per reference (the
+    # little-endian encoder alone references its input 8×, one per
+    # byte pair; inlined, each re-ran the fold)
+    staged = grouped.selectExpr(
+        *_KEY, "maxv", entries,
+        # head run of atomic ops (merge candidates)
+        "aggregate(entries, named_struct('n', 0, 'stop', false), (acc, x) -> named_struct("
+        f"'n', CASE WHEN NOT acc.stop AND x.sop {atomic} THEN acc.n + 1 ELSE acc.n END, "
+        f"'stop', acc.stop OR NOT x.sop {atomic})).n as run_len",
+        # the run plus the PUT right after it (the merge base)
+        "run_len + CASE WHEN run_len > 0 AND size(entries) > run_len "
+        f"AND get(entries, run_len).sop = {put} THEN 1 ELSE 0 END as group_len",
+        "slice(entries, 1, group_len) as grp",
+        "CASE WHEN size(entries) > group_len "
+        "THEN slice(entries, group_len + 1, size(entries) - group_len) "
+        f"ELSE cast(array() as {_SORTED_T}) END as rest",
+        "get(entries, 0).sop as kind",
+        # same-ts dedup inside the merge group (ts != last_ts_atomic ||
+        # VALUE), then the entries the merge kind folds (matching
+        # atomic kind or PUT base)
+        f"filter(filter(grp, (x, i) -> x.sop = {put} OR i = 0 OR x.nts != get(grp, i - 1).nts), "
+        f"x -> x.sop = kind OR x.sop = {put}) as mergeable",
+        # ADDINT64 decodes little-endian for deltas AND the PUT base
+        # alike (MergeStep: `int64_ += *(int64_t*)value.data()` for both)
+        f"CASE kind WHEN {CellOp.ADD} "
+        f"THEN aggregate(mergeable, 0L, (acc, x) -> acc + {be_i64_decode_sql('x.value')}) "
+        f"WHEN {CellOp.ADDINT64} "
+        f"THEN aggregate(mergeable, 0L, (acc, x) -> acc + {le_i64_decode_sql('x.value')}) "
+        "END as sum_long",
     )
-    grouped = grouped.withColumn("grp", grp).withColumn("rest", rest)
-    grp, rest = F.col("grp"), F.col("rest")
-
-    # same-ts dedup inside the merge group (ts != last_ts_atomic || VALUE)
-    kind = F.get(e, 0)["sop"]
-    deduped = F.filter(
-        grp,
-        lambda x, i: (x["sop"] == CellOp.PUT)
-        | (i == 0)
-        | (x["nts"] != F.get(grp, i - 1)["nts"]),
-    )
-    # entries the merge kind actually folds (matching atomic kind or PUT
-    # base) — staged as a column so the fold below runs once per group,
-    # not once per reference (the little-endian encoder alone references
-    # its input 8×, one per byte pair; inlined, each re-ran the fold)
-    grouped = grouped.withColumn(
-        "mergeable", F.filter(deduped, lambda x: (x["sop"] == kind) | (x["sop"] == CellOp.PUT))
-    )
-    mergeable = F.col("mergeable")
-
-    # ADDINT64 decodes little-endian for deltas AND the PUT base alike
-    # (MergeStep: `int64_ += *(int64_t*)value.data()` for both types).
-    sum_long = F.when(
-        kind == CellOp.ADD,
-        F.aggregate(mergeable, F.lit(0).cast("long"), lambda acc, x: acc + be_i64_decode(x["value"])),
-    ).when(
-        kind == CellOp.ADDINT64,
-        F.aggregate(mergeable, F.lit(0).cast("long"), lambda acc, x: acc + le_i64_decode(x["value"])),
-    )
-    grouped = grouped.withColumn("sum_long", sum_long)
-
-    concat_asc = F.aggregate(
-        F.reverse(mergeable), F.lit(b""), lambda acc, x: F.concat(acc, x["value"])
-    )
-    oldest_wins = F.element_at(mergeable, -1)["value"]
-
     merged_value = (
-        F.when(kind == CellOp.ADD, be_i64_encode(F.col("sum_long")))
-        .when(kind == CellOp.ADDINT64, le_i64_encode(F.col("sum_long")))
-        .when(kind == CellOp.APPEND, concat_asc)
-        .otherwise(oldest_wins)
+        f"CASE kind WHEN {CellOp.ADD} THEN {be_i64_encode_sql('sum_long')} "
+        f"WHEN {CellOp.ADDINT64} THEN {le_i64_encode_sql('sum_long')} "
+        # APPEND: ts-ascending concat; PUT_IFABSENT: oldest wins
+        f"WHEN {CellOp.APPEND} THEN aggregate(reverse(mergeable), X'', (acc, x) -> concat(acc, x.value)) "
+        "ELSE get(mergeable, size(mergeable) - 1).value END"
     )
-    merged_cell = F.when(
-        (run_len > 0) & (maxv_c >= 1),
-        F.array(F.struct((-F.get(e, 0)["nts"]).alias("ts"), merged_value.alias("value"))),
-    ).otherwise(F.expr(f"cast(array() as {_ENTRY_T})"))
-
+    merged_cell = (
+        "CASE WHEN run_len > 0 AND maxv >= 1 "
+        f"THEN array(named_struct('ts', -get(entries, 0).nts, 'value', {merged_value})) "
+        f"ELSE cast(array() as {_ENTRY_T}) END"
+    )
     # sequential pass over the remainder: DEL_QUALIFIER arming + version cap
-    rest_out = _seq_pass("rest", "(case when run_len > 0 then 1 else 0 end)")
+    rest_out = _seq_pass("rest", "CASE WHEN run_len > 0 THEN 1 ELSE 0 END")
+    return _explode(staged, f"concat({merged_cell}, {rest_out})")
 
-    versions = F.concat(merged_cell, rest_out)
+
+def _seq_pass(arr_sql: str, init_vnum_sql: str) -> str:
+    """SQL text of the sequential per-group pass: DEL_QUALIFIER arming
+    + version cap. ``arr_sql`` / ``init_vnum_sql`` are SQL fragments
+    over the staged columns (entries/rest/run_len/maxv)."""
+    put, dq = CellOp.PUT, CellOp.DEL_QUALIFIER
+    vnum2 = f"(acc.vnum + (case when x.sop = {put} then 1 else 0 end))"
+    emit = f"((x.sop = {put}) and (not (acc.prev = {dq})) and ({vnum2} <= maxv))"
     return (
-        grouped.select("row_key", "cf", "qualifier", F.explode(versions).alias("v"))
-        .select("row_key", "cf", "qualifier", F.col("v.ts").alias("ts"), F.col("v.value").alias("value"))
+        "aggregate("
+        f"{arr_sql}, "
+        f"named_struct('out', cast(array() as {_ENTRY_T}), "
+        f"'vnum', {init_vnum_sql}, 'prev', 0), "
+        "(acc, x) -> named_struct("
+        f"'out', case when {emit} then "
+        "concat(acc.out, array(named_struct('ts', -x.nts, 'value', x.value))) "
+        "else acc.out end, "
+        f"'vnum', {vnum2}, "
+        "'prev', x.sop)"
+        ").out"
+    )
+
+
+def _explode(grouped: DataFrame, versions_sql: str, ts: str = "v.ts") -> DataFrame:
+    """One output cell per element of the per-group version array."""
+    return grouped.selectExpr(*_KEY, f"explode({versions_sql}) as v").selectExpr(
+        *_KEY, f"{ts} as ts", "v.value as value"
     )
 
 
 def _put_only_fold(
     df: DataFrame,
     schema: TableSchema | None,
-    maxv_map: Column,
+    maxv: str,
     default_max_versions: int,
 ) -> DataFrame:
     """Visible view of a PUT-only op-log (pre-filtered by phase A).
@@ -394,40 +368,16 @@ def _put_only_fold(
         else default_max_versions == 1
     )
     if all_k1:
-        best = F.max_by(
-            F.struct(F.col("ts").alias("ts"), F.col("value").alias("value")),
-            F.struct(F.col("ts"), F.col("seq")),
-        )
         return (
-            df.groupBy("row_key", "cf", "qualifier")
-            .agg(best.alias("_b"))
-            .select(
-                "row_key", "cf", "qualifier",
-                F.col("_b.ts").alias("ts"), F.col("_b.value").alias("value"),
-            )
+            df.groupBy(*_KEY)
+            .agg(F.expr("max_by(struct(ts, value), struct(ts, seq)) as _b"))
+            .selectExpr(*_KEY, "_b.ts as ts", "_b.value as value")
         )
-    entries = F.slice(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    (-F.col("ts")).alias("nts"),
-                    (-F.col("seq")).alias("nseq"),
-                    F.col("value").alias("value"),
-                )
-            )
-        ),
-        1,
-        F.coalesce(maxv_map[F.col("cf")], F.lit(default_max_versions)),
+    entries = (
+        "slice(sort_array(collect_list(struct(-ts AS nts, -seq AS nseq, value))), "
+        f"1, {maxv}) as _e"
     )
-    return (
-        df.groupBy("row_key", "cf", "qualifier")
-        .agg(entries.alias("_e"))
-        .select("row_key", "cf", "qualifier", F.explode("_e").alias("v"))
-        .select(
-            "row_key", "cf", "qualifier",
-            (-F.col("v.nts")).alias("ts"), F.col("v.value").alias("value"),
-        )
-    )
+    return _explode(df.groupBy(*_KEY).agg(F.expr(entries)), "_e", ts="-v.nts")
 
 
 def _counter_only_fold(df: DataFrame, kind: int) -> DataFrame:
@@ -439,20 +389,11 @@ def _counter_only_fold(df: DataFrame, kind: int) -> DataFrame:
     plans ONE exchange and both aggregations partial map-side. No
     arrays, no merge-run scanning; maxversions is irrelevant (a merge
     emits one cell)."""
-    dec = be_i64_decode if kind == CellOp.ADD else le_i64_decode
-    enc = be_i64_encode if kind == CellOp.ADD else le_i64_encode
-    per_ts = df.groupBy("row_key", "cf", "qualifier", "ts").agg(
-        F.max_by("value", "seq").alias("value")
-    )
-    return per_ts.groupBy("row_key", "cf", "qualifier").agg(
-        F.max("ts").alias("ts"),
-        enc(F.sum(dec(F.col("value")))).alias("value"),
-    ).select("row_key", "cf", "qualifier", "ts", "value")
-
-
-def _spark_entry_type() -> str:
-    # sorted-entry struct type for empty-array casts (nts/sop/nseq sort key)
-    return "array<struct<nts:bigint,sop:int,nseq:bigint,value:binary>>"
+    dec = be_i64_decode_sql if kind == CellOp.ADD else le_i64_decode_sql
+    enc = be_i64_encode_sql if kind == CellOp.ADD else le_i64_encode_sql
+    per_ts = df.groupBy(*_KEY, "ts").agg(F.expr("max_by(value, seq) as value"))
+    total = enc(f"sum({dec('value')})")
+    return per_ts.groupBy(*_KEY).agg(F.expr("max(ts) as ts"), F.expr(f"{total} as value"))
 
 
 def kv_current_view(kv_oplog: DataFrame, *, now_us: int | None = None) -> DataFrame:

@@ -2,8 +2,10 @@
 
 Local mode mirrors the driver harness (local[$SPARK_GRAFT_CPUS]); on a
 real cluster every setting here except master/driver-memory carries
-over unchanged. AQE is on so skewed scans/joins re-plan at runtime —
-the scale path for the 100 TB target.
+over unchanged. Without the environment overrides, the core count and
+the driver heap come from the box (``box_cpus``,
+``box_driver_memory``). AQE is on so skewed scans/joins re-plan at
+runtime — the scale path for the 100 TB target.
 """
 
 from __future__ import annotations
@@ -11,6 +13,33 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_MAX_HEAP_GB = 16
+
+
+def box_cpus() -> str:
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on (its
+    affinity set, which a cpuset-limited container narrows)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if cpus:
+        return cpus
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:  # no affinity API on this platform
+        return str(os.cpu_count() or 1)
+
+
+def box_driver_memory() -> str:
+    """``TERA_SPARK_DRIVER_MEM``, else half the physical RAM, between
+    1g and 16g."""
+    mem = os.environ.get("TERA_SPARK_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        phys_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 30)
+    except (AttributeError, ValueError, OSError):
+        return f"{_MAX_HEAP_GB}g"
+    return f"{min(_MAX_HEAP_GB, max(1, phys_gb // 2))}g"
 
 
 def get_spark(
@@ -23,9 +52,9 @@ def get_spark(
     RocksDB provider — the scale choice when stateful-operator state
     (sessionizer keys, dedup windows) exceeds executor heap; the default
     in-memory provider is faster for the local test volumes."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = box_cpus()
     if shuffle_partitions is None:
-        shuffle_partitions = max(int(cpus) if cpus.isdigit() else 32, 8)
+        shuffle_partitions = max(int(cpus) if cpus.isdigit() else os.cpu_count() or 8, 8)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -42,7 +71,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("TERA_SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", box_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -399,3 +399,29 @@ def test_collect_stream_excludes_row_family_delete_marks(spark):
         ("r1", "cf0", "q", 10, b"keep"),
         ("r3", "cf0", "q", 12, b"kept2"),
     ]
+
+
+def test_scan_user_values_with_quotes_and_backslashes(spark):
+    """Row keys, qualifiers and scan bounds holding ' and \\ reach the
+    plan as literals, never as SQL text; a schema cf name holding them
+    goes through the fold's quoting helper."""
+    from tera_spark.operators.scan import ScanDescriptor, scan
+
+    odd_cf = "c'f\\"
+    schema = TableSchema("t").add_column_family(odd_cf, max_versions=2).add_column_family("cf0")
+    cells = make_cells(
+        spark,
+        [
+            ("a'1", odd_cf, "q'\\", 1, "PUT", "v1"),
+            ("a'1", odd_cf, "q'\\", 2, "PUT", "v1b"),
+            ("a'2\\", odd_cf, "q'\\", 1, "PUT", "v2"),
+            ("a'2\\", odd_cf, "other", 1, "PUT", "x"),
+            ("a'3", odd_cf, "q'\\", 1, "PUT", "v3"),
+            ("a'2\\", "cf0", "q'\\", 1, "PUT", "y"),
+        ],
+    )
+    desc = ScanDescriptor(start="a'2", end="a'3", columns={odd_cf: ["q'\\"]})
+    assert got(scan(cells, schema, desc, now_us=NOW)) == [("a'2\\", odd_cf, "q'\\", 1, b"v2")]
+    # the cf name rides the fold's legal-cf filter and its maxversions
+    # map: both versions of a'1 stay visible (the default keeps one)
+    assert len(got(current_view(cells, schema, now_us=NOW))) == 6

@@ -626,3 +626,91 @@ def test_catalog_routes_tombstone_tables_to_merge_free_fold(spark, tmp_path):
     b2.add("r1", "A", "n", 5, ts=3)
     cat.append("t", b2.to_df(spark), commit_seq=4, op_kinds=b2.op_kinds)
     assert fold_route(cat._op_kinds_union("t")) == "general"
+
+
+# op kinds that rule out both mark kinds (DEL_ROW, DEL_FAMILY): the
+# general and merge_free routes then build no mark joins
+_NO_MARKS_GENERAL = {CellOp.PUT, CellOp.ADD, CellOp.APPEND, CellOp.DEL_QUALIFIER, CellOp.DEL_QUALIFIERS}
+_NO_MARKS_MERGE_FREE = {CellOp.PUT, CellOp.DEL_QUALIFIER, CellOp.DEL_QUALIFIERS}
+
+
+@pytest.mark.parametrize("seed", [3, 91])
+@pytest.mark.parametrize(
+    "op_kinds, route",
+    [
+        pytest.param(_NO_MARKS_GENERAL, "general", id="general"),
+        pytest.param(_NO_MARKS_MERGE_FREE, "merge_free", id="merge_free"),
+    ],
+)
+def test_mark_free_routes_match_unknown_kinds(spark, seed, op_kinds, route):
+    """When the op kinds rule out row and family deletes, the fold
+    skips the mark aggregates and both joins; its rows equal the
+    unknown-kinds fold's (which builds them) and the model's."""
+    from tera_spark.plans import plan_str
+
+    assert fold_route(op_kinds) == route
+    rows = [r for r in _gen_oplog(seed) if r[4] in op_kinds]
+    df = spark.createDataFrame(rows, CELL_SCHEMA)
+    schema = _schema()
+    fast = current_view(df, schema, now_us=NOW, op_kinds=op_kinds)
+    assert "Join" not in plan_str(fast, "formatted")
+    got = {tuple(r) for r in fast.collect()}
+    assert got == {tuple(r) for r in current_view(df, schema, now_us=NOW).collect()}
+    assert {(rk, cf, qu, ts, bytes(v)) for rk, cf, qu, ts, v in got} == model_view(rows, schema, NOW)
+
+
+class _Py4jCalls:
+    """Counts py4j round trips (``send_command``) while active."""
+
+    def __init__(self, spark) -> None:
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.calls = 0
+
+    def __enter__(self):
+        orig = self.client.send_command
+
+        def counted(*a, **k):
+            self.calls += 1
+            return orig(*a, **k)
+
+        self.client.send_command = counted
+        return self
+
+    def __exit__(self, *exc) -> None:
+        del self.client.send_command
+
+
+@pytest.mark.parametrize(
+    "op_kinds, route, budget",
+    [
+        pytest.param(None, "general", 300, id="general"),
+        pytest.param(_NO_MARKS_GENERAL, "general", 200, id="general-no-marks"),
+        pytest.param({CellOp.PUT, *CellOp.DELETES}, "merge_free", 200, id="merge_free"),
+        pytest.param({CellOp.PUT}, "put_only", 200, id="put_only"),
+        pytest.param({CellOp.ADD}, "counter", 200, id="counter"),
+    ],
+)
+def test_fold_construction_py4j_budget(spark, tmp_path, op_kinds, route, budget):
+    """Building a fold over a parquet op-log costs a bounded number of
+    py4j round trips: the fold is SQL text, not Column trees composed
+    node by node (one round trip per node). Every phase-A condition
+    (snapshot seq, per-cell TTL, legal cf, cf TTL) is in play."""
+    import gc
+
+    from tera_spark.model import CELL_TTL_SCHEMA
+
+    assert fold_route(op_kinds) == route
+    path = str(tmp_path / "oplog")
+    rows = [r + (None,) for r in _gen_oplog(1, n=50)]
+    spark.createDataFrame(rows, CELL_TTL_SCHEMA).write.parquet(path)
+    oplog = spark.read.parquet(path)
+    schema = _schema()
+
+    def build():
+        return current_view(oplog, schema, now_us=NOW, snapshot_seq=40, op_kinds=op_kinds)
+
+    build()  # the first build warms py4j's class and method lookups
+    gc.collect()
+    with _Py4jCalls(spark) as counter:
+        build()
+    assert counter.calls <= budget, f"{route}: {counter.calls} py4j calls > {budget}"
