@@ -97,7 +97,7 @@ def main() -> None:
                 lo = rng.randrange(args.rows - 100)
                 n = rng.randint(1, 100)
                 t0 = time.perf_counter()
-                out = seeker.scan_range(key(lo), key(lo + n))
+                out = list(seeker.scan_range(key(lo), key(lo + n)))
                 scans.append((time.perf_counter() - t0) * 1e3)
                 assert len({c[0] for c in out}) == n, "scan_range lost rows"
             r = {

@@ -287,6 +287,18 @@ class Catalog:
         ]
         return rb, w, masked
 
+    def _seq_masks(self, name: str) -> tuple[int | None, list[tuple[int, int]]]:
+        """``_read_masks`` as the watermark and the hidden [lo, hi] seq
+        windows (rollbacks, then masked gaps)."""
+        rb, w, gaps = self._read_masks(name)
+        return w, [(int(r["after"]) + 1, int(r["upto"])) for r in rb] + gaps
+
+    def visible_max_seq(self, name: str) -> int | None:
+        """Max seq of the rows ``read_oplog`` shows (its masks applied),
+        from the op-log index: no Spark job."""
+        w, masked = self._seq_masks(name)
+        return self.oplog_index(name).max_seq(w, masked)
+
     def _rollbacks(self, name: str) -> list[dict]:
         p = self.root / name / "rollbacks.json"
         return json.loads(p.read_text()) if p.exists() else []
@@ -784,8 +796,8 @@ class Catalog:
         if snapshot_seq is not None:
             top = snapshot_seq
         else:
-            mx = oplog.agg({"seq": "max"}).collect()[0][0]
-            top = int(mx) if mx is not None else -1
+            top = self.visible_max_seq(name)
+            top = top if top is not None else -1
         (self.root / name / "snapshots" / f"{sid}.json").write_text(
             json.dumps({"seq": top})
         )
@@ -1034,8 +1046,7 @@ class Catalog:
             else:
                 groups.append([m])
 
-        rollbacks, w, masks = self._read_masks(name)
-        masks += [(r["after"] + 1, r["upto"]) for r in rollbacks]
+        w, masks = self._seq_masks(name)
 
         def masked(lo: int, hi: int) -> bool:
             return (w is not None and hi > w) or any(a <= hi and lo <= b for a, b in masks)
@@ -1704,13 +1715,13 @@ class Catalog:
                 # many tiny disjoint files: nothing to fold, but the
                 # layout itself is the problem (listing + footer + task
                 # overhead per file) — re-shard toward ~128 MB files
-                # (the merge-tablet analog). Byte-based so the rule is
-                # scale-independent and converges: the target bucket
-                # count strictly shrinks the file count or the rule
-                # stops firing.
+                # (the merge-tablet analog). Byte-based with no file
+                # count floor, so the answer is box-independent, and it
+                # converges: the target bucket count strictly shrinks
+                # the file count or the rule stops firing.
                 total_b = sum(m.bytes for m in nonempty)
                 target = max(total_b // (128 << 20), 1)
-                if n_files > 16 and total_b / n_files < (16 << 20) and target < n_files:
+                if total_b / n_files < (16 << 20) and target < n_files:
                     action, reason = "optimize", "small-file layout (avg file far below 128 MB target)"
                     buckets = int(target)
                 else:

@@ -151,8 +151,6 @@ def main(argv: list[str] | None = None) -> int:
     sp = sub.add_parser("scan")
     sp.add_argument("table"); sp.add_argument("--start"); sp.add_argument("--end")
     sp.add_argument("--limit", type=int, default=100)
-    sp.add_argument("--seek", action="store_true",
-                    help="client-side range scan (no Spark job; small ranges)")
     sp.add_argument("--all-versions", action="store_true",
                     help="every retained version per column (teracli scanallv)")
     sp = sub.add_parser("compact"); sp.add_argument("table")
@@ -397,80 +395,26 @@ def main(argv: list[str] | None = None) -> int:
                 for ts, value in versions:
                     print(f"{args.row} {cf}:{qu} @{ts} {value!r}")
     elif args.cmd == "scan":
-        sschema = cat.get_schema(args.table)
-        if (
-            getattr(args, "seek", False)
-            and not sschema.kv_mode
-            and not sschema.hash_distribution
-            # hash tables fall through to the SDK path below: storage
-            # order is hash order, so a footer-pruned USER-key range
-            # over the prefixed layout would miss everything
-        ):
-            from tera_spark.operators.seek import Seeker
+        # the SDK scan: paged seek path, <hash=on> keys translated
+        import itertools
 
-            cells = Seeker(cat, args.table).scan_range(
-                args.start, args.end, number_limit=args.limit
-            )
-            for rk, cf, qu, ts, value in cells:
-                print(f"{rk} {cf}:{qu} @{ts} {bytes(value or b'')!r}")
-            return 0
+        from tera_spark.client import KvTable, Table
+        from tera_spark.operators.scan import ScanDescriptor
+        from tera_spark.operators.seek import Seeker
+
         if cat.get_schema(args.table).kv_mode:
-            from pyspark.sql import functions as F
-
-            kv = cat.view(args.table)
-            if args.start:
-                kv = kv.filter(F.col("key") >= args.start)
-            if args.end:
-                kv = kv.filter(F.col("key") < args.end)
-            for r in kv.orderBy("key").limit(args.limit).collect():
+            kv = KvTable(cat, args.table).scan(args.start, args.end)
+            for r in itertools.islice(kv, args.limit):
                 print(f"{r.key} {bytes(r.value or b'')!r}")
             return 0
-        from tera_spark.operators.scan import ScanDescriptor, scan
-
-        schema = cat.get_schema(args.table)
-        if schema.hash_distribution:
-            # hash tables: storage order is hash order — scan all, strip
-            # the prefix, re-apply the USER-key range (the SDK's rule)
-            import itertools
-
-            from pyspark.sql import functions as F
-
-            from tera_spark.functions.keys import with_plain_row_key
-
-            if getattr(args, "all_versions", False):
-                # scanallv applies here too: lift the version trim on
-                # a COPY handed to the fold (Table.scan re-fetches the
-                # schema from disk, so the lift must ride the schema
-                # object the scan consumes)
-                schema = _versions_lifted(schema)
-            v = with_plain_row_key(
-                scan(
-                    cat.read_oplog(args.table),
-                    schema,
-                    None,
-                    op_kinds=cat._op_kinds_union(args.table),
-                )
+        t = Table(cat, args.table)
+        if args.all_versions:
+            # teracli scanallv: every retained version (tombstones/TTL
+            # still apply) — the schema's version trim lifted on a copy
+            t._seeker = Seeker(
+                cat, args.table, schema=_versions_lifted(cat.get_schema(args.table))
             )
-            if args.start:
-                v = v.filter(F.col("row_key") >= args.start)
-            if args.end:
-                v = v.filter(F.col("row_key") < args.end)
-            it = v.orderBy("row_key", "cf", "qualifier", F.desc("ts")).toLocalIterator()
-            for r in itertools.islice(it, args.limit):
-                print(f"{r.row_key} {r.cf}:{r.qualifier} @{r.ts} {bytes(r.value or b'')!r}")
-            return 0
-        desc = ScanDescriptor(start=args.start, end=args.end, number_limit=args.limit)
-        if getattr(args, "all_versions", False):
-            # teracli scanallv: show every version still retained in the
-            # op-log (tombstones/TTL still apply; compaction trims to
-            # the schema cap) — scan-time version trim lifted on a copy
-            schema = _versions_lifted(schema)
-        for r in scan(
-            cat.read_oplog(args.table),
-            schema,
-            desc,
-            op_kinds=cat._op_kinds_union(args.table),
-        ).collect():
+        for r in t.scan(ScanDescriptor(start=args.start, end=args.end, number_limit=args.limit)):
             print(f"{r.row_key} {r.cf}:{r.qualifier} @{r.ts} {bytes(r.value or b'')!r}")
     elif args.cmd == "sql":
         # MySQL-frontend analog: the table is queryable as plain SQL
@@ -568,13 +512,11 @@ def main(argv: list[str] | None = None) -> int:
 
         keys = [ln.strip().split()[0] for ln in open(args.file) if ln.strip()]
         t = Table(cat, args.table)
+        got = t.multi_get(keys)
         # storage order: hash order on a <hash=on> table, user keys shown
-        rows = sorted(
-            t.batch_get(keys).collect(),
-            key=lambda r: (t._hk(r.row_key), r.cf, r.qualifier),
-        )
-        for r in rows:
-            print(f"{r.row_key} {r.cf}:{r.qualifier} @{r.ts} {bytes(r.value).decode(errors='replace')}")
+        for k in sorted(got, key=t._hk):
+            for rk, cf, qu, ts, value in got[k]:
+                print(f"{rk} {cf}:{qu} @{ts} {bytes(value).decode(errors='replace')}")
     elif args.cmd == "explain":
         import tera_spark.queries as Q
         from tera_spark.plans import explain_features

@@ -11,23 +11,24 @@ semantics, only the SDK's shape:
 
 - ``Table.get`` returns the RowReader::ToMap nesting
   (cf → qualifier → [(ts desc, value)]; include/tera/reader.h:52-55)
-  as plain Python dicts. Every row-sized read — ``Table.get``,
-  ``Table.multi_get``, ``KvTable.get`` — goes through the seek path
-  (operators/seek.py, the ``LowLevelSeek`` analog): footer-routed
-  pyarrow reads and a Python fold on the client, no Spark job. As in
-  tera's ``Table::Get``, the caller picks no access path. The Spark
-  operators (``operators.scan.get`` / ``batch_get``) remain the
-  DataFrame forms and the reference the seek path is tested against.
+  as plain Python dicts. Every row-bounded read — gets, scans and
+  both transaction kinds — goes through the seek path
+  (operators/seek.py, the ``LowLevelSeek`` / ``LowLevelScan`` analog):
+  footer-routed pyarrow reads and a Python fold on the client, no
+  Spark job. As in tera, the caller picks no access path. The Spark
+  operators (``operators.scan``, ``scan_df``, ``batch_get``) remain
+  the DataFrame forms and the reference the seek path is tested
+  against.
 - Writes auto-assign timestamps (server-assigned ts, tera_key.h:33)
   and carry a monotonically increasing sequence across commits
   (LevelDB sequence analog) so later writes win ties. Each write is
   one driver-written op-log file plus its commit record — no Spark
   job, as a tera write is a WAL append (TabletWriter::Write); a
   CheckAndApply checks through the seek path first.
-- ``Table.scan`` streams ordered visible cells through
-  ``toLocalIterator`` — the client-side iteration model of
-  ResultStream (include/tera/scan.h:26-67) without the session/RPC
-  machinery Spark makes unnecessary (SURVEY.md §3.1).
+- ``Table.scan`` streams ordered visible cells a page at a time, like
+  ResultStream (include/tera/scan.h:26-67). A ``<hash=on>`` table's
+  scan is the one Spark read left: user-key order over hash storage
+  needs a full sort of ``scan_df``.
 """
 
 from __future__ import annotations
@@ -35,7 +36,7 @@ from __future__ import annotations
 import time
 from collections.abc import Iterator
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from tera_spark.catalog import Catalog
@@ -46,6 +47,9 @@ from tera_spark.operators.scan import ScanDescriptor, batch_get, scan
 from tera_spark.operators.seek import Seeker
 from tera_spark.operators.txn import SingleRowTransaction
 from tera_spark.registry import TableSchema
+
+_CELL = Row("row_key", "cf", "qualifier", "ts", "value")
+_KV = Row("key", "value", "expire_ts")
 
 
 class Client:
@@ -233,30 +237,27 @@ class Table:
         prefix strips off (_user_range) — callers get exactly the
         range they asked for, at full-scan cost: the documented
         hash-table trade-off."""
-        if not self._hashed or desc is None or (desc.start is None and desc.end is None):
+        if not self._hashed or desc is None or (
+            desc.start is None and desc.end is None and desc.number_limit is None
+        ):
             return desc
         import dataclasses
 
-        # number_limit must be lifted too: applying it in hash-storage
-        # order BEFORE the user-key range filter would drop rows that
-        # are inside the requested range. _user_range re-applies it
-        # after the range filter.
+        # number_limit too: in hash-storage order it would keep the
+        # first HASHED keys; _user_range re-applies it in user-key order
         return dataclasses.replace(desc, start=None, end=None, number_limit=None)
 
     def _user_range(self, df: DataFrame, desc: ScanDescriptor | None) -> DataFrame:
         if not self._hashed or desc is None:
             return df
-        bounded = desc.start is not None or desc.end is not None
         if desc.start is not None:
             df = df.filter(F.col("row_key") >= desc.start)
         if desc.end is not None:
             df = df.filter(F.col("row_key") < desc.end)
-        # re-apply the limit that _hash_desc lifted out of the pushed
-        # descriptor (only lifted when bounds were present) — on top of
-        # scan order, so a bounded+limited hash scan returns the FIRST
-        # N cells in user-key order, not an arbitrary N (plans as
+        # re-apply the limit _hash_desc lifted, in user-key scan order:
+        # the FIRST N cells, not an arbitrary N (plans as
         # TakeOrderedAndProject: per-partition top-k, no global sort)
-        if bounded and desc.number_limit is not None:
+        if desc.number_limit is not None:
             df = df.orderBy("row_key", "cf", "qualifier", F.desc("ts")).limit(
                 desc.number_limit
             )
@@ -434,18 +435,25 @@ class Table:
     ) -> Iterator:
         """Ordered cell iteration (ResultStream). Yields Rows with
         (row_key, cf, qualifier, ts, value) in scan order: row_key,
-        cf, qualifier asc, ts desc. ``snapshot_seq`` reads as of a
-        write sequence (ScanDescriptor::SetSnapshot, scan.h:121)."""
-        v = scan(
-            self._cat.read_oplog(self.name),
-            self._cat.current_schema(self.name),
-            self._hash_desc(desc),
-            now_us=now_us,
-            snapshot_seq=snapshot_seq,
-            op_kinds=self._cat._op_kinds_union(self.name),
+        cf, qualifier asc, ts desc; ``number_limit`` keeps the first N.
+        ``snapshot_seq`` reads as of a write sequence
+        (ScanDescriptor::SetSnapshot, scan.h:121). The seek path's paged
+        scan serves it, except on a hash table (a sorted ``scan_df``)."""
+        desc = desc or ScanDescriptor()
+        if self._hashed:
+            return (
+                self.scan_df(desc, now_us=now_us, snapshot_seq=snapshot_seq)
+                .orderBy("row_key", "cf", "qualifier", F.desc("ts"))
+                .toLocalIterator()
+            )
+        ts = (desc.ts_start, desc.ts_end)
+        cells = self._seeker.scan_range(
+            desc.start, desc.end, columns=desc.columns, column_families=desc.column_families,
+            max_versions=desc.max_versions, max_qualifiers=desc.max_qualifiers,
+            ts_range=ts if ts != (None, None) else None, number_limit=desc.number_limit,
+            now_us=now_us, snapshot_seq=snapshot_seq,
         )
-        out = self._user_range(self._strip_df(v), desc)
-        return out.orderBy("row_key", "cf", "qualifier", F.desc("ts")).toLocalIterator()
+        return (_CELL(*c) for c in cells)
 
     def scan_df(
         self,
@@ -454,12 +462,13 @@ class Table:
         now_us: int | None = None,
         snapshot_seq: int | None = None,
     ) -> DataFrame:
-        """The analytics-native form: visible cells as a DataFrame."""
+        """The analytics-native form: visible cells as a DataFrame,
+        folded with the schema the seek path uses."""
         return self._user_range(
             self._strip_df(
                 scan(
                     self._cat.read_oplog(self.name),
-                    self._cat.current_schema(self.name),
+                    self._seeker.schema,
                     self._hash_desc(desc),
                     now_us=now_us,
                     snapshot_seq=snapshot_seq,
@@ -487,17 +496,15 @@ class Table:
         return self._cat.refresh_index(self.name, cf, qualifier)
 
     def start_row_transaction(self, row_key: str) -> SingleRowTransaction:
-        return SingleRowTransaction(
-            self._cat.read_oplog(self.name),
-            self._cat.current_schema(self.name),
-            self._hk(row_key),
-        )
+        """StartRowTransaction (table.h:102): snapshot, reads and the
+        conflict check of the row go through the seek path."""
+        return SingleRowTransaction(self._seeker, self._hk(row_key))
 
     def commit_row_transaction(self, txn: SingleRowTransaction) -> None:
         """Conflict-check the row, then commit the txn's batch like
         ``apply_mutation``: a fresh table seq (above any rolled-back
         window, so the write cannot vanish) and a driver-written file."""
-        txn.check(self._cat.read_oplog(self.name))
+        txn.check()
         self._commit(txn.batch)
 
     # -- admin sugar (table.h:131-133) --------------------------------
@@ -538,11 +545,6 @@ class KvTable:
     def scan(
         self, start: str | None = None, end: str | None = None, *, now_us: int | None = None
     ) -> Iterator:
-        from tera_spark.operators.view import kv_current_view
-
-        df = self._cat.read_oplog(self.name)
-        if start is not None:
-            df = df.filter(F.col("key") >= start)
-        if end is not None:
-            df = df.filter(F.col("key") < end)
-        return kv_current_view(df, now_us=now_us).orderBy("key").toLocalIterator()
+        """Visible keys of [start, end) in key order, Rows (key, value,
+        expire_ts), by the seek path (Spark twin: ``kv_current_view``)."""
+        return (_KV(*kv) for kv in self._seeker.scan_range(start, end, now_us=now_us))

@@ -15,6 +15,9 @@ for folds built with ``F.expr`` (one py4j round trip per
 expression), and the Column form gives the same expression tree
 built node by node. Both analyze to the same Catalyst expressions.
 
+The filter comparators' n-byte little-endian integers
+(``le_fixed_*``) are rendered from the same byte swap and sign rule.
+
 Width rule for int64 decodes of values that are not 8 bytes long: the
 value's hex is left-padded with zeros, or cut to its first 16 hex
 digits, BEFORE any byte swap. In bytes: a short value gains leading
@@ -31,10 +34,6 @@ import struct
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-_TWO63 = "9223372036854775808"          # 2^63
-_TWO64 = "18446744073709551616"         # 2^64
-
 
 class _SQL:
     """Renders a codec as SQL text."""
@@ -58,27 +57,32 @@ class _COLUMNS:
     sub = staticmethod(operator.sub)
 
 
-def _hex16(r, x):
+def _hex(r, x, n: int = 8):
     """The width rule: ``lpad`` left-pads a short value's hex with
-    zeros and cuts a long one to its first 16 digits."""
-    return r.call("lpad", r.call("hex", x), r.lit(16), r.lit("0"))
+    zeros and cuts a long one to its first ``2n`` digits."""
+    return r.call("lpad", r.call("hex", x), r.lit(2 * n), r.lit("0"))
 
 
-def _swap16(r, h):
-    """Reverse the byte order of a 16-digit hex string."""
-    return r.call("concat", *[r.call("substring", h, r.lit(p), r.lit(2)) for p in range(15, 0, -2)])
+def _swap(r, h, n: int = 8):
+    """Reverse the byte order of a ``2n``-digit hex string."""
+    return r.call(
+        "concat", *[r.call("substring", h, r.lit(p), r.lit(2)) for p in range(2 * n - 1, 0, -2)]
+    )
 
 
-def _signed(r, h):
-    """A 16-digit hex string as a signed two's-complement int64.
+def _unsigned(r, h):
+    """A hex string as an unsigned decimal (``conv`` yields digits)."""
+    return r.cast(r.call("conv", h, r.lit(16), r.lit(10)), "decimal(20,0)")
 
-    ``conv(hex, 16, 10)`` yields the *unsigned* decimal as a string;
-    values >= 2^63 wrap to negative via decimal arithmetic (bigint
-    would overflow)."""
-    unsigned = r.cast(r.call("conv", h, r.lit(16), r.lit(10)), "decimal(20,0)")
+
+def _signed(r, h, n: int = 8):
+    """A ``2n``-digit hex string as a signed two's-complement integer:
+    values >= 2^(8n-1) wrap to negative via decimal arithmetic (bigint
+    would overflow; the literals are decimal strings for py4j)."""
+    unsigned = _unsigned(r, h)
     signed = r.when(
-        r.ge(unsigned, r.cast(r.lit(_TWO63), "decimal(20,0)")),
-        r.sub(unsigned, r.cast(r.lit(_TWO64), "decimal(21,0)")),
+        r.ge(unsigned, r.cast(r.lit(str(1 << (8 * n - 1))), "decimal(20,0)")),
+        r.sub(unsigned, r.cast(r.lit(str(1 << (8 * n))), "decimal(21,0)")),
         unsigned,
     )
     return r.cast(signed, "bigint")
@@ -86,21 +90,21 @@ def _signed(r, h):
 
 def _be_decode(r, x):
     # reference: DecodeBigEndain, atomic_merge_strategy.cc:40
-    return _signed(r, _hex16(r, x))
+    return _signed(r, _hex(r, x))
 
 
 def _le_decode(r, x):
     # reference: `*(int64_t*)value.data()`, atomic_merge_strategy.cc:43
-    return _signed(r, _swap16(r, _hex16(r, x)))
+    return _signed(r, _swap(r, _hex(r, x)))
 
 
 def _be_encode(r, x):
     # hex(bigint) renders two's complement: negatives are already 16 digits
-    return r.call("unhex", _hex16(r, r.cast(x, "bigint")))
+    return r.call("unhex", _hex(r, r.cast(x, "bigint")))
 
 
 def _le_encode(r, x):
-    return r.call("unhex", _swap16(r, _hex16(r, r.cast(x, "bigint"))))
+    return r.call("unhex", _swap(r, _hex(r, r.cast(x, "bigint"))))
 
 
 def be_i64_decode_sql(x: str) -> str:
@@ -143,6 +147,25 @@ def le_i64_encode(col: Column) -> Column:
     return _le_encode(_COLUMNS, col)
 
 
+def le_fixed_hex(col: Column, n: int) -> Column:
+    """The first ``n`` bytes of a binary, little-endian, as ``2n`` hex
+    digits — comparator integers (filter_comparator.cc:22-55)."""
+    return _swap(_COLUMNS, _hex(_COLUMNS, F.substring(col, 1, n), n), n)
+
+
+def le_fixed_decode(col: Column, n: int, *, signed: bool = True) -> Column:
+    """The first ``n`` bytes of a binary, little-endian → a signed long
+    or, with ``signed=False``, an unsigned decimal(20,0)."""
+    h = le_fixed_hex(col, n)
+    return _signed(_COLUMNS, h, n) if signed else _unsigned(_COLUMNS, h)
+
+
+def le_fixed_encode(col: Column, n: int) -> Column:
+    """bigint → its low ``n`` bytes, little-endian."""
+    low = F.substring(_hex(_COLUMNS, col), 17 - 2 * n, 2 * n)
+    return F.unhex(_swap(_COLUMNS, low, n))
+
+
 def be_double_decode(col: Column) -> Column:
     """binary(8) IEEE-754 big-endian → double, via bit arithmetic.
 
@@ -153,7 +176,7 @@ def be_double_decode(col: Column) -> Column:
     sign = F.when(bits < 0, F.lit(-1.0)).otherwise(F.lit(1.0))
     # shiftright on negatives drags sign bits; mask via unsigned decimal trick
     ubits = F.when(
-        bits < 0, bits.cast("decimal(20,0)") + F.lit(_TWO64).cast("decimal(21,0)")
+        bits < 0, bits.cast("decimal(20,0)") + F.lit(str(1 << 64)).cast("decimal(21,0)")
     ).otherwise(bits.cast("decimal(20,0)"))
     exp = ((ubits / F.lit(2 ** 52).cast("decimal(20,0)")).cast("long") % 2048).cast("int")
     mantissa = (ubits % F.lit(2 ** 52).cast("decimal(20,0)")).cast("double")

@@ -31,7 +31,12 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from tera_spark.functions.codecs import be_double_decode
+from tera_spark.functions.codecs import (
+    be_double_decode,
+    le_fixed_decode,
+    le_fixed_encode,
+    le_fixed_hex,
+)
 
 _OPS = {"<", "<=", "==", "!=", ">=", ">"}
 
@@ -41,34 +46,21 @@ _INT_WIDTHS = {
 }
 
 
-def _swap_pairs(hexcol: Column, nbytes: int) -> Column:
-    return F.concat(*[F.substring(hexcol, pos, 2) for pos in range(nbytes * 2 - 1, 0, -2)])
-
-
 def decode_typed(value: Column, value_type: str) -> Column:
     """Decode a comparator-encoded binary value to a comparable column.
 
     Integers are native little-endian fixed width (EncodeInteger,
     filter_comparator.cc:22-55); decimal is a native-endian double;
     binary stays raw (Spark compares binary bytewise unsigned, same
-    as the reference's string compare).
+    as the reference's string compare). The byte swap and the sign
+    rule are the codecs' (functions/codecs.py).
     """
     if value_type == "binary":
         return value
     if value_type == "decimal":
-        le_hex = _swap_pairs(F.lpad(F.hex(F.substring(value, 1, 8)), 16, "0"), 8)
-        return be_double_decode(F.unhex(le_hex))
+        return be_double_decode(F.unhex(le_fixed_hex(value, 8)))
     n = _INT_WIDTHS[value_type]
-    le_hex = _swap_pairs(F.lpad(F.hex(F.substring(value, 1, n)), n * 2, "0"), n)
-    unsigned = F.conv(le_hex, 16, 10).cast("decimal(20,0)")
-    if value_type.startswith("u"):
-        return unsigned
-    # sign-extend: value >= 2^(8n-1) → subtract 2^(8n); decimal-string
-    # literals because 2^63/2^64 exceed py4j's long conversion
-    half = F.lit(str(1 << (8 * n - 1))).cast("decimal(20,0)")
-    full = F.lit(str(1 << (8 * n))).cast("decimal(21,0)")
-    signed = F.when(unsigned >= half, unsigned - full).otherwise(unsigned)
-    return signed.cast("long")
+    return le_fixed_decode(value, n, signed=not value_type.startswith("u"))
 
 
 def encode_typed_col(col: Column, value_type: str) -> Column:
@@ -78,12 +70,9 @@ def encode_typed_col(col: Column, value_type: str) -> Column:
     width encoding."""
     if value_type == "binary":
         return col.cast("binary")
-    n = 8 if value_type == "decimal" else _INT_WIDTHS[value_type]
     if value_type == "decimal":
         raise NotImplementedError("decimal column encode: use driver-side encode_typed")
-    full_hex = F.lpad(F.hex(col.cast("long")), 16, "0")
-    low_hex = F.substring(full_hex, 17 - 2 * n, 2 * n)
-    return F.concat(F.unhex(_swap_pairs(low_hex, n)), F.lit(b"\x00"))
+    return F.concat(le_fixed_encode(col.cast("long"), _INT_WIDTHS[value_type]), F.lit(b"\x00"))
 
 
 def encode_typed(v, value_type: str) -> bytes:

@@ -17,8 +17,10 @@ Order of application mirrors the server:
   4. qualifier projection and time-range — *post*-filters after
      version counting (`ProcessRowBuffer`, tablet_io.cc:2287-2323).
 
-Tablet routing / sessions / sliding-window prefetch have no analog:
-Spark's scheduler and `toLocalIterator` own distribution+streaming.
+Tablet routing / sessions / sliding-window prefetch have no analog
+here: this is the DataFrame form. The SDK's row-bounded scan is the
+seek path's paged scan (`operators/seek.Seeker.scan_range`), pinned
+equal to this operator by tests/test_seek.py.
 """
 
 from __future__ import annotations
@@ -105,7 +107,9 @@ def scan(
     if desc.ts_end is not None:
         v = v.filter(F.col("ts") <= desc.ts_end)
     if desc.number_limit is not None:
-        v = v.limit(desc.number_limit)
+        # the first N cells in scan order, not any N of the unordered
+        # fold (plans as TakeOrderedAndProject)
+        v = v.orderBy("row_key", "cf", "qualifier", F.desc("ts")).limit(desc.number_limit)
     return v
 
 

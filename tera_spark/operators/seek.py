@@ -29,8 +29,13 @@ read touches one row group, never a cluster job. The index reads a
 footer once per file identity (name, size, mtime, inode), mirroring
 the SDK meta cache; a catalog Seeker shares its table's index.
 
+Range scans take the same path, paged like tera's ResultStream
+(`ResultStreamImpl`, src/sdk/scan_impl.h:83-100): ``scan_range``
+holds one page, not the range.
+
 Equivalence with the Spark fold is pinned by property tests
-(tests/test_seek.py): random op-logs → `Seeker.get` ≡ `scan.get`.
+(tests/test_seek.py): random op-logs → `Seeker.get` ≡ `scan.get`,
+`Table.scan` ≡ sorted `scan_df`.
 """
 
 from __future__ import annotations
@@ -38,7 +43,9 @@ from __future__ import annotations
 import time
 from bisect import bisect_left
 from collections import OrderedDict, defaultdict
+from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
+from itertools import groupby, islice
 from pathlib import Path
 
 import pyarrow as pa
@@ -46,7 +53,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from tera_spark.model import CellOp
-from tera_spark.oplog_index import FileMeta, OplogIndex
+from tera_spark.oplog_index import FileMeta, OplogIndex, seq_hidden
 from tera_spark.registry import TableSchema
 
 _ATOMIC = frozenset(
@@ -56,7 +63,8 @@ _MARKS = frozenset((CellOp.DEL_ROW, CellOp.DEL_FAMILY, CellOp.DEL_QUALIFIERS))
 _NEG_INF = -(1 << 62)
 _CELL_COLS = ["row_key", "cf", "qualifier", "ts", "op", "value", "seq"]
 _KV_COLS = ["key", "value", "expire_ts", "seq"]
-_THREADS = 8  # parallel row-group reads per multi_get
+_THREADS = 8  # parallel row-group reads per multi_get or scan page
+_PAGE_ROWS = 4096  # op-log rows a range scan buffers before it folds
 
 
 def _now_us() -> int:
@@ -86,29 +94,37 @@ def _post_fold(
     cells: list[tuple],
     columns: dict[str, list[str]] | None,
     max_versions: int | None,
-    ts_range: tuple[int, int] | None,
+    ts_range: tuple[int | None, int | None] | None,
+    *,
+    column_families: list[str] | None = None,
+    max_qualifiers: int | None = None,
 ) -> list[tuple]:
     """Scan-level semantics on one row's folded cells, mirroring
-    scan.py steps 3-4: the version cap counts BEFORE the projection and
-    time-range post-filters. Returns cells in (cf, qualifier, ts desc)
+    scan.py steps 1 and 3-4: the cf set, then the version and qualifier
+    caps count BEFORE the projection and time-range post-filters (a
+    None time bound is open). Returns cells in (cf, qualifier, ts desc)
     order."""
     cells = sorted(cells, key=lambda c: (c[1], c[2], -c[3]))
-    if max_versions is not None:
-        per_col: dict[tuple, int] = defaultdict(int)
+    if column_families or columns:
+        cfs = set(column_families or ()) | set(columns or ())
+        cells = [c for c in cells if c[1] in cfs]
+    if max_versions is not None or max_qualifiers is not None:
         kept = []
-        for c in cells:
-            per_col[(c[1], c[2])] += 1
-            if per_col[(c[1], c[2])] <= max_versions:
-                kept.append(c)
+        for _, by_cf in groupby(cells, key=lambda c: c[1]):
+            cols = groupby(by_cf, key=lambda c: c[2])
+            for _, versions in islice(cols, max_qualifiers):
+                kept.extend(islice(versions, max_versions))
         cells = kept
     if columns:
         cells = [
             c
             for c in cells
-            if c[1] in columns and (not columns[c[1]] or c[2] in columns[c[1]])
+            if (c[1] in columns and (not columns[c[1]] or c[2] in columns[c[1]]))
+            or (column_families and c[1] in column_families)
         ]
     if ts_range is not None:
-        cells = [c for c in cells if ts_range[0] <= c[3] <= ts_range[1]]
+        lo, hi = ts_range
+        cells = [c for c in cells if (lo is None or lo <= c[3]) and (hi is None or c[3] <= hi)]
     return cells
 
 
@@ -207,9 +223,20 @@ def fold_row(
     return out
 
 
+def fold_kv(rows: list[tuple], now_us: int) -> tuple | None:
+    """One key's KV op-log rows (key, value, expire_ts, seq) → visible
+    (key, value, expire_ts) or None: the newest write by seq wins, a NULL
+    value is a tombstone, an expired TTL hides (kv_current_view twin)."""
+    key, value, expire, _ = max(rows, key=lambda r: r[3], default=(None,) * 4)
+    if value is None or (expire is not None and 0 < expire <= now_us):
+        return None
+    return key, value, expire
+
+
 class Seeker:
-    """Point-read client over a catalog table, routed by the table's
-    op-log index (shared with the catalog) — the SDK meta-cache analog.
+    """Point-read and range-scan client over a catalog table, routed by
+    the table's op-log index (shared with the catalog) — the SDK
+    meta-cache analog; ``schema`` pins the fold's schema.
     ``Seeker(path=...)`` indexes that directory itself, with no commit
     census: no watermark, gap or rollback mask applies."""
 
@@ -224,14 +251,16 @@ class Seeker:
     ):
         if catalog is not None:
             self._index = catalog.oplog_index(table)
-            # re-read per use (stat-guarded): an online update_schema
-            # applies to the next read, as it does on the Spark path
-            self._get_schema = lambda: catalog.current_schema(table)
-            self._get_masks = lambda: catalog._read_masks(table)
+            self._get_masks = lambda: catalog._seq_masks(table)
         else:
             self._index = OplogIndex(Path(path))
-            self._get_schema = lambda: schema
-            self._get_masks = lambda: ([], None, [])
+            self._get_masks = lambda: (None, [])
+        # re-read per use (stat-guarded): an online update_schema
+        # applies to the next read, as it does on the Spark path
+        self._get_schema = (
+            (lambda: catalog.current_schema(table)) if catalog is not None and schema is None
+            else (lambda: schema)
+        )
         # decoded-row-group LRU — the block-cache analog (reference:
         # per-LG block cache + persistent_cache; a hot point-read
         # working set stays decoded in client memory). Keyed by the
@@ -268,20 +297,20 @@ class Seeker:
                 self._rg_cache.popitem(last=False)
         return t
 
-    def _read(self, work, row_mask, now_us: int, snapshot_seq: int | None = None):
+    def _read(self, work, row_mask, now_us: int | None, snapshot_seq: int | None = None):
         """Visible op-log rows by key, of the row groups ``work``
         [(file, row group)] where ``row_mask(table)`` holds (None: every
         row); table-mode rows are 7-tuples. Visibility applies the rules
         read_oplog applies, so the seek path agrees with Spark reads:
         rollback windows, the commit watermark, commit-CAS gaps, an
-        optional snapshot, then per-cell TTL (the expire_ts column,
-        present only in files written by TTL puts)."""
+        optional snapshot; then, unless ``now_us`` is None, per-cell TTL
+        (the expire_ts column, present only in files written by TTL
+        puts)."""
         columns = _KV_COLS if self._kv else _CELL_COLS
         n = len(columns)
-        rollbacks, watermark, gaps = self._get_masks()
         # masked seq windows: RollbackDrop (dbformat.h:156) and the
         # in-flight/crashed concurrent windows below the watermark
-        masked = [(r["after"] + 1, r["upto"]) for r in rollbacks] + gaps
+        watermark, masked = self._get_masks()
         # above the top: a torn batch over the watermark, or the snapshot
         top = min((x for x in (watermark, snapshot_seq) if x is not None), default=None)
         # pyarrow releases the GIL during IO/decode — parallel group reads
@@ -297,11 +326,10 @@ class Seeker:
             has_ttl = "expire_ts" not in columns and "expire_ts" in t.column_names
             cols = columns + ["expire_ts"] if has_ttl else columns
             for row in zip(*(t[c].to_pylist() for c in cols)):
-                seq = row[n - 1]
-                if (top is not None and seq > top) or any(lo <= seq <= hi for lo, hi in masked):
+                if seq_hidden(row[n - 1], top, masked):
                     continue
                 if has_ttl:
-                    if row[-1] is not None and 0 < row[-1] <= now_us:
+                    if now_us is not None and row[-1] is not None and 0 < row[-1] <= now_us:
                         continue  # per-cell TTL (mutation.h:30-33)
                     row = row[:n]
                 by_key[row[0]].append(row)
@@ -316,7 +344,7 @@ class Seeker:
             if lo is None or hi is None or ((i := bisect_left(ks, lo)) < len(ks) and ks[i] <= hi)
         ]
 
-    def _read_keys(self, keys: list[str], now_us: int, snapshot_seq: int | None = None):
+    def _read_keys(self, keys: list[str], now_us: int | None, snapshot_seq: int | None = None):
         key_col, wanted = ("key" if self._kv else "row_key"), pa.array(keys)
         return self._read(
             self._route(keys), lambda t: pc.is_in(t[key_col], value_set=wanted),
@@ -357,70 +385,87 @@ class Seeker:
                 out[k] = cells
         return out
 
+    def oplog_rows(self, keys: list[str]) -> dict[str, list[tuple]]:
+        """``keys``' op-log rows as ``Catalog.read_oplog`` shows them:
+        masked, per-cell TTL not applied (transaction conflict checks)."""
+        return self._read_keys(keys, None)
+
     def scan_range(
         self,
         start: str | None = None,
         end: str | None = None,
         *,
         columns: dict[str, list[str]] | None = None,
+        column_families: list[str] | None = None,
         max_versions: int | None = None,
-        ts_range: tuple[int, int] | None = None,
+        max_qualifiers: int | None = None,
+        ts_range: tuple[int | None, int | None] | None = None,
         number_limit: int | None = None,
         now_us: int | None = None,
         snapshot_seq: int | None = None,
-    ):
-        """Client-side bounded ordered scan — the per-RPC
-        `LowLevelScan` shape (src/io/tablet_io.cc:939-1137) for small
-        ranges: footer bounds prune to the row groups overlapping
-        [start, end), the rows fold locally, and cells stream back in
-        (row_key, cf, qualifier, ts desc) order. Use the Spark `scan`
-        operator for large ranges — this path is for interactive
-        range reads (teracli scan ergonomics) where job latency
-        dominates."""
-        if self._kv:
-            raise ValueError("scan_range serves table-mode; use kv view for KV scans")
+    ) -> Iterator[tuple]:
+        """Ordered scan of [start, end), paged like `LowLevelScan`
+        (src/io/tablet_io.cc:939-1137): row groups are read in key-``lo``
+        order until ``_PAGE_ROWS`` op-log rows are buffered; keys below
+        the next unread group's ``lo`` are complete, so they fold and
+        stream out, and the rest carries over. Memory is the overlap
+        depth times one page, for any range size. Yields table cells
+        (row_key, cf, qualifier, ts, value) in scan order, with
+        `operators.scan`'s options, or KV (key, value, expire_ts)."""
         now_us = _now_us() if now_us is None else now_us
-        work = [
-            (m, rg) for lo, hi, m, rg in self._index.groups()
-            if lo is None or hi is None
-            or not ((end is not None and lo >= end) or (start is not None and hi < start))
-        ]
+        schema = self.schema
+        kv = bool(schema is not None and schema.kv_mode)
+        key_col = "key" if kv else "row_key"
+        # groups without key bounds may hold any key: they sort first
+        work = sorted((
+            g for g in self._index.groups() if g[0] is None or g[1] is None
+            or not ((end is not None and g[0] >= end) or (start is not None and g[1] < start))
+        ), key=lambda g: g[0] or "")
 
         def in_range(t):
             m = None
             if start is not None:
-                m = pc.greater_equal(t["row_key"], start)
+                m = pc.greater_equal(t[key_col], start)
             if end is not None:
-                lt = pc.less(t["row_key"], end)
+                lt = pc.less(t[key_col], end)
                 m = lt if m is None else pc.and_(m, lt)
             return m
 
-        by_key = self._read(work, in_range, now_us, snapshot_seq)
-        schema = self.schema
-        out: list[tuple] = []
-        for k in sorted(by_key):
-            out.extend(
-                _post_fold(
-                    fold_row(by_key[k], schema, now_us=now_us),
-                    columns, max_versions, ts_range,
-                )
-            )
-            if number_limit is not None and len(out) >= number_limit:
-                return out[:number_limit]
-        return out
+        def pages():
+            pending: dict[str, list[tuple]] = defaultdict(list)
+            i = 0
+            while True:
+                page, buffered = [], sum(map(len, pending.values()))
+                while i < len(work) and (not page or buffered < _PAGE_ROWS):
+                    _, _, m, rg = work[i]
+                    page.append((m, rg))
+                    buffered += m.groups[rg][2]
+                    i += 1
+                for k, rows in self._read(page, in_range, now_us, snapshot_seq).items():
+                    pending[k].extend(rows)
+                # no unread group can add to a key below its lo
+                bound = (work[i][0] or "") if i < len(work) else None
+                for k in sorted(k for k in pending if bound is None or k < bound):
+                    rows = pending.pop(k)
+                    if kv:
+                        if (got := fold_kv(rows, now_us)) is not None:
+                            yield got
+                    else:
+                        yield from _post_fold(
+                            fold_row(rows, schema, now_us=now_us), columns, max_versions,
+                            ts_range, column_families=column_families,
+                            max_qualifiers=max_qualifiers,
+                        )
+                if i == len(work):
+                    return
+
+        return islice(pages(), number_limit)
 
     def get_kv(self, key: str, *, now_us: int | None = None):
-        """KV-mode point read: newest write by seq wins, NULL value is
-        a tombstone, expired TTL keys invisible (kv_current_view twin)."""
+        """KV-mode point read: the ``fold_kv`` of the key's rows (the
+        kv_current_view twin); its value, or None."""
         if not self._kv:
             raise ValueError("use get for table-mode tables")
         now_us = _now_us() if now_us is None else now_us
-        rows = self._read_keys([key], now_us).get(key, [])
-        if not rows:
-            return None
-        key_, value, expire, seq = max(rows, key=lambda r: r[3])
-        if value is None:
-            return None
-        if expire is not None and expire > 0 and expire <= now_us:
-            return None
-        return value
+        got = fold_kv(self._read_keys([key], now_us).get(key, []), now_us)
+        return got[1] if got is not None else None

@@ -6,66 +6,57 @@ at commit the server rejects the write if the row changed since the
 snapshot (``TabletWriter::CheckSingleRowTxnConflict``,
 src/io/tablet_writer.h:62-64).
 
-Spark-native re-expression: the snapshot is the row's max op sequence
-number at txn start; commit re-reads it and refuses the mutation batch
-if any later op on the row exists. The check + append must be driven
-by a single writer per table (Spark jobs are single-driver, and the
-catalog's append is one atomic job) — the same serialization point the
-reference gets from the tablet server's writer thread.
+Re-expression: the snapshot is the row's max op sequence number at
+txn start; reads are bounded by it, and commit re-reads it and refuses
+the mutation batch if any later op on the row exists. All three read
+through the table's ``Seeker`` (operators/seek.py), no Spark job. The
+check + append must be driven by a single writer per table — the same
+serialization point the reference gets from the tablet server's writer
+thread.
 
 Cross-row/cross-table transactions: see ``GlobalTransaction`` below —
 the Percolator capability (src/sdk/global_txn.cc) without the 2PC lock
-protocol, which a single-committer engine doesn't need.
+protocol, which a single-committer engine doesn't need. Its reads and
+its validation go through the Seeker too.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
 from tera_spark.operators.mutation import MutationBatch
-from tera_spark.operators.scan import get
-from tera_spark.registry import TableSchema
+from tera_spark.operators.seek import Seeker
 
 
 class RowTxnConflict(Exception):
     """Row changed between txn start and commit."""
 
 
+def _newest(cells: list[tuple]) -> bytes | None:
+    """The newest version's value of a one-column read, or None."""
+    return bytes(cells[0][4]) if cells and cells[0][4] is not None else None
+
+
 class SingleRowTransaction:
-    def __init__(
-        self,
-        cells: DataFrame,
-        schema: TableSchema | None,
-        row_key: str,
-        *,
-        now_us: int | None = None,
-    ):
-        self._cells = cells
-        self._schema = schema
+    """``row_key``'s (storage key) transaction; committed by
+    ``Table.commit_row_transaction``."""
+
+    def __init__(self, seeker: Seeker, row_key: str, *, now_us: int | None = None):
+        self._seeker = seeker
         self._row_key = row_key
         self._now_us = now_us
-        self._snapshot_seq = self._row_max_seq(cells)
-        self.batch = MutationBatch(base_seq=(self._snapshot_seq or 0) + 1)
+        self._snapshot_seq = self._row_max_seq()
+        self.batch = MutationBatch()
 
-    def _row_max_seq(self, cells: DataFrame) -> int | None:
-        row = (
-            cells.filter(F.col("row_key") == self._row_key)
-            .agg(F.max("seq").alias("mx"))
-            .collect()
-        )
-        return row[0].mx if row and row[0].mx is not None else None
+    def _row_max_seq(self) -> int | None:
+        rows = self._seeker.oplog_rows([self._row_key]).get(self._row_key, [])
+        return max((r[-1] for r in rows), default=None)
 
     # --- reads inside the txn (snapshot-bounded) ----------------------
     def read(self, cf: str, qualifier: str) -> bytes | None:
-        rows = get(
-            self._cells,
-            self._schema,
-            self._row_key,
-            columns={cf: [qualifier]},
-            now_us=self._now_us,
-        ).collect()
-        return bytes(rows[0].value) if rows and rows[0].value is not None else None
+        # a row without ops at the snapshot reads empty (-1: below every seq)
+        snap = self._snapshot_seq if self._snapshot_seq is not None else -1
+        return _newest(self._seeker.get(
+            self._row_key, columns={cf: [qualifier]}, now_us=self._now_us, snapshot_seq=snap,
+        ))
 
     # --- writes accumulate on self.batch ------------------------------
     def put(self, cf: str, qualifier: str, value, ts: int | None = None):
@@ -76,30 +67,12 @@ class SingleRowTransaction:
         self.batch.delete_column(self._row_key, cf, qualifier, ts=ts)
         return self
 
-    def check(self, current_cells: DataFrame) -> None:
+    def check(self) -> None:
         """The conflict check: raise RowTxnConflict if the row gained
-        ops in ``current_cells`` since the snapshot."""
-        latest = self._row_max_seq(current_cells)
+        ops since the snapshot."""
+        latest = self._row_max_seq()
         if latest != self._snapshot_seq:
-            raise RowTxnConflict(
-                f"row {self._row_key!r}: seq {self._snapshot_seq} -> {latest}"
-            )
-
-    def commit(self, current_cells: DataFrame | None = None) -> DataFrame:
-        """Conflict-check against the table's current state (the txn's
-        own cells by default) and return the mutation DataFrame to
-        append, its seqs starting at the row's snapshot seq + 1. A
-        catalog table commits through ``Table.commit_row_transaction``
-        instead, which takes fresh table seqs."""
-        self.check(current_cells if current_cells is not None else self._cells)
-        return self.batch.to_df(self._cells.sparkSession, now_us=self._now_us)
-
-
-def start_row_transaction(
-    cells: DataFrame, schema: TableSchema | None, row_key: str, **kw
-) -> SingleRowTransaction:
-    """Table::StartRowTransaction analog."""
-    return SingleRowTransaction(cells, schema, row_key, **kw)
+            raise RowTxnConflict(f"row {self._row_key!r}: seq {self._snapshot_seq} -> {latest}")
 
 
 class GlobalTxnConflict(Exception):
@@ -119,9 +92,10 @@ class GlobalTransaction:
     atomic driver-written op-log append per table, so optimistic
     validation suffices:
 
-    * snapshot   — per touched table, the max op ``seq`` at first
-      touch; all txn reads are bounded by it (``snapshot_seq`` in the
-      view builder), giving a consistent cut across tables.
+    * snapshot   — per touched table, the max visible op ``seq`` at
+      first touch (``Catalog.visible_max_seq``, from the op-log index);
+      all txn reads are bounded by it (``Seeker.get(snapshot_seq=)``),
+      giving a consistent cut across tables.
     * validate   — at commit, any op on a *written* row with
       ``seq > snapshot`` aborts (write-write conflict; same granularity
       as ``CheckSingleRowTxnConflict`` but across rows and tables).
@@ -138,13 +112,11 @@ class GlobalTransaction:
     """
 
     def __init__(self, catalog, *, now_us: int | None = None):
-        from tera_spark.operators.mutation import MutationBatch
-
         self._cat = catalog
         self._now_us = now_us
         self._snap: dict[str, int] = {}
         self._snap_gaps: dict[str, list[tuple[int, int]]] = {}
-        self._batches: dict[str, "MutationBatch"] = {}
+        self._batches: dict[str, MutationBatch] = {}
         self._write_rows: dict[str, set[str]] = {}
 
     # --- hash-distribution key translation ----------------------------
@@ -174,13 +146,11 @@ class GlobalTransaction:
             # then remembered (conservative — at worst a spurious
             # conflict), never missed.
             self._snap_gaps[table] = list(self._cat._masked_gaps(table))
-            mx = self._cat.read_oplog(table).agg(F.max("seq")).first()[0]
+            mx = self._cat.visible_max_seq(table)
             self._snap[table] = mx if mx is not None else 0
         return self._snap[table]
 
     def _batch(self, table: str):
-        from tera_spark.operators.mutation import MutationBatch
-
         self._snapshot(table)  # pin the snapshot before the first write too
         if table not in self._batches:
             self._batches[table] = MutationBatch()
@@ -189,20 +159,12 @@ class GlobalTransaction:
 
     # --- reads (snapshot-bounded, consistent across tables) -----------
     def read(self, table: str, row_key: str, cf: str, qualifier: str) -> bytes | None:
-        from tera_spark.operators.scan import ScanDescriptor, scan
-
-        row_key = self._hk(table, row_key)
-        rows = scan(
-            self._cat.read_oplog(table),
-            self._cat.get_schema(table),
-            ScanDescriptor(start=row_key, end=row_key + "\x00", columns={cf: [qualifier]}),
-            now_us=self._now_us,
-            snapshot_seq=self._snapshot(table),
-        ).collect()
-        # collect() order is not the fold order: on maxversions>1 cfs
-        # several versions survive — the txn read means the NEWEST one
-        rows.sort(key=lambda r: r.ts, reverse=True)
-        return bytes(rows[0].value) if rows and rows[0].value is not None else None
+        # on maxversions>1 cfs several versions survive: the txn read
+        # means the NEWEST one
+        return _newest(Seeker(self._cat, table).get(
+            self._hk(table, row_key), columns={cf: [qualifier]},
+            now_us=self._now_us, snapshot_seq=self._snapshot(table),
+        ))
 
     # --- writes -------------------------------------------------------
     def put(self, table: str, row_key: str, cf: str, qualifier: str, value, ts=None):
@@ -277,22 +239,15 @@ class GlobalTransaction:
             if not rows:
                 continue
             snap = self._snap[table]
+            gaps = self._snap_gaps.get(table, [])
             # conflict = any now-visible op on a write-set row that our
             # snapshot reads could not see: above the snapshot seq, OR
             # inside a window that was still gap-masked (in-flight) at
-            # snapshot time and has since committed
-            changed = F.col("seq") > snap
-            for g_lo, g_hi in self._snap_gaps.get(table, []):
-                changed = changed | (
-                    (F.col("seq") >= g_lo) & (F.col("seq") <= g_hi)
-                )
-            conflicted = (
-                self._cat.read_oplog(table)
-                .filter(F.col("row_key").isin(sorted(rows)) & changed)
-                .limit(1)
-                .count()
-            )
-            if conflicted:
+            # snapshot time and has since committed. Visible = the
+            # read_oplog masks; per-cell TTL does not hide a write.
+            got = Seeker(self._cat, table).oplog_rows(sorted(rows)).values()
+            seqs = (r[-1] for key_rows in got for r in key_rows)
+            if any(s > snap or any(lo <= s <= hi for lo, hi in gaps) for s in seqs):
                 raise GlobalTxnConflict(
                     f"table {table!r}: write-set row changed after seq {snap}"
                 )

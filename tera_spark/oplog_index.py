@@ -44,6 +44,11 @@ class FileMeta:
                                        default=None))
 
 
+def seq_hidden(seq: int, top: int | None, masked) -> bool:
+    """A row is masked above ``top`` or inside a [lo, hi] window."""
+    return (top is not None and seq > top) or any(lo <= seq <= hi for lo, hi in masked)
+
+
 def _stats(md, rg: int, ci: int | None) -> tuple:
     st = md.row_group(rg).column(ci).statistics if ci is not None else None
     if st is None or not st.has_min_max:
@@ -130,7 +135,32 @@ class OplogIndex:
 
     def raw_max_seq(self) -> int | None:
         """Max seq over every file, rolled-back windows included."""
-        return max((m.seq_hi for m in self.files() if m.seq_hi is not None), default=None)
+        return self.max_seq()
+
+    def max_seq(self, top: int | None = None, masked=()) -> int | None:
+        """Max seq of a row at or below ``top`` and outside every
+        ``masked`` [lo, hi] window. A visible footer max is the answer;
+        only a file whose max is hidden has its seq column read."""
+        best = None
+        for m in sorted(self.files(), key=lambda m: (m.seq_hi is not None, m.seq_hi or 0),
+                        reverse=True):
+            if m.seq_hi is None or (best is not None and m.seq_hi <= best):
+                break
+            if not seq_hidden(m.seq_hi, top, masked):
+                return m.seq_hi
+            if (top is not None and m.seq_lo > top) or any(
+                lo <= m.seq_lo and m.seq_hi <= hi for lo, hi in masked
+            ):
+                continue  # every row of the file is hidden
+            seq = pq.read_table(str(m.path), columns=["seq"])["seq"]
+            keep = pc.less_equal(seq, top) if top is not None else None
+            for lo, hi in masked:
+                out = pc.or_(pc.less(seq, lo), pc.greater(seq, hi))
+                keep = out if keep is None else pc.and_(keep, out)
+            v = pc.max(seq.filter(keep)).as_py()
+            if v is not None and (best is None or v > best):
+                best = v
+        return best
 
     def record(self, seq: int) -> dict:
         """Commit record ``<seq>.json``; {} when unreadable."""

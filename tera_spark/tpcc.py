@@ -32,11 +32,10 @@ Row-key layout (sorted, so entity scans are range scans):
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from tera_spark.catalog import Catalog
 from tera_spark.client import Table
 from tera_spark.operators.mutation import MutationBatch
+from tera_spark.operators.scan import ScanDescriptor
 
 CF = "cf0"
 
@@ -170,8 +169,8 @@ class MockTpccDb:
 
 class SparkTpccDb:
     """The engine under test: same five transactions over one cell
-    table via catalog + client facade (reads = current-view point
-    lookups; each transaction's writes = ONE MutationBatch commit)."""
+    table via catalog + client facade (reads = SDK gets and range
+    scans; each transaction's writes = ONE MutationBatch commit)."""
 
     TABLE = "tpcc"
 
@@ -181,18 +180,16 @@ class SparkTpccDb:
             catalog.create_table(f"{self.TABLE} {{ {CF} <maxversions=1> }}")
         self.t = Table(catalog, self.TABLE)
 
-    # -- read helpers (current-view lookups) --------------------------
+    # -- read helpers (SDK reads: the seek path, no Spark job) ---------
     def _rows(self, prefix: str) -> dict[str, dict[str, str]]:
-        v = self.cat.view(self.TABLE).filter(
-            (F.col("row_key") >= prefix) & (F.col("row_key") < prefix + "\x7f")
-        )
         out: dict[str, dict[str, str]] = {}
-        for r in v.collect():
-            out.setdefault(r.row_key, {})[r.qualifier] = bytes(r.value).decode()
+        for r in self.t.scan(ScanDescriptor(start=prefix, end=prefix + "\x7f")):
+            # scan order is ts desc per column: the first is the newest
+            out.setdefault(r.row_key, {}).setdefault(r.qualifier, bytes(r.value).decode())
         return out
 
     def _row(self, key: str) -> dict[str, str]:
-        return self._rows(key).get(key, {})
+        return {qu: vs[0][1].decode() for qu, vs in self.t.get(key).get(CF, {}).items()}
 
     # -- load ---------------------------------------------------------
     def load(self, *, warehouses: int, districts: int, customers: int, items: int):

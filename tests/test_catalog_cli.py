@@ -1270,7 +1270,7 @@ def test_cli_seek_scan_on_hash_table_falls_back(spark, tmp_path, capsys):
     for i in range(4):
         assert main(["--root", root, "put", "h", f"u{i}", "d:q", f"v{i}", "--ts", "1"]) == 0
     capsys.readouterr()
-    assert main(["--root", root, "scan", "h", "--seek", "--start", "u1", "--end", "u3"]) == 0
+    assert main(["--root", root, "scan", "h", "--start", "u1", "--end", "u3"]) == 0
     out = capsys.readouterr().out
     assert "u1 " in out and "u2 " in out and "u3 " not in out and "u0 " not in out
 

@@ -300,3 +300,38 @@ def test_create_hash_table_with_hash_num_presplits(client):
 
     with _pytest.raises(ValueError, match="non-hash table with hash_num"):
         client.create_table("plain { d }", hash_num=4)
+
+
+def test_scan_number_limit_keeps_first_cells_in_scan_order(client, capsys):
+    """number_limit means the first N cells in (row_key, cf, qualifier,
+    ts desc) order on every scan form: the DataFrame operator, the SDK
+    scan and teracli scan --limit — not any N of the unordered fold."""
+    from tera_spark.cli import main
+
+    client.create_table("lim {c <maxversions=2>}")
+    t = client.open_table("lim")
+    for part in range(3):  # three driver-written files, PUT and ADD ops
+        b = MutationBatch()
+        for i in range(part, 20, 3):
+            b.put(f"k{i:02d}", "c", "v", f"v{i}", ts=1)
+            b.add(f"k{i:02d}", "c", "n", i, ts=1)
+        t.apply_mutation(b)
+    t.put("k01", "c", "v", "v1b", ts=2)
+    want = [
+        ("k00", "n", 1), ("k00", "v", 1), ("k01", "n", 1), ("k01", "v", 2), ("k01", "v", 1),
+    ]
+
+    def head(rows):
+        return [(r.row_key, r.qualifier, r.ts) for r in rows]
+
+    assert head(t.scan_df(ScanDescriptor(number_limit=5)).collect()) == want
+    assert head(t.scan(ScanDescriptor(number_limit=5))) == want
+    assert head(t.scan_df(ScanDescriptor(start="k10", number_limit=3)).collect()) == [
+        ("k10", "n", 1), ("k10", "v", 1), ("k11", "n", 1),
+    ]
+    capsys.readouterr()
+    assert main(["--root", str(client.catalog.root), "scan", "lim", "--start", "k10",
+                 "--limit", "3"]) == 0
+    assert [line.split()[0] for line in capsys.readouterr().out.splitlines()] == [
+        "k10", "k10", "k11",
+    ]

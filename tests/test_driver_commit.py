@@ -196,6 +196,95 @@ def test_raw_max_seq_and_rollback_start_no_spark_job(spark, tmp_path):
     assert t.get("r")["d"]["q"][0][1] == b"v0"
 
 
+def test_sdk_scans_and_transactions_start_no_spark_job(spark, tmp_path):
+    """Table.scan, KvTable.scan, a row transaction and global
+    transactions (plain and cas=True, two tables) read and commit
+    through the seek path and the driver: no Spark job."""
+    from tera_spark.operators.scan import ScanDescriptor
+
+    c = Client(spark, str(tmp_path / "cat"))
+    for name in ("t", "u"):
+        c.create_table(f"{name} {{ d }}")
+    c.create_table("kv")
+    t, u, kv = (c.open_table(n) for n in ("t", "u", "kv"))
+    sc = spark.sparkContext
+    group = f"driver-scan-{os.getpid()}-{time.time_ns()}"
+    sc.setJobGroup(group, "driver-scan probe")
+    try:
+        for i in range(5):
+            t.put(f"r{i}", "d", "q", f"v{i}")
+        kv.put("k1", "a")
+        kv.put("k2", "b")
+        assert [r.row_key for r in t.scan(ScanDescriptor(start="r1", number_limit=3))] == [
+            "r1", "r2", "r3",
+        ]
+        assert [(r.key, r.value) for r in kv.scan()] == [("k1", b"a"), ("k2", b"b")]
+        txn = t.start_row_transaction("r0")
+        assert txn.read("d", "q") == b"v0"
+        t.commit_row_transaction(txn.put("d", "q", "row-txn"))
+        g = c.new_global_transaction()
+        assert g.read("t", "r1", "d", "q") == b"v1"
+        g.put("t", "r1", "d", "q", "g1").put("u", "r1", "d", "q", "g1")
+        assert g.commit() == {"t": 1, "u": 1}
+        g = c.new_global_transaction()
+        assert g.read("u", "r1", "d", "q") == b"g1"
+        g.put("t", "r2", "d", "q", "g2").put("u", "r2", "d", "q", "g2")
+        assert g.commit(cas=True) == {"t": 1, "u": 1}
+        assert _jobs_in(sc, group) == 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    want = {"r0": b"row-txn", "r1": b"g1", "r2": b"g2", "r3": b"v3", "r4": b"v4"}
+    assert {r.row_key: bytes(r.value) for r in t.scan()} == want
+    assert {r.row_key: bytes(r.value) for r in u.scan()} == {"r1": b"g1", "r2": b"g2"}
+
+
+def test_visible_max_seq_matches_masked_spark_max(spark, tmp_path):
+    """Catalog.visible_max_seq (the op-log index, no Spark job) equals
+    read_oplog's masked max(seq) through a torn batch, a rolled-back
+    tail, an in-flight gap and a file straddling the watermark."""
+    import pyarrow.parquet as pq
+
+    c = Client(spark, str(tmp_path / "cat"))
+    c.create_table("t { d }")
+    cat = c.catalog
+    t = c.open_table("t")
+
+    def check(want):
+        mx = cat.read_oplog("t").agg({"seq": "max"}).collect()[0][0]
+        assert cat.visible_max_seq("t") == mx == want
+
+    for i in range(5):
+        t.put(f"r{i}", "d", "q", "v")  # seqs 0..4
+    check(4)
+    # a torn batch: a file above the watermark, no commit record
+    torn = MutationBatch(base_seq=5).put("x", "d", "q", "t").put("y", "d", "q", "t")
+    pq.write_table(torn.to_arrow(), f"{cat.oplog_path('t')}/part-torn-00000.parquet")
+    check(4)
+    # a new writer's first commit rolls the tail back: (4, 6] masked
+    c2 = Client(spark, str(tmp_path / "cat"))
+    c2.open_table("t").put("r9", "d", "q", "v")
+    assert {"after": 4, "upto": 6} in cat._rollbacks("t")
+    check(7)
+    # an in-flight window: staged, no record; a later commit's record
+    # keeps it gap-masked
+    tok = cat.begin_disjoint_commit("t", 2, ["g"], "peer")
+    cat.stage_disjoint_data(tok, MutationBatch().put("g", "d", "q", "a").put("g", "d", "q", "b"))
+    cat.append_cas("t", MutationBatch().put("r8", "d", "q", "v"))
+    assert cat._masked_gaps("t") == [(tok["lo"], tok["hi"])]
+    check(tok["hi"] + 1)
+    # one file straddling the watermark: its max is a torn row
+    top = tok["hi"] + 1
+    b = MutationBatch(base_seq=top + 1)
+    for i in range(4):
+        b.put(f"s{i}", "d", "q", "v")
+    cat.append("t", b.to_arrow(), commit_seq=top + 2)
+    check(top + 2)
+    cat.abort_disjoint_commit(tok)
+
+
+# --- CheckAndApply through the seek path ------------------------------
+
+
 # --- CheckAndApply through the seek path ------------------------------
 
 

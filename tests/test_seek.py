@@ -279,9 +279,9 @@ def test_scan_range_matches_spark_scan(cat, spark):
         assert {(c[0], c[1], c[2], c[3], bytes(c[4])) for c in got} == want
 
     # ordered emission + number_limit truncates deterministically
-    full = seeker.scan_range(now_us=NOW)
+    full = list(seeker.scan_range(now_us=NOW))
     assert [c[0] for c in full] == sorted(c[0] for c in full)
-    assert seeker.scan_range(now_us=NOW, number_limit=5) == full[:5]
+    assert list(seeker.scan_range(now_us=NOW, number_limit=5)) == full[:5]
 
 
 def test_cli_scan_seek(cat, spark, capsys):
@@ -294,7 +294,7 @@ def test_cli_scan_seek(cat, spark, capsys):
     for i in range(5):
         t.put(f"r{i}", "c", "q", f"v{i}".encode(), ts=1)
     rc = cli_main(["--root", str(cat.root), "scan", "cli_scan",
-                   "--start", "r1", "--end", "r4", "--seek"])
+                   "--start", "r1", "--end", "r4"])
     out = capsys.readouterr().out.strip().splitlines()
     assert rc == 0
     assert [l.split()[0] for l in out] == ["r1", "r2", "r3"]
@@ -443,3 +443,175 @@ def test_seek_reads_through_same_name_rewrite(spark, tmp_path):
         assert t.get("a")["d"]["q"] == [(ts, v)]
         assert [cell[4] for cell in seeker.get("a")] == [v]
     assert names[0] == names[1]  # the second optimize reused the names
+
+
+# --- paged scans: Table.scan / KvTable.scan through the seek path ------
+
+
+def _scan_oplog(seed: int, n: int = 600) -> list[tuple]:
+    """``_gen_oplog`` spread over 40 row keys, with one ts per op (so a
+    version cap has no ties) and a per-cell TTL on some PUTs."""
+    import random
+
+    rng = random.Random(seed)
+    rows = []
+    for rk, cf, qu, ts, op, val, seq in _gen_oplog(seed, n=n):
+        rk = f"row{int(rk[3:]) * 4 + seq % 4:02d}"
+        ts = NOW - (NOW - ts) * 1000 + seq if ts > NOW // 2 else ts * 1000 + seq
+        exp = None
+        if op == CellOp.PUT and rng.random() < 0.2:
+            exp = NOW - 5 if rng.random() < 0.5 else NOW + 10_000_000
+        rows.append((rk, cf, qu, ts, op, val, seq, exp))
+    return rows
+
+
+def _paged_table(client, rows, name: str):
+    """A catalog table over ``rows`` in three legacy op-log files of
+    many small row groups, with overlapping key ranges: a scan crosses
+    many pages and carries rows over between them."""
+    import pyarrow.parquet as pq
+
+    from tera_spark.model import CELL_TTL_SCHEMA, arrow_table
+
+    client.create_table(
+        f"{name} {{cf0 <maxversions=1>, cf1 <maxversions=3>, "
+        f"cfttl <maxversions=2,ttl=1000>}}"
+    )
+    oplog = client.catalog.oplog_path(name)
+    for i, group in enumerate((8, 20, 1000)):
+        part = arrow_table([r for r in rows if r[6] % 3 == i], CELL_TTL_SCHEMA)
+        pq.write_table(part, f"{oplog}/part-{i:05d}.parquet", row_group_size=group)
+    return client.open_table(name)
+
+
+def _cells(rows) -> list[tuple]:
+    return [(r.row_key, r.cf, r.qualifier, r.ts, bytes(r.value)) for r in rows]
+
+
+def _scan_order(cells: list[tuple]) -> list[tuple]:
+    return sorted(cells, key=lambda c: (c[0], c[1], c[2], -c[3]))
+
+
+@pytest.mark.parametrize("seed", [11, pytest.param(12, marks=pytest.mark.slow)])
+def test_table_scan_pages_match_scan_df(spark, tmp_path, monkeypatch, seed):
+    """Table.scan (the paged seek-path scan, a page of 10 op-log rows)
+    ≡ sorted scan_df rows: versions, row/family/qualifier tombstones,
+    cf and per-cell TTL, every scan-level option, snapshots and
+    number_limit (the default-set seed runs every third case)."""
+    from tera_spark.client import Client
+    from tera_spark.operators import seek
+    from tera_spark.operators.scan import ScanDescriptor
+
+    monkeypatch.setattr(seek, "_PAGE_ROWS", 10)
+    t = _paged_table(Client(spark, str(tmp_path / "cat")), _scan_oplog(seed), "paged")
+    assert len(t._seeker._index.groups()) >= 30
+    cases = [
+        (None, None),
+        (ScanDescriptor(start="row05", end="row31"), None),
+        (ScanDescriptor(start="row20"), 300),
+        (ScanDescriptor(columns={"cf1": ["log", "cnt"], "cf0": []}), None),
+        (ScanDescriptor(column_families=["cfttl"], columns={"cf1": ["txt"]}), None),
+        (ScanDescriptor(end="row17", max_versions=1, max_qualifiers=2), None),
+        (ScanDescriptor(ts_start=NOW - 40_000, ts_end=NOW - 10_000), None),
+        (ScanDescriptor(start="row03", number_limit=17), None),
+        (ScanDescriptor(number_limit=9, max_versions=2), 450),
+    ]
+    for desc, snap in cases[::3] if seed == 11 else cases:
+        full = desc if desc is None or desc.number_limit is None else (
+            ScanDescriptor(**{**desc.__dict__, "number_limit": None})
+        )
+        want = _scan_order(_cells(
+            t.scan_df(full, now_us=NOW, snapshot_seq=snap).collect()
+        ))
+        if desc is not None and desc.number_limit is not None:
+            want = want[: desc.number_limit]
+        got = _cells(t.scan(desc, now_us=NOW, snapshot_seq=snap))
+        assert got == want, (desc, snap)
+        assert want or desc is None or desc.number_limit is None
+
+
+@pytest.mark.slow
+def test_hash_table_scan_orders_user_keys(spark, tmp_path):
+    """On a <hash=on> table Table.scan is the sorted scan_df (storage is
+    hash order); ranges and number_limit apply in user-key order."""
+    from tera_spark.client import Client
+    from tera_spark.operators.scan import ScanDescriptor
+
+    c = Client(spark, str(tmp_path / "cat"))
+    c.create_table("h <hash=on> { d <maxversions=2> }")
+    t = c.open_table("h")
+    for i in range(12):
+        t.put(f"u{i:02d}", "d", "q", f"v{i}", ts=1)
+        t.put(f"u{i:02d}", "d", "q", f"w{i}", ts=2)
+    full = _scan_order(_cells(t.scan_df().collect()))
+    assert _cells(t.scan()) == full and [c[0] for c in full[:2]] == ["u00", "u00"]
+    for desc in (
+        ScanDescriptor(start="u03", end="u07"),
+        ScanDescriptor(number_limit=5),
+        ScanDescriptor(start="u04", end="u09", number_limit=3),
+    ):
+        want = [
+            c for c in full
+            if (desc.start is None or c[0] >= desc.start) and (desc.end is None or c[0] < desc.end)
+        ][: desc.number_limit]
+        assert _cells(t.scan(desc)) == want, desc
+
+
+def test_kv_scan_matches_kv_current_view(spark, tmp_path, monkeypatch):
+    """KvTable.scan pages through the seek path and equals the Spark
+    KV fold: newest write wins, tombstones and expired TTLs hide."""
+    from tera_spark.client import Client
+    from tera_spark.operators import seek
+    from tera_spark.operators.view import kv_current_view
+
+    monkeypatch.setattr(seek, "_PAGE_ROWS", 2)
+    c = Client(spark, str(tmp_path / "cat"))
+    c.create_table("kv")
+    kv = c.open_table("kv")
+    for i in range(8):
+        kv.put(f"k{i}", f"v{i}")
+    kv.put("k2", "v2b")
+    kv.delete("k3")
+    kv.put("k5", "short", ttl_s=1)
+    kv.put("k6", "hour", ttl_s=3600)
+    later = int(time.time() * 1_000_000) + 600 * 1_000_000
+    for start, end in ((None, None), ("k2", "k6")):
+        oplog = c.catalog.read_oplog("kv")
+        if start is not None:
+            oplog = oplog.filter((oplog.key >= start) & (oplog.key < end))
+        want = sorted(
+            (r.key, bytes(r.value), r.expire_ts)
+            for r in kv_current_view(oplog, now_us=later).collect()
+        )
+        got = [(r.key, bytes(r.value), r.expire_ts) for r in kv.scan(start, end, now_us=later)]
+        assert got == want
+    assert [r.key for r in kv.scan(now_us=later)] == ["k0", "k1", "k2", "k4", "k6", "k7"]
+
+
+def test_table_scan_reads_only_the_first_page(spark, tmp_path, monkeypatch):
+    """The first cell of a full-table scan over 25 row groups reads
+    only the first page's groups."""
+    import pyarrow.parquet as pq
+
+    from tera_spark.client import Client
+    from tera_spark.model import CELL_SCHEMA, arrow_table
+    from tera_spark.operators import seek
+
+    monkeypatch.setattr(seek, "_PAGE_ROWS", 8)
+    c = Client(spark, str(tmp_path / "cat"))
+    c.create_table("lazy { d }")
+    rows = [(f"r{i:03d}", "d", "q", 1, CellOp.PUT, b"v", i) for i in range(100)]
+    pq.write_table(
+        arrow_table(rows, CELL_SCHEMA), f"{c.catalog.oplog_path('lazy')}/part-00000.parquet",
+        row_group_size=4,
+    )
+    t = c.open_table("lazy")
+    assert len(t._seeker._index.groups()) == 25
+    reads = []
+    group = Seeker._group
+    monkeypatch.setattr(Seeker, "_group", lambda self, *a: reads.append(a[1]) or group(self, *a))
+    it = t.scan()
+    assert next(it).row_key == "r000"
+    assert sorted(reads) == [0, 1]
+    assert [r.row_key for r in it] == [f"r{i:03d}" for i in range(1, 100)]
+    assert len(reads) == 25

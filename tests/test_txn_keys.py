@@ -12,46 +12,51 @@ from tera_spark.functions.keys import (
     with_hashed_row_key,
     with_plain_row_key,
 )
-from tera_spark.model import CellOp
 from tera_spark.operators.mutation import MutationBatch
-from tera_spark.operators.txn import RowTxnConflict, start_row_transaction
-from tera_spark.operators.view import current_view
-from tera_spark.registry import TableSchema
+from tera_spark.operators.txn import RowTxnConflict
 
 NOW = 2_000_000_000_000_000
 
 
-def _schema():
-    return TableSchema("t").add_column_family("cf0", max_versions=1)
+def _row_txn_table(spark, tmp_path):
+    """A catalog table whose row r1 holds v1 at ts 10."""
+    from tera_spark.client import Client
+
+    c = Client(spark, str(tmp_path / "txn_cat"))
+    c.create_table("t { cf0 <maxversions=1> }")
+    t = c.open_table("t")
+    t.put("r1", "cf0", "q", "v1", ts=10)
+    return t
 
 
-def test_row_txn_commit_applies(spark):
-    base = MutationBatch().put("r1", "cf0", "q", "v1", ts=10).to_df(spark)
-    txn = start_row_transaction(base, _schema(), "r1", now_us=NOW)
+def test_row_txn_commit_applies(spark, tmp_path):
+    t = _row_txn_table(spark, tmp_path)
+    txn = t.start_row_transaction("r1")
     assert txn.read("cf0", "q") == b"v1"
     txn.put("cf0", "q", "v2", ts=20)
-    out = txn.commit()
-    v = current_view(base.unionByName(out), _schema(), now_us=NOW)
-    assert bytes(v.collect()[0].value) == b"v2"
+    t.commit_row_transaction(txn)
+    assert t.get("r1") == {"cf0": {"q": [(20, b"v2")]}}
 
 
-def test_row_txn_conflict_detected(spark):
-    base = MutationBatch().put("r1", "cf0", "q", "v1", ts=10).to_df(spark)
-    txn = start_row_transaction(base, _schema(), "r1", now_us=NOW)
+def test_row_txn_conflict_detected(spark, tmp_path):
+    t = _row_txn_table(spark, tmp_path)
+    txn = t.start_row_transaction("r1")
     txn.put("cf0", "q", "mine", ts=20)
     # concurrent writer lands on the same row before commit
-    other = MutationBatch(base_seq=50).put("r1", "cf0", "q", "theirs", ts=15).to_df(spark)
+    t.put("r1", "cf0", "q", "theirs", ts=15)
     with pytest.raises(RowTxnConflict):
-        txn.commit(current_cells=base.unionByName(other))
+        t.commit_row_transaction(txn)
+    assert t.get("r1") == {"cf0": {"q": [(15, b"theirs")]}}
 
 
-def test_row_txn_other_rows_do_not_conflict(spark):
-    base = MutationBatch().put("r1", "cf0", "q", "v1", ts=10).to_df(spark)
-    txn = start_row_transaction(base, _schema(), "r1", now_us=NOW)
+def test_row_txn_other_rows_do_not_conflict(spark, tmp_path):
+    t = _row_txn_table(spark, tmp_path)
+    txn = t.start_row_transaction("r1")
     txn.put("cf0", "q", "mine", ts=20)
-    other = MutationBatch(base_seq=50).put("r2", "cf0", "q", "x", ts=15).to_df(spark)
-    out = txn.commit(current_cells=base.unionByName(other))
-    assert out.count() == 1
+    t.put("r2", "cf0", "q", "x", ts=15)
+    t.commit_row_transaction(txn)
+    assert t.get("r1") == {"cf0": {"q": [(20, b"mine")]}}
+    assert t.get("r2") == {"cf0": {"q": [(15, b"x")]}}
 
 
 def test_hash_key_round_trip(spark):

@@ -711,6 +711,12 @@ def test_fold_construction_py4j_budget(spark, tmp_path, op_kinds, route, budget)
 
     build()  # the first build warms py4j's class and method lookups
     gc.collect()
-    with _Py4jCalls(spark) as counter:
-        build()
+    # no cyclic-GC pass in the window: one, in whatever thread trips it,
+    # sends a detach round trip per collected Java object
+    gc.disable()
+    try:
+        with _Py4jCalls(spark) as counter:
+            build()
+    finally:
+        gc.enable()
     assert counter.calls <= budget, f"{route}: {counter.calls} py4j calls > {budget}"
