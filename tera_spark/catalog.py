@@ -18,6 +18,7 @@ analog of GetSnapshot's seq-pinned reads (tablet_io.cc:698-706).
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import time
 import uuid
@@ -47,6 +48,16 @@ def _replace_text(p: Path, text: str) -> None:
     tmp = p.with_name(f".{p.name}.tmp-{uuid.uuid4().hex[:12]}")
     tmp.write_text(text)
     tmp.replace(p)
+
+
+def _parse_alloc(data: bytes) -> dict | None:
+    """The seq counter's state from alloc.json's bytes: the first JSON
+    value (a tail a crash left after it is ignored), or None."""
+    try:
+        state, _ = json.JSONDecoder().raw_decode(data.decode())
+        return {"next": int(state["next"]), "live": state.get("live", [])}
+    except (ValueError, KeyError, TypeError, AttributeError):
+        return None
 
 
 def _json_files(d: Path, pattern: str) -> list[tuple[Path, dict]]:
@@ -117,9 +128,7 @@ class Catalog:
         # OS processes (id(self) is not — two CPython processes can
         # yield the same heap address, colliding reservation-manifest
         # paths and silently bypassing the row-disjointness check)
-        import os as _os
-
-        self._auto_writer_id = f"w{_os.getpid()}-{uuid.uuid4().hex[:8]}"
+        self._auto_writer_id = f"w{os.getpid()}-{uuid.uuid4().hex[:8]}"
         self._tail_checked: set[str] = set()  # per-process WAL-recovery memo
         self._indexes: dict[str, OplogIndex] = {}  # see oplog_index
         self._schema_memo: dict[str, tuple] = {}  # see current_schema
@@ -188,6 +197,20 @@ class Catalog:
         if not self.is_table_enabled(name):
             raise ValueError(f"table disabled: {name}")
 
+    def _read_gate(self, name: str, action: str = "read") -> None:
+        """Every read surface's check (``view``, SDK gets and scans,
+        transaction reads): enabled, authorized, metered as ``action``."""
+        self._check_enabled(name)
+        self._authorize("read", name)
+        self._consume(name, action)
+
+    def _write_gate(self, name: str) -> None:
+        """The write-side twin of ``_read_gate``, plus the writer lease."""
+        self._check_enabled(name)
+        self._authorize("write", name)
+        self._check_writer_lease(name)
+        self._consume(name, "write")
+
     def list_tables(self) -> list[str]:
         return sorted(p.name for p in self.root.iterdir() if (p / "schema.json").exists())
 
@@ -204,8 +227,6 @@ class Catalog:
         schema.json is re-parsed only when its (inode, mtime, size)
         changes; update_schema replaces the file, so the inode always
         does. Callers must not mutate the returned schema."""
-        import os
-
         p = self.root / name / "schema.json"
         try:
             st = os.stat(p)
@@ -311,13 +332,13 @@ class Catalog:
         raises the watermark past it."""
         holder = (self.writer_id or self._auto_writer_id) + "-rb"
         lock = self.root / name / "rollbacks.lock"
-        while not self._try_excl_claim(lock, holder, 60.0):
+        while not self.arbiter.try_claim(lock, holder, 60.0):
             time.sleep(0.002)
         try:
             ranges = self._rollbacks(name) + [{"after": after, "upto": upto}]
             _replace_text(self.root / name / "rollbacks.json", json.dumps(ranges))
         finally:
-            self._release_slot(lock, holder)
+            self.arbiter.release(lock, holder)
 
     def commit_watermark(self, name: str) -> int | None:
         """Highest committed write sequence — the group-commit
@@ -335,48 +356,11 @@ class Catalog:
         op_kinds: list[int] | None = None,
         lo: int | None = None,
     ) -> None:
+        """Write the commit record of window [lo, hi]. Its op kinds were
+        folded into the summary under the counter's lock before (see
+        ``_fold_op_kinds``)."""
         d = self.root / name / "commits"
         d.mkdir(exist_ok=True)
-        # rolling op-kinds summary: fold the batch's kinds into
-        # <table>/opkinds.json BEFORE the record lands, so reads are
-        # one O(1) file open instead of re-parsing every commit record
-        # (which grow one per batch until major compaction). The
-        # summary-first ordering keeps crash states conservative: a
-        # summary claiming kinds for a record that never committed is
-        # a superset, and supersets only demote fast-fold routes.
-        #
-        # The read-union-write cycle runs under the table's opkinds
-        # slot lock: the 16-writer contention smoke caught two DISJOINT
-        # fast-path committers racing it — one crashed on the (then
-        # shared) tmp name, and worse, last-write-wins could DROP a
-        # kind (A records {PUT}, B records {ADD}, B's write erases A's
-        # PUT) and mis-route a fast fold over a mixed log. Readers stay
-        # lock-free: the summary is replace-atomic, and a batch's rows
-        # only become visible after its record lands, which is after
-        # its locked summary update.
-        #
-        # An unchanged union leaves the file alone: a rename over an
-        # existing file flushes the new file's data first (ext4
-        # auto_da_alloc), which made the rewrite most of the cost of a
-        # driver-written commit.
-        holder = self.writer_id or self._auto_writer_id
-        lock = self.root / name / "opkinds.lock"
-        while not self._try_excl_claim(lock, holder, 60.0):
-            time.sleep(0.002)
-        try:
-            prev = (
-                self._op_kinds_union(name) if self.commit_watermark(name) is not None else set()
-            )
-            new = (
-                None
-                if (op_kinds is None or prev is None)
-                else prev | {int(k) for k in op_kinds}
-            )
-            s = self.root / name / "opkinds.json"
-            if not s.exists() or self._summary_kinds(s) != new:
-                self._write_op_kinds(name, new)
-        finally:
-            self._release_slot(lock, holder)
         rec: dict = {"seq": int(hi)}
         if lo is not None:
             # the window's low end — lets readers distinguish a GAP
@@ -391,6 +375,24 @@ class Catalog:
         # roll-forwards of the same marked window write the SAME record:
         # identical content, so the double replace is harmless
         _replace_text(d / f"{hi}.json", json.dumps(rec))
+
+    def _fold_op_kinds(self, name: str, op_kinds) -> None:
+        """Fold a commit's kinds into the rolling summary opkinds.json
+        (reads open one file, not every record). Runs under the seq
+        counter's lock, so no committer last-write-wins a kind away, and
+        before the record lands: a summary of a record that never landed
+        is a superset, which only demotes fast folds. An unchanged union
+        is not rewritten (a rename over a file flushes it on ext4)."""
+        s = self.root / name / "opkinds.json"
+        if s.exists():
+            prev = self._summary_kinds(s)
+        elif self.commit_watermark(name) is not None:
+            prev = self._op_kinds_union(name)  # legacy records: derive once
+        else:
+            prev = set()
+        new = None if op_kinds is None or prev is None else prev | {int(k) for k in op_kinds}
+        if new != prev or not s.exists():
+            self._write_op_kinds(name, new)
 
     def _write_op_kinds(self, name: str, kinds: set[int] | list[int] | None) -> None:
         _replace_text(
@@ -451,28 +453,47 @@ class Catalog:
         compaction, imports: Spark writes it) or a pyarrow table (the
         driver-built commits of the SDK, KV verbs, CAS and
         transactions: written from the driver, no Spark job).
-        ``commit_seq`` is the batch's max seq when the caller knows it
-        (MutationBatch does); otherwise it is computed from ``cells``
-        (a Spark aggregation for a DataFrame).
+        ``cells`` carry their own seqs (writes without them commit
+        through ``_commit_window``): ``commit_seq`` is their max when the
+        caller knows it, else computed (a Spark aggregation for a
+        DataFrame); the seq counter is bumped above it.
 
         Crash recovery is the WAL discard-uncommitted-tail step: if
         raw data exists above the watermark at the next append (a
         previous writer died between file write and commit record),
         that seq window becomes a rollback range — permanently masked,
-        never resurrected by the rising watermark. Single committing
-        writer per table, as everywhere in this engine."""
-        self._check_enabled(name)
-        self._authorize("write", name)
-        self._check_writer_lease(name)
-        self._consume(name, "write")
+        never resurrected by the rising watermark."""
+        self._write_gate(name)
         self._recover_tail(name)
-        # snapshot the rollback census: a rollback that APPEARS while
-        # this append runs (a reader/peer healed us as "dead" because
-        # our lease or reservation ttl lapsed mid-commit) must fence
-        # the commit record loudly — recording it would claim success
-        # for rows the new rollback window permanently masks.
-        rb0 = {(r["after"], r["upto"]) for r in self._rollbacks(name)}
-        w0 = self.commit_watermark(name)
+        self._land(name, cells, commit_seq, op_kinds, commit_lo)
+
+    def _commit_window(
+        self, name: str, n: int, op_kinds, cells, *, holder: str | None = None,
+        ttl_s: float = 60.0,
+    ) -> int:
+        """The commit of every write without seqs of its own (SDK verbs,
+        transactions, KV, ``append_cas``' slot path, index refresh):
+        recover the tail, reserve ``n`` seqs from the counter, write
+        ``cells(lo)`` and record [lo, hi]; returns hi. Recovering first
+        keeps the window above any torn tail. The reservation is the
+        commit's one arbiter claim: it folds ``op_kinds`` and keeps the
+        window live until its record lands (see _reserve_seq_window)."""
+        self._write_gate(name)
+        self._recover_tail(name)
+        holder = holder or self.writer_id or self._auto_writer_id
+        lo, hi = self._reserve_seq_window(name, n, holder, ttl_s, op_kinds=op_kinds, live=True)
+        self._land(name, cells(lo), hi, op_kinds, lo, counted=True)
+        return hi
+
+    def _land(self, name, cells, commit_seq, op_kinds, commit_lo, *, counted=False) -> None:
+        """Stage ``cells`` and record the commit. ``counted``: the window
+        came from the counter, which is above it and holds its kinds."""
+        if commit_lo is None:
+            # a rollback that APPEARS while this append runs (a peer
+            # healed us as "dead": our lease ttl lapsed) must fence the
+            # record loudly, not claim rows the rollback masks
+            rb0 = {(r["after"], r["upto"]) for r in self._rollbacks(name)}
+            w0 = self.commit_watermark(name)
         self._staged_append(name, cells)
         if commit_seq is None:
             if isinstance(cells, DataFrame):
@@ -488,9 +509,10 @@ class Catalog:
             if op_kinds is None:
                 op_kinds = sorted(int(k) for k in kinds)
         if commit_seq is not None:
-            # keep the reservation counter above every committed window,
-            # whoever allocated it (plain appends included)
-            self._bump_alloc(name, commit_seq, self.writer_id or self._auto_writer_id)
+            if not counted:
+                # keep the counter above every committed window; the
+                # op kinds fold under the same lock
+                self._bump_alloc(name, commit_seq, op_kinds)
             if commit_lo is not None:
                 # a reservation that outlived its ttl can have been
                 # swept and rolled back by a peer's recovery while this
@@ -518,11 +540,11 @@ class Catalog:
             self._record_commit(name, commit_seq, op_kinds, lo=commit_lo)
 
     def _staged_append(self, name: str, cells: DataFrame | pa.Table) -> None:
-        """Append parquet files to the op-log via a PRIVATE staging dir
-        + rename, instead of writing straight into the log. A DataFrame
-        is written by a Spark job; a pyarrow table (one driver-built
-        batch) by ``pq.write_table`` as one file, with no Spark job.
-        Two concurrent committers (the CAS disjoint fast path runs
+        """Append parquet files to the op-log under a PRIVATE name +
+        rename: a DataFrame by a Spark job into a stage dir, a pyarrow
+        table (one driver-built batch) by ``pq.write_table``, no Spark
+        job, as a hidden file inside the op-log (Spark, pyarrow and the
+        index, ``part-*`` only, skip it). Two concurrent committers (the CAS disjoint fast path runs
         appends in parallel from separate driver JVMs) would otherwise
         collide inside the shared FileOutputCommitter staging dir
         (`<oplog>/_temporary/0/` — one job's commit sweeps the other's
@@ -535,28 +557,26 @@ class Catalog:
         oplog = Path(self.oplog_path(name))
         oplog.mkdir(exist_ok=True)
         tag = uuid.uuid4().hex[:12]
-        stage = self.root / name / f".stage-{tag}"
-        if isinstance(cells, DataFrame):
-            cells.write.parquet(str(stage))
-        else:
-            stage.mkdir()
-            pq.write_table(cells, str(stage / "part-00000.parquet"))
         # keep the part- prefix: footer-routing, stats, replication and
         # compaction all discover op-log files via part-*.parquet (the
         # same convention compact_inplace's part-c<token> renames use)
+        if not isinstance(cells, DataFrame):
+            tmp = oplog / f".stage-{tag}.parquet"
+            pq.write_table(cells, str(tmp))
+            tmp.rename(oplog / f"part-b{tag}-00000.parquet")
+            return
+        stage = self.root / name / f".stage-{tag}"
+        cells.write.parquet(str(stage))
         for f in stage.glob("*.parquet"):
             f.rename(oplog / f"part-b{tag}-{f.name.removeprefix('part-')}")
         shutil.rmtree(stage, ignore_errors=True)
 
     def _recover_tail(self, name: str) -> None:
         """WAL-discard-uncommitted-tail recovery, once per table per
-        writer process: raw parquet above the watermark is a previous
-        writer's torn batch — rolled back, EXCLUDING windows covered by
-        a live reservation (a concurrent CAS committer whose record is
-        still pending; its own commit will close the window). Runs
-        BEFORE this writer reserves its own window, so the counter can
-        be bumped above the torn range and a fresh reservation can
-        never land inside (or shield) it."""
+        writer process: raw parquet above the watermark is a torn batch,
+        rolled back EXCEPT live windows (a concurrent committer's
+        pending record). Every commit runs it BEFORE reserving, so the
+        counter is bumped above the torn range first."""
         if name in self._tail_checked:
             return
         self._tail_checked.add(name)
@@ -590,22 +610,23 @@ class Catalog:
         if start <= raw:
             self._add_rollback(name, start - 1, raw)
         # reservations must never hand out seqs inside the torn range
-        self._bump_alloc(name, raw, self.writer_id or self._auto_writer_id)
+        self._bump_alloc(name, raw)
 
     def _sweep_stale_stage_dirs(self, name: str, *, ttl_s: float = 3600.0) -> None:
-        """Remove `.stage-<uuid>` staging dirs a CRASHED writer left in
-        the table dir (_staged_append stages there before renaming part
-        files into the op-log). They are invisible to every read path —
-        this is disk-dirt hygiene, not correctness — but a long-lived
-        deployment would otherwise accumulate one per crash forever.
-        Age-gated generously: a live writer's staging dir is at most
-        one batch-write old; anything past ttl_s belongs to a writer
-        that died mid-stage."""
+        """Remove what a CRASHED writer staged and never renamed in
+        (`.stage-<uuid>` dirs in the table dir, `.stage-<uuid>.parquet`
+        files in the op-log): invisible to reads, but dirt that would
+        pile up. Age-gated generously: a live writer's staging is at
+        most one batch-write old."""
         now = time.time()
-        for d in (self.root / name).glob(".stage-*"):
+        oplog = Path(self.oplog_path(name))
+        for d in [*(self.root / name).glob(".stage-*"), *oplog.glob(".stage-*")]:
             try:
                 if now - d.stat().st_mtime > ttl_s:
-                    shutil.rmtree(d, ignore_errors=True)
+                    if d.is_dir():
+                        shutil.rmtree(d, ignore_errors=True)
+                    else:
+                        d.unlink(missing_ok=True)
             except OSError:
                 continue
 
@@ -620,12 +641,12 @@ class Catalog:
         if any(rec.get("expires", 0) <= now for _, rec in self._reservations(name)):
             return True
         for p in self._claim_slot_bases(name):
-            st = self._slot_state(p)
+            st = self.arbiter.state(p)
             if st is None:
                 continue
             if st[1] is None or st[1].get("expires", 0) <= now:
                 return True  # torn or expired claim = dead holder
-        lease_st = self._slot_state(self.root / name / "writer.lease")
+        lease_st = self.arbiter.state(self.root / name / "writer.lease")
         if lease_st is not None and (
             lease_st[1] is None or lease_st[1].get("expires", 0) <= now
         ):
@@ -690,23 +711,25 @@ class Catalog:
         rollback makes the mask permanent AND cheap (read paths skip
         rollback-subsumed gaps). A late committer racing this loses
         loudly — append() refuses to record a commit whose window
-        overlaps a rollback — rather than silently losing its rows."""
+        overlaps a rollback — rather than silently losing its rows.
+        Gaps, then live windows, then gaps again: a window in flight at
+        the first read is live at the second or recorded by the third."""
+        gaps = self._masked_gaps(name)
         live = [
             (int(r["lo"]), int(r["hi"]))
             for r in self._live_reservations(name)
             if "lo" in r and "hi" in r
         ]
-        for lo, hi in self._masked_gaps(name):
-            if any(rlo <= hi and lo <= rhi for rlo, rhi in live):
+        still = set(self._masked_gaps(name)) if gaps else set()
+        for lo, hi in gaps:
+            if (lo, hi) not in still or any(rlo <= hi and lo <= rhi for rlo, rhi in live):
                 continue
             self._add_rollback(name, lo - 1, hi)
 
     def view(self, name: str, **kw) -> DataFrame:
         from tera_spark.operators.view import current_view, kv_current_view
 
-        self._check_enabled(name)
-        self._authorize("read", name)
-        self._consume(name, "scan")
+        self._read_gate(name, "scan")
         self._reader_heal(name)  # reference global_txn.cc:337-501 analog
         schema = self.current_schema(name)
         if schema.kv_mode:
@@ -739,11 +762,11 @@ class Catalog:
     def _kv_append(self, name, key, value, expire) -> None:
         from tera_spark.model import KV_OPLOG_SCHEMA, arrow_table
 
-        if not self.get_schema(name).kv_mode:
+        if not self.current_schema(name).kv_mode:
             raise ValueError(f"not a kv-mode table: {name}")
-        seq = time.time_ns()
-        row = [(key, value, expire, seq)]
-        self.append(name, arrow_table(row, KV_OPLOG_SCHEMA), commit_seq=seq)
+        self._commit_window(
+            name, 1, None, lambda lo: arrow_table([(key, value, expire, lo)], KV_OPLOG_SCHEMA)
+        )
 
     # --- snapshots / compaction --------------------------------------
     def snapshot(
@@ -958,13 +981,15 @@ class Catalog:
         # would stop masking torn tails, so clear the records with it
         shutil.rmtree(self.root / name / "commits", ignore_errors=True)
         shutil.rmtree(self.root / name / "casmeta", ignore_errors=True)
-        # ... and re-seed one record for the base: compact() emits
-        # "all PUTs, seq=0", so major compaction UPGRADES the table to
-        # the PUT-only fast fold (the reference likewise has no
-        # delete/merge records in a freshly major-compacted SST) —
-        # until the next non-PUT commit demotes it again
+        (self.root / name / "opkinds.json").unlink(missing_ok=True)
+        # ... and re-seed the counter and one record for the base:
+        # compact() emits "all PUTs, seq=0", so major compaction
+        # UPGRADES the table to the PUT-only fast fold (the reference
+        # likewise has no delete/merge records in a freshly
+        # major-compacted SST) — until the next non-PUT commit demotes it
         from tera_spark.model import CellOp
 
+        self._bump_alloc(name, 0, [CellOp.PUT])
         self._record_commit(name, 0, [CellOp.PUT])
 
     def rollback(self, name: str, snapshot_id: str) -> None:
@@ -1101,7 +1126,9 @@ class Catalog:
             w = self.commit_watermark(name)
             if w is not None and kinds is not None and CellOp.PUT not in kinds:
                 lo = self.oplog_index(name).record(w).get("lo")
-                self._record_commit(name, w, sorted(kinds | {CellOp.PUT}), lo=lo)
+                kinds = sorted(kinds | {CellOp.PUT})
+                self._bump_alloc(name, w, kinds)
+                self._record_commit(name, w, kinds, lo=lo)
         return {
             "groups": len(groups),
             "groups_folded": folded_groups,
@@ -1110,14 +1137,14 @@ class Catalog:
         }
 
     # --- writer lease (tablet-lock analog) ----------------------------
-    # The engine's correctness story assumes ONE committing writer per
-    # table (group commit, WAL-tail recovery, optimistic txns). The
-    # reference enforces its equivalent with ZooKeeper node locks: a
-    # tablet server must hold its lock to serve writes, and the master
-    # fences a dead server by deleting it. The lease file is that
-    # fence: append() refuses while another holder's unexpired lease
-    # is registered, so two driver processes can't interleave commits.
-    # Tables with no lease file behave as before (open access).
+    # Every commit takes its seq window from the table's one counter
+    # and keeps it live until its record lands, so several writers may
+    # commit to a table without interleaving seqs or losing a window
+    # to a peer's recovery. The lease is the optional stronger fence,
+    # the reference's ZooKeeper node lock: a tablet server must hold
+    # its lock to serve writes, and the master fences a dead server by
+    # deleting it. Appends refuse while another holder's unexpired
+    # lease is registered. Tables with no lease file are open access.
 
     def acquire_writer_lease(self, name: str, holder: str, *, ttl_s: int = 300) -> dict:
         """Acquire (or renew) the table's writer lease for ``holder``.
@@ -1126,7 +1153,7 @@ class Catalog:
         Every path — fresh acquire, expired-lease takeover (anyone's,
         including our own lapsed lease), torn-record takeover, and
         LIVE SELF-RENEWAL — goes through the generation-slot claim
-        (``_try_excl_claim``): the next generation name is published by
+        (``arbiter.try_claim``): the next generation name is published by
         an exclusive hard link, so two processes that both observe an
         expired lease can never both believe they hold the fence, and
         a renewal never rewrites a file in place (slot records stay
@@ -1141,17 +1168,17 @@ class Catalog:
                 f"table {name!r} writer lease held by {cur['holder']!r} "
                 f"for {cur['expires'] - now:.0f}s more"
             )
-        if self._try_excl_claim(
+        if self.arbiter.try_claim(
             self.root / name / "writer.lease", holder, ttl_s, renew=True
         ):
             return {"holder": holder, "expires": now + ttl_s}
         raise WriterFenced(f"table {name!r} lease was just taken")
 
     def release_writer_lease(self, name: str, holder: str) -> None:
-        self._release_slot(self.root / name / "writer.lease", holder)
+        self.arbiter.release(self.root / name / "writer.lease", holder)
 
     def _read_lease(self, name: str) -> dict | None:
-        st = self._slot_state(self.root / name / "writer.lease")
+        st = self.arbiter.state(self.root / name / "writer.lease")
         # a torn record (st[1] is None) is a dead holder: treat as free,
         # matching the old plain-file behavior
         return None if st is None else st[1]
@@ -1166,77 +1193,44 @@ class Catalog:
             )
 
     # --- multi-writer commit CAS --------------------------------------
-    # The writer lease above fences a SECOND long-lived writer out
-    # entirely. append_cas is the cooperative alternative (SCALE.md §7
-    # commit-manifest upgrade): racing committers serialize on a
-    # per-watermark claim file — the optimistic-commit role of the
-    # reference's Percolator primary-lock CAS (global_txn.cc:578-720,
-    # prewrite locks + one atomic primary commit decide a single
-    # winner) — so both batches land, one after the other, instead of
-    # one being refused. Exactly one writer can hold claim-<W>.lock
-    # (exclusive link-create) while the watermark is W; its commit record's
-    # atomic rename advances the watermark, after which contenders
-    # re-read and race for claim-<W'>. A claim whose holder died
-    # expires after ttl and is taken over (same documented small
-    # takeover window as the lease); a torn parquet tail left by the
-    # dead holder is rolled back by the existing watermark recovery,
-    # and new sequences are always allocated ABOVE any torn tail, so
-    # readers never see a partial batch.
+    # append_cas serializes racing committers on a per-watermark claim
+    # file, the role of the reference's Percolator primary-lock CAS
+    # (global_txn.cc:578-720): exactly one writer holds claim-<W>.lock
+    # while the watermark is W; its record advances the watermark and
+    # contenders race for claim-<W'>. A dead holder's claim expires
+    # after ttl and is taken over; its torn tail is rolled back by
+    # recovery, and windows are always reserved above it.
 
     def _claim_commit_slot(self, name: str, base_mark: int, holder: str, ttl_s: float) -> bool:
         d = self.root / name / "commits"
         d.mkdir(exist_ok=True)
-        return self._try_excl_claim(d / f"claim-{base_mark}.lock", holder, ttl_s)
-
-    # Slot primitives: thin delegates to the coordination arbiter.
-    # The generation-slot protocol itself (the round-6 design proved
-    # single-winner under 16/32-process takeover storms) lives in
-    # tera_spark/coordination.py::PosixLinkArbiter; these shims exist
-    # so every claim in this file routes through self.arbiter — the
-    # seam a ZooKeeper/conditional-put backend plugs into (the
-    # reference's src/zk/ role).
-
-    def _slot_state(self, p):
-        return self.arbiter.state(p)
-
-    def _try_excl_claim(self, p, holder: str, ttl_s: float, *, renew: bool = False) -> bool:
-        return self.arbiter.try_claim(p, holder, ttl_s, renew=renew)
-
-    def _release_slot(self, p, holder: str) -> None:
-        self.arbiter.release(p, holder)
+        return self.arbiter.try_claim(d / f"claim-{base_mark}.lock", holder, ttl_s)
 
     def _claim_holder(self, name: str, base_mark: int) -> str | None:
-        st = self._slot_state(self.root / name / "commits" / f"claim-{base_mark}.lock")
+        st = self.arbiter.state(self.root / name / "commits" / f"claim-{base_mark}.lock")
         if st is None or st[1] is None:
             return None
         return st[1].get("holder")
 
     def _release_claim(self, name: str, base_mark: int, holder: str) -> None:
-        self._release_slot(
+        self.arbiter.release(
             self.root / name / "commits" / f"claim-{base_mark}.lock", holder
         )
 
-    # --- seq-window reservation + row manifests (disjoint fast path) --
-    # The slot claim above serializes whole COMMITS; the reference's
-    # conflict granularity is the row (per-row lock columns,
-    # global_txn.cc:578-720) — two writers touching disjoint rows
-    # should not wait on each other. The fast path below gets there
-    # with two filesystem primitives:
-    #   * alloc.json — a tiny locked counter handing out NON-OVERLAPPING
-    #     seq windows, so concurrent appends can never interleave seqs;
-    #   * resv-<holder>.json — a reservation manifest carrying the
-    #     writer's row set and seq window. Two live manifests with
-    #     intersecting row sets never both proceed (each writer
-    #     registers its manifest BEFORE scanning others: whichever
-    #     scans later sees the earlier one and backs off to the
-    #     serialized slot path; if both see each other, both back off).
-    # Visibility stays torn-free without a single linear watermark:
-    # commit records now carry their window's low end, and read_oplog
-    # masks any seq GAP below the watermark (a reserved window whose
-    # record hasn't landed — in-flight or crashed) until its record
-    # appears. Crash recovery rolls back torn tails EXCLUDING live
-    # reservations, so a concurrent committer's parquet is never
-    # swept from under it.
+    # --- the seq counter and row manifests -----------------------------
+    # A table's seqs come from one place, as a tablet's LevelDB
+    # sequence comes from its writer (TabletWriter::Write):
+    #   * alloc.json — a locked counter handing out NON-OVERLAPPING
+    #     windows, bumped by commits carrying their own seqs; it lists
+    #     the windows commits took until their records land (live:
+    #     recovery leaves them alone), and its lock guards the op-kinds
+    #     summary;
+    #   * resv-<holder>.json — a row-disjoint writer's manifest (window
+    #     and row set). Each registers BEFORE scanning the others, so
+    #     of two intersecting writers at least one backs off.
+    # Records carry their window's low end, and reads mask any GAP
+    # below the watermark (a window whose record hasn't landed) until
+    # it does.
 
     def _alloc_paths(self, name: str):
         # CAS metadata lives BESIDE commits/, not inside it: several
@@ -1247,57 +1241,92 @@ class Catalog:
         return d, d / "alloc.json", d / "alloc.lock"
 
     def _reserve_seq_window(
-        self, name: str, n: int, holder: str, ttl_s: float = 60.0
+        self, name: str, n: int, holder: str, ttl_s: float = 60.0, *,
+        op_kinds=(), live: bool = False,
     ) -> tuple[int, int]:
-        """Atomically reserve ``n`` fresh sequence numbers. Returns
-        (lo, hi). The counter floors at watermark+1 always, and at
-        raw_max_seq+1 on first use (bootstrap above any legacy torn
-        tail); after that every committed window bumps it, so windows
-        never overlap each other or history."""
-        d, alloc, _ = self._alloc_paths(name)
-        d.mkdir(exist_ok=True)
+        """Reserve ``n`` fresh seqs: (lo, hi), above watermark and counter.
+        Under the counter's lock it also folds ``op_kinds`` and, when
+        ``live``, lists the window as live for ``ttl_s`` or until its
+        record lands: live from the moment it exists."""
         w = self.commit_watermark(name)
         floor = (w if w is not None else -1) + 1  # w == 0 is a real mark
-        if not alloc.exists():  # bootstrap, outside the lock
-            raw = self.raw_max_seq(name)
-            floor = max(floor, (raw if raw is not None else -1) + 1)
-        nxt = self._update_alloc(name, holder, ttl_s, lambda nxt: max(nxt, floor) + n)
-        lo = max(nxt, floor)
+
+        def step(state: dict) -> int:
+            lo = max(state["next"], floor)
+            state["next"] = lo + n
+            if live:
+                state["live"].append([lo, lo + n - 1, time.time() + ttl_s])
+            return lo
+
+        lo = self._update_alloc(name, holder, ttl_s, step, op_kinds)
         return lo, lo + n - 1
 
-    def _bump_alloc(self, name: str, hi: int, holder: str) -> None:
-        """Keep the counter above a commit made OUTSIDE the reservation
-        path (plain append on a table that has used CAS), so later
-        reservations stay fresh. No-op until alloc.json exists."""
-        if self._alloc_paths(name)[1].exists():
-            self._update_alloc(name, holder, 60.0, lambda nxt: max(nxt, hi + 1))
+    def _bump_alloc(self, name: str, hi: int, op_kinds=()) -> None:
+        """Keep the counter above a commit that carries its own seqs,
+        and fold its ``op_kinds`` into the summary, under one lock."""
 
-    def _update_alloc(self, name: str, holder: str, ttl_s: float, step) -> int:
-        """Set the counter to ``step(next)`` under its lock (a µs-scale
-        critical section: spin briefly); returns the ``next`` it read."""
-        _, alloc, lock = self._alloc_paths(name)
-        while not self._try_excl_claim(lock, holder, ttl_s):
+        def step(state: dict) -> None:
+            state["next"] = max(state["next"], hi + 1)
+
+        self._update_alloc(name, self.writer_id or self._auto_writer_id, 60.0, step, op_kinds)
+
+    def _alloc_state(self, name: str) -> dict | None:
+        """alloc.json as {"next": seq, "live": [[lo, hi, expires], ...]},
+        or None; an unparsable read (mid-rewrite) is retried."""
+        p = self._alloc_paths(name)[1]
+        for _ in range(50):
+            try:
+                state = _parse_alloc(p.read_bytes())
+            except FileNotFoundError:
+                return None
+            if state is not None:
+                return state
+            time.sleep(0.001)
+        return None
+
+    def _update_alloc(self, name: str, holder: str, ttl_s: float, step, op_kinds=()):
+        """Under the counter's lock (a µs-scale critical section: spin),
+        run ``step(state)`` and fold ``op_kinds`` (``()``: none); returns
+        what ``step`` does. A missing counter starts above all history
+        (watermark, every raw seq: torn, rolled-back, wall-clock). Live
+        windows past their ttl or recorded drop. Rewritten in place, a
+        pwrite then a truncate (a crash between leaves a tail that
+        _parse_alloc skips): on ext4 (4-core VM) a tmp file + rename
+        measured ~0.6 ms per commit against ~20 µs."""
+        d, alloc, lock = self._alloc_paths(name)
+        d.mkdir(exist_ok=True)
+        while not self.arbiter.try_claim(lock, holder, ttl_s):
             time.sleep(0.002)
         try:
+            fd = os.open(alloc, os.O_RDWR | os.O_CREAT, 0o644)
             try:
-                nxt = int(json.loads(alloc.read_text())["next"])
-            except (OSError, ValueError, KeyError, json.JSONDecodeError):
-                nxt = 0
-            new = step(nxt)
-            if new != nxt:
-                _replace_text(alloc, json.dumps({"next": new}))
-            return nxt
+                old = _parse_alloc(os.pread(fd, os.fstat(fd).st_size, 0))
+                if old is None:
+                    seqs = (self.commit_watermark(name), self.raw_max_seq(name))
+                    nxt = max((s for s in seqs if s is not None), default=-1) + 1
+                    old = {"next": nxt, "live": [], "boot": True}
+                now = time.time()
+                state = {"next": old["next"], "live": [
+                    w for w in old["live"] if w[2] > now and not self._window_recorded(name, w[1])
+                ]}
+                out = step(state)
+                if op_kinds != ():
+                    self._fold_op_kinds(name, op_kinds)
+                if state != old:
+                    data = json.dumps(state).encode()
+                    os.pwrite(fd, data, 0)
+                    os.ftruncate(fd, len(data))
+            finally:
+                os.close(fd)
+            return out
         finally:
-            self._release_slot(lock, holder)
+            self.arbiter.release(lock, holder)
 
     def _publish_reservation(
         self, name: str, holder: str, lo: int, hi: int, rows: list[str], ttl_s: float
     ):
-        """Atomically publish a reservation manifest: the prewrite-lock
-        record carrying this committer's seq window (always) and row
-        set (empty for slot-path commits, which claim no rows — the
-        window liveness alone shields the in-flight batch from peer
-        recovery)."""
+        """Atomically publish ``holder``'s reservation manifest: the
+        prewrite-lock record of its seq window and row set."""
         d, _, _ = self._alloc_paths(name)
         d.mkdir(exist_ok=True)
         resv = d / f"resv-{holder}.json"
@@ -1319,11 +1348,17 @@ class Catalog:
                 p.unlink(missing_ok=True)
 
     def _live_reservations(self, name: str, *, skip: str | None = None) -> list[dict]:
+        """Unexpired manifests (but ``skip``'s), then the counter's live
+        windows whose record has not landed."""
         now = time.time()
-        return [
+        live = [
             rec for p, rec in self._reservations(name)
             if (skip is None or p.name != f"resv-{skip}.json") and rec.get("expires", 0) > now
         ]
+        for lo, hi, expires in (self._alloc_state(name) or {"live": ()})["live"]:
+            if expires > now and not self._window_recorded(name, hi):
+                live.append({"lo": lo, "hi": hi, "expires": expires})
+        return live
 
     def _reservations(self, name: str) -> list[tuple[Path, dict]]:
         return _json_files(self.root / name / "casmeta", "resv-*.json")
@@ -1337,17 +1372,10 @@ class Catalog:
         return self._read_masks(name)[2]
 
     def _commit_gaps(self, name: str) -> list[tuple[int, int]]:
-        """Uncommitted seq windows BELOW the watermark: reserved ranges
-        whose commit record has not landed (in-flight or crashed
-        concurrent committer). Readers must mask them — they are the
-        window-granular form of the torn-batch rule. Empty unless the
-        table has ever used seq-window reservation (alloc.json), so
-        legacy/serialized tables pay one existence check. The census
-        is the op-log index's (memoized on the commit-record listing)."""
-        _, alloc, _ = self._alloc_paths(name)
-        if not alloc.exists():
-            return []
-        return list(self.oplog_index(name).census()[1])
+        """Uncommitted windows BELOW the watermark (reserved, record not
+        landed: in flight or crashed), the window-granular torn-batch
+        rule; only on tables with a seq counter (alloc.json)."""
+        return list(self.oplog_index(name).census(gaps=self._alloc_paths(name)[1].exists())[1])
 
     def begin_disjoint_commit(
         self, name: str, n: int, rows: list[str], holder: str, ttl_s: float = 300.0
@@ -1363,6 +1391,7 @@ class Catalog:
         is held, no other fast-path writer can touch these rows — a
         caller may validate between begin and finish (the Percolator
         validate-under-locks shape GlobalTransaction uses)."""
+        self._recover_tail(name)  # before reserving: see _recover_tail
         lo, hi = self._reserve_seq_window(name, n, holder, ttl_s)
         rowset = set(rows)
         resv = self._publish_reservation(name, holder, lo, hi, sorted(rowset), ttl_s)
@@ -1380,23 +1409,19 @@ class Catalog:
         MULTI-TABLE transaction put one atomic commit point (the txn
         marker) between all tables' data and all tables' records."""
         name = token["name"]
-        self._check_enabled(name)
-        self._authorize("write", name)
-        self._check_writer_lease(name)
-        self._consume(name, "write")
+        self._write_gate(name)
         self._recover_tail(name)
-        batch._base_seq = token["lo"]
-        self._staged_append(name, batch.to_arrow(now_us=now_us))
+        self._staged_append(name, batch.to_arrow(base_seq=token["lo"], now_us=now_us))
         token["op_kinds"] = [int(k) for k in batch.op_kinds]
-        token["staged"] = True
 
     def record_disjoint_commit(self, token: dict) -> int:
         """Phase 2b: the window's commit record (visibility point),
         with the same rolled-back-mid-commit fence append() applies to
-        reserved windows; releases the manifest either way."""
+        reserved windows; releases the manifest either way. The bump
+        folds the staged batch's op kinds into the summary."""
         name, lo, hi = token["name"], token["lo"], token["hi"]
         try:
-            self._bump_alloc(name, hi, self.writer_id or self._auto_writer_id)
+            self._bump_alloc(name, hi, token.get("op_kinds"))
             if self._window_rolled_back(name, lo, hi):
                 raise WriterFenced(
                     f"table {name!r}: reserved window [{lo},{hi}] was "
@@ -1407,15 +1432,10 @@ class Catalog:
         finally:
             token["resv"].unlink(missing_ok=True)
 
-    def finish_disjoint_commit(self, token: dict, batch, *, now_us: int | None = None) -> int:
-        """Phase 2 (single-table form): stage + record in one call.
-        The commit record carries the window's low end so readers can
-        gap-mask concurrent in-flight windows. ``now_us`` threads
-        through the batch materialization (per-cell TTL stamping) for
-        transactional callers."""
+    def finish_disjoint_commit(self, token: dict, batch) -> int:
+        """Phase 2 (single-table form): stage + record in one call."""
         try:
-            if not token.get("staged"):
-                self.stage_disjoint_data(token, batch, now_us=now_us)
+            self.stage_disjoint_data(token, batch)
         except BaseException:
             token["resv"].unlink(missing_ok=True)
             raise
@@ -1524,7 +1544,7 @@ class Catalog:
             if rec_ or rb:
                 continue
             n, lo, hi = e["name"], int(e["lo"]), int(e["hi"])
-            self._bump_alloc(n, hi, self.writer_id or self._auto_writer_id)
+            self._bump_alloc(n, hi, e.get("op_kinds"))
             self._record_commit(n, hi, e.get("op_kinds"), lo=lo)
         rec["_path"].unlink(missing_ok=True)
 
@@ -1540,14 +1560,6 @@ class Catalog:
         token["resv"].unlink(missing_ok=True)
         self._add_rollback(token["name"], token["lo"] - 1, token["hi"])
 
-    def _try_disjoint_commit(
-        self, name: str, batch, rows: list[str], holder: str, ttl_s: float
-    ) -> int | None:
-        tok = self.begin_disjoint_commit(name, len(batch), rows, holder, ttl_s)
-        if tok is None:
-            return None
-        return self.finish_disjoint_commit(tok, batch)
-
     def append_cas(
         self,
         name: str,
@@ -1558,28 +1570,23 @@ class Catalog:
         claim_ttl_s: float = 300.0,
         rows: list[str] | None = None,
     ) -> int:
-        """Serialized multi-writer group commit. ``batch`` is a
-        MutationBatch whose base sequence THIS method assigns — under
-        contention each committer's window lands strictly after the
-        previous winner's record, so seq ranges never interleave.
-        Returns the batch's committed high sequence. Raises
-        WriterFenced if the slot can't be claimed within
-        ``max_wait_s`` (a held lease still fences as usual).
+        """Serialized multi-writer group commit of a MutationBatch: each
+        committer's window lands after the previous winner's record.
+        Returns the committed high seq; raises WriterFenced if the slot
+        can't be claimed within ``max_wait_s``.
 
-        ``rows`` opts into the ROW-DISJOINTNESS fast path (the
-        reference's per-row conflict granularity, global_txn.cc
-        per-row lock columns): pass the batch's write set (e.g.
-        ``batch.row_keys``) and the commit proceeds CONCURRENTLY with
-        other committers whose row sets don't intersect it — no slot
-        wait, no retry. Intersecting writers fall back to the
-        serialized slot path above. One in-flight commit per holder id.
+        ``rows`` (the batch's write set, e.g. ``batch.row_keys``) opts
+        into the ROW-DISJOINT fast path, the reference's per-row lock
+        granularity (global_txn.cc): the commit runs CONCURRENTLY with
+        committers whose row sets don't intersect it; intersecting ones
+        fall back to the slot path. One in-flight commit per holder id.
         """
         holder = holder or self.writer_id or self._auto_writer_id
         self._recover_tail(name)  # before reserving: see _recover_tail
         if rows:
-            hi = self._try_disjoint_commit(name, batch, list(rows), holder, claim_ttl_s)
-            if hi is not None:
-                return hi
+            tok = self.begin_disjoint_commit(name, len(batch), list(rows), holder, claim_ttl_s)
+            if tok is not None:
+                return self.finish_disjoint_commit(tok, batch)
         deadline = time.time() + max_wait_s
         while True:
             w = self.commit_watermark(name)
@@ -1597,31 +1604,11 @@ class Catalog:
                     # commit only while the claim still records US
                     if self._claim_holder(name, base_mark) != holder:
                         continue
-                    # allocate through the reservation counter: above
-                    # the watermark, any torn tail (bootstrap floors at
-                    # raw_max_seq), and every concurrent fast-path
-                    # window — seq ranges can never interleave
-                    base, hi = self._reserve_seq_window(
-                        name, len(batch), holder, claim_ttl_s
+                    return self._commit_window(
+                        name, len(batch), batch.op_kinds,
+                        lambda lo: batch.to_arrow(base_seq=lo),
+                        holder=holder, ttl_s=claim_ttl_s,
                     )
-                    # publish window liveness (rows=[]: no row claims)
-                    # so a NEW writer's recovery never mistakes this
-                    # in-flight batch for a dead writer's torn tail
-                    resv = self._publish_reservation(
-                        name, holder, base, hi, [], claim_ttl_s
-                    )
-                    try:
-                        batch._base_seq = base
-                        self.append(
-                            name,
-                            batch.to_arrow(),
-                            commit_seq=hi,
-                            commit_lo=base,
-                            op_kinds=batch.op_kinds,
-                        )
-                        return hi
-                    finally:
-                        resv.unlink(missing_ok=True)
                 finally:
                     self._release_claim(name, base_mark, holder)
             if time.time() >= deadline:
@@ -1926,7 +1913,6 @@ def refresh_index(cat: "Catalog", name: str, cf: str, qualifier: str) -> dict:
     base_ts = (
         cat.read_oplog(idx_name).agg(F.max("ts")).first()[0] or 0
     ) + 1
-    base_seq = (cat.raw_max_seq(idx_name) or 0) + 1
     dels = ch.filter(F.col("old_value").isNotNull()).select(
         F.hex("old_value").alias("row_key"),
         F.lit("idx").alias("cf"),
@@ -1934,7 +1920,7 @@ def refresh_index(cat: "Catalog", name: str, cf: str, qualifier: str) -> dict:
         F.lit(base_ts).cast("long").alias("ts"),
         F.lit(CellOp.DEL_QUALIFIERS).alias("op"),
         F.lit(None).cast("binary").alias("value"),
-        F.lit(base_seq).cast("long").alias("seq"),
+        F.lit(0).cast("long").alias("seq"),
     )
     puts = ch.filter(F.col("new_value").isNotNull()).select(
         F.hex("new_value").alias("row_key"),
@@ -1943,16 +1929,14 @@ def refresh_index(cat: "Catalog", name: str, cf: str, qualifier: str) -> dict:
         F.lit(base_ts + 1).cast("long").alias("ts"),
         F.lit(CellOp.PUT).alias("op"),
         F.lit(b"").alias("value"),
-        F.lit(base_seq + 1).cast("long").alias("seq"),
+        F.lit(1).cast("long").alias("seq"),
     )
-    batch = dels.unionByName(puts)
+    batch = dels.unionByName(puts)  # seqs relative to the window's low end
     n = batch.count()
     if n:
-        cat.append(
-            idx_name,
-            batch,
-            commit_seq=base_seq + 1,
-            op_kinds=[CellOp.DEL_QUALIFIERS, CellOp.PUT],
+        cat._commit_window(
+            idx_name, 2, [CellOp.DEL_QUALIFIERS, CellOp.PUT],
+            lambda lo: batch.withColumn("seq", F.col("seq") + F.lit(lo)),
         )
     _store_index(cat, name, key, {"table": idx_name, "seq": cur})
     return {"changes": n, "from_seq": since, "to_seq": cur}

@@ -20,11 +20,12 @@ semantics, only the SDK's shape:
   the DataFrame forms and the reference the seek path is tested
   against.
 - Writes auto-assign timestamps (server-assigned ts, tera_key.h:33)
-  and carry a monotonically increasing sequence across commits
-  (LevelDB sequence analog) so later writes win ties. Each write is
-  one driver-written op-log file plus its commit record — no Spark
-  job, as a tera write is a WAL append (TabletWriter::Write); a
-  CheckAndApply checks through the seek path first.
+  and take their seq window from the table's one counter (LevelDB
+  sequence analog; a ``Table`` holds no seq state), so the later write
+  wins ties, whichever handle made it. Each write is one driver-written
+  op-log file plus its commit record — no Spark job, as a tera write is
+  a WAL append (TabletWriter::Write); a CheckAndApply checks through
+  the seek path first. Reads pass the table's gate, as ``view`` does.
 - ``Table.scan`` streams ordered visible cells a page at a time, like
   ResultStream (include/tera/scan.h:26-67). A ``<hash=on>`` table's
   scan is the one Spark read left: user-key order over hash storage
@@ -188,7 +189,6 @@ class Table:
     def __init__(self, catalog: Catalog, name: str, *, timeoracle=None):
         self._cat = catalog
         self.name = name
-        self._next_seq: int | None = None
         self._seeker = Seeker(catalog, name)
         schema = catalog.get_schema(name)
         self._hashed = schema.hash_distribution
@@ -263,17 +263,6 @@ class Table:
             )
         return df
 
-    # -- sequence bookkeeping (LevelDB sequence analog) ---------------
-    def _seq(self, n: int) -> int:
-        if self._next_seq is None:
-            # raw max, not the rollback-filtered view: a fresh seq must
-            # sit above any rolled-back window or the write vanishes
-            top = self._cat.raw_max_seq(self.name)
-            self._next_seq = (top + 1) if top is not None else 0
-        base = self._next_seq
-        self._next_seq += n
-        return base
-
     # -- writes (table.h:58-77, 128-142) ------------------------------
     def new_row_mutation(self, row_key: str) -> RowMutation:
         """TeraSdk Table.NewRowMutation: a per-row mutation builder."""
@@ -300,12 +289,9 @@ class Table:
             # write (stat-guarded memo: sees any schema.json change
             # without per-mutation read+parse)
             self._refuse_oracle_ttl_mix(self._cat.current_schema(self.name))
-        batch._base_seq = self._seq(len(batch))
-        self._cat.append(
-            self.name,
-            batch.to_arrow(now_us=now_us, ts_oracle=self._oracle),
-            commit_seq=batch._base_seq + len(batch) - 1,
-            op_kinds=batch.op_kinds,
+        self._cat._commit_window(
+            self.name, len(batch), batch.op_kinds,
+            lambda lo: batch.to_arrow(base_seq=lo, now_us=now_us, ts_oracle=self._oracle),
         )
 
     ApplyMutation = apply_mutation  # TeraSdk spelling
@@ -390,6 +376,7 @@ class Table:
         tests/test_seek.py pins it equal to ``operators.scan.get``,
         the DataFrame form of this read. ``seek`` is accepted for older
         call sites and ignored: there is one read path."""
+        self._cat._read_gate(self.name)
         cells = self._seeker.get(
             self._hk(row_key),
             columns=columns,
@@ -403,6 +390,7 @@ class Table:
         return out
 
     def batch_get(self, row_keys: list[str], *, now_us: int | None = None) -> DataFrame:
+        self._cat._read_gate(self.name)
         return self._strip_df(
             batch_get(
                 self._cat.read_oplog(self.name),
@@ -420,6 +408,7 @@ class Table:
         (``batch_get`` is the distributed DataFrame form). Returns
         row_key → [(row_key, cf, qualifier, ts, value)], newest-first
         per column; keys with no visible cell are absent."""
+        self._cat._read_gate(self.name)
         got = self._seeker.multi_get([self._hk(k) for k in row_keys], now_us=now_us)
         return {
             self._strip(k): [(self._strip(c[0]),) + tuple(c[1:]) for c in cells]
@@ -446,6 +435,7 @@ class Table:
                 .orderBy("row_key", "cf", "qualifier", F.desc("ts"))
                 .toLocalIterator()
             )
+        self._cat._read_gate(self.name, "scan")
         ts = (desc.ts_start, desc.ts_end)
         cells = self._seeker.scan_range(
             desc.start, desc.end, columns=desc.columns, column_families=desc.column_families,
@@ -464,6 +454,7 @@ class Table:
     ) -> DataFrame:
         """The analytics-native form: visible cells as a DataFrame,
         folded with the schema the seek path uses."""
+        self._cat._read_gate(self.name, "scan")
         return self._user_range(
             self._strip_df(
                 scan(
@@ -498,12 +489,13 @@ class Table:
     def start_row_transaction(self, row_key: str) -> SingleRowTransaction:
         """StartRowTransaction (table.h:102): snapshot, reads and the
         conflict check of the row go through the seek path."""
+        self._cat._read_gate(self.name)
         return SingleRowTransaction(self._seeker, self._hk(row_key))
 
     def commit_row_transaction(self, txn: SingleRowTransaction) -> None:
         """Conflict-check the row, then commit the txn's batch like
-        ``apply_mutation``: a fresh table seq (above any rolled-back
-        window, so the write cannot vanish) and a driver-written file."""
+        ``apply_mutation``: a window from the table's counter (above
+        any rolled-back window and every other writer's) and a file."""
         txn.check()
         self._commit(txn.batch)
 
@@ -536,6 +528,7 @@ class KvTable:
     def get(self, key: str, *, now_us: int | None = None) -> bytes | None:
         """Point read through the seek path (``Seeker.get_kv``); the
         Spark twin is ``operators.view.kv_current_view``."""
+        self._cat._read_gate(self.name)
         v = self._seeker.get_kv(key, now_us=now_us)
         return bytes(v) if v is not None else None
 
@@ -547,4 +540,5 @@ class KvTable:
     ) -> Iterator:
         """Visible keys of [start, end) in key order, Rows (key, value,
         expire_ts), by the seek path (Spark twin: ``kv_current_view``)."""
+        self._cat._read_gate(self.name, "scan")
         return (_KV(*kv) for kv in self._seeker.scan_range(start, end, now_us=now_us))

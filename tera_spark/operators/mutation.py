@@ -11,8 +11,9 @@ Spark job, the way a tera write is a WAL append and never a batch job;
 ``to_df`` gives the same rows as a DataFrame for Spark-side callers.
 
 Timestamps: caller-supplied or assigned at flush (server-assigned ts,
-tera_key.h:33). Sequence numbers are assigned monotonically per batch
-so later writes win ties, like LevelDB sequence numbers.
+tera_key.h:33). Sequence numbers run up from the base seq (a commit's
+window, from the table's counter) so later writes win ties, like
+LevelDB sequence numbers.
 """
 
 from __future__ import annotations
@@ -123,21 +124,23 @@ class MutationBatch:
         out._rows = [(fn(r[0]),) + tuple(r[1:]) for r in self._rows]
         return out
 
-    def _stamped(self, now_us: int | None, ts_oracle) -> tuple[list[tuple], T.StructType]:
-        """The batch's op-log rows with ts, seq and expiry assigned, and
-        their schema. ``ts_oracle`` (functions.timeoracle.Timeoracle)
-        assigns each unset-ts cell its own unique, strictly monotonic
+    def _stamped(self, now_us, ts_oracle, base_seq=None) -> tuple[list[tuple], T.StructType]:
+        """The batch's op-log rows with ts, seq (from ``base_seq``, else
+        the batch's own) and expiry assigned, and their schema.
+        ``ts_oracle`` (functions.timeoracle.Timeoracle) assigns each
+        unset-ts cell its own unique, strictly monotonic
         timestamp instead of one shared wall-clock microsecond — tera's
         timeoracle-stamped write path. Oracle ticks are 10000/ms (not
         µs); use one ts source consistently per table."""
         now = now_us if now_us is not None else int(time.time() * 1_000_000)
+        base = self._base_seq if base_seq is None else base_seq
 
         def auto_ts() -> int:
             return ts_oracle.get_timestamp() if ts_oracle is not None else now
 
         with_ttl = any(ttl is not None for *_, ttl in self._rows)
         data = [
-            (r, c, q, ts if ts is not None else auto_ts(), op, v, self._base_seq + i)
+            (r, c, q, ts if ts is not None else auto_ts(), op, v, base + i)
             + ((now + ttl * 1_000_000 if ttl is not None else None,) if with_ttl else ())
             for i, (r, c, q, ts, op, v, ttl) in enumerate(self._rows)
         ]
@@ -152,11 +155,11 @@ class MutationBatch:
         """The batch as a DataFrame (stamping: see ``_stamped``)."""
         return spark.createDataFrame(*self._stamped(now_us, ts_oracle))
 
-    def to_arrow(self, *, now_us: int | None = None, ts_oracle=None):
-        """The batch as one pyarrow table sorted by row_key, stamped
-        exactly like ``to_df`` — the input ``Catalog.append`` writes
-        from the driver with ``pq.write_table``, no Spark job."""
-        data, schema = self._stamped(now_us, ts_oracle)
+    def to_arrow(self, *, now_us: int | None = None, ts_oracle=None, base_seq: int | None = None):
+        """The batch as one pyarrow table sorted by row_key, stamped like
+        ``to_df`` (seqs from ``base_seq`` if given): what the catalog
+        writes from the driver with ``pq.write_table``, no Spark job."""
+        data, schema = self._stamped(now_us, ts_oracle, base_seq)
         return arrow_table(data, schema)
 
     def __len__(self) -> int:

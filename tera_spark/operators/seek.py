@@ -252,9 +252,11 @@ class Seeker:
         if catalog is not None:
             self._index = catalog.oplog_index(table)
             self._get_masks = lambda: catalog._seq_masks(table)
+            self.gate = lambda action="read": catalog._read_gate(table, action)
         else:
             self._index = OplogIndex(Path(path))
             self._get_masks = lambda: (None, [])
+            self.gate = lambda action="read": None
         # re-read per use (stat-guarded): an online update_schema
         # applies to the next read, as it does on the Spark path
         self._get_schema = (

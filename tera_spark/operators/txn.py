@@ -9,10 +9,13 @@ src/io/tablet_writer.h:62-64).
 Re-expression: the snapshot is the row's max op sequence number at
 txn start; reads are bounded by it, and commit re-reads it and refuses
 the mutation batch if any later op on the row exists. All three read
-through the table's ``Seeker`` (operators/seek.py), no Spark job. The
-check + append must be driven by a single writer per table — the same
-serialization point the reference gets from the tablet server's writer
-thread.
+through the table's ``Seeker`` (operators/seek.py), no Spark job.
+Every commit takes its seqs from the table's one counter, the analog
+of the tablet writer's sequence, so any write that lands before the
+check sits above the snapshot, whichever handle or process made it.
+The check and the commit are two steps, not one: a write landing
+between them is not seen (the reference checks inside its writer
+thread).
 
 Cross-row/cross-table transactions: see ``GlobalTransaction`` below —
 the Percolator capability (src/sdk/global_txn.cc) without the 2PC lock
@@ -52,6 +55,7 @@ class SingleRowTransaction:
 
     # --- reads inside the txn (snapshot-bounded) ----------------------
     def read(self, cf: str, qualifier: str) -> bytes | None:
+        self._seeker.gate()
         # a row without ops at the snapshot reads empty (-1: below every seq)
         snap = self._snapshot_seq if self._snapshot_seq is not None else -1
         return _newest(self._seeker.get(
@@ -99,7 +103,9 @@ class GlobalTransaction:
     * validate   — at commit, any op on a *written* row with
       ``seq > snapshot`` aborts (write-write conflict; same granularity
       as ``CheckSingleRowTxnConflict`` but across rows and tables).
-    * apply      — one append per table with fresh tail seqs; per-table
+    * apply      — one commit per table, its seq window from the
+      table's counter (``Catalog._commit_window``), so a write that
+      landed after the snapshot always sits above it; per-table
       atomicity is the storage commit. A cross-table commit manifest
       (gating readers on a txn-complete marker) is the upgrade path if
       multi-table readers must never observe a torn commit mid-failure;
@@ -161,6 +167,7 @@ class GlobalTransaction:
     def read(self, table: str, row_key: str, cf: str, qualifier: str) -> bytes | None:
         # on maxversions>1 cfs several versions survive: the txn read
         # means the NEWEST one
+        self._cat._read_gate(table)
         return _newest(Seeker(self._cat, table).get(
             self._hk(table, row_key), columns={cf: [qualifier]},
             now_us=self._now_us, snapshot_seq=self._snapshot(table),
@@ -203,9 +210,10 @@ class GlobalTransaction:
         txn or append_cas(rows=...) — can touch our rows between
         validation and apply; a plain/slot-path writer racing the same
         rows keeps only optimistic validation, as before), then commit
-        each table through its reserved seq window. Disjoint-row transactions commit fully
-        concurrently — no slot wait, no retry. Default (cas=False)
-        keeps the single-driver plain-append path."""
+        each table through its reserved seq window. Disjoint-row
+        transactions commit fully concurrently — no slot wait, no
+        retry. Default (cas=False) is the plain commit: validate, then
+        one ``Catalog._commit_window`` per table."""
         if cas:
             return self._commit_cas()
         self._validate()
@@ -213,23 +221,11 @@ class GlobalTransaction:
         for table, batch in self._batches.items():
             if not len(batch):
                 continue
-            # allocate through the reservation counter: above raw
-            # history (the old visible-max allocation landed inside
-            # recovery rollback windows after a torn-tail crash and
-            # vanished) AND above any concurrent CAS writer's reserved
-            # window (raw_max_seq alone cannot see a reserved-but-
-            # unwritten window). The record's lo keeps a concurrent
-            # lower in-flight window GAP-MASKED instead of un-masking
-            # it when this record raises the watermark past it.
-            holder = (self._cat.writer_id or self._cat._auto_writer_id) + "-plain"
-            base, hi = self._cat._reserve_seq_window(table, len(batch), holder)
-            batch._base_seq = base
-            self._cat.append(
-                table,
-                batch.to_arrow(now_us=self._now_us),
-                commit_seq=hi,
-                commit_lo=base,
-                op_kinds=batch.op_kinds,
+            # the record's lo keeps a concurrent lower in-flight window
+            # GAP-MASKED when this record raises the watermark past it
+            self._cat._commit_window(
+                table, len(batch), batch.op_kinds,
+                lambda lo, b=batch: b.to_arrow(base_seq=lo, now_us=self._now_us),
             )
             applied[table] = len(batch)
         return applied

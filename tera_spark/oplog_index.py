@@ -13,6 +13,7 @@ the HTTP proxy's threads share an index without a lock.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import re
@@ -105,8 +106,9 @@ class OplogIndex:
         self.oplog, self.commits = Path(oplog), commits
         # (listing, files, (key lo, key hi, file, row group) per group)
         self._files: tuple = (None, (), ())
-        # (commits/ names, record seqs, gaps or None until asked, lo by seq)
-        self._census: tuple = ([], (), (), {})
+        # (commits/ names, record seqs, gaps or None until asked, lo by
+        # seq, gap walk as (last seq walked, next expected seq, gaps) or None)
+        self._census: tuple = ([], (), (), {}, None)
 
     def _refresh(self) -> tuple:
         listing = _list_files(self.oplog)
@@ -175,9 +177,10 @@ class OplogIndex:
         windows below it no record covers — a record's ``lo`` above the
         seq after the previous record opens one (a record without
         ``lo`` is contiguous). Gaps read each record once, so only on
-        request (else ``()``). Major compaction deletes the records and
-        restarts seq at 0: a listing that lost a record forgets every
-        ``lo``."""
+        request (else ``()``), resuming the last walk while every new
+        record lies above it (a lower one closes a gap: re-walk). Major
+        compaction deletes the records and restarts seq at 0: a listing
+        that lost a record forgets every ``lo``."""
         try:
             names = os.listdir(self.commits) if self.commits is not None else []
         except FileNotFoundError:
@@ -185,19 +188,26 @@ class OplogIndex:
         snap = self._census
         if snap[0] != names:
             marks = tuple(sorted(map(int, _RECORD.findall("\n".join(names)))))
-            known = snap[3] if set(snap[1]) <= set(marks) else {}
-            snap = self._census = (names, marks, None, known)
+            old = set(snap[1])
+            keep = old <= set(marks)
+            walk = snap[4] if keep and snap[4] and all(
+                m > snap[4][0] for m in marks if m not in old
+            ) else None
+            snap = self._census = (names, marks, None, snap[3] if keep else {}, walk)
         marks = snap[1]
         if gaps and snap[2] is None:
-            los, out, expected = {}, [], 0
-            for seq in marks:
-                if seq in snap[3]:
-                    los[seq] = snap[3][seq]
-                elif rec := self.record(seq):  # an unreadable one is retried next time
-                    los[seq] = rec.get("lo")
+            last, expected, out = snap[4] or (None, 0, ())
+            los, out, whole = dict(snap[3]), list(out), True
+            for seq in marks[bisect.bisect_right(marks, last) if last is not None else 0:]:
+                if seq not in los:
+                    if rec := self.record(seq):
+                        los[seq] = rec.get("lo")
+                    else:  # unreadable: retried by the next walk
+                        whole = False
                 lo = los.get(seq)
                 if lo is not None and lo > expected:
                     out.append((expected, lo - 1))
                 expected = seq + 1
-            snap = self._census = (names, marks, tuple(out), los)
+            walk = (marks[-1], expected, tuple(out)) if whole and marks else None
+            snap = self._census = (names, marks, tuple(out), los, walk)
         return (marks[-1] if marks else None), (snap[2] if gaps else ())

@@ -285,3 +285,26 @@ def test_stale_stage_dirs_swept_fresh_kept(spark, tmp_path):
     r._recover_tail("t")
     assert not stale.exists(), "stale staging dir must be reaped"
     assert fresh.exists(), "fresh staging dir belongs to a live writer"
+
+
+def test_stale_stage_files_in_oplog_swept_fresh_kept(spark, tmp_path):
+    """A driver-written batch stages as a hidden file inside the op-log;
+    a crashed writer's one is reaped past the ttl, a fresh one kept, and
+    no read path ever lists either."""
+    import os
+
+    root = str(tmp_path / "cat")
+    w = Catalog(spark, root, writer_id="w")
+    w.create_table("t { d }")
+    _committed(w, spark, "t", ["r0"])
+    oplog = Path(w.oplog_path("t"))
+    stale, fresh = oplog / ".stage-deadbeef.parquet", oplog / ".stage-cafebabe.parquet"
+    for f in (stale, fresh):
+        f.write_bytes(b"junk")
+    old = time.time() - 7200
+    os.utime(stale, (old, old))
+    assert [r.row_key for r in w.view("t").collect()] == ["r0"]
+
+    r = Catalog(spark, root, writer_id="r")
+    r._recover_tail("t")
+    assert not stale.exists() and fresh.exists()

@@ -18,6 +18,7 @@ codec-undefined in both implementations and not a behavior we pin.
 from __future__ import annotations
 
 import random
+import threading
 from collections import defaultdict
 
 import pytest
@@ -660,7 +661,10 @@ def test_mark_free_routes_match_unknown_kinds(spark, seed, op_kinds, route):
 
 
 class _Py4jCalls:
-    """Counts py4j round trips (``send_command``) while active."""
+    """Counts the entering thread's py4j round trips (``send_command``)
+    while active, as scripts/probe_fold_construct.py does: other threads
+    share the gateway client (after a streaming test, a background
+    thread sends Java-object detaches) and are not the construction."""
 
     def __init__(self, spark) -> None:
         self.client = spark.sparkContext._gateway._gateway_client
@@ -668,9 +672,10 @@ class _Py4jCalls:
 
     def __enter__(self):
         orig = self.client.send_command
+        me = threading.get_ident()
 
         def counted(*a, **k):
-            self.calls += 1
+            self.calls += threading.get_ident() == me
             return orig(*a, **k)
 
         self.client.send_command = counted
