@@ -125,10 +125,11 @@ def main() -> None:
         # Spark job. This is the latency-serving shape: tera's 32k QPS
         # measures many concurrent point gets; here one client thread
         # resolves a batch via row-group-grouped reads.
+        from tera_spark.oplog_index import BlockCache
         from tera_spark.operators.seek import Seeker
 
         key_list = [r.row_key for r in keys.limit(N_GETS).collect()]
-        seeker = Seeker(path=path, cache_groups=256)
+        seeker = Seeker(path=path)
         seeker._route(key_list[:1])  # warm the footer meta cache
         t0 = time.monotonic()
         hit = seeker.multi_get(key_list)
@@ -146,6 +147,7 @@ def main() -> None:
         cold._route(key_list[:1])
         t0 = time.monotonic()
         for k in key_list[:lat_n]:
+            cold._cache = BlockCache()  # every get decodes its row group
             cold.get(k)
         seek_get_ms = (time.monotonic() - t0) / lat_n * 1000
 

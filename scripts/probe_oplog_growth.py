@@ -8,7 +8,10 @@ commit record, so at each checkpoint (total puts so far) it reports:
 
   * the op-log file count;
   * ``Table.get`` p50 / p99 over uniform random keys;
-  * ``Seeker.scan_range`` p50 over 1..100-row ranges.
+  * ``Seeker.scan_range`` p50 over 1..100-row ranges;
+  * the catalog's block cache: the gets' hit ratio (hits over row
+    group lookups) and the cached MB after the scans (which only use
+    hits, so they do not grow it).
 
 Run: ``python scripts/probe_oplog_growth.py [--rows 10000]
 [--puts 0,400,1000] [--gets 300] [--scans 50]``. Prints one markdown
@@ -76,8 +79,10 @@ def main() -> None:
         table = client.open_table("t")
         seeker = Seeker(client.catalog, "t")
         done = 0
-        print("| op-log files (after N puts) | `Table.get` p50 / p99 | `Seeker.scan_range` p50 |")
-        print("|---|---|---|")
+        cache = client.catalog.block_cache
+        print("| op-log files (after N puts) | `Table.get` p50 / p99 | `Seeker.scan_range` p50 "
+              "| cache hit ratio, MB |")
+        print("|---|---|---|---|")
         for target in (int(x) for x in args.puts.split(",")):
             for _ in range(target - done):
                 table.put(key(rng.randrange(args.rows)), "d", "q", b"p" * args.value_bytes)
@@ -85,6 +90,7 @@ def main() -> None:
             n_files = len(client.catalog.tablet_info("t"))
             for _ in range(10):  # warm the index and the page cache
                 table.get(key(rng.randrange(args.rows)))
+            before = cache.stats()
             gets = []
             for _ in range(args.gets):
                 k = key(rng.randrange(args.rows))
@@ -92,6 +98,7 @@ def main() -> None:
                 got = table.get(k)
                 gets.append((time.perf_counter() - t0) * 1e3)
                 assert got["d"]["q"], f"get {k} found no cell"
+            hits, misses = (cache.stats()[k] - before[k] for k in ("hits", "misses"))
             scans = []
             for _ in range(args.scans):
                 lo = rng.randrange(args.rows - 100)
@@ -106,11 +113,13 @@ def main() -> None:
                 "get_p50_ms": round(statistics.median(gets), 2),
                 "get_p99_ms": round(_pct(gets, 0.99), 2),
                 "scan_range_p50_ms": round(statistics.median(scans), 2),
+                "cache_hit_ratio": round(hits / max(hits + misses, 1), 3),
+                "cache_mb": round(cache.stats()["bytes"] / 1e6, 1),
             }
             results.append(r)
             print(
                 f"| {r['files']} ({done}) | {r['get_p50_ms']} / {r['get_p99_ms']} ms "
-                f"| {r['scan_range_p50_ms']} ms |",
+                f"| {r['scan_range_p50_ms']} ms | {r['cache_hit_ratio']}, {r['cache_mb']} |",
                 flush=True,
             )
     print(json.dumps({"rows": args.rows, "value_bytes": args.value_bytes, "checkpoints": results}))

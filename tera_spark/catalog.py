@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tera_spark.coordination import PosixLinkArbiter, SlotArbiter
 from tera_spark.model import CELL_SCHEMA
-from tera_spark.oplog_index import OplogIndex
+from tera_spark.oplog_index import BlockCache, OplogIndex
 from tera_spark.registry import TableSchema, parse_schema_string
 from tera_spark.sources.tables import schema_codec, write_cell_table
 
@@ -131,6 +131,7 @@ class Catalog:
         self._auto_writer_id = f"w{os.getpid()}-{uuid.uuid4().hex[:8]}"
         self._tail_checked: set[str] = set()  # per-process WAL-recovery memo
         self._indexes: dict[str, OplogIndex] = {}  # see oplog_index
+        self.block_cache = BlockCache()  # decoded row groups of every table's seeks
         self._schema_memo: dict[str, tuple] = {}  # see current_schema
 
     def _authorize(self, action: str, table: str) -> None:

@@ -17,7 +17,9 @@ This module is the seek path:
      the SDK's meta-table tablet lookup,
      `GetTabletAddrOrScheduleUpdateMeta` src/sdk/table_impl.cc:1452,
      and the LevelDB block-index seek);
-  3. read only those row groups with pyarrow — no Spark job;
+  3. read only those row groups with pyarrow — no Spark job — through
+     the catalog's block cache of decoded row groups
+     (oplog_index.BlockCache), which point reads fill;
   4. fold the row's cells with a pure-Python twin of
      `operators/view.current_view` (same semantics as the Spark fold,
      the way the reference shares `CompactStrategy` logic between the
@@ -42,7 +44,7 @@ from __future__ import annotations
 
 import time
 from bisect import bisect_left
-from collections import OrderedDict, defaultdict
+from collections import defaultdict
 from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
 from itertools import groupby, islice
@@ -53,7 +55,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from tera_spark.model import CellOp
-from tera_spark.oplog_index import FileMeta, OplogIndex, seq_hidden
+from tera_spark.oplog_index import BlockCache, FileMeta, OplogIndex, seq_hidden
 from tera_spark.registry import TableSchema
 
 _ATOMIC = frozenset(
@@ -235,9 +237,10 @@ def fold_kv(rows: list[tuple], now_us: int) -> tuple | None:
 
 class Seeker:
     """Point-read and range-scan client over a catalog table, routed by
-    the table's op-log index (shared with the catalog) — the SDK
-    meta-cache analog; ``schema`` pins the fold's schema.
-    ``Seeker(path=...)`` indexes that directory itself, with no commit
+    the table's op-log index and reading through the block cache, both
+    shared with the catalog (the SDK meta cache and the tablet server's
+    block cache); ``schema`` pins the fold's schema. ``Seeker(path=...)``
+    indexes that directory itself, with a cache of its own and no commit
     census: no watermark, gap or rollback mask applies."""
 
     def __init__(
@@ -247,14 +250,15 @@ class Seeker:
         *,
         path: str | None = None,
         schema: TableSchema | None = None,
-        cache_groups: int = 0,
     ):
         if catalog is not None:
             self._index = catalog.oplog_index(table)
+            self._cache = catalog.block_cache
             self._get_masks = lambda: catalog._seq_masks(table)
             self.gate = lambda action="read": catalog._read_gate(table, action)
         else:
             self._index = OplogIndex(Path(path))
+            self._cache = BlockCache()
             self._get_masks = lambda: (None, [])
             self.gate = lambda action="read": None
         # re-read per use (stat-guarded): an online update_schema
@@ -263,13 +267,6 @@ class Seeker:
             (lambda: catalog.current_schema(table)) if catalog is not None and schema is None
             else (lambda: schema)
         )
-        # decoded-row-group LRU — the block-cache analog (reference:
-        # per-LG block cache + persistent_cache; a hot point-read
-        # working set stays decoded in client memory). Keyed by the
-        # index's file identity: a file rewritten under its old name
-        # (optimize, major compaction) is a different file.
-        self._cache_groups = cache_groups
-        self._rg_cache: OrderedDict[tuple[tuple, int], pa.Table] = OrderedDict()
 
     # --- routing ------------------------------------------------------
 
@@ -282,32 +279,46 @@ class Seeker:
         return bool(self.schema is not None and self.schema.kv_mode)
 
     def _group(self, m: FileMeta, rg: int, columns: list[str]) -> pa.Table:
-        """Row group ``rg`` of ``m`` (``columns`` plus expire_ts when the
-        file has it), through the LRU when it is on."""
-        ck = (m.ident, rg)
-        t = self._rg_cache.get(ck)
-        if t is not None:
-            self._rg_cache.move_to_end(ck)
-            return t
+        """Row group ``rg`` of ``m`` read from disk: ``columns`` plus
+        expire_ts when the file has it."""
         pf = pq.ParquetFile(str(m.path))
         if "expire_ts" not in columns and "expire_ts" in pf.schema_arrow.names:
             columns = columns + ["expire_ts"]
-        t = pf.read_row_group(rg, columns=columns)
-        if self._cache_groups > 0:
-            self._rg_cache[ck] = t
-            while len(self._rg_cache) > self._cache_groups:
-                self._rg_cache.popitem(last=False)
-        return t
+        return pf.read_row_group(rg, columns=columns)
 
-    def _read(self, work, row_mask, now_us: int | None, snapshot_seq: int | None = None):
+    def _groups(self, work, columns: list[str], fill: bool) -> list[pa.Table]:
+        """The row groups ``work`` [(file, row group)]: hits from the
+        block cache, misses read from disk (in parallel when there are
+        several; pyarrow releases the GIL during IO and decode) and
+        cached when ``fill``."""
+        keys = [(str(m.path), m.ident, rg, tuple(columns)) for m, rg in work]
+        tables = [self._cache.get(k) for k in keys]
+        misses = [i for i, t in enumerate(tables) if t is None]
+        if len(misses) > 1:
+            with ThreadPoolExecutor(max_workers=_THREADS) as ex:
+                loaded = list(ex.map(lambda i: self._group(*work[i], columns), misses))
+        else:
+            loaded = [self._group(*work[i], columns) for i in misses]
+        for i, t in zip(misses, loaded):
+            tables[i] = t
+            if fill:
+                self._cache.put(keys[i], t)
+        return tables
+
+    def _read(
+        self, work, row_mask, now_us: int | None, snapshot_seq: int | None = None,
+        *, fill: bool = True,
+    ):
         """Visible op-log rows by key, of the row groups ``work``
         [(file, row group)] where ``row_mask(table)`` holds (None: every
-        row); table-mode rows are 7-tuples. Visibility applies the rules
-        read_oplog applies, so the seek path agrees with Spark reads:
-        rollback windows, the commit watermark, commit-CAS gaps, an
-        optional snapshot; then, unless ``now_us`` is None, per-cell TTL
-        (the expire_ts column, present only in files written by TTL
-        puts)."""
+        row); table-mode rows are 7-tuples. Misses enter the block cache
+        when ``fill`` (point reads; a range scan only uses hits, as
+        LevelDB's ``fill_cache=false`` keeps a scan from flushing it).
+        Visibility applies the rules read_oplog applies, so the seek
+        path agrees with Spark reads: rollback windows, the commit
+        watermark, commit-CAS gaps, an optional snapshot; then, unless
+        ``now_us`` is None, per-cell TTL (the expire_ts column, present
+        only in files written by TTL puts)."""
         columns = _KV_COLS if self._kv else _CELL_COLS
         n = len(columns)
         # masked seq windows: RollbackDrop (dbformat.h:156) and the
@@ -315,14 +326,8 @@ class Seeker:
         watermark, masked = self._get_masks()
         # above the top: a torn batch over the watermark, or the snapshot
         top = min((x for x in (watermark, snapshot_seq) if x is not None), default=None)
-        # pyarrow releases the GIL during IO/decode — parallel group reads
-        if len(work) > 1:
-            with ThreadPoolExecutor(max_workers=_THREADS) as ex:
-                tables = list(ex.map(lambda w: self._group(*w, columns), work))
-        else:
-            tables = [self._group(m, rg, columns) for m, rg in work]
         by_key: dict[str, list[tuple]] = defaultdict(list)
-        for t in tables:
+        for t in self._groups(work, columns, fill):
             mask = row_mask(t) if row_mask is not None else None
             t = t if mask is None else t.filter(mask)
             has_ttl = "expire_ts" not in columns and "expire_ts" in t.column_names
@@ -443,7 +448,8 @@ class Seeker:
                     page.append((m, rg))
                     buffered += m.groups[rg][2]
                     i += 1
-                for k, rows in self._read(page, in_range, now_us, snapshot_seq).items():
+                got = self._read(page, in_range, now_us, snapshot_seq, fill=False)
+                for k, rows in got.items():
                     pending[k].extend(rows)
                 # no unread group can add to a key below its lo
                 bound = (work[i][0] or "") if i < len(work) else None

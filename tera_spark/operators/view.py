@@ -45,10 +45,10 @@ ops below the head run are never visible raw — and pin it in tests.
 Plan shape: ONE full-size hash shuffle total, and NO cell-level sort.
 A single hash aggregation on (row_key, cf, qualifier) collects each
 column's ops and its qualifier-level delete maxima; row/cf-level
-masks arrive by LEFT JOIN of two tiny mark aggregates (delete marks
-are rare by construction, so AQE broadcasts them — zero extra
-exchanges, zero sorts; mass-delete pathologies degrade to a keyed
-join). Masking filters the collected arrays. All sequential
+masks arrive by ONE LEFT JOIN of one tiny mark aggregate keyed by
+row_key (delete marks are rare by construction, so it is broadcast —
+one small exchange, zero sorts; mass-delete pathologies degrade to a
+keyed join). Masking filters the collected arrays. All sequential
 per-qualifier logic runs JVM-side over those arrays via higher-order
 functions; no Python UDFs. Narrow op mixes route to cheaper
 specialized folds (``fold_route`` below), and when the op kinds rule
@@ -227,33 +227,29 @@ def current_view(
     neg = f"{-(1 << 62)}L"
     mask = f"coalesce(_del_qu, {neg})"
     if marks:
-        # row/cf-granularity masks arrive by LEFT JOIN of two tiny mark
-        # aggregates, not by windows over the grouped rows: delete marks
-        # are rare by construction (they exist to be compacted away), so
-        # AQE broadcasts the mark sides and the plan keeps ONE full-size
-        # exchange — the window form forced a second exchange on row_key
-        # plus two sorts of every aggregated row. Mass-delete pathologies
-        # degrade gracefully to a keyed join on the same row_key prefix.
-        # Both mark granularities extract from ONE shared scan (column-
-        # pruned to row_key/cf/ts/op with `op IN (...)` pushed to the
-        # parquet reader — row-group op min/max stats skip delete-free
-        # files entirely); the per-granularity re-aggregates run over the
-        # tiny grouped mark set and reuse its exchange. When the op
-        # kinds rule out both mark kinds, the marks are empty by the
-        # same promise fold_route relies on, and neither join is built.
-        mk = df.filter(F.expr(marked)).groupBy("row_key", "cf", "op").agg(F.expr("max(ts) as _mts"))
-        row_marks = (
-            mk.filter(F.expr(f"op = {CellOp.DEL_ROW}"))
-            .groupBy("row_key")
-            .agg(F.expr("max(_mts) as _del_row"))
+        # row/cf-granularity masks arrive by ONE left join on row_key of
+        # ONE tiny mark aggregate, not by windows over the grouped rows:
+        # delete marks are rare by construction (they exist to be
+        # compacted away), so the mark side is broadcast and the plan
+        # keeps ONE full-size exchange — the window form forced a second
+        # exchange on row_key plus two sorts of every aggregated row.
+        # Mass-delete pathologies degrade to a keyed join on row_key.
+        # The aggregate reads the marks in one scan (column-pruned to
+        # row_key/cf/ts/op, `op IN (...)` pushed to the parquet reader:
+        # row-group op min/max stats skip delete-free files) and keeps
+        # per row the DEL_ROW max and the (cf, ts) of each DEL_FAMILY
+        # mark; a grouped column takes its cf's max from that list.
+        # When the op kinds rule out both mark kinds, the marks are
+        # empty by the same promise fold_route relies on, and neither
+        # the aggregate nor the join is built.
+        row_marks = df.filter(F.expr(marked)).groupBy("row_key").agg(
+            F.expr(f"max(case when op = {CellOp.DEL_ROW} then ts end) as _del_row"),
+            F.expr(f"collect_list(case when op = {CellOp.DEL_FAMILY} "
+                   "then named_struct('cf', cf, 'ts', ts) end) as _del_cfs"),
         )
-        cf_marks = mk.filter(F.expr(f"op = {CellOp.DEL_FAMILY}")).selectExpr(
-            "row_key", "cf", "_mts as _del_cf"
-        )
-        grouped = grouped.join(row_marks, "row_key", "left").join(
-            cf_marks, ["row_key", "cf"], "left"
-        )
-        mask = f"greatest(coalesce(_del_row, {neg}), coalesce(_del_cf, {neg}), {mask})"
+        grouped = grouped.join(row_marks, "row_key", "left")
+        del_cf = f"aggregate(_del_cfs, {neg}, (a, m) -> if(m.cf = cf, greatest(a, m.ts), a))"
+        mask = f"greatest(coalesce(_del_row, {neg}), coalesce({del_cf}, {neg}), {mask})"
     # entries_raw holds no DEL_ROW/DEL_FAMILY/DEL_QUALIFIERS structs
     # (prefiltered / skipped by the collect above): only the ts mask
     entries = f"filter(entries_raw, x -> -x.nts > {mask}) as entries"

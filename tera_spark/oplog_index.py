@@ -9,6 +9,9 @@ Both are memoized on a listing: files by name, size, mtime and inode
 name (immutable once renamed in). A new file costs one footer read
 (~15 µs). Each refresh swaps in an immutable snapshot by assignment, so
 the HTTP proxy's threads share an index without a lock.
+
+``BlockCache`` holds decoded row groups of indexed files, keyed by the
+same file identity, for the point reads of every table of a catalog.
 """
 
 from __future__ import annotations
@@ -17,13 +20,17 @@ import bisect
 import json
 import os
 import re
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass
 from pathlib import Path
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 _RECORD = re.compile(r"^(-?\d+)\.json$", re.M)
+_CACHE_BYTES = 64 << 20  # decoded bytes the block cache holds
 
 
 @dataclass(frozen=True, eq=False)
@@ -103,7 +110,8 @@ class OplogIndex:
     ``commits`` directory (without one the census is empty)."""
 
     def __init__(self, oplog: Path, commits: Path | None = None):
-        self.oplog, self.commits = Path(oplog), commits
+        # absolute: a file's path keys the catalog-wide block cache
+        self.oplog, self.commits = Path(oplog).absolute(), commits
         # (listing, files, (key lo, key hi, file, row group) per group)
         self._files: tuple = (None, (), ())
         # (commits/ names, record seqs, gaps or None until asked, lo by
@@ -211,3 +219,47 @@ class OplogIndex:
             walk = (marks[-1], expected, tuple(out)) if whole and marks else None
             snap = self._census = (names, marks, tuple(out), los, walk)
         return (marks[-1] if marks else None), (snap[2] if gaps else ())
+
+
+class BlockCache:
+    """Decoded op-log row groups, LRU within ``_CACHE_BYTES`` decoded
+    bytes (``pa.Table.nbytes``) — the tablet server's block cache
+    (src/leveldb/persistent_cache/). One per catalog, shared by every
+    Seeker of every table and by threads, under one lock. Keyed by
+    (absolute path, file identity, row group, columns): a rewritten
+    file has a new identity, and the rows are cached raw (the seek path
+    applies rollback, watermark, gap, snapshot and TTL masks on every
+    read), so no commit, heal or rollback invalidates an entry. A group
+    larger than the budget is never cached."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._groups: OrderedDict[tuple, tuple[pa.Table, int]] = OrderedDict()
+        self.hits = self.misses = self.evictions = self.bytes = 0
+
+    def get(self, key: tuple) -> pa.Table | None:
+        with self._lock:
+            got = self._groups.get(key)
+            if got is None:
+                self.misses += 1
+                return None
+            self.hits += 1
+            self._groups.move_to_end(key)
+            return got[0]
+
+    def put(self, key: tuple, t: pa.Table) -> None:
+        size = t.nbytes
+        with self._lock:
+            if size > _CACHE_BYTES or key in self._groups:
+                return
+            self._groups[key] = (t, size)
+            self.bytes += size
+            while self.bytes > _CACHE_BYTES:
+                self.bytes -= self._groups.popitem(last=False)[1][1]
+                self.evictions += 1
+
+    def stats(self) -> dict[str, int]:
+        """Counters for /metrics: hits, misses, evictions, bytes, groups."""
+        with self._lock:
+            return {"hits": self.hits, "misses": self.misses, "evictions": self.evictions,
+                    "bytes": self.bytes, "groups": len(self._groups)}

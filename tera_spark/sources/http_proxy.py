@@ -194,7 +194,8 @@ class HttpProxy:
         gauge`` headers, then ``name{labels,value_type="Gauge"} value
         timestamp_ms`` items. Per-table gauges come from the
         metadata-only ``catalog.table_stats``; proxy request counters
-        ride along with no table label."""
+        and the catalog's block cache (hits, misses, evictions, bytes,
+        groups) ride along with no table label."""
         ts = int(time.time() * 1000)
         out: list[str] = []
 
@@ -208,6 +209,8 @@ class HttpProxy:
         for cname, cval in sorted(counters.items()):
             item(f"tera_http_{cname}", "", cval)
         cat = self._client.catalog
+        for cname, cval in cat.block_cache.stats().items():
+            item(f"tera_block_cache_{cname}", "", cval)
         for tname in cat.list_tables():
             try:
                 stats = cat.table_stats(tname)

@@ -182,6 +182,40 @@ def test_metrics_endpoint_prometheus_text(proxy):
         conn.close()
 
 
+def test_metrics_export_the_block_cache(proxy):
+    """/metrics carries the catalog's block cache counters: a first Get
+    of a row misses and caches its row group, a second one hits."""
+    import re
+
+    def scrape() -> dict[str, int]:
+        conn = http.client.HTTPConnection("127.0.0.1", proxy.port, timeout=30)
+        try:
+            conn.request("GET", "/metrics")
+            body = conn.getresponse().read().decode("utf-8")
+        finally:
+            conn.close()
+        return {m[0]: int(m[1]) for m in re.findall(
+            r'^tera_block_cache_(\w+)\{value_type="Gauge"\} (\d+) \d+$', body, re.M)}
+
+    _post(proxy, PUT_PATH, {"tablename": "oops", "mutation_list": [
+        {"rowkey": "bc", "type": "put", "columns": [
+            {"columnfamily": "cf0", "qualifier": "q", "value": "v"}]}]})
+    get = {"tablename": "oops", "reader_list": [
+        {"rowkey": "bc", "columnfamily": "cf0", "qualifier": "q"}]}
+    before = scrape()
+    assert set(before) == {"hits", "misses", "evictions", "bytes", "groups"}
+    assert _post(proxy, GET_PATH, get)["results"][0]["value"] == "v"
+    missed = scrape()
+    assert missed["misses"] == before["misses"] + 1 and missed["hits"] == before["hits"]
+    assert missed["groups"] == before["groups"] + 1 and missed["bytes"] > before["bytes"]
+    assert _post(proxy, GET_PATH, get)["results"][0]["value"] == "v"
+    hit = scrape()
+    assert hit["hits"] == missed["hits"] + 1 and hit["misses"] == missed["misses"]
+    assert (hit["bytes"], hit["groups"], hit["evictions"]) == (
+        missed["bytes"], missed["groups"], missed["evictions"]
+    )
+
+
 def test_errors_bad_json_unknown_path_unknown_table(proxy):
     conn = http.client.HTTPConnection("127.0.0.1", proxy.port, timeout=30)
     try:

@@ -432,9 +432,7 @@ def test_seek_reads_through_same_name_rewrite(spark, tmp_path):
     c = Client(spark, str(tmp_path / "cat"))
     c.catalog.create_table("t { d }", delimiters=["m"])
     t = c.open_table("t")
-    seeker = Seeker(
-        path=c.catalog.oplog_path("t"), schema=c.catalog.get_schema("t"), cache_groups=8
-    )
+    seeker = Seeker(path=c.catalog.oplog_path("t"), schema=c.catalog.get_schema("t"))
     names = []
     for ts, v in enumerate((b"v1", b"v2"), start=1):
         t.put("a", "d", "q", v, ts=ts)

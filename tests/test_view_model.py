@@ -660,6 +660,25 @@ def test_mark_free_routes_match_unknown_kinds(spark, seed, op_kinds, route):
     assert {(rk, cf, qu, ts, bytes(v)) for rk, cf, qu, ts, v in got} == model_view(rows, schema, NOW)
 
 
+def test_fold_reads_marks_in_one_scan_and_one_join(spark, tmp_path):
+    """With row and family deletes admitted (unknown op kinds), the
+    fold over a parquet op-log scans it twice (cells and marks), builds
+    one mark aggregate keyed by row_key and joins it once; its rows
+    equal the model's."""
+    import re
+
+    rows = _gen_oplog(3)
+    assert {CellOp.DEL_ROW, CellOp.DEL_FAMILY} <= {r[4] for r in rows}
+    spark.createDataFrame(rows, CELL_SCHEMA).write.parquet(str(tmp_path / "oplog"))
+    view = current_view(spark.read.parquet(str(tmp_path / "oplog")), _schema(), now_us=NOW)
+    plan = view._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 2, plan
+    assert len(re.findall(r"Join", plan)) == 1, plan
+    assert len(re.findall(r"(?<![A-Za-z])Exchange\s", plan)) == 2, plan
+    got = {(rk, cf, qu, ts, bytes(v)) for rk, cf, qu, ts, v in view.collect()}
+    assert got == model_view(rows, _schema(), NOW)
+
+
 class _Py4jCalls:
     """Counts the entering thread's py4j round trips (``send_command``)
     while active, as scripts/probe_fold_construct.py does: other threads
