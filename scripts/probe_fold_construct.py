@@ -12,19 +12,29 @@ Builds two tables the way perfbench ``cells`` does:
     only ADD (the ``merge_free``, ``put_only`` and ``counter`` routes).
 
 For each fold route, for ``Table.scan_df(...).count()`` over a
-50-row range and for ``Catalog.view`` of the mixed history it reports
-the py4j round trips of one construction, the median construct ms,
-the median execute ms (``count()``) and the Spark jobs one execution
-runs. Construction is everything up to the first Spark job.
+50-row range on both of its routes (the local relation the gate picks,
+and the Spark scan and fold) and for ``Catalog.view`` of the mixed
+history it reports the py4j round trips of one construction, the
+median construct ms, the median execute ms (``count()``) and the Spark
+jobs one execution runs. Construction is everything up to the first
+Spark job; on the local route it includes the seek-path read.
+
+``--sweep`` adds the crossover of ``scan_df``'s two routes: two more
+tables of ``--sweep-rows`` rows (16 B and 1 KB values; four files of
+1,000-row row groups), scanned over ranges aligned to the groups, so
+that a range routes exactly 1k, 4k, 8k, 16k and 50k op-log rows, each
+on both routes (forced past the gate). Its local rows set
+``client._LOCAL_SCAN_ROWS``: the local route must not be slower there.
 
 Run: ``python scripts/probe_fold_construct.py [--rows 10000]
-[--cells 60000] [--reps 3]``. Prints one markdown table row per case
-and a final JSON line.
+[--cells 60000] [--reps 3] [--sweep] [--sweep-rows 52000]``. Prints one
+markdown table row per case and a final JSON line.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import gc
 import json
 import statistics
@@ -69,13 +79,18 @@ def main() -> None:
     ap.add_argument("--cells", type=int, default=60_000)
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--sweep", action="store_true", help="add the scan_df route crossover")
+    ap.add_argument("--sweep-rows", type=int, default=52_000)
     args = ap.parse_args()
 
+    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from perfbench.cell_fold import ALL_KINDS, mixed_cells
+    from tera_spark import client as client_mod
+    from tera_spark import plans
     from tera_spark.client import Client
-    from tera_spark.model import CellOp
+    from tera_spark.model import CELL_SCHEMA, CellOp, arrow_table
     from tera_spark.operators.mutation import MutationBatch
     from tera_spark.operators.scan import ScanDescriptor
     from tera_spark.operators.view import current_view, fold_route
@@ -85,8 +100,21 @@ def main() -> None:
     sc = spark.sparkContext
     counter = CallCounter(spark)
 
-    def measure(name: str, build) -> dict:
-        calls, construct, execute, jobs = [], [], [], []
+    @contextlib.contextmanager
+    def forced(route: str):
+        """Force ``scan_df``'s route past its gate."""
+        saved = client_mod._LOCAL_SCAN_ROWS, plans.SCALE_GATE_BYTES
+        if route == "spark":
+            client_mod._LOCAL_SCAN_ROWS = -1
+        else:
+            client_mod._LOCAL_SCAN_ROWS = plans.SCALE_GATE_BYTES = 1 << 62
+        try:
+            yield
+        finally:
+            client_mod._LOCAL_SCAN_ROWS, plans.SCALE_GATE_BYTES = saved
+
+    def measure(name: str, build, extra: dict | None = None) -> dict:
+        calls, construct, execute, jobs, counts = [], [], [], [], set()
         for rep in range(args.reps):
             gc.collect()  # py4j frees proxies of earlier reps by round trips too
             with counter:
@@ -97,7 +125,7 @@ def main() -> None:
             group = f"probe-{name}-{rep}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
-            df.count()
+            counts.add(df.count())
             execute.append(time.perf_counter() - t0)
             sc.setJobGroup("", "")
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
@@ -109,7 +137,10 @@ def main() -> None:
             "construct_ms": round(statistics.median(construct) * 1000, 1),
             "execute_ms": round(statistics.median(execute) * 1000, 1),
             "jobs": jobs[-1],
+            "count": counts.pop(),
+            **(extra or {}),
         }
+        assert not counts, (name, "counts differ between reps")
         print(f"| {name} | {row['py4j_calls']} | {row['construct_ms']} | "
               f"{row['execute_ms']} | {row['jobs']} |", flush=True)
         return row
@@ -169,7 +200,43 @@ def main() -> None:
         lo = args.rows // 3
         desc = ScanDescriptor(start="row%021d" % lo, end="row%021d" % (lo + 50))
         results.append(measure("scan_df 50 rows", lambda: table.scan_df(desc)))
+        with forced("spark"):
+            results.append(measure("scan_df 50 rows, Spark", lambda: table.scan_df(desc)))
+        assert results[-1]["count"] == results[-2]["count"]
         results.append(measure("Catalog.view mix", lambda: cat.view("mix")))
+
+        if args.sweep:
+            print("| sweep case | py4j calls | construct ms | execute ms | jobs |")
+            print("|---|---|---|---|---|")
+            group, n = 1000, args.sweep_rows
+            for width in (16, 1000):
+                name = f"sweep{width}"
+                client.create_table(f"{name} {{ d <maxversions=1> }}")
+                rows = [("row%021d" % i, "d", "q", 1, CellOp.PUT,
+                         str(i).ljust(width, "x").encode(), i) for i in range(n)]
+                quarter = -(-n // 4 // group) * group
+                for f in range(4):  # a bulk load's file per core, by key range
+                    pq.write_table(
+                        arrow_table(rows[f * quarter:(f + 1) * quarter], CELL_SCHEMA),
+                        f"{cat.oplog_path(name)}/part-{f:05d}.parquet", row_group_size=group,
+                    )
+                del rows
+                swept = client.open_table(name)
+                for span in (1000, 4000, 8000, 16000, 50000):
+                    lo = (n - span) // 2 // group * group
+                    d = ScanDescriptor(start="row%021d" % lo, end="row%021d" % (lo + span))
+                    routed, size = swept._seeker.range_size(d.start, d.end)
+                    facts = {"routed_rows": routed, "routed_mb": round(size / 2**20, 1)}
+                    got = []
+                    for kind in ("local", "spark"):
+                        with forced(kind):
+                            got.append(measure(
+                                f"{width} B values, {span} rows ({routed} routed, "
+                                f"{facts['routed_mb']} MB), {kind}",
+                                lambda t=swept, d=d: t.scan_df(d), facts,
+                            ))
+                    assert got[0]["count"] == got[1]["count"] == span, got
+                    results.extend(got)
     print(json.dumps({"reps": args.reps, "rows": args.rows, "cells": args.cells, "results": results}))
     spark.stop()
 

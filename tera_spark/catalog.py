@@ -20,6 +20,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import time
 import uuid
 from pathlib import Path
@@ -132,6 +133,9 @@ class Catalog:
         self._tail_checked: set[str] = set()  # per-process WAL-recovery memo
         self._indexes: dict[str, OplogIndex] = {}  # see oplog_index
         self.block_cache = BlockCache()  # decoded row groups of every table's seeks
+        # Table.scan_df calls per route, for /metrics
+        self.scan_df_routes = {"local": 0, "spark": 0}
+        self._routes_lock = threading.Lock()
         self._schema_memo: dict[str, tuple] = {}  # see current_schema
 
     def _authorize(self, action: str, table: str) -> None:
@@ -205,6 +209,10 @@ class Catalog:
         self._authorize("read", name)
         self._consume(name, action)
 
+    def count_scan_df_route(self, route: str) -> None:
+        with self._routes_lock:
+            self.scan_df_routes[route] += 1
+
     def _write_gate(self, name: str) -> None:
         """The write-side twin of ``_read_gate``, plus the writer lease."""
         self._check_enabled(name)
@@ -262,7 +270,9 @@ class Catalog:
         """The table's op-log index, shared with every Seeker on it."""
         if name not in self._indexes:
             tdir = self.root / name
-            self._indexes.setdefault(name, OplogIndex(tdir / "oplog", tdir / "commits"))
+            self._indexes.setdefault(
+                name, OplogIndex(tdir / "oplog", tdir / "commits", self.block_cache)
+            )
         return self._indexes[name]
 
     def read_oplog(self, name: str) -> DataFrame:

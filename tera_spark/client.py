@@ -15,10 +15,12 @@ semantics, only the SDK's shape:
   both transaction kinds — goes through the seek path
   (operators/seek.py, the ``LowLevelSeek`` / ``LowLevelScan`` analog):
   footer-routed pyarrow reads and a Python fold on the client, no
-  Spark job. As in tera, the caller picks no access path. The Spark
-  operators (``operators.scan``, ``scan_df``, ``batch_get``) remain
-  the DataFrame forms and the reference the seek path is tested
-  against.
+  Spark job. As in tera, the caller picks no access path. ``scan_df``
+  reads a range the op-log footers prove small the same way and hands
+  it to Spark as a one-partition local relation; a larger range, or a
+  ``<hash=on>`` table, is the Spark scan and fold. The Spark operators
+  (``operators.scan``, ``batch_get``) remain the DataFrame forms and
+  the reference the seek path is tested against.
 - Writes auto-assign timestamps (server-assigned ts, tera_key.h:33)
   and take their seq window from the table's one counter (LevelDB
   sequence analog; a ``Table`` holds no seq state), so the later write
@@ -39,8 +41,11 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
+from tera_spark import plans
 from tera_spark.catalog import Catalog
+from tera_spark.model import VISIBLE_SCHEMA, arrow_rows
 # check_and_apply: the DataFrame-level CheckAndApply, re-exported beside
 # the SDK's seek-backed Table.check_and_apply
 from tera_spark.operators.mutation import MutationBatch, check_and_apply  # noqa: F401
@@ -51,6 +56,12 @@ from tera_spark.registry import TableSchema
 
 _CELL = Row("row_key", "cf", "qualifier", "ts", "value")
 _KV = Row("key", "value", "expire_ts")
+# scan_df's cells on both routes: the visible cells, all nullable as
+# the Spark fold of a Parquet read leaves them
+_CELL_STRUCT = StructType([StructField(f.name, f.dataType) for f in VISIBLE_SCHEMA])
+# op-log rows (footer counts) up to which a scan_df range is read on
+# the driver: the crossover of scripts/probe_fold_construct.py's sweep
+_LOCAL_SCAN_ROWS = 16_384
 
 
 class Client:
@@ -436,14 +447,19 @@ class Table:
                 .toLocalIterator()
             )
         self._cat._read_gate(self.name, "scan")
+        return (_CELL(*c) for c in self._scan_cells(desc, now_us, snapshot_seq))
+
+    def _scan_cells(
+        self, desc: ScanDescriptor, now_us: int | None, snapshot_seq: int | None
+    ) -> Iterator[tuple]:
+        """``desc``'s cells by the seek path's paged scan."""
         ts = (desc.ts_start, desc.ts_end)
-        cells = self._seeker.scan_range(
+        return self._seeker.scan_range(
             desc.start, desc.end, columns=desc.columns, column_families=desc.column_families,
             max_versions=desc.max_versions, max_qualifiers=desc.max_qualifiers,
             ts_range=ts if ts != (None, None) else None, number_limit=desc.number_limit,
             now_us=now_us, snapshot_seq=snapshot_seq,
         )
-        return (_CELL(*c) for c in cells)
 
     def scan_df(
         self,
@@ -453,8 +469,28 @@ class Table:
         snapshot_seq: int | None = None,
     ) -> DataFrame:
         """The analytics-native form: visible cells as a DataFrame,
-        folded with the schema the seek path uses."""
+        folded with the schema the seek path uses.
+
+        A range whose routed op-log row groups hold at most
+        ``_LOCAL_SCAN_ROWS`` rows and less than ``plans.SCALE_GATE_BYTES``
+        uncompressed bytes (footer figures: exact upper bounds) is read
+        now, by the seek path's scan, and returned as a one-partition
+        local relation (an action on it runs one Spark job). Any
+        other range, and every ``<hash=on>`` table (a user-key range
+        cannot prune hash storage), is the lazy Spark scan and fold.
+        Both routes return the same cells and schema; the catalog's
+        ``scan_df_routes`` counts them."""
         self._cat._read_gate(self.name, "scan")
+        desc = desc or ScanDescriptor()
+        if not self._hashed:
+            rows, size = self._seeker.range_size(desc.start, desc.end)
+            if rows <= _LOCAL_SCAN_ROWS and size < plans.SCALE_GATE_BYTES:
+                self._cat.count_scan_df_route("local")
+                cells = list(self._scan_cells(desc, now_us, snapshot_seq))
+                return self._cat.spark.createDataFrame(
+                    arrow_rows(cells, _CELL_STRUCT), schema=_CELL_STRUCT
+                ).coalesce(1)
+        self._cat.count_scan_df_route("spark")
         return self._user_range(
             self._strip_df(
                 scan(

@@ -110,13 +110,11 @@ KV_OPLOG_SCHEMA = T.StructType(
 LATEST_TS = (1 << 63) - 1
 
 
-def arrow_table(rows: list[tuple], schema: T.StructType):
+def arrow_rows(rows: list[tuple], schema: T.StructType):
     """``rows`` (tuples in ``schema``'s column order) as one pyarrow
-    table sorted by its key column (the first: row_key or key) — the
-    driver-side twin of ``spark.createDataFrame(rows, schema)`` for
-    commits written with ``pq.write_table`` instead of a Spark job. The
-    arrow schema is derived from ``schema``, so this module stays the
-    only schema definition."""
+    table, built column by column — the driver-side twin of
+    ``spark.createDataFrame(rows, schema)``. The arrow schema is derived
+    from ``schema``, so this module stays the only schema definition."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -124,4 +122,11 @@ def arrow_table(rows: list[tuple], schema: T.StructType):
     cols = list(zip(*rows)) if rows else [()] * len(aschema)
     return pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, aschema)], schema=aschema
-    ).sort_by(aschema.names[0])
+    )
+
+
+def arrow_table(rows: list[tuple], schema: T.StructType):
+    """``arrow_rows`` sorted by its key column (the first: row_key or
+    key), for commits written with ``pq.write_table`` instead of a Spark
+    job."""
+    return arrow_rows(rows, schema).sort_by(schema.names[0])

@@ -18,9 +18,11 @@ Order of application mirrors the server:
      version counting (`ProcessRowBuffer`, tablet_io.cc:2287-2323).
 
 Tablet routing / sessions / sliding-window prefetch have no analog
-here: this is the DataFrame form. The SDK's row-bounded scan is the
-seek path's paged scan (`operators/seek.Seeker.scan_range`), pinned
-equal to this operator by tests/test_seek.py.
+here: this is the Spark scan, the DataFrame form over any range. The
+SDK's row-bounded scan is the seek path's paged scan
+(`operators/seek.Seeker.scan_range`), which also serves
+`Table.scan_df` when the op-log footers prove the range small; both
+are pinned equal to this operator by tests/test_seek.py.
 """
 
 from __future__ import annotations

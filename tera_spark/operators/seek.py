@@ -36,8 +36,9 @@ Range scans take the same path, paged like tera's ResultStream
 holds one page, not the range.
 
 Equivalence with the Spark fold is pinned by property tests
-(tests/test_seek.py): random op-logs → `Seeker.get` ≡ `scan.get`,
-`Table.scan` ≡ sorted `scan_df`.
+(tests/test_seek.py) against the Spark scan operator: random op-logs →
+`Seeker.get` ≡ `scan.get`, and `Table.scan` and a small `scan_df` (which
+reads through ``scan_range``) ≡ `operators.scan.scan` of the op-log.
 """
 
 from __future__ import annotations
@@ -257,8 +258,8 @@ class Seeker:
             self._get_masks = lambda: catalog._seq_masks(table)
             self.gate = lambda action="read": catalog._read_gate(table, action)
         else:
-            self._index = OplogIndex(Path(path))
             self._cache = BlockCache()
+            self._index = OplogIndex(Path(path), cache=self._cache)
             self._get_masks = lambda: (None, [])
             self.gate = lambda action="read": None
         # re-read per use (stat-guarded): an online update_schema
@@ -351,6 +352,22 @@ class Seeker:
             if lo is None or hi is None or ((i := bisect_left(ks, lo)) < len(ks) and ks[i] <= hi)
         ]
 
+    def range_groups(self, start: str | None, end: str | None) -> list[tuple]:
+        """(key lo, key hi, file, row group) of every row group that may
+        hold a key of [start, end), in key-``lo`` order: the groups
+        ``scan_range`` reads. Groups without key bounds may hold any key
+        and sort first."""
+        return sorted((
+            g for g in self._index.groups() if g[0] is None or g[1] is None
+            or not ((end is not None and g[0] >= end) or (start is not None and g[1] < start))
+        ), key=lambda g: g[0] or "")
+
+    def range_size(self, start: str | None, end: str | None) -> tuple[int, int]:
+        """(op-log rows, uncompressed bytes) of ``range_groups``, from
+        the footers: an upper bound of what a scan of the range reads."""
+        sizes = [m.groups[rg][2:] for _, _, m, rg in self.range_groups(start, end)]
+        return sum(r for r, _ in sizes), sum(b for _, b in sizes)
+
     def _read_keys(self, keys: list[str], now_us: int | None, snapshot_seq: int | None = None):
         key_col, wanted = ("key" if self._kv else "row_key"), pa.array(keys)
         return self._read(
@@ -423,11 +440,7 @@ class Seeker:
         schema = self.schema
         kv = bool(schema is not None and schema.kv_mode)
         key_col = "key" if kv else "row_key"
-        # groups without key bounds may hold any key: they sort first
-        work = sorted((
-            g for g in self._index.groups() if g[0] is None or g[1] is None
-            or not ((end is not None and g[0] >= end) or (start is not None and g[1] < start))
-        ), key=lambda g: g[0] or "")
+        work = self.range_groups(start, end)
 
         def in_range(t):
             m = None

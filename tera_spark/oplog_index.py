@@ -1,8 +1,9 @@
 """Per-table op-log index — the tablet version / SDK meta-cache analog
 (`GetTabletAddrOrScheduleUpdateMeta`, src/sdk/table_impl.cc:1452): the
 only code that opens an op-log footer or lists ``commits/``. Per file
-it holds row-group (lo, hi, rows) on the key column, seq and op bounds
-and bytes; the commit census holds the watermark and the gaps below it.
+it holds row-group (lo, hi, rows, uncompressed bytes) on the key column,
+seq and op bounds and bytes; the commit census holds the watermark and
+the gaps below it.
 
 Both are memoized on a listing: files by name, size, mtime and inode
 (``optimize`` rewrites files under their old names), commit records by
@@ -11,7 +12,8 @@ name (immutable once renamed in). A new file costs one footer read
 the HTTP proxy's threads share an index without a lock.
 
 ``BlockCache`` holds decoded row groups of indexed files, keyed by the
-same file identity, for the point reads of every table of a catalog.
+same file identity, for the point reads of every table of a catalog; a
+refresh that sees an identity leave the listing drops its entries.
 """
 
 from __future__ import annotations
@@ -37,7 +39,9 @@ _CACHE_BYTES = 64 << 20  # decoded bytes the block cache holds
 class FileMeta:
     path: Path
     ident: tuple  # (name, size, mtime_ns, inode)
-    groups: tuple  # (key lo, key hi, rows) per row group; None bounds without stats
+    # (key lo, key hi, rows, uncompressed bytes) per row group; None
+    # bounds without stats
+    groups: tuple
     seq_lo: int | None  # seq/op bounds: None without rows (op: in KV files)
     seq_hi: int | None
     op_lo: int | None
@@ -83,7 +87,8 @@ def _read_meta(path: Path, ident: tuple) -> FileMeta:
     cols = {md.schema.column(i).path: i for i in range(md.num_columns)}
     key = cols.get("row_key", cols.get("key"))  # cell table / KV table
     groups = tuple(
-        (*_stats(md, rg, key), md.row_group(rg).num_rows) for rg in range(md.num_row_groups)
+        (*_stats(md, rg, key), md.row_group(rg).num_rows, md.row_group(rg).total_byte_size)
+        for rg in range(md.num_row_groups)
     )
     seq, op = _span(path, md, cols, "seq"), _span(path, md, cols, "op")
     return FileMeta(path, ident, groups, *seq, *op)
@@ -107,11 +112,15 @@ def _list_files(d: Path) -> tuple:
 
 class OplogIndex:
     """The index over ``oplog`` and, for a catalog table, its
-    ``commits`` directory (without one the census is empty)."""
+    ``commits`` directory (without one the census is empty). Files that
+    leave the listing are dropped from ``cache``."""
 
-    def __init__(self, oplog: Path, commits: Path | None = None):
+    def __init__(
+        self, oplog: Path, commits: Path | None = None, cache: BlockCache | None = None
+    ):
         # absolute: a file's path keys the catalog-wide block cache
         self.oplog, self.commits = Path(oplog).absolute(), commits
+        self._cache = cache
         # (listing, files, (key lo, key hi, file, row group) per group)
         self._files: tuple = (None, (), ())
         # (commits/ names, record seqs, gaps or None until asked, lo by
@@ -130,8 +139,10 @@ class OplogIndex:
                 metas.append(known.get(ident) or _read_meta(self.oplog / ident[0], ident))
             except FileNotFoundError:  # unlinked since the listing
                 continue
-        flat = tuple((lo, hi, m, rg) for m in metas for rg, (lo, hi, _) in enumerate(m.groups))
+        flat = tuple((lo, hi, m, rg) for m in metas for rg, (lo, hi, *_) in enumerate(m.groups))
         self._files = snap = (listing, tuple(metas), flat)
+        if self._cache is not None and (gone := known.keys() - set(listing)):
+            self._cache.drop(str(self.oplog), gone)
         return snap
 
     def files(self) -> tuple[FileMeta, ...]:
@@ -229,7 +240,9 @@ class BlockCache:
     (absolute path, file identity, row group, columns): a rewritten
     file has a new identity, and the rows are cached raw (the seek path
     applies rollback, watermark, gap, snapshot and TTL masks on every
-    read), so no commit, heal or rollback invalidates an entry. A group
+    read), so no commit, heal or rollback invalidates an entry. The
+    groups of a file that compaction or ``optimize`` unlinked or
+    rewrote leave on the table index's next refresh (``drop``). A group
     larger than the budget is never cached."""
 
     def __init__(self) -> None:
@@ -257,6 +270,14 @@ class BlockCache:
             while self.bytes > _CACHE_BYTES:
                 self.bytes -= self._groups.popitem(last=False)[1][1]
                 self.evictions += 1
+
+    def drop(self, directory: str, idents) -> None:
+        """Forget the groups of the files ``idents`` of ``directory``
+        (unlinked or rewritten)."""
+        gone = {str(Path(directory, i[0])): i for i in idents}
+        with self._lock:
+            for key in [k for k in self._groups if gone.get(k[0]) == k[1]]:
+                self.bytes -= self._groups.pop(key)[1]
 
     def stats(self) -> dict[str, int]:
         """Counters for /metrics: hits, misses, evictions, bytes, groups."""

@@ -193,9 +193,10 @@ class HttpProxy:
         (metric_http_server.cc:20-62): ``# HELP`` / ``# TYPE <name>
         gauge`` headers, then ``name{labels,value_type="Gauge"} value
         timestamp_ms`` items. Per-table gauges come from the
-        metadata-only ``catalog.table_stats``; proxy request counters
-        and the catalog's block cache (hits, misses, evictions, bytes,
-        groups) ride along with no table label."""
+        metadata-only ``catalog.table_stats``; proxy request counters,
+        the catalog's block cache (hits, misses, evictions, bytes,
+        groups) and its ``scan_df`` calls per route (local, spark) ride
+        along with no table label."""
         ts = int(time.time() * 1000)
         out: list[str] = []
 
@@ -211,6 +212,8 @@ class HttpProxy:
         cat = self._client.catalog
         for cname, cval in cat.block_cache.stats().items():
             item(f"tera_block_cache_{cname}", "", cval)
+        for route, n in cat.scan_df_routes.items():
+            item(f"tera_scan_df_{route}", "", n)
         for tname in cat.list_tables():
             try:
                 stats = cat.table_stats(tname)

@@ -2,7 +2,8 @@
 
 Point reads fill it and every Seeker of the catalog shares it; a range
 scan only uses its hits. Rows are cached raw, so the visibility masks,
-a same-name rewrite and a compaction never serve a stale row.
+a same-name rewrite and a compaction never serve a stale row; the groups
+of an unlinked file leave the cache on the index's next refresh.
 """
 
 from __future__ import annotations
@@ -93,6 +94,63 @@ def test_no_stale_read_after_compact_inplace(client):
     t.put("r", "d", "q", b"v2")
     t.delete_row("s")
     assert (_value(t, "r"), _value(t, "s")) == (b"v2", None)
+
+
+def test_compaction_drops_dead_files_from_the_cache(client):
+    """After a compaction the index's next refresh drops the unlinked
+    files' groups: every cached key is a live (path, identity), and
+    ``bytes`` is the sum of the cached groups."""
+    cat, t = client.catalog, client.open_table("t")
+    for i in range(5):
+        t.put(f"r{i}", "d", "q", f"v{i}".encode())
+    assert [_value(t, f"r{i}") for i in range(5)] == [f"v{i}".encode() for i in range(5)]
+    assert cat.block_cache.stats()["groups"] == 5
+    cat.compact_inplace("t")
+    assert [_value(t, f"r{i}") for i in range(5)] == [f"v{i}".encode() for i in range(5)]
+    live = {(str(m.path), m.ident) for m in cat.oplog_index("t").files()}
+    cache = cat.block_cache
+    assert cache._groups and {k[:2] for k in cache._groups} <= live
+    assert cache.stats()["bytes"] == sum(size for _, size in cache._groups.values())
+
+
+def test_cache_and_route_counters_under_thread_contention(client):
+    """Eight threads (more than the cores) put, get and drop cache
+    groups and count scan_df routes with a short switch interval: no
+    update is lost, and ``bytes`` stays the sum of the cached groups."""
+    import sys
+
+    import pyarrow as pa
+
+    cat, cache = client.catalog, oplog_index.BlockCache()
+    group = pa.table({"v": [1, 2, 3]})
+    errors = []
+
+    def work(w: int) -> None:
+        try:
+            for i in range(300):
+                path = f"/d/part-{w}-{i % 7}"
+                cache.put((path, ("id", i % 3), 0, ("v",)), group)
+                cache.get((path, ("id", (i + 1) % 3), 0, ("v",)))
+                if i % 5 == 0:
+                    cache.drop("/d", [(f"part-{w}-{i % 7}", ("id", i % 3))])
+                cat.count_scan_df_route("local" if w % 2 else "spark")
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    before = dict(cat.scan_df_routes)
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=work, args=(w,)) for w in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not errors and not any(th.is_alive() for th in threads)
+    assert cat.scan_df_routes == {k: v + 1200 for k, v in before.items()}
+    assert cache.bytes == sum(size for _, size in cache._groups.values())
 
 
 def test_no_stale_read_after_optimize(spark, tmp_path):

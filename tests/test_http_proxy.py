@@ -182,12 +182,15 @@ def test_metrics_endpoint_prometheus_text(proxy):
         conn.close()
 
 
-def test_metrics_export_the_block_cache(proxy):
+def test_metrics_export_the_block_cache(proxy, monkeypatch):
     """/metrics carries the catalog's block cache counters: a first Get
-    of a row misses and caches its row group, a second one hits."""
+    of a row misses and caches its row group, a second one hits. Beside
+    them, the catalog's scan_df calls per route: one local, one Spark."""
     import re
 
-    def scrape() -> dict[str, int]:
+    from tera_spark import client as client_mod
+
+    def scrape(prefix: str = "tera_block_cache_") -> dict[str, int]:
         conn = http.client.HTTPConnection("127.0.0.1", proxy.port, timeout=30)
         try:
             conn.request("GET", "/metrics")
@@ -195,7 +198,7 @@ def test_metrics_export_the_block_cache(proxy):
         finally:
             conn.close()
         return {m[0]: int(m[1]) for m in re.findall(
-            r'^tera_block_cache_(\w+)\{value_type="Gauge"\} (\d+) \d+$', body, re.M)}
+            rf'^{prefix}(\w+)\{{value_type="Gauge"\}} (\d+) \d+$', body, re.M)}
 
     _post(proxy, PUT_PATH, {"tablename": "oops", "mutation_list": [
         {"rowkey": "bc", "type": "put", "columns": [
@@ -214,6 +217,13 @@ def test_metrics_export_the_block_cache(proxy):
     assert (hit["bytes"], hit["groups"], hit["evictions"]) == (
         missed["bytes"], missed["groups"], missed["evictions"]
     )
+
+    assert scrape("tera_scan_df_") == {"local": 0, "spark": 0}
+    table = proxy._client.open_table("oops")
+    assert table.scan_df().count() == 1
+    monkeypatch.setattr(client_mod, "_LOCAL_SCAN_ROWS", -1)
+    assert table.scan_df().count() == 1
+    assert scrape("tera_scan_df_") == {"local": 1, "spark": 1}
 
 
 def test_errors_bad_json_unknown_path_unknown_table(proxy):

@@ -42,7 +42,8 @@ def test_file_facts_and_same_name_rewrite(tmp_path):
     (oplog / "_SUCCESS").touch()
     idx = OplogIndex(oplog)
     a, b = idx.files()
-    assert (a.name, a.groups, a.rows) == ("part-a.parquet", (("b", "d", 2),), 2)
+    size = pq.read_metadata(oplog / "part-a.parquet").row_group(0).total_byte_size
+    assert (a.name, a.groups, a.rows) == ("part-a.parquet", (("b", "d", 2, size),), 2)
     assert (a.key_lo, a.key_hi) == ("b", "d")
     assert (a.seq_lo, a.seq_hi, a.op_lo, a.op_hi) == (3, 9, 2, 2)
     assert a.bytes == os.path.getsize(oplog / "part-a.parquet")

@@ -3,8 +3,9 @@
 The reference keeps LowLevelSeek (src/io/tablet_io.cc:1148-1343) and
 LowLevelScan (:939-1137) behavior-identical by sharing CompactStrategy;
 we pin the same invariant between `operators/seek.Seeker` (driver-side
-pyarrow reads + Python fold) and `operators/scan.get` (Spark fold) on
-random op-logs, plus the footer-bounds routing itself.
+pyarrow reads + Python fold) and `operators/scan.get` / `scan` (Spark
+fold) on random op-logs, plus the footer-bounds routing itself and
+`Table.scan_df`'s gate between the two.
 """
 
 from __future__ import annotations
@@ -490,18 +491,27 @@ def _scan_order(cells: list[tuple]) -> list[tuple]:
     return sorted(cells, key=lambda c: (c[0], c[1], c[2], -c[3]))
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.mark.parametrize("seed", [11, pytest.param(12, marks=pytest.mark.slow)])
 def test_table_scan_pages_match_scan_df(spark, tmp_path, monkeypatch, seed):
-    """Table.scan (the paged seek-path scan, a page of 10 op-log rows)
-    ≡ sorted scan_df rows: versions, row/family/qualifier tombstones,
-    cf and per-cell TTL, every scan-level option, snapshots and
-    number_limit (the default-set seed runs every third case)."""
+    """Table.scan (the paged seek-path scan, a page of 10 op-log rows),
+    scan_df's local route and its Spark route (forced by a gate of 0
+    rows) ≡ the Spark scan operator over the op-log: versions,
+    row/family/qualifier tombstones, cf and per-cell TTL, every
+    scan-level option, snapshots and number_limit (the default-set seed
+    runs every third case). Both routes have one schema."""
+    from tera_spark import client as client_mod
     from tera_spark.client import Client
     from tera_spark.operators import seek
-    from tera_spark.operators.scan import ScanDescriptor
+    from tera_spark.operators.scan import ScanDescriptor, scan
 
     monkeypatch.setattr(seek, "_PAGE_ROWS", 10)
-    t = _paged_table(Client(spark, str(tmp_path / "cat")), _scan_oplog(seed), "paged")
+    c = Client(spark, str(tmp_path / "cat"))
+    t = _paged_table(c, _scan_oplog(seed), "paged")
+    cat = c.catalog
     assert len(t._seeker._index.groups()) >= 30
     cases = [
         (None, None),
@@ -515,17 +525,57 @@ def test_table_scan_pages_match_scan_df(spark, tmp_path, monkeypatch, seed):
         (ScanDescriptor(number_limit=9, max_versions=2), 450),
     ]
     for desc, snap in cases[::3] if seed == 11 else cases:
-        full = desc if desc is None or desc.number_limit is None else (
-            ScanDescriptor(**{**desc.__dict__, "number_limit": None})
-        )
-        want = _scan_order(_cells(
-            t.scan_df(full, now_us=NOW, snapshot_seq=snap).collect()
-        ))
-        if desc is not None and desc.number_limit is not None:
-            want = want[: desc.number_limit]
-        got = _cells(t.scan(desc, now_us=NOW, snapshot_seq=snap))
-        assert got == want, (desc, snap)
+        want = _scan_order(_cells(scan(
+            cat.read_oplog("paged"), cat.current_schema("paged"), desc,
+            now_us=NOW, snapshot_seq=snap,
+        ).collect()))
+        assert _cells(t.scan(desc, now_us=NOW, snapshot_seq=snap)) == want, (desc, snap)
+        local = t.scan_df(desc, now_us=NOW, snapshot_seq=snap)
+        assert "LocalTableScan" in _plan(local) and "FileScan" not in _plan(local)
+        assert _cells(local.collect()) == want, (desc, snap)  # scan order kept
+        with monkeypatch.context() as m:
+            m.setattr(client_mod, "_LOCAL_SCAN_ROWS", 0)
+            on_spark = t.scan_df(desc, now_us=NOW, snapshot_seq=snap)
+        assert "FileScan" in _plan(on_spark)
+        assert on_spark.schema == local.schema
+        assert _scan_order(_cells(on_spark.collect())) == want, (desc, snap)
         assert want or desc is None or desc.number_limit is None
+
+
+def test_scan_df_route_gate(spark, tmp_path, monkeypatch):
+    """scan_df reads a range locally while its routed op-log rows are
+    at most ``_LOCAL_SCAN_ROWS`` and its routed bytes below
+    ``SCALE_GATE_BYTES``; over either bound, and on any <hash=on>
+    table, it plans the Spark FileScan. The catalog counts the routes."""
+    from tera_spark import client as client_mod
+    from tera_spark import plans
+    from tera_spark.client import Client
+    from tera_spark.operators.scan import ScanDescriptor
+
+    c = Client(spark, str(tmp_path / "cat"))
+    t = _paged_table(c, _scan_oplog(11), "paged")
+    desc = ScanDescriptor(start="row05", end="row12")
+    rows, size = t._seeker.range_size(desc.start, desc.end)
+    assert 0 < rows < t._seeker.range_size(None, None)[0] and size > 0
+
+    def route(rows_gate, bytes_gate) -> str:
+        with monkeypatch.context() as m:
+            m.setattr(client_mod, "_LOCAL_SCAN_ROWS", rows_gate)
+            m.setattr(plans, "SCALE_GATE_BYTES", bytes_gate)
+            plan = _plan(t.scan_df(desc))
+        assert ("FileScan" in plan) != ("LocalTableScan" in plan), plan
+        return "spark" if "FileScan" in plan else "local"
+
+    assert route(rows, size + 1) == "local"
+    assert route(rows - 1, size + 1) == "spark"
+    assert route(rows, size) == "spark"
+    assert c.catalog.scan_df_routes == {"local": 1, "spark": 2}
+
+    c.create_table("h <hash=on> { d }")
+    h = c.open_table("h")
+    h.put("u1", "d", "q", "v")
+    assert "FileScan" in _plan(h.scan_df(ScanDescriptor(start="u0", end="u2")))
+    assert c.catalog.scan_df_routes == {"local": 1, "spark": 3}
 
 
 @pytest.mark.slow
