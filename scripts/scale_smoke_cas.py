@@ -1,11 +1,13 @@
 #!/usr/bin/env python
 """Commit-CAS contention smoke: N OS processes each commit M batches
-to ONE table, serialized (slot claim) vs row-disjoint (fast path).
-Measures aggregate commit throughput and verifies integrity afterward
-(every batch visible, commit windows pairwise disjoint, watermark =
-global max). Results land in SCALE.md.
+to ONE table through ``append_cas``, plain (a counter window only) vs
+with ``rows`` (a row manifest too). Measures aggregate commit
+throughput and verifies integrity afterward (every batch visible,
+commit windows pairwise disjoint). ``storm`` mode instead races the
+coordination arbiter's claim itself. Results land in SCALE.md.
 
-Run standalone: `python scripts/scale_smoke_cas.py [n_procs] [batches]`.
+Run standalone: `python scripts/scale_smoke_cas.py [n_procs] [batches]`,
+or `python scripts/scale_smoke_cas.py [n_procs] [rounds] storm [--arbiter cas]`.
 """
 
 from __future__ import annotations
@@ -36,10 +38,12 @@ ROWS_PER_BATCH = 50
 
 
 def run_storm(n_procs: int, rounds: int) -> dict:
-    """Takeover storm (round-6 task): ``n_procs`` OS processes race
-    ONE expired claim slot per round, barrier-released together. The
-    arbiter must yield EXACTLY one winner per round, under arbitrary
-    interleavings, with no leaked takeover temp files. No Spark.
+    """Takeover storm: ``n_procs`` OS processes race ONE expired slot
+    per round through ``cat.arbiter.try_claim`` (the claim that guards
+    the writer lease, the seq counter and the rollbacks list),
+    barrier-released together. The arbiter must yield EXACTLY one
+    winner per round, under arbitrary interleavings, with no leaked
+    takeover temp files. No Spark.
 
     ``--arbiter cas`` runs the identical storm through CasArbiter with
     a socket-served conditional-put store (one linearization point
@@ -55,18 +59,18 @@ def run_storm(n_procs: int, rounds: int) -> dict:
         mgr, cas_addr = serve_cas_store()
     try:
         with tempfile.TemporaryDirectory(prefix="cas_storm_") as root:
-            d = Path(root) / "t" / "commits"
-            d.mkdir(parents=True)
+            d = Path(root) / "slots"
+            d.mkdir()
             sync = Path(root) / "sync"
             sync.mkdir()
             dead = json.dumps({"holder": "dead-writer", "expires": 0.0})
             if ARBITER == "cas":
                 seed_store = connect_cas_store(cas_addr)
                 for k in range(rounds):
-                    assert seed_store.put_if(str(d / f"claim-{k}.lock"), dead, None)
+                    assert seed_store.put_if(str(d / f"slot-{k}.lock"), dead, None)
             else:
                 for k in range(rounds):
-                    (d / f"claim-{k}.lock").write_text(dead)
+                    (d / f"slot-{k}.lock").write_text(dead)
             arb_setup = (
                 ""
                 if ARBITER != "cas"
@@ -85,12 +89,13 @@ def run_storm(n_procs: int, rounds: int) -> dict:
             wid = sys.argv[1]
             cat = Catalog(None, {root!r}, writer_id=wid, arbiter=arbiter)
             sync = Path({root!r}) / "sync"
+            slots = Path({str(d)!r})
             wins = 0
             for k in range({rounds}):
                 (sync / f"ready-{{k}}-{{wid}}").touch()
                 while not (sync / f"go-{{k}}").exists():
                     pass
-                if cat._claim_commit_slot("t", k, wid, ttl_s=60.0):
+                if cat.arbiter.try_claim(slots / f"slot-{{k}}.lock", wid, 60.0):
                     wins += 1
             print("WINS", wins, flush=True)
             """
@@ -137,7 +142,7 @@ def run_storm(n_procs: int, rounds: int) -> dict:
                 if p.returncode != 0:
                     raise RuntimeError(f"storm child failed:\n{out[-2000:]}")
             wins = sum(int(o.split("WINS")[1].split()[0]) for o in outs)
-            # integrity: one winner per round, claim survives with a live
+            # integrity: one winner per round, slot survives with a live
             # holder (read through the arbiter's state — the winner's
             # record is the current generation)
             if ARBITER == "cas":
@@ -149,7 +154,7 @@ def run_storm(n_procs: int, rounds: int) -> dict:
             leaked = list(d.glob("*.dead-*")) + list(d.glob("*.w-*"))
             holders_ok = True
             for k in range(rounds):
-                st = arb.state(d / f"claim-{k}.lock")
+                st = arb.state(d / f"slot-{k}.lock")
                 rec = None if st is None else st[1]
                 if (
                     rec is None
@@ -177,7 +182,7 @@ def run_storm(n_procs: int, rounds: int) -> dict:
 def _child_cores() -> int:
     """Keep the writer fleet inside the box: 16 children x local[4]
     oversubscribes 32 cores 2x and the measurement becomes CPU thrash
-    (both modes choke; serialized even 'wins' by accidental
+    (both modes choke and the ranking becomes accidental
     time-slicing). Coordination is what this smoke measures."""
     import os
 
@@ -207,9 +212,9 @@ def _child_src(root: str, table: str, wid: str, mode: str) -> str:
             for r in range({ROWS_PER_BATCH}):
                 b.put(f"{wid}-{{i}}-{{r}}", "d", "q", "v", ts=1)
             if {mode!r} == "disjoint":
-                cat.append_cas({table!r}, b, rows=b.row_keys, max_wait_s=300.0)
+                cat.append_cas({table!r}, b, rows=b.row_keys)
             else:
-                cat.append_cas({table!r}, b, max_wait_s=300.0)
+                cat.append_cas({table!r}, b)
         print("ELAPSED", time.perf_counter() - t0, flush=True)
         """
     )
@@ -273,11 +278,10 @@ def main() -> None:
         "batches_per_proc": BATCHES,
         "rows_per_batch": ROWS_PER_BATCH,
     }
-    for mode in ("serialized", "disjoint"):
+    for mode in ("plain", "disjoint"):
         out[mode] = run_mode(spark, mode)
-    s, d = out["serialized"], out["disjoint"]
-    out["speedup_disjoint_vs_serialized"] = round(
-        s["wall_s"] / d["wall_s"], 2
+    out["speedup_disjoint_vs_plain"] = round(
+        out["plain"]["wall_s"] / out["disjoint"]["wall_s"], 2
     )
     print(json.dumps(out))
 

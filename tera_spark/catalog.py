@@ -41,6 +41,11 @@ class WriterFenced(Exception):
     """Another process holds the table's writer lease."""
 
 
+# How long a CAS commit's window (or row manifest) stays live before
+# recovery may treat its writer as dead.
+_CAS_TTL_S = 300.0
+
+
 def _replace_text(p: Path, text: str) -> None:
     """Atomically replace ``p``: readers see the old file or the new
     one, never a torn write. The tmp name is unique per writer — a
@@ -113,8 +118,8 @@ class Catalog:
         ``writer_id`` names this process for writer-lease fencing
         (acquire_writer_lease); appends to a table with another
         holder's live lease raise WriterFenced. ``arbiter`` is the
-        coordination backend every exclusive claim (lease, commit
-        slot, allocator lock) routes through — default
+        coordination backend every exclusive claim (lease, seq
+        counter lock, rollbacks lock) routes through — default
         PosixLinkArbiter, which requires all writers to share one
         POSIX filesystem; see tera_spark/coordination.py for the
         contract and the object-store/ZooKeeper backend sketch."""
@@ -300,7 +305,7 @@ class Catalog:
             # window-granular form of the same rule: a seq GAP below
             # the watermark is a concurrently-reserved window whose
             # record hasn't landed (in-flight or crashed) — masked
-            # until its record appears (see _commit_gaps)
+            # until its record appears (see _masked_gaps)
             visible += [f"NOT (seq >= {int(lo)} AND seq <= {int(hi)})" for lo, hi in gaps]
         if visible:
             df = df.filter(F.expr(" AND ".join(visible)))
@@ -483,7 +488,7 @@ class Catalog:
         ttl_s: float = 60.0,
     ) -> int:
         """The commit of every write without seqs of its own (SDK verbs,
-        transactions, KV, ``append_cas``' slot path, index refresh):
+        transactions, KV, ``append_cas`` without rows, index refresh):
         recover the tail, reserve ``n`` seqs from the counter, write
         ``cells(lo)`` and record [lo, hi]; returns hi. Recovering first
         keeps the window above any torn tail. The reservation is the
@@ -642,21 +647,18 @@ class Catalog:
                 continue
 
     def _observes_dead_state(self, name: str) -> bool:
-        """Cheap detector (two directory globs + one lease read, zero
-        Spark jobs) of a crashed coordinator's leftovers: an EXPIRED
-        seq-window reservation, an EXPIRED or torn commit-slot claim,
-        or an EXPIRED writer lease. This is the reader-side trigger —
-        live (or absent) coordination state returns False and readers
-        touch nothing."""
+        """Cheap detector (one manifest glob, one alloc.json read and
+        one lease read, zero Spark jobs) of a crashed coordinator's
+        leftovers: an EXPIRED row manifest, an EXPIRED counter window
+        whose record never landed, or an EXPIRED writer lease. This is
+        the reader-side trigger — live (or absent) coordination state
+        returns False and readers touch nothing."""
         now = time.time()
         if any(rec.get("expires", 0) <= now for _, rec in self._reservations(name)):
             return True
-        for p in self._claim_slot_bases(name):
-            st = self.arbiter.state(p)
-            if st is None:
-                continue
-            if st[1] is None or st[1].get("expires", 0) <= now:
-                return True  # torn or expired claim = dead holder
+        for _lo, hi, expires in (self._alloc_state(name) or {"live": ()})["live"]:
+            if expires <= now and not self._window_recorded(name, hi):
+                return True  # a put / KV verb / transaction died mid-commit
         lease_st = self.arbiter.state(self.root / name / "writer.lease")
         if lease_st is not None and (
             lease_st[1] is None or lease_st[1].get("expires", 0) <= now
@@ -664,23 +666,17 @@ class Catalog:
             return True
         return False
 
-    def _claim_slot_bases(self, name: str) -> list:
-        """Distinct claim-slot base paths in the commits dir (the plain
-        claim file and/or any of its generation files may exist)."""
-        return self.arbiter.list_slots(self.root / name / "commits", "claim-")
-
     def _reader_heal(self, name: str) -> bool:
         """Reader-driven lock cleanup / roll-forward (the reference
         lets ANY reader that meets a lock past its TTL clean up the
         dead transaction instead of waiting for the next writer —
         src/sdk/global_txn.cc:337-501 BackoffAndMaybeCleanupLock /
         CleanLock / RollForward). Here: a read that OBSERVES dead
-        coordination state (expired reservation / claim / lease) runs
-        the exact recovery the next writer would (_recover_tail: sweep
-        expired reservations, retire dead commit gaps into rollback
-        windows, roll back the torn tail, bump the allocator), plus
-        clears expired claim files, so a crashed writer's garbage
-        heals on a writer-less table.
+        coordination state (expired manifest / counter window / lease)
+        runs the exact recovery the next writer would (_recover_tail:
+        sweep expired manifests, retire dead commit gaps into rollback
+        windows, roll back the torn tail, bump the allocator), so a
+        crashed writer's garbage heals on a writer-less table.
 
         Safety gate = the observation itself: tables whose coordination
         state is all live (or that have none) are never touched, so an
@@ -693,28 +689,18 @@ class Catalog:
         (see append()) rather than recording silently-masked rows."""
         if not self._observes_dead_state(name):
             return False
-        # expired claim files are slot dirt, not pending windows; slot
-        # records are IMMUTABLE after creation (generation-slot design),
-        # so a record read as expired/torn is expired/torn forever and
-        # unlinking exactly the files we read is race-free — a taker's
-        # concurrently-created higher generation is a different name and
-        # is never touched
-        for base in self._claim_slot_bases(name):
-            self._clear_dead_claim(base)
         # an expired writer lease is already no-fence (_check_writer_lease
-        # treats it as open access); clearing it is what makes this heal
-        # CONVERGE — otherwise every subsequent read would re-observe the
-        # dead lease and re-run recovery forever
-        self._clear_dead_claim(self.root / name / "writer.lease")
+        # treats it as open access) and an expired counter window is no
+        # longer live to recovery; dropping both is what makes this heal
+        # CONVERGE — otherwise every subsequent read would re-observe
+        # them and re-run recovery forever
+        self.arbiter.clear_dead(self.root / name / "writer.lease")
         self._tail_checked.discard(name)  # force a fresh recovery pass
         self._recover_tail(name)
+        if self._alloc_state(name) is not None:
+            # any counter update drops the expired windows
+            self._update_alloc(name, self.writer_id or self._auto_writer_id, 60.0, lambda _: None)
         return True
-
-    def _clear_dead_claim(self, p) -> None:
-        """Remove every generation of a claim slot whose record is
-        expired or torn; a live claim is never removed (immutability —
-        see coordination.PosixLinkArbiter.clear_dead)."""
-        self.arbiter.clear_dead(p)
 
     def _retire_dead_gaps(self, name: str) -> None:
         """Convert commit gaps with no live reservation into rollback
@@ -1203,31 +1189,6 @@ class Catalog:
                 f"table {name!r} writes fenced: lease held by {cur['holder']!r}"
             )
 
-    # --- multi-writer commit CAS --------------------------------------
-    # append_cas serializes racing committers on a per-watermark claim
-    # file, the role of the reference's Percolator primary-lock CAS
-    # (global_txn.cc:578-720): exactly one writer holds claim-<W>.lock
-    # while the watermark is W; its record advances the watermark and
-    # contenders race for claim-<W'>. A dead holder's claim expires
-    # after ttl and is taken over; its torn tail is rolled back by
-    # recovery, and windows are always reserved above it.
-
-    def _claim_commit_slot(self, name: str, base_mark: int, holder: str, ttl_s: float) -> bool:
-        d = self.root / name / "commits"
-        d.mkdir(exist_ok=True)
-        return self.arbiter.try_claim(d / f"claim-{base_mark}.lock", holder, ttl_s)
-
-    def _claim_holder(self, name: str, base_mark: int) -> str | None:
-        st = self.arbiter.state(self.root / name / "commits" / f"claim-{base_mark}.lock")
-        if st is None or st[1] is None:
-            return None
-        return st[1].get("holder")
-
-    def _release_claim(self, name: str, base_mark: int, holder: str) -> None:
-        self.arbiter.release(
-            self.root / name / "commits" / f"claim-{base_mark}.lock", holder
-        )
-
     # --- the seq counter and row manifests -----------------------------
     # A table's seqs come from one place, as a tablet's LevelDB
     # sequence comes from its writer (TabletWriter::Write):
@@ -1382,21 +1343,17 @@ class Catalog:
         historical abort until major compaction."""
         return self._read_masks(name)[2]
 
-    def _commit_gaps(self, name: str) -> list[tuple[int, int]]:
-        """Uncommitted windows BELOW the watermark (reserved, record not
-        landed: in flight or crashed), the window-granular torn-batch
-        rule; only on tables with a seq counter (alloc.json)."""
-        return list(self.oplog_index(name).census(gaps=self._alloc_paths(name)[1].exists())[1])
-
     def begin_disjoint_commit(
-        self, name: str, n: int, rows: list[str], holder: str, ttl_s: float = 300.0
+        self, name: str, n: int, rows: list[str], holder: str, ttl_s: float = _CAS_TTL_S
     ) -> dict | None:
         """Phase 1 of the row-disjointness fast path: reserve an
         ``n``-seq window and publish a manifest with the write set —
         the prewrite-lock role of the reference's per-row lock columns
         (global_txn.cc:578-720). Returns a token for
         finish/abort_disjoint_commit, or None when an intersecting live
-        manifest exists. The publish-then-scan order makes the check
+        manifest exists; a backed-off window is retired to a rollback
+        range at once, as abort_disjoint_commit does, so it never reads
+        as a commit gap. The publish-then-scan order makes the check
         sound: of two intersecting writers, whichever scans later sees
         the other (both may back off; never neither). While the token
         is held, no other fast-path writer can touch these rows — a
@@ -1409,6 +1366,7 @@ class Catalog:
         for other in self._live_reservations(name, skip=holder):
             if rowset & set(other.get("rows", ())):
                 resv.unlink(missing_ok=True)
+                self._add_rollback(name, lo - 1, hi)  # nothing was staged in it
                 return None  # intersecting write set in flight
         return {"name": name, "lo": lo, "hi": hi, "resv": resv}
 
@@ -1577,56 +1535,30 @@ class Catalog:
         batch,
         *,
         holder: str | None = None,
-        max_wait_s: float = 10.0,
-        claim_ttl_s: float = 300.0,
         rows: list[str] | None = None,
     ) -> int:
-        """Serialized multi-writer group commit of a MutationBatch: each
-        committer's window lands after the previous winner's record.
-        Returns the committed high seq; raises WriterFenced if the slot
-        can't be claimed within ``max_wait_s``.
+        """Multi-writer commit of a MutationBatch; returns its high seq.
+        Racing committers need no fence of their own: each takes a
+        disjoint window from the table's seq counter (_commit_window),
+        so their windows never interleave and the watermark is the
+        highest record.
 
-        ``rows`` (the batch's write set, e.g. ``batch.row_keys``) opts
-        into the ROW-DISJOINT fast path, the reference's per-row lock
-        granularity (global_txn.cc): the commit runs CONCURRENTLY with
-        committers whose row sets don't intersect it; intersecting ones
-        fall back to the slot path. One in-flight commit per holder id.
+        ``rows`` (the batch's write set, e.g. ``batch.row_keys``) also
+        publishes a row manifest for the commit, the reference's
+        per-row lock granularity (global_txn.cc): ``commit(cas=True)``
+        transactions on intersecting rows back off while it is live. If
+        an intersecting manifest is already live, the batch commits as
+        if without ``rows``. One in-flight commit per holder id.
         """
         holder = holder or self.writer_id or self._auto_writer_id
-        self._recover_tail(name)  # before reserving: see _recover_tail
         if rows:
-            tok = self.begin_disjoint_commit(name, len(batch), list(rows), holder, claim_ttl_s)
+            tok = self.begin_disjoint_commit(name, len(batch), list(rows), holder)
             if tok is not None:
                 return self.finish_disjoint_commit(tok, batch)
-        deadline = time.time() + max_wait_s
-        while True:
-            w = self.commit_watermark(name)
-            base_mark = w if w is not None else -1
-            if self._claim_commit_slot(name, base_mark, holder, claim_ttl_s):
-                try:
-                    # the watermark may have advanced between the read
-                    # and the claim win (stale slot freed by its
-                    # winner): detect and go claim the current one
-                    w2 = self.commit_watermark(name)
-                    if (w2 if w2 is not None else -1) != base_mark:
-                        continue
-                    # a stale expired-claim takeover may have handed
-                    # this slot to another holder in the meantime:
-                    # commit only while the claim still records US
-                    if self._claim_holder(name, base_mark) != holder:
-                        continue
-                    return self._commit_window(
-                        name, len(batch), batch.op_kinds,
-                        lambda lo: batch.to_arrow(base_seq=lo),
-                        holder=holder, ttl_s=claim_ttl_s,
-                    )
-                finally:
-                    self._release_claim(name, base_mark, holder)
-            if time.time() >= deadline:
-                raise WriterFenced(
-                    f"table {name!r}: commit slot contended past {max_wait_s}s"
-                )
-            time.sleep(0.05)
+        return self._commit_window(
+            name, len(batch), batch.op_kinds, lambda lo: batch.to_arrow(base_seq=lo),
+            holder=holder, ttl_s=_CAS_TTL_S,
+        )
 
     def table_stats(self, name: str) -> dict:
         """One-call observability roll-up per table (teracli `stat`
@@ -1659,8 +1591,9 @@ class Catalog:
             "delimiters": len(self.get_schema(name).delimiters),
             # commit-CAS observability: in-flight concurrent committers
             # and reserved-but-uncommitted windows readers are masking
+            # (a window retired to a rollback is counted above instead)
             "live_reservations": len(self._live_reservations(name)),
-            "commit_gaps": len(self._commit_gaps(name)),
+            "commit_gaps": len(self._masked_gaps(name)),
         }
 
     def maintenance(self, name: str, *, now_us: int | None = None, apply: bool = True) -> dict:

@@ -1,8 +1,8 @@
 """Coordination arbiter: exclusive expiring claims behind a seam.
 
 Everything in the engine that must pick ONE winner among racing
-processes — the writer lease, the commit-slot CAS, the seq-window
-allocator lock, the opkinds/rollbacks spin locks — reduces to a
+processes — the writer lease, the seq counter's lock (which also
+guards the op-kinds summary), the rollbacks lock — reduces to a
 single primitive, the GENERATION-SLOT claim:
 
     try_claim(slot, holder, ttl)  ->  exactly one racer returns True
@@ -49,8 +49,8 @@ environment):
 
 The conditional-put shape IS shipped, as ``CasArbiter``: the full
 claim/renew/takeover/release/GC protocol written against the minimal
-``CasStore`` interface (get / put_if / delete_if / keys — exactly the
-four conditional operations every such service offers). A cloud
+``CasStore`` interface (get / put_if / delete_if — exactly the three
+conditional operations every such service offers). A cloud
 deployment implements ``CasStore`` over its service (a DynamoDB
 conditional write, a GCS if-generation-match PUT) and reuses
 ``CasArbiter`` unchanged; the protocol is optimistic-CAS loops, never
@@ -66,7 +66,7 @@ process takeover storm against it (``scale_smoke_cas.py storm
 **Writing a cloud adapter is three lines of ceremony**::
 
     class DynamoCasStore(CasStore):
-        ...  # get / put_if / delete_if / keys, one service call each
+        ...  # get / put_if / delete_if, one service call each
     verify_cas_store(DynamoCasStore(table="locks"))   # must pass
     arbiter = CasArbiter(DynamoCasStore(table="locks"))
 
@@ -122,11 +122,6 @@ class SlotArbiter(ABC):
     def clear_dead(self, p: Path) -> None:
         """Remove every record of the slot that is expired or torn;
         never a live one (reader-heal GC)."""
-
-    @abstractmethod
-    def list_slots(self, d: Path, prefix: str) -> list[Path]:
-        """Distinct slot base paths under directory ``d`` whose name
-        starts with ``prefix`` (used to enumerate commit claims)."""
 
 
 class PosixLinkArbiter(SlotArbiter):
@@ -235,9 +230,9 @@ class PosixLinkArbiter(SlotArbiter):
         generation whose record was read as ours. The residual
         check->unlink corner is same-holder only — a stale release
         (e.g. an old thread of this process) can delete our own newer
-        renewal record — which degrades slot ORDERING only, never
-        safety: seq windows come from the reservation counter and can
-        never interleave, and uncommitted windows stay gap-masked."""
+        renewal record, opening the slot early. It needs a holder that
+        outlived its own ttl, the contract every claim already rests
+        on."""
         st = self.state(p)
         if st is None:
             return
@@ -261,23 +256,6 @@ class PosixLinkArbiter(SlotArbiter):
             if rec is None or rec.get("expires", 0) <= now:
                 f.unlink(missing_ok=True)
 
-    def list_slots(self, d: Path, prefix: str) -> list[Path]:
-        """Base paths of every slot whose plain file OR any generation
-        file exists (a slot can be visible only through a ``.g<k>``)."""
-        if not d.exists():
-            return []
-        bases = set()
-        for p in d.glob(f"{prefix}*"):
-            n = p.name
-            if ".g" in n:
-                stem, _, suffix = n.rpartition(".g")
-                if suffix.isdigit() and stem.startswith(prefix):
-                    bases.add(stem)
-                    continue
-            if n.startswith(prefix) and ".w-" not in n:
-                bases.add(n)
-        return [d / b for b in sorted(bases)]
-
 
 # --------------------------------------------------------------------------
 # conditional-put backend (the cloud shape)
@@ -286,7 +264,7 @@ class PosixLinkArbiter(SlotArbiter):
 
 class CasStore(ABC):
     """The minimal service boundary a conditional-put arbiter needs —
-    the four operations every CAS-capable store offers (DynamoDB
+    the three operations every CAS-capable store offers (DynamoDB
     conditional writes, GCS if-generation-match, etcd txn, S3
     If-None-Match). Keys are opaque strings; values are opaque strings;
     the GENERATION is the store's own monotone version for a key and is
@@ -319,11 +297,6 @@ class CasStore(ABC):
     @abstractmethod
     def delete_if(self, key: str, if_gen: int) -> bool:
         """Delete iff the key's current generation equals ``if_gen``."""
-
-    @abstractmethod
-    def keys(self, prefix: str) -> list:
-        """Sorted keys with the given prefix (DynamoDB Query /
-        GCS list with prefix)."""
 
 
 class MemoryCasStore(CasStore):
@@ -373,16 +346,12 @@ class MemoryCasStore(CasStore):
             del self._kv[key]
             return True
 
-    def keys(self, prefix: str) -> list:
-        with self._lock:
-            return sorted(k for k in self._kv if k.startswith(prefix))
-
 
 def verify_cas_store(store: CasStore, *, racers: int = 8, storm_rounds: int = 20) -> dict:
     """Conformance battery for a ``CasStore`` implementation — the
-    executable form of the ABC's contract, so "implement 4 methods and
+    executable form of the ABC's contract, so "implement 3 methods and
     reuse the protocol" is checkable by the person writing the adapter.
-    Runs entirely through the public 4-method API under a unique key
+    Runs entirely through the public 3-method API under a unique key
     namespace (safe against a live/shared store) and raises
     ``AssertionError`` with a named check on the first violation;
     returns a report dict when everything holds.
@@ -390,7 +359,7 @@ def verify_cas_store(store: CasStore, *, racers: int = 8, storm_rounds: int = 20
     A new adapter is three lines of ceremony::
 
         class DynamoCasStore(CasStore):
-            ...  # get / put_if / delete_if / keys, each one service call
+            ...  # get / put_if / delete_if, each one service call
         verify_cas_store(DynamoCasStore(table="locks"))   # must pass
         arbiter = CasArbiter(DynamoCasStore(table="locks"))
 
@@ -399,8 +368,7 @@ def verify_cas_store(store: CasStore, *, racers: int = 8, storm_rounds: int = 20
     1. **Basic contract** — absent get is None; ``put_if(if_gen=None)``
        creates and fails on an existing key; a stale or absent
        generation precondition fails; a correct one succeeds and BUMPS
-       the generation; ``delete_if`` honors its precondition; ``keys``
-       is sorted and prefix-filtered.
+       the generation; ``delete_if`` honors its precondition.
     2. **Generation monotonicity across delete/recreate** — the ABA
        requirement: a recreated key must never reuse a prior
        generation, and a precondition captured before the
@@ -437,12 +405,6 @@ def verify_cas_store(store: CasStore, *, racers: int = 8, storm_rounds: int = 20
     assert not store.delete_if(k, g0), "stale-generation delete must fail"
     assert store.delete_if(k, g1), "correct-generation delete must succeed"
     assert store.get(k) is None, "deleted key must read absent"
-    for i in (2, 0, 1):
-        assert store.put_if(ns + f"list/{i}", "v", None)
-    listed = store.keys(ns + "list/")
-    assert listed == sorted(listed), "keys must be sorted"
-    assert listed == [ns + f"list/{i}" for i in (0, 1, 2)], "keys must be prefix-exact"
-    assert store.keys(ns + "list/nope") == [], "non-matching prefix must be empty"
     report["basic_contract"] = True
 
     # -- 2. generation monotonicity across delete/recreate ----------------
@@ -637,14 +599,3 @@ class CasArbiter(SlotArbiter):
         r = self._parse(raw)
         if r is None or r.get("expires", 0) <= time.time():
             self.store.delete_if(str(p), gen)
-
-    def list_slots(self, d: Path, prefix: str) -> list[Path]:
-        base = str(d)
-        if not base.endswith("/"):
-            base += "/"
-        out = []
-        for k in self.store.keys(base + prefix):
-            kp = Path(k)
-            if kp.parent == Path(str(d)):
-                out.append(kp)
-        return out

@@ -208,11 +208,11 @@ class GlobalTransaction:
         deadlock-free), validate the write set against the snapshot
         UNDER those locks (no MANIFEST-AWARE committer — another cas
         txn or append_cas(rows=...) — can touch our rows between
-        validation and apply; a plain/slot-path writer racing the same
-        rows keeps only optimistic validation, as before), then commit
-        each table through its reserved seq window. Disjoint-row
-        transactions commit fully concurrently — no slot wait, no
-        retry. Default (cas=False) is the plain commit: validate, then
+        validation and apply; a writer without a manifest — a put, or
+        append_cas without rows — racing the same rows keeps only
+        optimistic validation), then commit each table through its
+        reserved seq window. Disjoint-row transactions commit fully
+        concurrently, with no wait and no retry. Default (cas=False) is the plain commit: validate, then
         one ``Catalog._commit_window`` per table."""
         if cas:
             return self._commit_cas()

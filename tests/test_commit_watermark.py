@@ -149,11 +149,11 @@ def test_writer_lease_fences_second_writer(spark, tmp_path):
 
 
 def test_commit_cas_two_writers_serialize(spark, tmp_path):
-    """Two cooperating committers racing the same watermark slot:
-    exactly one wins the claim, the loser lands AFTER it with a
-    non-overlapping seq window — both batches visible, no refusal
-    (append_cas vs the lease's hard fence)."""
-    from tera_spark.catalog import Catalog, WriterFenced
+    """Two cooperating committers on one table need no fence of their
+    own: each append_cas takes a disjoint window from the table's seq
+    counter, both batches land and the watermark is the higher record
+    (append_cas vs the lease's hard fence, which refuses the second)."""
+    from tera_spark.catalog import Catalog
     from tera_spark.operators.mutation import MutationBatch
 
     root = str(tmp_path / "cat")
@@ -161,35 +161,28 @@ def test_commit_cas_two_writers_serialize(spark, tmp_path):
     b = Catalog(spark, root, writer_id="writer-b")
     a.create_table("t { d }")
 
-    # force the race deterministically: A holds the slot claim for the
-    # current watermark, then B's append_cas must wait...
-    w0 = a.commit_watermark("t")
-    base_mark = w0 if w0 is not None else -1
-    assert a._claim_commit_slot("t", base_mark, "writer-a", ttl_s=60)
-    with pytest.raises(WriterFenced):
-        b.append_cas(
-            "t", MutationBatch().put("rb", "d", "q", "vb", ts=1), max_wait_s=0.2
-        )
-    # ...until A commits (its claim path releases the slot)
-    (tmp_path / "cat" / "t" / "commits" / f"claim-{base_mark}.lock").unlink()
     hi_a = a.append_cas("t", MutationBatch().put("ra", "d", "q", "va", ts=1))
-    hi_b = b.append_cas("t", MutationBatch().put("rb", "d", "q", "vb", ts=1))
-    assert hi_b > hi_a  # strictly ordered, non-overlapping windows
-    assert a.commit_watermark("t") == hi_b
-    assert {r.row_key for r in a.view("t").collect()} == {"ra", "rb"}
+    hi_b = b.append_cas(
+        "t", MutationBatch().put("rb", "d", "q", "vb", ts=1).put("rc", "d", "q", "vc", ts=1)
+    )
+    hi_c = a.append_cas("t", MutationBatch().put("rd", "d", "q", "vd", ts=1))
+    assert hi_a < hi_b - 1 < hi_b < hi_c  # [lo, hi] windows, strictly ordered
+    assert a.commit_watermark("t") == b.commit_watermark("t") == hi_c
+    assert {r.row_key for r in b.view("t").collect()} == {"ra", "rb", "rc", "rd"}
 
 
 @pytest.mark.slow
 def test_commit_cas_two_os_processes_contend(spark, tmp_path):
     """A REAL two-process race on the same table root: a child Python
     process (its own JVM, its own Catalog with a different writer_id)
-    commits 5 batches through append_cas while this process commits 5
-    concurrently. The exclusive-create claim file is the cross-process
-    primitive (O_EXCL on a shared filesystem — the reference serializes
-    racing committers via Percolator primary locks + ZK fencing,
-    global_txn.cc:578-720). Every batch from both writers must land,
-    with strictly non-overlapping seq windows and a watermark equal to
-    the global max."""
+    commits 6 batches through append_cas while this process commits 6
+    concurrently, every other one with ``rows`` (a row manifest) and
+    the rest without. The seq counter's lock is the cross-process
+    primitive (the reference orders commits from one sequence,
+    timeoracle.h). Every batch from both writers must land, with
+    pairwise-disjoint seq windows and a watermark equal to the global
+    max."""
+    import json
     import subprocess
     import sys
     import textwrap
@@ -219,11 +212,9 @@ def test_commit_cas_two_os_processes_contend(spark, tmp_path):
             .getOrCreate()
         )
         cat = Catalog(spark, {root!r}, writer_id="proc-child")
-        for i in range(5):
-            cat.append_cas(
-                "t", MutationBatch().put(f"b{{i}}", "d", "q", "vb", ts=1),
-                max_wait_s=120.0,
-            )
+        for i in range(6):
+            b = MutationBatch().put(f"b{{i}}", "d", "q", "vb", ts=1)
+            cat.append_cas("t", b, rows=b.row_keys if i % 2 else None)
         print("CHILD-DONE")
         """
     )
@@ -234,11 +225,9 @@ def test_commit_cas_two_os_processes_contend(spark, tmp_path):
         text=True,
     )
     try:
-        for i in range(5):
-            a.append_cas(
-                "t", MutationBatch().put(f"a{i}", "d", "q", "va", ts=1),
-                max_wait_s=120.0,
-            )
+        for i in range(6):
+            b = MutationBatch().put(f"a{i}", "d", "q", "va", ts=1)
+            a.append_cas("t", b, rows=b.row_keys if i % 2 else None)
         out, _ = proc.communicate(timeout=300)
     finally:
         if proc.poll() is None:
@@ -246,28 +235,25 @@ def test_commit_cas_two_os_processes_contend(spark, tmp_path):
     assert proc.returncode == 0 and "CHILD-DONE" in out, out
 
     rows = {r.row_key for r in a.view("t").collect()}
-    assert rows == {f"a{i}" for i in range(5)} | {f"b{i}" for i in range(5)}
-    # commit marks: every batch produced its own strictly-higher record
-    # (windows are [prev_hi+1, hi], so distinct increasing marks ⇔
-    # pairwise-disjoint seq windows); watermark = the global max
-    marks = sorted(
-        int(p.stem) for p in (Path(root) / "t" / "commits").glob("*.json")
+    assert rows == {f"a{i}" for i in range(6)} | {f"b{i}" for i in range(6)}
+    # one record per batch, windows pairwise disjoint, watermark = max
+    recs = sorted(
+        (r.get("lo", r["seq"]), r["seq"])
+        for r in (json.loads(p.read_text()) for p in (Path(root) / "t" / "commits").glob("*.json"))
     )
-    assert len(marks) >= 10 and len(set(marks)) == len(marks)
-    assert a.commit_watermark("t") == marks[-1]
+    assert len(recs) == 12
+    assert all(h1 < l2 for (_, h1), (l2, _) in zip(recs, recs[1:])), recs
+    assert a.commit_watermark("t") == recs[-1][1]
     # and every cell's seq is covered by exactly the committed range
     seqs = sorted(r.seq for r in a.read_oplog("t").select("seq").collect())
-    assert len(seqs) == 10 and seqs[-1] == marks[-1]
+    assert len(seqs) == 12 and seqs[-1] == recs[-1][1]
 
 
 def test_commit_cas_takeover_after_crash_no_torn_visibility(spark, tmp_path):
     """A committer that died between parquet append and commit record
-    leaves a claim + a torn tail. After claim expiry the next
-    committer takes the slot over, the torn window is rolled back by
-    watermark recovery, and the new batch's sequences sit ABOVE the
-    torn tail — the dead batch never becomes visible."""
-    import time as _time
-
+    leaves a torn tail. The next committer's recovery rolls the torn
+    window back, and the new batch's sequences sit ABOVE the torn
+    tail — the dead batch never becomes visible."""
     from tera_spark.catalog import Catalog
     from tera_spark.operators.mutation import MutationBatch
 
@@ -277,12 +263,10 @@ def test_commit_cas_takeover_after_crash_no_torn_visibility(spark, tmp_path):
     a.create_table("t { d }")
     hi = a.append_cas("t", MutationBatch().put("r0", "d", "q", "v0", ts=1))
 
-    # simulate A dying mid-commit: claim held (short ttl), parquet
-    # written above the watermark, NO commit record
-    assert a._claim_commit_slot("t", hi, "writer-a", ttl_s=0.01)
+    # simulate A dying mid-commit: parquet written above the watermark,
+    # NO commit record
     torn = MutationBatch(base_seq=hi + 1).put("torn", "d", "q", "dead", ts=1)
     torn.to_df(spark).write.mode("append").parquet(a.oplog_path("t"))
-    _time.sleep(0.05)
 
     hi_b = b.append_cas("t", MutationBatch().put("r1", "d", "q", "v1", ts=1))
     assert hi_b > hi + 1  # allocated above the torn tail, not inside it
@@ -292,11 +276,11 @@ def test_commit_cas_takeover_after_crash_no_torn_visibility(spark, tmp_path):
 
 def test_expired_claim_takeover_single_winner_two_processes(tmp_path):
     """The ADVICE race: two processes both observe the SAME expired
-    claim and race the takeover. The in-place tmp+rename takeover let
-    BOTH win (both rename over claim-<W>, both return True, overlapping
-    seq windows follow). The rename-ASIDE takeover arbitrates
-    atomically — per round exactly one of the two racers may win.
-    No Spark needed: _claim_commit_slot is pure filesystem."""
+    claim and race the takeover through the catalog's arbiter (the
+    claim that guards the writer lease, the seq counter and the
+    rollbacks list). The in-place tmp+rename takeover let BOTH win;
+    per round exactly one of the two racers may win. No Spark needed:
+    the arbiter is pure filesystem."""
     import json
     import subprocess
     import sys
@@ -310,12 +294,12 @@ def test_expired_claim_takeover_single_winner_two_processes(tmp_path):
     root = str(tmp_path / "cat")
     rounds = 40
     cat = Catalog(None, root, writer_id="proc-main")
-    d = Path(root) / "t" / "commits"
+    d = Path(root) / "slots"
     d.mkdir(parents=True)
     sync = Path(root) / "sync"
     sync.mkdir()
     for k in range(rounds):  # pre-seed one EXPIRED claim per round
-        (d / f"claim-{k}.lock").write_text(
+        (d / f"slot-{k}.lock").write_text(
             json.dumps({"holder": "dead-writer", "expires": 0.0})
         )
 
@@ -327,12 +311,13 @@ def test_expired_claim_takeover_single_winner_two_processes(tmp_path):
         from tera_spark.catalog import Catalog
 
         cat = Catalog(None, {root!r}, writer_id="proc-child")
+        d = Path({str(d)!r})
         sync = Path({root!r}) / "sync"
         for k in range({rounds}):
             (sync / f"ready-{{k}}").touch()
             while not (sync / f"go-{{k}}").exists():
                 pass
-            won = cat._claim_commit_slot("t", k, "proc-child", ttl_s=60.0)
+            won = cat.arbiter.try_claim(d / f"slot-{{k}}.lock", "proc-child", 60.0)
             print(f"RES {{k}} {{int(won)}}", flush=True)
         """
     )
@@ -350,7 +335,7 @@ def test_expired_claim_takeover_single_winner_two_processes(tmp_path):
                 assert _time.time() < deadline, "child never became ready"
                 assert proc.poll() is None, proc.stdout.read()
             (sync / f"go-{k}").touch()
-            mine[k] = cat._claim_commit_slot("t", k, "proc-main", ttl_s=60.0)
+            mine[k] = cat.arbiter.try_claim(d / f"slot-{k}.lock", "proc-main", 60.0)
         out, _ = proc.communicate(timeout=60)
     finally:
         if proc.poll() is None:
@@ -368,54 +353,56 @@ def test_expired_claim_takeover_single_winner_two_processes(tmp_path):
             "have exactly one winner"
         )
         # the surviving claim records the actual winner
-        holder = cat._claim_holder("t", k)
+        holder = cat.arbiter.state(d / f"slot-{k}.lock")[1]["holder"]
         assert holder == ("proc-main" if mine[k] else "proc-child")
-    # no leaked .dead-* takeover temp files
-    assert not list(d.glob("*.dead-*"))
+    # no leaked takeover temp files
+    assert not list(d.glob("*.dead-*")) and not list(d.glob("*.w-*"))
 
 
 def test_expired_claim_takeover_sequential_semantics(tmp_path):
     """Takeover of an expired claim wins and installs a LIVE claim;
     a second attempt then loses to it; conditional release never
-    unlinks another holder's claim."""
+    unlinks another holder's claim; a torn record is taken over."""
     import json
-    from pathlib import Path
 
     from tera_spark.catalog import Catalog
 
-    root = str(tmp_path / "cat")
-    a = Catalog(None, root, writer_id="wa")
-    b = Catalog(None, root, writer_id="wb")
-    d = Path(root) / "t" / "commits"
-    d.mkdir(parents=True)
-    (d / "claim-7.lock").write_text(json.dumps({"holder": "dead", "expires": 0.0}))
+    a = Catalog(None, str(tmp_path / "cat"), writer_id="wa")
+    arb = a.arbiter
+    p = tmp_path / "slot-7.lock"
+    p.write_text(json.dumps({"holder": "dead", "expires": 0.0}))
 
-    assert a._claim_commit_slot("t", 7, "wa", ttl_s=60.0)
-    assert a._claim_holder("t", 7) == "wa"
-    assert not b._claim_commit_slot("t", 7, "wb", ttl_s=60.0)
+    def holder(q):
+        st = arb.state(q)
+        return None if st is None or st[1] is None else st[1]["holder"]
+
+    assert arb.try_claim(p, "wa", 60.0)
+    assert holder(p) == "wa"
+    assert not arb.try_claim(p, "wb", 60.0)
     # conditional release: wb cannot release wa's claim
-    b._release_claim("t", 7, "wb")
-    assert a._claim_holder("t", 7) == "wa"
-    a._release_claim("t", 7, "wa")
-    assert a._claim_holder("t", 7) is None
+    arb.release(p, "wb")
+    assert holder(p) == "wa"
+    arb.release(p, "wa")
+    assert holder(p) is None
     # corrupt claim (torn write by a dead holder) is also taken over
-    (d / "claim-9.lock").write_text("{torn")
-    assert b._claim_commit_slot("t", 9, "wb", ttl_s=60.0)
-    assert b._claim_holder("t", 9) == "wb"
+    torn = tmp_path / "slot-9.lock"
+    torn.write_text("{torn")
+    assert arb.try_claim(torn, "wb", 60.0)
+    assert holder(torn) == "wb"
 
 
 def test_disjoint_row_sets_commit_without_slot(spark, tmp_path):
-    """Row-disjointness fast path (reference granularity: per-row lock
-    columns, global_txn.cc:578-720): with the commit SLOT held hostage
-    by a stuck committer, writers whose row sets don't intersect still
-    commit concurrently — they never touch the slot — while an
-    intersecting writer falls back to the serialized path and fences.
-    Windows never interleave (reservation counter) and every committed
-    batch is visible."""
+    """Row manifests (reference granularity: per-row lock columns,
+    global_txn.cc:578-720): writers whose row sets don't intersect
+    commit through their manifests; a writer whose rows intersect a
+    live manifest commits anyway, through a plain counter window above
+    the others. Windows never interleave (seq counter), no window is
+    left behind as a gap, and every committed batch is visible."""
     import json
+    import time as _time
     from pathlib import Path
 
-    from tera_spark.catalog import Catalog, WriterFenced
+    from tera_spark.catalog import Catalog
     from tera_spark.operators.mutation import MutationBatch
 
     root = str(tmp_path / "cat")
@@ -424,42 +411,34 @@ def test_disjoint_row_sets_commit_without_slot(spark, tmp_path):
     a.create_table("t { d }")
     hi0 = a.append_cas("t", MutationBatch().put("base", "d", "q", "v", ts=1))
 
-    # a stuck serialized committer holds the slot for the CURRENT mark
-    assert a._claim_commit_slot("t", hi0, "stuck-writer", ttl_s=60.0)
-
     ba = MutationBatch().put("xa", "d", "q", "va", ts=1).put("xb", "d", "q", "vb", ts=1)
     bb = MutationBatch().put("ya", "d", "q", "wa", ts=1)
-    hi_a = a.append_cas("t", ba, rows=ba.row_keys, max_wait_s=0.5)
-    hi_b = b.append_cas("t", bb, rows=bb.row_keys, max_wait_s=0.5)
-    # both committed despite the held slot; windows disjoint
-    assert hi_a >= hi0 + 2 and hi_b > hi_a
+    hi_a = a.append_cas("t", ba, rows=ba.row_keys)
+    hi_b = b.append_cas("t", bb, rows=bb.row_keys)
+    assert hi_a >= hi0 + 2 and hi_b > hi_a  # windows disjoint
     keys = {r.row_key for r in a.view("t").collect()}
     assert keys == {"base", "xa", "xb", "ya"}
 
-    # an INTERSECTING writer must serialize — hold the CURRENT mark's
-    # slot hostage so the serialized fallback provably fences
-    w_cur = b.commit_watermark("t")
-    assert b._claim_commit_slot("t", w_cur, "stuck-writer", ttl_s=60.0)
-    (Path(root) / "t" / "casmeta" / "resv-other.json").write_text(
+    # a live manifest holds xa: an intersecting writer lands above it
+    other = Path(root) / "t" / "casmeta" / "resv-other.json"
+    other.write_text(
         json.dumps({"holder": "other", "lo": 99, "hi": 99, "rows": ["xa"],
-                    "expires": __import__("time").time() + 60})
+                    "expires": _time.time() + 60})
     )
     bc = MutationBatch().put("xa", "d", "q", "clash", ts=2)
-    with pytest.raises(WriterFenced):
-        b.append_cas("t", bc, rows=bc.row_keys, max_wait_s=0.3)
-    (Path(root) / "t" / "casmeta" / "resv-other.json").unlink()
-    # once the conflicting manifest is gone (and slot released) it lands
-    (Path(root) / "t" / "commits" / f"claim-{w_cur}.lock").unlink()
     hi_c = b.append_cas("t", bc, rows=bc.row_keys)
     assert hi_c > hi_b
+    assert not (Path(root) / "t" / "casmeta" / "resv-writer-b.json").exists()
+    other.unlink()
+    assert b._masked_gaps("t") == []
+    assert [r.value for r in a.view("t").collect() if r.row_key == "xa"] == [b"clash"]
 
 
 @pytest.mark.slow
 def test_disjoint_commits_two_os_processes(spark, tmp_path):
-    """Two OS processes commit disjoint-row batches through the fast
-    path with the slot claim held hostage the whole time: neither can
-    have used the serialized path, both land every batch, seq windows
-    are pairwise disjoint, and all rows are visible."""
+    """Two OS processes commit disjoint-row batches through their row
+    manifests: both land every batch, seq windows are pairwise
+    disjoint, and all rows are visible."""
     import subprocess
     import sys
     import textwrap
@@ -472,8 +451,7 @@ def test_disjoint_commits_two_os_processes(spark, tmp_path):
     root = str(tmp_path / "cat")
     a = Catalog(spark, root, writer_id="proc-main")
     a.create_table("t { d }")
-    hi0 = a.append_cas("t", MutationBatch().put("base", "d", "q", "v", ts=1))
-    assert a._claim_commit_slot("t", hi0, "stuck-writer", ttl_s=300.0)
+    a.append_cas("t", MutationBatch().put("base", "d", "q", "v", ts=1))
 
     child = textwrap.dedent(
         f"""
@@ -493,7 +471,7 @@ def test_disjoint_commits_two_os_processes(spark, tmp_path):
         cat = Catalog(spark, {root!r}, writer_id="proc-child")
         for i in range(4):
             b = MutationBatch().put(f"c{{i}}", "d", "q", "vc", ts=1)
-            cat.append_cas("t", b, rows=b.row_keys, max_wait_s=5.0)
+            cat.append_cas("t", b, rows=b.row_keys)
         print("CHILD-DONE")
         """
     )
@@ -506,7 +484,7 @@ def test_disjoint_commits_two_os_processes(spark, tmp_path):
     try:
         for i in range(4):
             b = MutationBatch().put(f"m{i}", "d", "q", "vm", ts=1)
-            a.append_cas("t", b, rows=b.row_keys, max_wait_s=5.0)
+            a.append_cas("t", b, rows=b.row_keys)
         out, _ = proc.communicate(timeout=300)
     finally:
         if proc.poll() is None:
@@ -526,6 +504,29 @@ def test_disjoint_commits_two_os_processes(spark, tmp_path):
     assert len(recs) == 9
     for (lo1, hi1), (lo2, hi2) in zip(recs, recs[1:]):
         assert hi1 < lo2, f"windows interleave: {recs}"
+
+
+def test_backed_off_disjoint_commit_leaves_no_gap(spark, tmp_path):
+    """A row-manifest commit that backs off on an intersecting live
+    manifest retires the window it reserved at once: once a later
+    record lands above it, reads have no gap to mask and transaction
+    snapshots none to record."""
+    from tera_spark.catalog import Catalog
+    from tera_spark.operators.mutation import MutationBatch
+
+    root = str(tmp_path / "cat")
+    a = Catalog(spark, root, writer_id="writer-a")
+    b = Catalog(spark, root, writer_id="writer-b")
+    a.create_table("t { d }")
+    tok = a.begin_disjoint_commit("t", 1, ["x"], "writer-a")
+    assert b.begin_disjoint_commit("t", 1, ["x"], "writer-b") is None
+    a.finish_disjoint_commit(tok, MutationBatch().put("x", "d", "q", "vx", ts=1))
+    y = MutationBatch().put("y", "d", "q", "vy", ts=1)
+    b.append_cas("t", y, rows=y.row_keys)
+    assert b._masked_gaps("t") == []
+    assert b.table_stats("t")["commit_gaps"] == 0
+    assert len(b._rollbacks("t")) == 1  # the backed-off window
+    assert {r.row_key for r in b.view("t").collect()} == {"x", "y"}
 
 
 def test_crashed_fast_path_window_never_visible(spark, tmp_path):
@@ -678,10 +679,9 @@ def test_review_fixes_round5(spark, tmp_path):
 
 
 def test_slot_path_inflight_survives_peer_recovery(spark, tmp_path):
-    """F2: a SLOT-path committer's in-flight batch (claim held, parquet
-    staged, record pending) must not be rolled back by a new writer's
-    recovery — the slot path now publishes a rows=[] window-liveness
-    manifest for exactly this."""
+    """F2: a committer's in-flight batch (window reserved, a rows=[]
+    window-liveness manifest published, parquet staged, record
+    pending) must not be rolled back by a new writer's recovery."""
     import json
     import time as _time
     from pathlib import Path
@@ -694,8 +694,8 @@ def test_slot_path_inflight_survives_peer_recovery(spark, tmp_path):
     a.create_table("t { d }")
     a.append_cas("t", MutationBatch().put("r0", "d", "q", "v0", ts=1))
 
-    # simulate writer S mid-slot-commit: window reserved, manifest
-    # published (as append_cas now does), parquet landed, record pending
+    # simulate writer S mid-commit: window reserved, manifest
+    # published, parquet landed, record pending
     lo, hi = a._reserve_seq_window("t", 1, "slotter", ttl_s=300)
     a._publish_reservation("t", "slotter", lo, hi, [], 300.0)
     MutationBatch(base_seq=lo).put("mid", "d", "q", "vm", ts=1).to_df(
@@ -708,7 +708,7 @@ def test_slot_path_inflight_survives_peer_recovery(spark, tmp_path):
     b.append_cas("t", nxt, rows=nxt.row_keys)
     assert not any(
         r["after"] < lo and hi <= r["upto"] for r in b._rollbacks("t")
-    ), "recovery rolled back a live slot-path window"
+    ), "recovery rolled back a live window"
 
     # S finishes: its record lands and the rows become visible
     a._record_commit("t", hi, [5], lo=lo)

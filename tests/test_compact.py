@@ -254,12 +254,12 @@ def test_compact_ranges_rerecord_keeps_commit_gap(spark, tmp_path):
     lo, hi = cat._reserve_seq_window("t", 1, "peer")
     cat._publish_reservation("t", "peer", lo, hi, [], 300)
     cat.append_cas("t", MutationBatch().add("r", "c", "n", 2, ts=2))
-    assert cat._commit_gaps("t") == [(lo, hi)]
+    assert cat._masked_gaps("t") == [(lo, hi)]
 
     assert cat.compact_ranges("t", now_us=NOW)["groups_folded"] == 1
     peer = MutationBatch(base_seq=lo).put("r", "c", "n", "peer", ts=3)
     pq.write_table(peer.to_arrow(), f"{cat.oplog_path('t')}/part-peer-00000.parquet")
     fresh = Catalog(spark, root)
-    assert fresh._commit_gaps("t") == [(lo, hi)]
+    assert fresh._masked_gaps("t") == [(lo, hi)]
     got = [bytes(r.value) for r in fresh.view("t", now_us=NOW).collect()]
     assert got == [py_encode_be_i64(3)]

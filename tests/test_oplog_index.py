@@ -64,7 +64,7 @@ def test_census_watermark_and_gaps(tmp_path):
     assert idx.census() == (None, ())
     for seq, lo in ((0, None), (4, 3), (9, 7), (12, 12)):
         _record(commits, seq, lo)
-    (commits / "claim-9.lock").touch()  # slot files share the directory
+    (commits / "claim-9.lock").touch()  # non-record files (claim files of older versions) are skipped
     assert idx.census(gaps=False) == (12, ())
     assert idx.census() == (12, ((1, 2), (5, 6), (10, 11)))
     _record(commits, 15, 14)

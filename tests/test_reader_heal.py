@@ -26,9 +26,9 @@ def _committed(cat: Catalog, spark, name: str, rows: list[str]):
 
 
 def test_reader_heals_crashed_cas_writer(spark, tmp_path):
-    """Kill a CAS writer mid-commit (reservation published, parquet
+    """Kill a CAS writer mid-commit (row manifest published, parquet
     landed, record pending), then run ONLY reads: after the
-    reservation ttl lapses, the first read sweeps the reservation,
+    manifest's ttl lapses, the first read sweeps the manifest,
     rolls the torn window back, and table_stats shows no pending
     windows — without any writer ever arriving."""
     root = str(tmp_path / "cat")
@@ -42,10 +42,6 @@ def test_reader_heals_crashed_cas_writer(spark, tmp_path):
     MutationBatch(base_seq=lo).put("torn", "d", "q", "x", ts=1).to_df(
         spark
     ).write.mode("append").parquet(w.oplog_path("t"))
-    # ...and a claim file it also left behind
-    (Path(root) / "t" / "commits").mkdir(exist_ok=True)
-    claim = Path(root) / "t" / "commits" / f"claim-{lo}.lock"
-    claim.write_text(json.dumps({"holder": "dead-writer", "expires": time.time() + 300}))
 
     # a pure READER process arrives
     r = Catalog(spark, root, writer_id="reader-only")
@@ -59,7 +55,6 @@ def test_reader_heals_crashed_cas_writer(spark, tmp_path):
         json.dumps({"holder": "dead-writer", "lo": lo, "hi": hi, "rows": [],
                     "expires": time.time() - 1})
     )
-    claim.write_text(json.dumps({"holder": "dead-writer", "expires": time.time() - 1}))
 
     # first read after expiry heals the table
     assert {x.row_key for x in r.view("t").collect()} == {"r0"}
@@ -67,14 +62,42 @@ def test_reader_heals_crashed_cas_writer(spark, tmp_path):
     assert st["live_reservations"] == 0
     assert st["commit_gaps"] == 0
     assert st["pending_rollback_windows"] >= 1  # the torn window, masked
-    assert not list((Path(root) / "t" / "commits").glob("claim-*.lock"))
-    assert not list((Path(root) / "t" / "commits").glob("*.dead-*"))
 
     # the torn rows stay invisible forever, even after new commits
     w2 = Catalog(spark, root, writer_id="writer-2")
     nxt = MutationBatch().put("r1", "d", "q", "v1", ts=1)
     w2.append_cas("t", nxt, rows=nxt.row_keys)
     assert {x.row_key for x in r.view("t").collect()} == {"r0", "r1"}
+
+
+def test_reader_heals_crashed_counter_window(spark, tmp_path):
+    """A put (or KV verb, or append_cas without rows) that dies after
+    staging leaves no manifest, only a live window in the seq counter.
+    Once that window expires, a reader treats it as dead state: the
+    heal retires the window, reads stop masking it, and the next read
+    observes nothing dead."""
+    root = str(tmp_path / "cat")
+    w = Catalog(spark, root, writer_id="writer-w")
+    w.create_table("t { d }")
+    lo, hi = w._reserve_seq_window("t", 1, "dead-writer", ttl_s=300.0, live=True)
+    w._staged_append("t", MutationBatch(base_seq=lo).put("torn", "d", "q", "x", ts=1).to_arrow())
+    Catalog(spark, root, writer_id="writer-2").append_cas(
+        "t", MutationBatch().put("r1", "d", "q", "v", ts=1)
+    )
+    alloc = Path(root) / "t" / "casmeta" / "alloc.json"
+    state = json.loads(alloc.read_text())
+    for win in state["live"]:
+        win[2] = time.time() - 1  # the dead writer's ttl lapses
+    alloc.write_text(json.dumps(state))
+
+    r = Catalog(spark, root, writer_id="reader-only")
+    assert r._masked_gaps("t") == [(lo, hi)]
+    assert r._observes_dead_state("t")
+    assert r._reader_heal("t") is True
+    assert r._masked_gaps("t") == []
+    assert r.table_stats("t")["commit_gaps"] == 0
+    assert r._observes_dead_state("t") is False
+    assert {x.row_key for x in r.view("t").collect()} == {"r1"}
 
 
 def test_reader_heals_expired_lease_torn_tail(spark, tmp_path):
@@ -186,7 +209,7 @@ def test_reader_heal_converges(spark, tmp_path):
 def test_heal_storm_concurrent_readers_converge(spark, tmp_path):
     """Heal under contention: FOUR OS processes race the same dead
     state (expired reservation + txn marker with a missing record).
-    Healing WRITES (rollbacks, roll-forward records, marker/claim
+    Healing WRITES (rollbacks, roll-forward records, marker
     cleanup), so the round-6 locks must make concurrent heals
     converge to one consistent state — records present exactly once,
     marker gone, no torn visibility."""
@@ -227,8 +250,6 @@ def test_heal_storm_concurrent_readers_converge(spark, tmp_path):
             cat._roll_forward_marked("t")
             cat._sweep_expired_reservations("t")
             cat._retire_dead_gaps("t")
-            for base in cat._claim_slot_bases("t"):
-                cat._clear_dead_claim(base)
         print("HEALED", flush=True)
         """
     )

